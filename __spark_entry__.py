@@ -7,8 +7,7 @@ order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 
 All queries live in ``census_data_pipeline_spark.plans`` — one entry per
 implemented operator from SURVEY.md §2 (core reference surface) and §2.11
-(extension tier). Queries without an oracle entry are rows-only checks
-(mapInPandas / non-SQL-expressible paths).
+(extension tier). Every query has an oracle entry.
 """
 
 from __future__ import annotations
@@ -39,6 +38,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """Equivalent ANSI SQL (DuckDB dialect) per query; omissions are
-    rows-only checks (non-SQL-expressible ops)."""
+    """Equivalent ANSI SQL (DuckDB dialect), one per query."""
     return dict(ORACLE)

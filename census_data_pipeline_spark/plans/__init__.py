@@ -1,312 +1,14 @@
-"""Query plans: the registry maps every implemented operator from
-SURVEY.md §2 to (Spark callable, DuckDB oracle SQL).
+"""Query plans: the registry maps every implemented operator to a (Spark
+callable, DuckDB oracle SQL) pair. Registry order is registration order,
+with the flagship first; ``tests/test_oracle_parity.py`` is the correctness
+gate and checks every query against its oracle."""
 
-Registry ORDER is part of the driver contract: the r1 driver verified
-exactly the first 50 registered queries (CORRECTNESS_r01.json = registry
-positions 0-49), leaving the whole §2.11 LLM tier and §2.9 event-time set
-unchecked. ``_CHECKED_PREFIX`` therefore front-loads one-or-more queries
-from EVERY operator family — all previously-unchecked oracle-backed
-queries plus the round's changed ones — so a 50-query cap still yields a
-driver CORRECTNESS row per family. Rows-only queries (no oracle) sit
-outside the prefix on purpose: inside it they burn a checked slot on a
-``no_oracle`` row. Queries not listed keep their registration order after
-the prefix (they were all driver-green in r1 or r2).
-
-r3 rotation: the 9 oracle-backed queries that had never appeared in any
-CORRECTNESS file (corpus_curation_e2e, sketch_rollup_mergeable, the
-funnel/cohort/transition analytics trio, sample_stratified_events,
-doc_fingerprint, text_term_frequency, text_tokens_bpeish) replace nine
-r2-driver-green singletons whose families remain represented — after r3
-every oracle-backed query has had a green driver row in some round.
-The six queries ADDED in r3 (text_quality_scores, dedup_clusters_star,
-dedup_keep_canonical, knn_ivf_seeded, split_assign_docs,
-sample_upweight_rare) also sit in the prefix, displacing six r2-green
-singletons (geo_radius_join, zorder_locality, events_hypertable_rollup,
-dedup_ngram_jaccard, dedup_simhash, embedding_centroid_by_label) whose
-families stay represented by the remaining geo/event/dedup anchors; and
-multimodal_features — upgraded in r3 from rows-only to a full value
-oracle over the Arrow mapInPandas path — displaces the r2-green
-dim_lookup_customer (broadcast dim joins remain exercised by the
-flagship and boundaries_right_join).
-
-r4 rotation: the LAST two rows-only queries were promoted to
-oracle-backed accuracy contracts (VERDICT r3 #4) and enter the prefix —
-dedup_minhash_ml displaces the r3-green text_tokens_bpeish (text family
-keeps 5 anchors) and knn_ivf displaces the r3-green sample_cap_per_source
-(sampling keeps 5 anchors); every registered query is now oracle-backed.
-The new geo_polygon_overlap takes the r3-green skew_salted_agg's slot
-(the skew family stays represented by skew_salted_join). The two new
-media queries with FULL value oracles also enter: multimodal_video_frames
-replaces multimodal_frame_sample (which it subsumes — it runs the same
-sample_frames operator and additionally decodes the kept frames), and
-multimodal_audio_features replaces the r3-green events_interpolate_1h
-(the events family keeps six anchors).
-
-Fourteen more r4 operators enter the prefix, each displacing one
-r3-green singleton whose family keeps other anchors (the inline comments
-below name each swap): knn_pq_seeded + knn_ivfpq_seeded (PQ-ADC and the
-FAISS-style IVF-PQ composition), dedup_spans (corpus-level span dedup),
-search_bm25 (keyword retrieval), scd2_user_status + cdc_apply_changes
-(the CDC pair), streaming_interval_join (real stream-stream join),
-graph_pagerank (fixed-iteration PageRank), text_unigram_logprob
-(perplexity-proxy quality), ivm_incremental_rollup (partial-aggregate
-merge), events_rate_anomaly + copurchase_topk (ops analytics), and
-multimodal_image_dhash (real BMP round-trip visual fingerprint). All
-have FULL value oracles.
-
-r4 second batch: four more operators with exact oracles enter, each
-displacing an r3-green singleton whose family keeps other anchors —
-dedup_semantic (SemDeDup-style within-cell cosine dedup) displaces
-dedup_clusters (dedup keeps exact/spans/minhash_lsh/embedding_cosine/
-minhash_ml; CC stays pinned by its unit tests and the r3-green
-clusters/star/keep_canonical rows), text_dsir_logratio (DSIR importance
-weights) displaces doc_fingerprint (text keeps six anchors),
-graph_triangles (degree-ordered triangle counting) displaces
-events_funnel_3step (events keeps nine anchors), and skyline_parts
-(two-phase Pareto front) displaces union_batch_states (core keeps six
-anchors).
-
-r4 third batch: events_robust_outliers (median/MAD modified z-score)
-displaces cohort_retention_weekly, events_attribution (first/last-touch
-credit) displaces events_tumbling_1h, and events_rolling_median
-(trailing bounded-window exact median) displaces geo_polygon_stats —
-all three displaced queries were driver-green in earlier rounds, the
-events family keeps nine+ anchors, tumbling semantics stay exercised by
-streaming_tumbling_1h, and geo keeps point_in_polygon +
-polygon_overlap.
-
-r4 fourth batch: dedup_containment (directed n-gram containment — the
-near-subset detector) displaces text_term_frequency, and
-orders_winsorized (per-group percentile clamping) displaces
-numeric_coerce — both displaced queries were driver-green in earlier
-rounds and their families keep multiple anchors.
-
-r4 fifth batch: linkage_entity_clusters (edit-1 pairs -> connected
-components -> canonical id) displaces linkage_edit1_names, whose pair
-stage it runs internally; decontam_semantic (embedding-level benchmark
-screening) displaces decontam_ngram_overlap, whose lexical screen stays
-exercised inside corpus_curation_e2e. Both displaced queries were
-driver-green r1-r3.
-
-r4 sixth batch: text_bigram_logprob (interpolated bigram LM quality
-ranker) displaces text_repetition_stats (r1-r3 green; the repetition
-filters stay exercised inside corpus_curation_e2e and unit tests).
-
-r4 seventh batch: classify_nearest_centroid (Rocchio label audit)
-displaces multimodal_payload (r1-r3 green; media keeps the
-video/audio/dhash full-value anchors), and text_chi2_features
-(supervised vocabulary selection) displaces sketch_rollup_mergeable
-(r3-green; sketches stay anchored by approx_sketches).
-
-r4 eighth batch: streaming_interval_join_outer (REAL stream-stream
-LEFT-OUTER join — watermark-evicted NULL rows held to a horizon-closed
-batch oracle) displaces streaming_tumbling_1h (r3-green; real streaming
-stays represented by both interval joins, and tumbling semantics by the
-batch events anchors).
-
-r4 ninth batch: the data-quality tier — dq_suite_core (uniqueness/FK/
-expectation verdicts) displaces shuffle_shard_assign (r1-r3 green;
-sampling keeps sample_temperature plus unit pins) and
-dq_profile_orders (one-pass column profiling) displaces text_chunking
-(r1-r3 green; chunking stays pinned by the straddle tests and the
-curation composite).
-
-r5 second batch (new operators this round): nineteen NEW queries enter
-the prefix as they are built, each displacing an r4-green singleton
-whose family keeps other anchors (inline comments name each swap):
-text_bpe_merges + text_bpe_segment (BPE vocabulary training and its
-corpus application), text_pmi_pairs (document-presence collocations),
-mine_hard_negatives (contrastive near-miss mining), search_hybrid_rrf
-(reciprocal-rank fusion of BM25 + vector ranks, subsuming search_bm25's
-scoring pipeline), streaming_session_5m (REAL merging-session-state
-stream), sample_token_budget (per-source quota mix building),
-dedup_against_index (the materialized write-once index path, same
-oracle as the direct join), text_tag_keywords (gazetteer tagging via
-per-length gram joins), text_normalize_unicode (Arrow NFC vs DuckDB
-nfc_normalize), mix_build_e2e (the dedup→quality→budget→shard
-capstone), events_ewma (Horner-fold trailing smoother), the
-clustering pair cluster_kmeans_lloyd + cluster_silhouette (Lloyd
-training + its quality metric, both fully SQL-replicated),
-dq_benford_prices (first-digit audit), lineitem_exact_median_scalable
-(bounded-memory EXACT order statistics via range narrowing),
-drift_chi2_event_types (the categorical member of the drift trio),
-ann_quality_lsh (recall@k/MRR evaluation of the LSH retriever),
-basket_rules_parts (association-rule mining), and geo_nearest_site
-(reverse-geocoding argmin join) — twenty in all. Every one carries a
-FULL value oracle.
-
-r5 rotation (VERDICT r4 #1): ALL 50 r4 prefix slots went driver-green,
-so the 19 late-r4 queries that have never had a driver CORRECTNESS row
-enter the prefix, each displacing an r4-green query whose family keeps
-other anchors — after r5 the cumulative driver record is 167/167.
-In: sample_weighted_docs, bloom_join_prune, drift_ks_click_vs_error,
-drift_psi_purchase_value, orders_target_encoding, events_ohlc_hourly,
-events_time_weighted_avg, revenue_share_of_parent, corpus_vocab_stats,
-orders_price_histogram, cohort_ltv_weekly, ab_test_conversion,
-funnel_step_latency, events_gaps, customer_rfm, scd2_snapshot_at,
-streaming_dedup_events, streaming_ohlc_hourly, dedup_against_reference
-(the last also carries this round's bucket_cap change — changed queries
-belong in the prefix).
-Out (all driver-green in r4): dedup_semantic + dedup_minhash_ml (dedup
-keeps exact/spans/minhash_lsh/embedding_cosine/containment plus the new
-cross-corpus join), knn_ivf + knn_pq_seeded (similarity keeps
-bruteforce/lsh/ivfpq_seeded), text_bigram_logprob + text_dsir_logratio
-+ text_chi2_features (text keeps token_stats/unigram_logprob plus the
-new corpus_vocab_stats), dq_profile_orders (dq keeps dq_suite_core),
-sample_temperature (sampling gains weighted-docs + target-encoding),
-multimodal_audio_features (media keeps video_frames/image_dhash),
-graph_triangles (graph keeps pagerank), ivm_incremental_rollup (rollup
-keeps the flagship plus the new revenue_share_of_parent),
-orders_snapshot_diff + scd2_user_status (change keeps cdc_apply_changes
-plus the new scd2_snapshot_at), streaming_interval_join (real streaming
-keeps the harder outer join plus the two new stream queries),
-events_robust_outliers + events_attribution + events_rolling_median +
-events_rate_anomaly (events gains OHLC/TWA/gaps/funnel-latency/RFM/
-LTV/A-B anchors).
-
-r6 rotation — CHANGE-AWARE (VERDICT r5 #1): the prefix is no longer
-hand-rotated by family; it is DERIVED from tools/driver_state.json (each
-query's symbol-level implementation fingerprint as of its latest driver
-CORRECTNESS row, tools/query_fingerprints.py) compared against the
-working tree. Priority order, enforced by tests/test_registry_order.py:
-(1) the flagship smoke query, (2) queries with NO driver row yet
-(r6 new: streaming_session_5m_append, text_lang_id_nb), (3) queries
-whose implementation changed THIS round on top of a green row (the 10
-touched by the r6 scale levers: the streaming set via
-stream_from_parquet's multi-batch option, dedup_embedding_cosine via
-the BLAS guard/chunking, geo_nearest_site and mine_hard_negatives via
-their beyond-broadcast siblings' docstring-adjacent edits), then
-(4) the stale backlog oldest-driver-row-first. The bootstrap against
-rounds 1-5 found 78 queries whose fingerprint drifted since their last
-driver row — more than 50 slots — so the prefix is SATURATED with
-backlog (47 of 78) and the remainder (recorded in
-tests/test_registry_order.py's declared-backlog list) must enter in r7;
-the test goes red if a prefix slot is spent on a query that is neither
-new, changed, nor flagship while backlog waits.
-
-r7 rotation — BACKLOG DRAIN (VERDICT r6 #1): driver_state.json was
-regenerated against CORRECTNESS_r06 as the round's first commit, leaving
-exactly the 43 declared-backlog queries stale. All 43 enter the prefix
-(oldest-driver-row-first), the declared backlog drops to empty, and the
-remaining slots take this round's new queries (IVM retractions, top-r
-PCA, grouped survival/log-rank, Holt-Winters forecast) plus any query
-whose fingerprint drifts under this round's fixes. After the r7 driver
-run, every registered query's driver row matches its current
-implementation fingerprint for the first time.
-
-r8 rotation (VERDICT r7 #1): the r7 driver run went 50/50 green, so the
-stale set is exactly the four queries whose implementations were fixed by
-the r7 end-of-round sweep AFTER driver_state.json was regenerated
-(graph_label_propagation, embedding_pca_power, dq_k_anonymity,
-sketch_cms_heavy_hitters — VERDICT r7 "What's wrong"). Those four lead
-the r8 prefix behind the flagship; the slots after them take this
-round's new queries as registered (ivm_retraction_refresh,
-embedding_pca_topr, survival_by_segment, survival_logrank,
-events_forecast_hourly, events_forecast_backtest, dq_l_diversity, then
-the continuation's quality_tree_train/quality_tree_eval/
-quality_gbt_train/graph_trustrank) and the queries whose fingerprints
-drifted under r8 edits (ivm_delta_join_refresh via the ivm_delta_join
-docstring pointer, streaming_session_5m via its reference-form
-demotion, graph_pagerank + text_textrank_keywords via the PageRank
-exchange trim and the personalization parameter, embedding_pca_power +
-embedding_pca_topr via the driver-side power-iteration solve,
-quality_logreg_train via the _logreg_fit extraction). The continuation
-adds fifteen more new queries (histogram tree train/eval/holdout,
-boosted stumps train/holdout, TrustRank, nDCG, conformal bands,
-calibration bins, exact AUC, logreg holdout, grid DBSCAN, streaming
-CUSUM, Neyman sampling + Horvitz-Thompson estimation). 32 of 50 slots
-carry stale/new queries; the rest keep registration order.
-
-r9 rotation (VERDICT r8 #8): the r8 driver run went 50/50 green and
-driver_state.json was regenerated against CORRECTNESS_r08 as the
-round's first commit, so NO query starts r9 stale — the cleanest
-rotation yet. The prefix is flagship, then the 17 r9 additions —
-log-loss boosting + holdout (VERDICT r8 #3), the two k-fold CV
-evaluators (#4), the random-forest trio (#7 + split-gain importance),
-k-core, the HLL distinct sketch, mutual-information ranking, MASE
-forecast skill, PCA projection, the correlation matrix, grouped OLS
-trend, the Welch t-test, the Zipf diagnostic, and the promoted
-streaming_user_totals — then the two queries r9 edits drift:
-streaming_cusum_hourly (idle_timeout_ms eviction knob, #2) and
-geo_dbscan_grid (weighted-location collapse, #5). Remaining slots
-keep registration order."""
-
-from census_data_pipeline_spark.plans import (  # noqa: F401
-    queries_analytics,
+# queries_core registers flagship_regional_rollup, so it must import first.
+from census_data_pipeline_spark.plans import (  # noqa: F401  # isort: skip
     queries_core,
+    queries_analytics,
     queries_ext,
 )
 from census_data_pipeline_spark.plans.registry import ORACLE, QUERIES
-
-_CHECKED_PREFIX = [
-    "flagship_regional_rollup",
-    "quality_logreg_cv",
-    "quality_learning_curve",
-    "quality_rf_holdout",
-    "quality_rf_train",
-    "quality_rf_importance",
-    "quality_tree_cv",
-    "quality_tree_holdout",
-    "quality_tree_train",
-    "quality_tree_eval",
-    "quality_gbt_holdout",
-    "quality_gbt_classify_holdout",
-    "quality_gbt_train",
-    "quality_gbt_classify",
-    "dedup_minhash_ml",
-    "dedup_clusters",
-    "dedup_clusters_star",
-    "linkage_entity_clusters",
-    "geo_dbscan_grid",
-    "events_markov_stationary",
-    "events_markov_attribution",
-    "graph_louvain_move",
-    "graph_louvain_multilevel",
-    "graph_louvain_weighted",
-    "graph_leiden",
-    "graph_modularity",
-    "graph_modularity_weighted",
-    "graph_label_propagation",
-    "graph_lpa_weighted",
-    "graph_conductance_weighted",
-    "graph_components",
-    "graph_clustering",
-    "graph_triangles",
-    "graph_coreness",
-    "graph_pagerank",
-    "graph_pagerank_weighted",
-    "graph_hits",
-    "graph_trustrank",
-    "knn_ivf",
-    "embedding_mmr_ivf",
-    "embedding_mmr_rerank",
-    "cluster_silhouette",
-    "cluster_kmeans_lloyd",
-    "dedup_semantic",
-    "events_forecast_conformal",
-    "orders_price_histogram",
-    "drift_psi_purchase_value",
-    "events_forecast_model_select",
-    "funnel_step_latency",
-    "events_gaps",
-]
-
-
-def _apply_checked_prefix() -> None:
-    missing = [n for n in _CHECKED_PREFIX if n not in QUERIES]
-    if missing:
-        raise RuntimeError(f"_CHECKED_PREFIX names unknown queries: {missing}")
-    no_oracle = [n for n in _CHECKED_PREFIX if n not in ORACLE]
-    if no_oracle:
-        raise RuntimeError(
-            f"rows-only queries may not occupy checked-prefix slots: {no_oracle}"
-        )
-    ordered = {n: QUERIES[n] for n in _CHECKED_PREFIX}
-    ordered.update((n, fn) for n, fn in QUERIES.items() if n not in ordered)
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-_apply_checked_prefix()
 
 __all__ = ["QUERIES", "ORACLE"]

@@ -1,10 +1,10 @@
 """Query registry plumbing shared by the driver contract
 (``__spark_entry__.py``), the local oracle-parity tests and ``bench.py``.
 
-Each registered query is a (Spark callable, optional DuckDB oracle SQL)
-pair: the callable exercises engine operators; the SQL defines the expected
-result in ANSI SQL. Column names and rounding are kept identical on both
-sides because the driver hash-compares values after sorting columns by name.
+Each registered query is a (Spark callable, DuckDB oracle SQL) pair: the
+callable exercises engine operators; the SQL defines the expected result
+in ANSI SQL. Column names and rounding are kept identical on both sides
+because the driver hash-compares values after sorting columns by name.
 """
 
 from __future__ import annotations
@@ -25,9 +25,8 @@ ORACLE: dict[str, str] = {}
 _ACTIVE_DEPTH = 0
 
 
-def query(name: str, oracle: str | None = None):
-    """Register a query; ``oracle=None`` marks a rows-only check
-    (non-SQL-expressible op, per the driver contract).
+def query(name: str, oracle: str):
+    """Register a query with the DuckDB SQL that defines its result.
 
     r13: every top-level query invocation first drops the SQL cache.
     The iterative operators (trained-in-engine fits, the graph
@@ -46,10 +45,7 @@ def query(name: str, oracle: str | None = None):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             global _ACTIVE_DEPTH
             if _ACTIVE_DEPTH == 0:
-                try:
-                    spark.catalog.clearCache()
-                except Exception:
-                    pass
+                spark.catalog.clearCache()
             _ACTIVE_DEPTH += 1
             try:
                 return fn(spark, sf_dir)
@@ -60,8 +56,7 @@ def query(name: str, oracle: str | None = None):
         wrapped.__doc__ = fn.__doc__
         wrapped.__wrapped__ = fn
         QUERIES[name] = wrapped
-        if oracle is not None:
-            ORACLE[name] = oracle
+        ORACLE[name] = oracle
         return fn
 
     return deco

@@ -1,333 +1,16 @@
-"""Registry-order contract: the driver verifies the first ~50 registered
-queries (r1 evidence: CORRECTNESS_r01.json == registry positions 0-49), so
-the checked prefix must contain no rows-only entries, and — the r6
-CHANGE-AWARE contract (VERDICT r5 #1) — must re-verify every query whose
-implementation changed since its last driver CORRECTNESS row.
-
-Machinery: tools/query_fingerprints.py computes a symbol-level content
-fingerprint per query (function + oracle decorator + every reachable
-engine symbol); tools/driver_state.json records each query's fingerprint
-as of the round-boundary snapshot the driver last verified it (regenerate
-with tools/update_driver_state.py after each driver round). A query is
-STALE when the working-tree fingerprint differs from the recorded one,
-and NEW when it has no driver row at all.
-
-Rules enforced here:
-1. stale ∪ new queries sit in the 50-slot prefix — or, when the backlog
-   exceeds 50 (the r6 bootstrap found 78 drifted queries), every slot
-   except the flagship's must be spent on backlog (saturation: no slot
-   wasted on an already-current query while drifted ones wait).
-2. the prefix is fully oracle-backed and starts with the flagship.
-3. no query may exist without either a driver row or a prefix slot
-   (window hygiene, r5).
-4. driver_state.json must be regenerated after every driver round.
-"""
+"""Registry-order contract: registry order is registration order, with the
+flagship first, and every query has an oracle. The correctness gate is
+``tests/test_oracle_parity.py``, which checks every query against it."""
 
 import glob
 import json
 import os
-import sys
 
 import pytest
 
-from census_data_pipeline_spark.plans import ORACLE, QUERIES
-
-PREFIX_N = 50
+from census_data_pipeline_spark.plans import ORACLE, QUERIES, registry
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(_REPO, "tools"))
-
-# Stale backlog that did not fit the current prefix (oldest-first drain
-# order; see plans/__init__.py rotation note). Queries listed here MUST
-# enter the next round's prefix unless a driver row re-verifies them
-# first — test_backlog_is_draining keeps the list from silently growing.
-# r13: the OPTIMIZATION round's cache-hygiene wrapper in
-# plans/registry.py sits in EVERY query's fingerprint closure, so all
-# 298 fingerprints drifted at once; the 50-slot prefix holds the
-# queries whose COMPUTE PATHS actually changed (fit loops, graph
-# tails, markov, bootstrap, forecast), and the remaining drift —
-# registration plumbing only, no per-query dataflow change — is
-# declared here. The full local oracle-parity suite re-verified every
-# one of these at sf0.001 (and the touched families at sf0.01) this
-# round; they drain through the prefix on the normal rotation.
-DECLARED_BACKLOG = [
-    "ab_test_conversion",
-    "ann_quality_lsh",
-    "anti_join_nations_without_suppliers",
-    "approx_sketches",
-    "asof_click_purchase",
-    "basket_rules_parts",
-    "bloom_join_prune",
-    "boundaries_right_join",
-    "cdc_apply_changes",
-    "change_over_time",
-    "classify_nearest_centroid",
-    "cohort_ltv_weekly",
-    "cohort_retention_weekly",
-    "copurchase_topk",
-    "corpus_clean_pipeline",
-    "corpus_curation_e2e",
-    "corpus_vocab_stats",
-    "cube_pricing",
-    "customer_revenue_concentration",
-    "customer_revenue_gini",
-    "customer_rfm",
-    "decontam_ngram_overlap",
-    "decontam_semantic",
-    "dedup_against_index",
-    "dedup_against_reference",
-    "dedup_containment",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_keep_canonical",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_spans",
-    "derived_demographics",
-    "dim_lookup_customer",
-    "doc_fingerprint",
-    "dq_benford_prices",
-    "dq_k_anonymity",
-    "dq_l_diversity",
-    "dq_profile_orders",
-    "dq_suite_core",
-    "drift_chi2_event_types",
-    "drift_ks_click_vs_error",
-    "drift_wasserstein_click_error",
-    "embedding_centroid_by_label",
-    "embedding_pca_power",
-    "embedding_pca_project",
-    "embedding_pca_topr",
-    "embedding_quantize_sq8",
-    "embedding_sq8_recall",
-    "embedding_truncation_recall",
-    "events_acf",
-    "events_attribution",
-    "events_ccf_click_purchase",
-    "events_changepoint",
-    "events_decayed_user_value",
-    "events_dow_hour_profile",
-    "events_ewma",
-    "events_forecast_ar",
-    "events_forecast_ar_whiteness",
-    "events_funnel_3step",
-    "events_gapfill_1h",
-    "events_hll_users_by_type",
-    "events_hypertable_rollup",
-    "events_interpolate_1h",
-    "events_json_extract",
-    "events_new_vs_returning",
-    "events_ohlc_hourly",
-    "events_rate_anomaly",
-    "events_robust_outliers",
-    "events_rolling_median",
-    "events_seasonal_anomaly",
-    "events_seasonal_decompose",
-    "events_session_5m",
-    "events_session_paths",
-    "events_sliding_1h_30m",
-    "events_time_weighted_avg",
-    "events_top_transitions",
-    "events_trend_by_type",
-    "events_trend_kendall",
-    "events_trend_spearman",
-    "events_trend_theil_sen",
-    "events_tumbling_1h",
-    "geo_bbox_contains",
-    "geo_haversine_pairs",
-    "geo_nearest_site",
-    "geo_nearest_site_grid",
-    "geo_point_extract",
-    "geo_point_in_polygon",
-    "geo_polygon_overlap",
-    "geo_polygon_stats",
-    "geo_radius_join",
-    "geoid_hierarchy_rollup",
-    "geoid_parse",
-    "geoid_rollup_county",
-    "geoid_rollup_state",
-    "global_stats_price",
-    "graph_adamic_adar",
-    "graph_assortativity",
-    "graph_bfs_distances",
-    "graph_conductance",
-    "graph_jaccard_linkpred",
-    "graph_kcore",
-    "grouped_quantiles",
-    "histogram_price",
-    "ivm_delta_join_refresh",
-    "ivm_incremental_rollup",
-    "ivm_retraction_refresh",
-    "knn_bruteforce",
-    "knn_ivf_seeded",
-    "knn_ivfpq_seeded",
-    "knn_lsh",
-    "knn_pq_seeded",
-    "latest_event_per_user",
-    "lineitem_anova_returns",
-    "lineitem_bartlett_returns",
-    "lineitem_corr_matrix",
-    "lineitem_exact_median_scalable",
-    "lineitem_kruskal_returns",
-    "lineitem_mannwhitney_returns",
-    "lineitem_welch_fdr",
-    "linkage_edit1_names",
-    "mine_hard_negatives",
-    "mine_hard_negatives_ivf",
-    "mix_build_e2e",
-    "moving_average_spend",
-    "multimodal_audio_features",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_image_dhash",
-    "multimodal_payload",
-    "multimodal_video_frames",
-    "normalize_minmax",
-    "normalize_robust",
-    "normalize_zscore",
-    "normalize_zscore_by_nation",
-    "numeric_coerce",
-    "orders_chi2_status_priority",
-    "orders_cramers_v",
-    "orders_snapshot_diff",
-    "orders_target_encoding",
-    "orders_welch_by_priority",
-    "orders_winsorized",
-    "part_catalog_search",
-    "parts_above_avg_price",
-    "pivot_status_by_segment",
-    "profile_lineitem",
-    "q10_returned_items",
-    "q12_shipmode_priority",
-    "q18_large_orders",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_regional_revenue",
-    "q6_forecast_revenue",
-    "quality_mi_features",
-    "range_join_click_errors",
-    "rates_zero_policy",
-    "revenue_share_of_parent",
-    "running_customer_spend",
-    "sample_cap_per_source",
-    "sample_hash_docs",
-    "sample_ht_estimate",
-    "sample_neyman_customers",
-    "sample_stratified_events",
-    "sample_temperature",
-    "sample_token_budget",
-    "sample_upweight_rare",
-    "sample_weighted_docs",
-    "scd2_snapshot_at",
-    "scd2_user_status",
-    "search_bm25",
-    "search_hybrid_rrf",
-    "search_ndcg_bm25",
-    "sentinel_clean_drop",
-    "sentinel_clean_fill",
-    "setop_nations_except",
-    "setop_nations_intersect",
-    "shuffle_shard_assign",
-    "sketch_cms_heavy_hitters",
-    "sketch_hll_distinct",
-    "sketch_quantiles_bottomk",
-    "sketch_rollup_mergeable",
-    "skew_salted_agg",
-    "skew_salted_join",
-    "skyline_parts",
-    "split_assign_docs",
-    "sql_surface_revenue",
-    "stats_correlation",
-    "streaming_cusum_hourly",
-    "streaming_dedup_events",
-    "streaming_enriched_rollup",
-    "streaming_interval_join",
-    "streaming_interval_join_outer",
-    "streaming_ohlc_hourly",
-    "streaming_session_5m",
-    "streaming_session_5m_append",
-    "streaming_tumbling_1h",
-    "streaming_user_totals",
-    "survival_by_segment",
-    "survival_hazard_nelson_aalen",
-    "survival_logrank",
-    "survival_time_to_purchase",
-    "text_bigram_logprob",
-    "text_bpe_merges",
-    "text_bpe_segment",
-    "text_chi2_features",
-    "text_chunking",
-    "text_dsir_logratio",
-    "text_gopher_rules",
-    "text_js_divergence",
-    "text_lang_id",
-    "text_lang_id_nb",
-    "text_normalize_unicode",
-    "text_pack_bins",
-    "text_pii_scrub",
-    "text_pmi_pairs",
-    "text_quality_scores",
-    "text_readability",
-    "text_repetition_stats",
-    "text_tag_keywords",
-    "text_term_frequency",
-    "text_textrank_keywords",
-    "text_tfidf_top_terms",
-    "text_token_stats",
-    "text_tokens_bpeish",
-    "text_unigram_logprob",
-    "text_zipf_fit",
-    "top5_customers",
-    "topk_per_nation",
-    "union_batch_states",
-    "unpivot_part_measures",
-    "variable_catalog_search",
-    "weighted_index_parts",
-    "window_rank_functions",
-    "winsorize_acctbal",
-    "zorder_locality",
-]
-R7_BACKLOG = DECLARED_BACKLOG  # historical alias (VERDICT r6 references)
-
-
-def _driver_checked_union():
-    seen = set()
-    for path in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))):
-        with open(path) as f:
-            seen |= set(json.load(f))
-    return seen
-
-
-def _latest_round():
-    rounds = [
-        int(os.path.basename(p)[len("CORRECTNESS_r"):-len(".json")])
-        for p in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))
-    ]
-    return max(rounds) if rounds else 0
-
-
-@pytest.fixture(scope="module")
-def driver_state():
-    with open(os.path.join(_REPO, "tools", "driver_state.json")) as f:
-        return json.load(f)
-
-
-@pytest.fixture(scope="module")
-def current_fingerprints():
-    from query_fingerprints import compute_fingerprints
-
-    return compute_fingerprints(_REPO)
-
-
-def test_prefix_is_fully_oracle_backed():
-    prefix = list(QUERIES)[:PREFIX_N]
-    rows_only = [n for n in prefix if n not in ORACLE]
-    assert rows_only == [], (
-        f"rows-only queries waste checked-prefix slots: {rows_only}"
-    )
 
 
 def test_flagship_is_first():
@@ -336,63 +19,24 @@ def test_flagship_is_first():
 
 def test_every_query_callable_and_every_oracle_has_query():
     assert all(callable(fn) for fn in QUERIES.values())
-    assert set(ORACLE) <= set(QUERIES)
+    assert set(ORACLE) == set(QUERIES)
 
 
-def test_fingerprints_cover_every_registered_query(current_fingerprints):
-    missing = sorted(set(QUERIES) - set(current_fingerprints))
-    assert missing == [], (
-        f"queries invisible to the change tracker: {missing} — extend "
-        "tools/query_fingerprints.py (new registration pattern?)"
-    )
+def test_clear_cache_failure_propagates():
+    """The per-query cache sweep must not swallow errors: a session whose
+    ``clearCache`` fails makes the query fail, and leaves the reentrancy
+    depth balanced."""
 
+    class _Catalog:
+        def clearCache(self):
+            raise RuntimeError("clearCache failed")
 
-def test_changed_queries_sit_in_checked_prefix(driver_state,
-                                               current_fingerprints):
-    """THE change-aware rule: a query whose implementation fingerprint
-    differs from its recorded last-driver-row fingerprint (or which has
-    no driver row) must be in the prefix so the next driver run
-    re-verifies it. When the backlog exceeds the prefix, saturation is
-    required instead: every non-flagship slot spent on backlog."""
-    stale = {
-        q for q in driver_state
-        if q in QUERIES
-        and current_fingerprints.get(q) != driver_state[q]["fingerprint"]
-    }
-    new = set(QUERIES) - set(driver_state)
-    need = stale | new
-    prefix = list(QUERIES)[:PREFIX_N]
-    missing = sorted(need - set(prefix))
-    if not missing:
-        return
-    wasted = [
-        q for q in prefix[1:]  # flagship slot exempt (driver smoke query)
-        if q not in need
-    ]
-    assert wasted == [], (
-        f"{len(missing)} changed/new queries lack prefix slots "
-        f"({missing[:5]}…) while slots are spent on already-current "
-        f"queries: {wasted} — rotate the backlog in (plans/__init__.py)"
-    )
+    class _Session:
+        catalog = _Catalog()
 
-
-def test_backlog_is_draining(driver_state, current_fingerprints):
-    """Every stale query left out of the prefix must be on the declared
-    R7_BACKLOG list — growing the backlog silently is not allowed, and
-    the list documents exactly what r7 owes the driver."""
-    stale = {
-        q for q in driver_state
-        if q in QUERIES
-        and current_fingerprints.get(q) != driver_state[q]["fingerprint"]
-    }
-    new = set(QUERIES) - set(driver_state)
-    prefix = set(list(QUERIES)[:PREFIX_N])
-    waiting = sorted((stale | new) - prefix)
-    undeclared = sorted(set(waiting) - set(R7_BACKLOG))
-    assert undeclared == [], (
-        f"stale queries outside both the prefix and the declared backlog: "
-        f"{undeclared}"
-    )
+    with pytest.raises(RuntimeError, match="clearCache failed"):
+        QUERIES["flagship_regional_rollup"](_Session(), "/nonexistent")
+    assert registry._ACTIVE_DEPTH == 0
 
 
 def test_every_query_is_inventoried_in_coverage_md():
@@ -408,72 +52,6 @@ def test_every_query_is_inventoried_in_coverage_md():
     assert undocumented == [], (
         f"queries missing from COVERAGE.md: {undocumented} — add a row "
         "(or name them in the owning operator family's row)"
-    )
-
-
-def test_no_unverified_tail():
-    """Window hygiene (VERDICT r4 #5): every registered query must have a
-    driver CORRECTNESS row already, or occupy a slot in the current
-    50-query prefix (so the NEXT driver run gives it one)."""
-    seen = _driver_checked_union()
-    prefix = set(list(QUERIES)[:PREFIX_N])
-    tail = sorted(set(QUERIES) - seen - prefix)
-    assert tail == [], (
-        f"queries with no driver row and no prefix slot: {tail} — rotate "
-        "them into _CHECKED_PREFIX (plans/__init__.py) or they will never "
-        "be driver-verified"
-    )
-
-
-def _last_commit_epoch(path):
-    """Commit epoch of the last commit touching ``path``; for a file git
-    has never seen (the driver delivers CORRECTNESS_rNN.json UNTRACKED at
-    round close — VERDICT r7), fall back to file mtime so the
-    postdates-driver_state skip still fires."""
-    import subprocess
-
-    out = subprocess.run(
-        ["git", "-C", _REPO, "log", "-1", "--format=%ct", "--", path],
-        capture_output=True, text=True,
-    ).stdout.strip()
-    if out:
-        return int(out)
-    if os.path.exists(path):
-        return int(os.path.getmtime(path))
-    return 0
-
-
-def test_driver_state_regenerated_after_latest_round(driver_state):
-    """tools/driver_state.json must incorporate the newest CORRECTNESS
-    file — red means a round STARTED without re-running
-    tools/update_driver_state.py, so staleness detection would compare
-    against outdated fingerprints.
-
-    When the newest CORRECTNESS file was committed AFTER the last commit
-    touching driver_state.json, the driver round has just landed and the
-    regeneration is the NEXT session's first task — skip with a reason
-    instead of failing, so the suite is green at round close (VERDICT r6
-    #2: a check that is red by design at judge time devalues red)."""
-    latest = _latest_round()
-    corr_path = os.path.join(_REPO, f"CORRECTNESS_r{latest:02d}.json")
-    state_path = os.path.join(_REPO, "tools", "driver_state.json")
-    if _last_commit_epoch(corr_path) > _last_commit_epoch(state_path):
-        pytest.skip(
-            f"CORRECTNESS_r{latest:02d}.json postdates driver_state.json — "
-            "a driver round just landed; regenerate at round start with "
-            "python tools/update_driver_state.py"
-        )
-    with open(
-        os.path.join(_REPO, f"CORRECTNESS_r{latest:02d}.json")
-    ) as f:
-        rows = set(json.load(f))
-    behind = sorted(
-        q for q in rows
-        if q in driver_state and driver_state[q]["round"] != latest
-    )
-    assert behind == [], (
-        f"driver_state.json predates CORRECTNESS_r{latest:02d}.json for "
-        f"{behind[:5]}… — run: python tools/update_driver_state.py"
     )
 
 
