@@ -23,7 +23,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from census_data_pipeline_spark.functions.text import shingles, tokens
-from census_data_pipeline_spark.sources.catalog import ensure_parallelism
+from census_data_pipeline_spark.sources.catalog import (
+    ensure_parallelism,
+    local_tail,
+    round_persist,
+)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -613,58 +617,42 @@ def simhash_hamming_pairs(
 
 
 def _dup_clusters_local(
-    edges: DataFrame, symmetrize: bool = False
-) -> DataFrame | None:
+    edges: DataFrame, pdf, symmetrize: bool = False
+) -> DataFrame:
     """The whole min-label fixpoint in ONE bounded driver pass (r14 —
     the graph tier's ``_cc_full_local`` discipline, applied to the
-    dedup cluster resolver): collect the already-symmetrized pair
-    edges (or one-directional canonical pairs with ``symmetrize=True``
-    — both code directions are added locally, a numpy int concat), run
-    synchronous neighbor-min rounds to the no-change fixpoint in
-    numpy, and return the (doc_id, cluster_id) literal frame. Exact:
-    labels are ids coded over the SORTED id universe (min-code ≡
-    min-id), no float arithmetic anywhere, and the fixpoint is the
-    same component-minimum the distributed label loop's consistency
-    stop — and the star rounds' converged star shape — certify.
-    Returns None on a null endpoint (the caller stays distributed)."""
+    dedup cluster resolver) over ``pdf``, the gate-collected pair edges
+    — already symmetrized, or one-directional canonical pairs with
+    ``symmetrize=True`` (both code directions are added locally, a
+    numpy int concat): run synchronous neighbor-min rounds to the
+    no-change fixpoint in numpy and return the (doc_id, cluster_id)
+    literal frame. Exact: labels are ids coded over the SORTED id
+    universe (min-code ≡ min-id), no float arithmetic anywhere, and
+    the fixpoint is the same component-minimum the distributed label
+    loop's consistency stop — and the star rounds' converged star
+    shape — certify."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
 
-    pdf = edges.toPandas()  # Arrow transfer — bounded by the gate
-    if bool(pd.isna(pdf["src"]).any() or pd.isna(pdf["dst"]).any()):
-        return None
-    f = edges.schema["src"]
-    schema = StructType([
-        StructField("doc_id", f.dataType, f.nullable),
-        StructField("cluster_id", f.dataType, f.nullable),
-    ])
+    from census_data_pipeline_spark.functions.graph import (
+        _local_frame,
+        _min_label_fixpoint,
+        _sorted_codes,
+    )
+
     svals = pdf["src"].to_numpy()
     dvals = pdf["dst"].to_numpy()
     if len(svals) == 0:
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame({"doc_id": [], "cluster_id": []}), schema)
-    from census_data_pipeline_spark.functions.graph import _sorted_codes
-
+        return _local_frame(edges, {"doc_id": [], "cluster_id": []})
     ids, (sc, dc) = _sorted_codes(svals, dvals)  # ≡ unique+searchsorted
     if symmetrize:
         sc, dc = np.concatenate([sc, dc]), np.concatenate([dc, sc])
-    lab = np.arange(len(ids), dtype=np.int64)
-    while True:
-        nl = lab.copy()
-        np.minimum.at(nl, dc, lab[sc])
-        new = np.minimum(lab, nl)
-        if int((new < lab).sum()) == 0:
-            break
-        lab = new
-    out = pd.DataFrame({"doc_id": ids, "cluster_id": ids[lab]})
-    return edges.sparkSession.createDataFrame(out, schema)
+    lab = _min_label_fixpoint(sc, dc, len(ids))
+    return _local_frame(edges, {"doc_id": ids, "cluster_id": ids[lab]})
 
 
 def dup_clusters(
     pairs: DataFrame,
     algorithm: str = "label",
-    local_tail_max: int = 2_000_000,
 ) -> DataFrame:
     """Resolve near-duplicate PAIRS into duplicate CLUSTERS: connected
     components over the pair graph, labeling every member with the minimum
@@ -691,10 +679,7 @@ def dup_clusters(
     returned (singletons are their own cluster implicitly).
     """
     if algorithm == "star":
-        labels, _rounds = _dup_clusters_star(
-            pairs, local_tail_max=local_tail_max
-        )
-        return labels
+        return _dup_clusters_star(pairs)[0]
     if algorithm != "label":
         raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
     # persisted, lazily (r14): the pair-generation lineage upstream is
@@ -703,8 +688,6 @@ def dup_clusters(
     # per-round consistency count each re-ran it through the bare lazy
     # localCheckpoint; the gate count below materializes the blocks
     # once and every consumer reads them
-    from census_data_pipeline_spark.sources.catalog import round_persist
-
     edges = round_persist(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -714,11 +697,11 @@ def dup_clusters(
     # under the gate the whole min-label fixpoint replays off one Arrow
     # collect, bit-identical (integer/string mins, no float arithmetic).
     # 100 TB pair sets never enter and run the distributed loop below.
-    if local_tail_max > 0 and edges.count() <= local_tail_max:
-        tail = _dup_clusters_local(edges)
-        if tail is not None:  # None ⇒ null endpoints, stay distributed
-            edges.unpersist()
-            return tail
+    pdf = local_tail(edges, "src", "dst")
+    if pdf is not None:
+        tail = _dup_clusters_local(edges, pdf)
+        edges.unpersist()
+        return tail
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -765,9 +748,7 @@ def dup_clusters(
     )
 
 
-def _dup_clusters_star(
-    pairs: DataFrame, local_tail_max: int = 2_000_000
-) -> tuple[DataFrame, int]:
+def _dup_clusters_star(pairs: DataFrame) -> tuple[DataFrame, int]:
     """Alternating large-star/small-star connected components.
 
     Edges are kept directed child→parent with the invariant src > dst.
@@ -814,10 +795,9 @@ def _dup_clusters_star(
     # convergence probes are the resolver's whole cost at bench scale
     # (geo_dbscan_grid measured 4.4 s, dominated by this loop); 100 TB
     # pair sets never enter and run the log-round star rounds below.
-    if local_tail_max > 0 and edges.count() <= local_tail_max:
-        tail = _dup_clusters_local(edges, symmetrize=True)
-        if tail is not None:  # None ⇒ null endpoints, stay distributed
-            return tail, 0
+    pdf = local_tail(edges, "src", "dst")
+    if pdf is not None:
+        return _dup_clusters_local(edges, pdf, symmetrize=True), 0
     all_nodes = edges.select(F.col("src").alias("id")).union(
         edges.select(F.col("dst").alias("id"))
     ).distinct()

@@ -26,25 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from census_data_pipeline_spark.sources import catalog
 from census_data_pipeline_spark.sources.catalog import (
     ensure_parallelism,
+    local_tail,
     round_materialize as _round_materialize,
     round_persist as _round_persist,
 )
-
-
-def _local_codes_ok(*series) -> bool:
-    """Gate for the bounded numpy fast paths (ADVICE r12): they code
-    values via np.unique/np.searchsorted, which raise TypeError when a
-    None/NaN is mixed into an object array, while the distributed
-    equi-joins simply never match the null rows. Any null in a coded
-    column ⇒ the local path bails (returns None at its call site) and
-    the caller falls through to the distributed dataflow — identical
-    semantics by construction, no per-path null policy to keep in
-    sync."""
-    import pandas as pd
-
-    return not any(bool(pd.isna(s).any()) for s in series)
 
 
 def _sorted_codes(*arrays):
@@ -57,8 +45,8 @@ def _sorted_codes(*arrays):
     but ~8× faster at edge scale (measured 1.56 s → 0.18 s on 587k
     string edges): np.unique/searchsorted over millions of Python
     string objects pay a per-comparison interpreter cost the hash pass
-    avoids. Inputs must be null-free (callers gate via
-    ``_local_codes_ok``). Returns (universe, [codes per array])."""
+    avoids. Inputs must be null-free (``catalog.local_tail`` keeps
+    nulls distributed). Returns (universe, [codes per array])."""
     import numpy as np
     import pandas as pd
 
@@ -78,31 +66,45 @@ def _sorted_codes(*arrays):
     return universe, outs
 
 
+def _local_frame(like: DataFrame, cols: dict, doubles=()) -> DataFrame:
+    """Hand a local tail's numpy result back to Spark via one Arrow
+    transfer: ``cols`` maps each output column, in order, to its array.
+    Columns named in ``doubles`` are DOUBLE; the rest hold node ids and
+    take the type of ``like``'s first column (the id column the tail
+    collected)."""
+    import pandas as pd
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    f = like.schema.fields[0]
+    schema = StructType([
+        StructField(c, DoubleType(), True) if c in doubles
+        else StructField(c, f.dataType, f.nullable)
+        for c in cols
+    ])
+    return like.sparkSession.createDataFrame(pd.DataFrame(cols), schema)
+
+
 def _pagerank_full_local(
     eprep: DataFrame,
+    pdf,
     iterations: int,
     d: float,
     personalization: DataFrame | None = None,
 ) -> DataFrame | None:
     """The whole power iteration in ONE bounded driver pass (r13, the
-    ``_lpa_full_local`` discipline): collect the projected edge list
-    (parallel edges KEPT — they split rank per edge row, exactly as the
-    distributed contribution join fans out), replay the identical
-    per-round arithmetic in numpy — same expression order, dangling
-    mass and teleport formulas — and hand back (id, rank). Per-dst
-    float sums accumulate in a different order than Spark's partial
-    aggregation, which differs by last-ulp amounts absorbed by the
-    query-level 6-dp rounding (the hits_scores tolerance argument; the
-    green driver rows pin it). Callers gate on the edge count before
-    entering; returns None on a null src/dst or null seed (the caller
-    falls back to the distributed rounds)."""
+    ``_lpa_full_local`` discipline) over ``pdf``, the projected edge
+    list collected by the gate (parallel edges KEPT — they split rank
+    per edge row, exactly as the distributed contribution join fans
+    out): replay the identical per-round arithmetic in numpy — same
+    expression order, dangling mass and teleport formulas — and hand
+    back (id, rank). Per-dst float sums accumulate in a different order
+    than Spark's partial aggregation, which differs by last-ulp amounts
+    absorbed by the query-level 6-dp rounding (the hits_scores
+    tolerance argument; the green driver rows pin it). Returns None on
+    a null seed (the caller falls back to the distributed rounds)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    pdf = eprep.toPandas()  # Arrow batch transfer — bounded by the gate
-    if not _local_codes_ok(pdf["src"], pdf["dst"]):
-        return None
     seeds_vals = None
     if personalization is not None:
         sc0 = personalization.columns[0]
@@ -114,16 +116,10 @@ def _pagerank_full_local(
         if bool(pd.isna(spdf["__sid"]).any()):
             return None
         seeds_vals = spdf["__sid"].to_numpy()
-    f = eprep.schema["src"]
-    schema = StructType([
-        StructField("id", f.dataType, f.nullable),
-        StructField("rank", DoubleType(), True),
-    ])
     svals = pdf["src"].to_numpy()
     dvals = pdf["dst"].to_numpy()
     if len(svals) == 0:
-        return eprep.sparkSession.createDataFrame(
-            pd.DataFrame({"id": [], "rank": []}), schema)
+        return _local_frame(eprep, {"id": [], "rank": []}, ("rank",))
     # hash-coded, not sort-coded (pd.factorize, first-seen order): rank
     # semantics never depend on code ORDER, and np.unique/searchsorted
     # over millions of Python string objects costs seconds
@@ -156,8 +152,7 @@ def _pagerank_full_local(
             rank = (1.0 - d) * p + d * (contrib + dm * p)
         else:
             rank = (1.0 - d) / nd + d * (contrib + dm / nd)
-    out = pd.DataFrame({"id": ids, "rank": rank})
-    return eprep.sparkSession.createDataFrame(out, schema)
+    return _local_frame(eprep, {"id": ids, "rank": rank}, ("rank",))
 
 
 def pagerank(
@@ -168,7 +163,6 @@ def pagerank(
     dst: str = "dst",
     broadcast_ranks: bool = False,
     personalization: DataFrame | None = None,
-    local_tail_max: int = 2_000_000,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list (duplicate
     edges should be deduped upstream if unweighted semantics are wanted).
@@ -210,14 +204,15 @@ def pagerank(
     ))
     # Bounded local tail (r13, the label_propagation discipline): the
     # power iteration's wall-clock under ~1M edges is pure per-round
-    # scheduling/planning floor, so below the hard gate the whole loop
-    # replays off one Arrow collect (6-dp-identical; unit-pinned).
-    # 100 TB graphs never enter the gate and stay fully distributed.
-    if local_tail_max > 0 and e.count() <= local_tail_max:
+    # scheduling/planning floor, so under ``catalog.LOCAL_TAIL_ROWS``
+    # the whole loop replays off one Arrow collect (6-dp-identical;
+    # unit-pinned). 100 TB graphs stay fully distributed.
+    pdf = local_tail(e, "src", "dst")
+    if pdf is not None:
         tail = _pagerank_full_local(
-            e, iterations, float(damping), personalization
+            e, pdf, iterations, float(damping), personalization
         )
-        if tail is not None:  # None ⇒ nulls present, stay distributed
+        if tail is not None:  # None ⇒ null seed, stay distributed
             e.unpersist()
             return tail
     nodes = (
@@ -388,47 +383,6 @@ def triangle_counts(
     )
 
 
-def _lpa_local_tail(sym0: DataFrame, iterations: int,
-                    weighted: bool = False) -> DataFrame:
-    """Run the WHOLE label-propagation loop in one bounded driver pass
-    (the ``_coreness_local_tail`` discipline, r12): collect the ≤-cap
-    symmetric deduped frame (self-loops included — they define the
-    node set), replay the identical per-round dataflow locally (vote
-    counts are exact integers; the (−count, label) tuple order is the
-    struct-min order), and hand back (id, lab). Callers gate on
-    2·|sym0| before entering (nodes ⊆ sym0 src values, so the collect
-    is bounded). Bit-identical to the distributed rounds
-    (unit-pinned: tests/test_round12_ops.py). Returns None when a
-    null src/dst is present (ADVICE r12) — caller falls back to the
-    distributed rounds."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
-
-    pdf = sym0.toPandas()  # Arrow batch transfer — bounded by the gate
-    if not _local_codes_ok(pdf["src"], pdf["dst"]):
-        return None
-    # sorted codes (code order = value order); the symmetric frame
-    # guarantees src covers every node, so the src∪dst universe equals
-    # np.unique(src) and the codes match the searchsorted originals
-    ids, (scode, dcode) = _sorted_codes(
-        pdf["src"].to_numpy(), pdf["dst"].to_numpy()
-    )
-    n = len(ids)
-    f = sym0.schema["src"]
-    schema = StructType([
-        StructField("id", f.dataType, f.nullable),
-        StructField("lab", f.dataType, f.nullable),
-    ])
-    if n == 0:
-        return sym0.sparkSession.createDataFrame(
-            pd.DataFrame({"id": [], "lab": []}), schema)
-    wv = (pdf["__w"].to_numpy(dtype=np.float64) if weighted else None)
-    lab = _lpa_replay(scode, dcode, n, iterations, w=wv)
-    out = pd.DataFrame({"id": ids, "lab": ids[lab]})
-    return sym0.sparkSession.createDataFrame(out, schema)
-
-
 def _lpa_replay(scode, dcode, n, iterations, w=None):
     """The numpy LPA vote core — identical round-for-round to the
     distributed dataflow (integer vote counts — or weight sums with
@@ -469,27 +423,15 @@ def _lpa_replay(scode, dcode, n, iterations, w=None):
     return lab
 
 
-def _lpa_full_local(eprep: DataFrame, iterations: int,
+def _lpa_full_local(eprep: DataFrame, pdf, iterations: int,
                     weighted: bool = False) -> DataFrame:
-    """The whole LPA run in ONE bounded driver pass off the RAW edge
-    frame (r12): collect, symmetrize+dedupe in numpy (self-loops kept
-    — they define the node set, the ADVICE r6 contract), replay the
-    vote rounds. Skips the distributed union+distinct shuffle the
-    sym0-based tail still paid; output identical (unit-pinned).
-    Returns None when a null src/dst is present (ADVICE r12) — caller
-    falls back to the distributed rounds."""
+    """The whole LPA run in ONE bounded driver pass off ``pdf``, the
+    RAW edge frame collected by the gate (r12): symmetrize+dedupe in
+    numpy (self-loops kept — they define the node set, the ADVICE r6
+    contract), replay the vote rounds. Skips the distributed
+    union+distinct shuffle; output identical (unit-pinned)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
 
-    pdf = eprep.toPandas()  # Arrow batch transfer — bounded by the gate
-    if not _local_codes_ok(pdf["src"], pdf["dst"]):
-        return None
-    f = eprep.schema["src"]
-    schema = StructType([
-        StructField("id", f.dataType, f.nullable),
-        StructField("community", f.dataType, f.nullable),
-    ])
     svals = pdf["src"].to_numpy()
     dvals = pdf["dst"].to_numpy()
     wvals = pdf["__w"].to_numpy(dtype=np.float64) if weighted else None
@@ -499,15 +441,13 @@ def _lpa_full_local(eprep: DataFrame, iterations: int,
         keep = wvals > 0  # NaN compares False, the distributed filter
         svals, dvals, wvals = svals[keep], dvals[keep], wvals[keep]
     if len(svals) == 0:
-        return eprep.sparkSession.createDataFrame(
-            pd.DataFrame({"id": [], "community": []}), schema)
+        return _local_frame(eprep, {"id": [], "community": []})
     ids, (sc0, dc0) = _sorted_codes(svals, dvals)
     scode, dcode, wsym = _np_symmetrize(svals, dvals, wvals, ids,
                                         keep_self=True, codes=(sc0, dc0))
     lab = _lpa_replay(scode, dcode, len(ids), iterations,
                       w=wsym if weighted else None)
-    out = pd.DataFrame({"id": ids, "community": ids[lab]})
-    return eprep.sparkSession.createDataFrame(out, schema)
+    return _local_frame(eprep, {"id": ids, "community": ids[lab]})
 
 
 def label_propagation(
@@ -516,7 +456,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     broadcast_labels: bool = False,
-    local_tail_max: int = 2_000_000,
     weight_col: str | None = None,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (Raghavan et
@@ -561,11 +500,10 @@ def label_propagation(
 
     **Bounded local tail** (r12, the ``_coreness_local_tail``
     discipline): the synchronous rounds' wall-clock is a fixed
-    per-round scheduling floor, so once 2·|sym| ≤ ``local_tail_max``
-    (hard gate, default 2M, 0 disables — nodes ⊆ sym src values bounds
-    the collect) the whole loop runs locally off one Arrow collect,
-    bit-identical output (integer vote counts, identical tie order;
-    unit-pinned). 100 TB graphs never enter the gate and stay fully
+    per-round scheduling floor, so once twice the raw edge count fits
+    ``catalog.LOCAL_TAIL_ROWS`` the whole loop runs locally off one
+    Arrow collect, bit-identical output (integer vote counts,
+    identical tie order; unit-pinned). 100 TB graphs stay fully
     distributed."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -584,10 +522,9 @@ def label_propagation(
         e = _round_persist(ensure_parallelism(edges).select(
             F.col(src).alias("src"), F.col(dst).alias("dst")
         ))
-    if local_tail_max > 0 and 2 * e.count() <= local_tail_max:
-        full = _lpa_full_local(e, iterations, weighted=weighted)
-        if full is not None:  # None ⇒ null src/dst, stay distributed
-            return full
+    pdf = local_tail(e, "src", "dst", fanout=2)
+    if pdf is not None:
+        return _lpa_full_local(e, pdf, iterations, weighted=weighted)
     # ONE checkpointed frame serves both the vote edges and the node
     # set: symmetrize + dedupe WITHOUT dropping self-loops, so its src
     # side covers every node — including self-loop-only nodes, which
@@ -613,10 +550,6 @@ def label_propagation(
             .distinct()
             .localCheckpoint(eager=False)
         )
-    if local_tail_max > 0 and 2 * sym0.count() <= local_tail_max:
-        tail = _lpa_local_tail(sym0, iterations, weighted=weighted)
-        if tail is not None:  # None ⇒ null src/dst, stay distributed
-            return tail.select("id", F.col("lab").alias("community"))
     sym = sym0.filter(F.col("src") != F.col("dst"))
     nodes = (
         sym0.select(F.col("src").alias("id"))
@@ -920,8 +853,8 @@ def _coreness_local_tail(cur: DataFrame, deg: DataFrame, k: int) -> DataFrame:
     round performs), run the identical min-degree bucket peel locally
     (Batagelj & Zaveršnik 2003 ordering with the level floor k−1 the
     distributed rounds established), and return the (id, coreness)
-    frame. The collect is bounded by ``local_tail_max`` — callers gate
-    on alive n + Σdeg before entering."""
+    frame. The collect is bounded by ``catalog.LOCAL_TAIL_ROWS`` —
+    callers gate on alive n + Σdeg before entering."""
     alive = {r["id"]: int(r["__deg"]) for r in deg.collect()}
     a1 = deg.select(F.col("id").alias("__a1"))
     a2 = deg.select(F.col("id").alias("__a2"))
@@ -980,7 +913,6 @@ def coreness(
     dst: str = "dst",
     max_rounds: int = 20_000,
     broadcast_max_drop: int = 2_000_000,
-    local_tail_max: int = 2_000_000,
 ) -> DataFrame:
     """FULL coreness decomposition (Matula & Beck 1983): every
     non-isolated node's core number — the largest k such that the node
@@ -1018,14 +950,14 @@ def coreness(
       HARD documented cap, r11). The peel's round count is dominated by
       the long high-k tail, where the alive graph has shrunk to a sliver
       of the input; once the per-round scalar shows alive n + Σdeg ≤
-      ``local_tail_max`` the remaining peel runs in one pass — collect
-      the ≤-cap alive subgraph (both-endpoints-alive probe of the static
-      frame, the SAME broadcast join a normal round does), finish the
-      identical ascending-k bucket peel locally, and union the result
-      back. Coreness is a unique fixpoint, so the split point cannot
+      ``catalog.LOCAL_TAIL_ROWS`` the remaining peel runs in one pass —
+      collect the ≤-cap alive subgraph (both-endpoints-alive probe of
+      the static frame, the SAME broadcast join a normal round does),
+      finish the identical ascending-k bucket peel locally, and union
+      the result back. Coreness is a unique fixpoint, so the split point cannot
       change any value — unit-pinned against the all-distributed path.
       At 100 TB the early data-scale rounds stay fully distributed; the
-      cap only ever admits a bounded residue (set 0 to disable).
+      cap only ever admits a bounded residue.
 
     Above ``broadcast_max_drop`` ALIVE nodes the per-round joins fall
     back to shuffles (same semantics; only the first rounds of a
@@ -1070,10 +1002,9 @@ def coreness(
             break
         if frame_rows is None:
             frame_rows = int(row["sd"])
-        if (
-            local_tail_max > 0
-            and int(row["n"]) + int(row["sd"]) <= local_tail_max
-        ):
+        # reuses this round's aggregate instead of a gate count (n ≥ 1
+        # here, so a cap ≤ 0 never admits the tail)
+        if int(row["n"]) + int(row["sd"]) <= catalog.LOCAL_TAIL_ROWS:
             tail = _coreness_local_tail(cur, deg, k)
             out.append(tail)
             break
@@ -1213,65 +1144,84 @@ def _symmetrize_simple(
     )
 
 
-def _modularity_local_joined(eprep, lab, src, dst, weight_col):
-    """``modularity``'s bounded local stats pass (r12, the
-    coreness/louvain gate discipline): the heavy part — two |E|-scale
-    label joins + the (s_c, d_c) groupBy — runs in numpy off one Arrow
-    collect (every sum is over exact integer-valued doubles, so order
-    cannot matter), while the ROUNDING-SENSITIVE final arithmetic
-    (round/pow/÷, the '<all>' sum of rounded contributions) stays in
-    the SAME Spark expressions in ``modularity`` over the tiny
-    per-community stats frame — the two paths share every division and
-    F.round call, so they cannot diverge at rounding boundaries.
-    100 TB graphs never enter the gate.
+def _label_frame(labels: DataFrame):
+    """Collect a 2-column (id, label) frame for the local tails as a
+    pandas (id, lab) frame, or None — the caller stays distributed —
+    when an id or label is null or an id repeats (ADVICE r12: the
+    distributed equi-joins fan each edge out per duplicate label row;
+    a coded lookup resolves one label per id, so the local path must
+    not claim those inputs)."""
+    lpdf = labels.select(
+        F.col(labels.columns[0]).alias("id"),
+        F.col(labels.columns[1]).alias("lab"),
+    ).toPandas()
+    if bool(lpdf.isna().any().any() or lpdf["id"].duplicated().any()):
+        return None
+    return lpdf
 
-    Returns the per-community (community, n_nodes, __s, __d, __St)
-    frame, or None — caller runs the distributed stats pass — when a
-    null src/dst/id/label is present (np.unique/searchsorted raise on
-    None in object arrays) or when the labels frame carries DUPLICATE
-    ids (ADVICE r12: the distributed equi-join fans each edge out per
-    duplicate label row; the searchsorted lookup resolves one label
-    per id, so the local path must not claim those inputs)."""
+
+def _labelled_sym(epdf, lpdf, src, dst, weight_col):
+    """Shared core of the modularity/conductance local stats: code the
+    communities of the collected (id, lab) frame, symmetrize the
+    collected edges (``_np_symmetrize``) and label both endpoints of
+    every symmetric row. Rows with an unlabeled endpoint drop (the
+    distributed inner label joins). Returns (coms, n_nodes, lsrc, ldst,
+    w): the sorted community universe, its node counts, and the kept
+    rows' source/destination community codes and weights."""
+    import numpy as np
+    import pandas as pd
+
+    coms, (lab_codes,) = _sorted_codes(lpdf["lab"].to_numpy())
+    C = len(coms)
+    n_nodes = np.bincount(lab_codes, minlength=C).astype(np.int64)
+    if not (len(epdf) and C):
+        none = np.zeros(0, dtype=np.int64)
+        return coms, n_nodes, none, none, np.zeros(0, dtype=np.float64)
+    svals = epdf[src].to_numpy()
+    dvals = epdf[dst].to_numpy()
+    wvals = (epdf["__w"].to_numpy(dtype=np.float64)
+             if weight_col is not None else None)
+    endpoints, (sc0, dc0) = _sorted_codes(svals, dvals)
+    scode, dcode, w_sym = _np_symmetrize(
+        svals, dvals, wvals, endpoints, codes=(sc0, dc0))
+    # node-scale hash lookup (r14): one get_indexer over the endpoint
+    # universe replaces the edge-scale Python-string binary search —
+    # same (label code | -1, found) outputs; ids are duplicate-free
+    # (``_label_frame``)
+    pos = pd.Index(lpdf["id"].to_numpy()).get_indexer(endpoints)
+    ep_ok = pos >= 0
+    ep_lab = np.where(ep_ok, lab_codes[np.where(ep_ok, pos, 0)], -1)
+    keep = ep_ok[scode] & ep_ok[dcode]
+    return (coms, n_nodes, ep_lab[scode][keep], ep_lab[dcode][keep],
+            w_sym[keep])
+
+
+def _modularity_local_joined(epdf, lpdf, lab, src, dst, weight_col):
+    """``modularity``'s bounded local stats pass (r12, the
+    coreness/louvain gate discipline) over the gate-collected edge and
+    label frames: the heavy part — two |E|-scale label joins + the
+    (s_c, d_c) groupBy — runs in numpy (every sum is over exact
+    integer-valued doubles, so order cannot matter), while the
+    ROUNDING-SENSITIVE final arithmetic (round/pow/÷, the '<all>' sum
+    of rounded contributions) stays in the SAME Spark expressions in
+    ``modularity`` over the tiny per-community stats frame — the two
+    paths share every division and F.round call, so they cannot
+    diverge at rounding boundaries. 100 TB graphs never enter the
+    gate. Returns the per-community (community, n_nodes, __s, __d,
+    __St) frame."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (DoubleType, LongType, StructField,
                                    StructType)
 
-    epdf = eprep.toPandas()
-    lpdf = lab.toPandas()
-    if (not _local_codes_ok(epdf[src], epdf[dst], lpdf["id"], lpdf["lab"])
-            or bool(lpdf["id"].duplicated().any())):
-        return None
-    lids = lpdf["id"].to_numpy()
-    llabs = lpdf["lab"].to_numpy()
-    coms, (lab_codes,) = _sorted_codes(llabs)  # ≡ unique+return_inverse
+    coms, n_nodes_a, lsrc_k, ldst_k, w_k = _labelled_sym(
+        epdf, lpdf, src, dst, weight_col)
     C = len(coms)
-    n_nodes_a = np.bincount(lab_codes, minlength=C).astype(np.int64)
     s_a = np.zeros(C, dtype=np.float64)
     d_a = np.zeros(C, dtype=np.float64)
-    if len(epdf) and C:
-        svals = epdf[src].to_numpy()
-        dvals = epdf[dst].to_numpy()
-        wvals = (epdf["__w"].to_numpy(dtype=np.float64)
-                 if weight_col is not None else None)
-        endpoints, (sc0, dc0) = _sorted_codes(svals, dvals)
-        scode, dcode, w_sym = _np_symmetrize(
-            svals, dvals, wvals, endpoints, codes=(sc0, dc0))
-        # node-scale hash lookup (r14): one get_indexer over the
-        # endpoint universe replaces the edge-scale Python-string
-        # binary search — same (label code | -1, found) outputs,
-        # lids are duplicate-free (checked above)
-        pos = pd.Index(lids).get_indexer(endpoints)
-        ep_ok = pos >= 0
-        ep_lab = np.where(ep_ok, lab_codes[np.where(ep_ok, pos, 0)], -1)
-        lsrc, ok_s = ep_lab[scode], ep_ok[scode]
-        ldst, ok_d = ep_lab[dcode], ep_ok[dcode]
-        keep = ok_s & ok_d  # unlabeled endpoints drop their edges
-        w_k = w_sym[keep]
-        lsrc_k, ldst_k = lsrc[keep], ldst[keep]
-        np.add.at(d_a, lsrc_k, w_k)
-        intra = lsrc_k == ldst_k
-        np.add.at(s_a, lsrc_k[intra], w_k[intra])
+    np.add.at(d_a, lsrc_k, w_k)
+    intra = lsrc_k == ldst_k
+    np.add.at(s_a, lsrc_k[intra], w_k[intra])
     lab_field = lab.schema["lab"]
     stats_schema = StructType([
         StructField("community", lab_field.dataType,
@@ -1300,7 +1250,6 @@ def modularity(
     id_col: str = "id",
     label_col: str = "community",
     weight_col: str | None = None,
-    local_tail_max: int = 2_000_000,
 ) -> DataFrame:
     """Newman modularity of a community assignment (Newman & Girvan
     2004): Q = Σ_c [ s_c/S − (d_c/S)² ] over the symmetrized simple
@@ -1335,9 +1284,9 @@ def modularity(
     the node-scale label frame, ONE partial-aggregated groupBy to
     (s_c, d_c) per community, the grand total S broadcast back as a
     1-row crossJoin (never an unbounded driver collect) — closed-form,
-    no iteration, no window. Under 2·|sym| ≤ ``local_tail_max`` (hard
-    gate, 2M default, 0 disables — the coreness/louvain discipline)
-    the integer-exact (s_c, d_c, n_nodes) stats pass runs in numpy off
+    no iteration, no window. While twice the raw edge count fits
+    ``catalog.LOCAL_TAIL_ROWS`` (the coreness/louvain discipline) the
+    integer-exact (s_c, d_c, n_nodes) stats pass runs in numpy off
     one bounded Arrow collect while ALL rounding-sensitive arithmetic
     (÷, pow, F.round, the '<all>' sum) stays in the shared Spark
     expressions — the two paths cannot diverge at rounding boundaries.
@@ -1348,8 +1297,11 @@ def modularity(
         F.col(id_col).alias("id"), F.col(label_col).alias("lab")
     )
     joined = None
-    if local_tail_max > 0 and 2 * eprep.count() <= local_tail_max:
-        joined = _modularity_local_joined(eprep, lab, src, dst, weight_col)
+    epdf = local_tail(eprep, src, dst, fanout=2)
+    lpdf = None if epdf is None else _label_frame(lab)
+    if lpdf is not None:
+        joined = _modularity_local_joined(
+            epdf, lpdf, lab, src, dst, weight_col)
     if joined is None:
         sym = _symmetrize_simple(
             eprep, src, dst, "__w" if weight_col else None
@@ -1738,57 +1690,29 @@ def adamic_adar_oracle_sql(
 
 
 def _conductance_local_stats(
-    eprep: DataFrame, lab: DataFrame, src: str, dst: str,
+    epdf, lpdf, lab: DataFrame, src: str, dst: str,
     weight_col: str | None,
-) -> DataFrame | None:
+) -> DataFrame:
     """Bounded local stats pass for ``conductance`` (r13, the
-    ``_modularity_local_joined`` discipline): the integer-exact
-    (cut_c, vol_c, n_nodes) sums run in numpy off one Arrow collect
-    while ALL rounding-sensitive arithmetic (min, ÷, F.round, the
-    '<all>' row) stays in the shared Spark expressions — the two paths
-    cannot diverge at rounding boundaries. Returns the
-    (community, n_nodes, __cut, __vol) frame or None (nulls or
-    duplicate label ids ⇒ caller stays distributed)."""
+    ``_modularity_local_joined`` discipline) over the gate-collected
+    edge and label frames: the integer-exact (cut_c, vol_c, n_nodes)
+    sums run in numpy while ALL rounding-sensitive arithmetic (min, ÷,
+    F.round, the '<all>' row) stays in the shared Spark expressions —
+    the two paths cannot diverge at rounding boundaries. Returns the
+    (community, n_nodes, __cut, __vol) frame."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    epdf = eprep.toPandas()
-    lpdf = lab.toPandas()
-    if (not _local_codes_ok(epdf[src], epdf[dst], lpdf["id"], lpdf["lab"])
-            or bool(lpdf["id"].duplicated().any())):
-        return None
-    lids = lpdf["id"].to_numpy()
-    llabs = lpdf["lab"].to_numpy()
-    coms, (lab_codes,) = _sorted_codes(llabs)  # ≡ unique+return_inverse
+    coms, n_nodes_a, lsrc_k, ldst_k, w_k = _labelled_sym(
+        epdf, lpdf, src, dst, weight_col)
     C = len(coms)
-    n_nodes_a = np.bincount(lab_codes, minlength=C).astype(np.int64)
     cut_a = np.zeros(C, dtype=np.float64)
     vol_a = np.zeros(C, dtype=np.float64)
     has = np.zeros(C, dtype=bool)
-    if len(epdf) and C:
-        svals = epdf[src].to_numpy()
-        dvals = epdf[dst].to_numpy()
-        wvals = (epdf["__w"].to_numpy(dtype=np.float64)
-                 if weight_col is not None else None)
-        endpoints, (sc0, dc0) = _sorted_codes(svals, dvals)
-        scode, dcode, w_sym = _np_symmetrize(svals, dvals, wvals,
-                                             endpoints, codes=(sc0, dc0))
-        # node-scale hash lookup (r14, the modularity-local shape):
-        # get_indexer over the endpoint universe replaces the
-        # edge-scale Python-string binary search — same outputs
-        pos = pd.Index(lids).get_indexer(endpoints)
-        ep_ok = pos >= 0
-        ep_lab = np.where(ep_ok, lab_codes[np.where(ep_ok, pos, 0)], -1)
-        lsrc, ok_s = ep_lab[scode], ep_ok[scode]
-        ldst, ok_d = ep_lab[dcode], ep_ok[dcode]
-        keep = ok_s & ok_d  # unlabeled endpoints drop their edges
-        w_k = w_sym[keep]
-        lsrc_k, ldst_k = lsrc[keep], ldst[keep]
-        np.add.at(vol_a, lsrc_k, w_k)
-        boundary = lsrc_k != ldst_k
-        np.add.at(cut_a, lsrc_k[boundary], w_k[boundary])
-        has[lsrc_k] = True
+    np.add.at(vol_a, lsrc_k, w_k)
+    boundary = lsrc_k != ldst_k
+    np.add.at(cut_a, lsrc_k[boundary], w_k[boundary])
+    has[lsrc_k] = True
     lab_field = lab.schema["lab"]
     stats_schema = StructType([
         StructField("community", lab_field.dataType, lab_field.nullable),
@@ -1819,7 +1743,6 @@ def conductance(
     id_col: str = "id",
     label_col: str = "community",
     weight_col: str | None = None,
-    local_tail_max: int = 2_000_000,
 ) -> DataFrame:
     """Conductance of a community assignment — the CUT-quality score
     beside ``modularity``'s density score (Kannan, Vempala & Vetta
@@ -1874,9 +1797,11 @@ def conductance(
     # both paths. 100 TB graphs never enter the gate.
     eprep = _louvain_eprep(edges, src, dst, weight_col)
     combined = None
-    if local_tail_max > 0 and 2 * eprep.count() <= local_tail_max:
+    epdf = local_tail(eprep, src, dst, fanout=2)
+    lpdf = None if epdf is None else _label_frame(lab)
+    if lpdf is not None:
         combined = _conductance_local_stats(
-            eprep, lab, src, dst, weight_col
+            epdf, lpdf, lab, src, dst, weight_col
         )
     if combined is None:
         sym = _symmetrize_simple(
@@ -2237,57 +2162,58 @@ def degree_assortativity_oracle_sql(edges_sql: str) -> str:
     FROM dam, dan"""
 
 
-def _cc_full_local(eprep: DataFrame, max_rounds: int) -> DataFrame | None:
-    """The whole min-label fixpoint in ONE bounded driver pass (r13):
-    collect the raw projected edges, symmetrize/dedupe/drop-self in
-    numpy (codes over the sorted universe, so min-code ≡ min-id), run
-    the SYNCHRONOUS neighbor-min rounds — same round semantics and the
-    same ``max_rounds`` RuntimeError contract as the distributed loop,
-    no pointer jumping — and return (id, component) over non-isolated
-    nodes. Exact: labels are ids, no float arithmetic. Returns None on
-    null src/dst."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
+def _min_label_fixpoint(es, ed, n, max_rounds=None):
+    """Synchronous min-label rounds over coded edges ``es → ed``: each
+    round every node takes the min of its own label and its
+    in-neighbors' labels, until a round changes nothing. Labels start
+    as the codes, so over a SORTED id universe the fixpoint names each
+    component's smallest id. Returns the label array, or None when
+    ``max_rounds`` rounds pass without reaching the fixpoint."""
+    import itertools
 
-    pdf = eprep.toPandas()  # Arrow batch transfer — bounded by the gate
-    if not _local_codes_ok(pdf["src"], pdf["dst"]):
-        return None
-    f = eprep.schema["src"]
-    schema = StructType([
-        StructField("id", f.dataType, f.nullable),
-        StructField("component", f.dataType, f.nullable),
-    ])
+    import numpy as np
+
+    lab = np.arange(n, dtype=np.int64)
+    rounds = itertools.count() if max_rounds is None else range(max_rounds)
+    for _ in rounds:
+        nl = lab.copy()
+        np.minimum.at(nl, ed, lab[es])
+        new = np.minimum(lab, nl)
+        if not (new < lab).any():
+            return lab
+        lab = new
+    return None
+
+
+def _cc_full_local(eprep: DataFrame, pdf, max_rounds: int) -> DataFrame:
+    """The whole min-label fixpoint in ONE bounded driver pass (r13)
+    over ``pdf``, the raw projected edges collected by the gate:
+    symmetrize/dedupe/drop-self in numpy (codes over the sorted
+    universe, so min-code ≡ min-id), run the SYNCHRONOUS neighbor-min
+    rounds — same round semantics and the same ``max_rounds``
+    RuntimeError contract as the distributed loop, no pointer jumping
+    — and return (id, component) over non-isolated nodes. Exact:
+    labels are ids, no float arithmetic."""
+    import numpy as np
+
     svals = pdf["src"].to_numpy()
     dvals = pdf["dst"].to_numpy()
     keep = svals != dvals  # self-loops dropped before the node set forms
     svals, dvals = svals[keep], dvals[keep]
     if len(svals) == 0:
-        return eprep.sparkSession.createDataFrame(
-            pd.DataFrame({"id": [], "component": []}), schema)
+        return _local_frame(eprep, {"id": [], "component": []})
     ids, (sc0, dc0) = _sorted_codes(svals, dvals)
     n = len(ids)
     keys = np.unique(
         np.concatenate([sc0 * n + dc0, dc0 * n + sc0])
     )  # symmetrized + deduped
-    es = keys // n
-    ed = keys % n
-    lab = np.arange(n, dtype=np.int64)
-    for _ in range(max_rounds):
-        nl = lab.copy()
-        np.minimum.at(nl, ed, lab[es])
-        new = np.minimum(lab, nl)
-        changed = int((new < lab).sum())
-        lab = new
-        if changed == 0:
-            break
-    else:
+    lab = _min_label_fixpoint(keys // n, keys % n, n, max_rounds)
+    if lab is None:
         raise RuntimeError(
             f"connected_components did not converge within "
             f"max_rounds={max_rounds}"
         )
-    out = pd.DataFrame({"id": ids, "component": ids[lab]})
-    return eprep.sparkSession.createDataFrame(out, schema)
+    return _local_frame(eprep, {"id": ids, "component": ids[lab]})
 
 
 def connected_components(
@@ -2295,7 +2221,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 60,
-    local_tail_max: int = 2_000_000,
 ) -> DataFrame:
     """Connected components of the undirected graph by synchronous
     MIN-LABEL propagation to fixpoint — the membership primitive under
@@ -2336,11 +2261,11 @@ def connected_components(
     # synchronous min rounds INCLUDING the max_rounds contract) replays
     # off one Arrow collect, bit-identical (integer/string mins, no
     # float arithmetic anywhere). 100 TB graphs never enter.
-    if local_tail_max > 0 and 2 * e.count() <= local_tail_max:
-        tail = _cc_full_local(e, max_rounds)
-        if tail is not None:  # None ⇒ nulls present, stay distributed
-            e.unpersist()
-            return tail
+    pdf = local_tail(e, "src", "dst", fanout=2)
+    if pdf is not None:
+        tail = _cc_full_local(e, pdf, max_rounds)
+        e.unpersist()
+        return tail
     sym = _round_materialize(
         e.unionByName(e.select(F.col("dst").alias("src"),
                                F.col("src").alias("dst")))
@@ -2421,34 +2346,24 @@ def connected_components_oracle_sql(edges_sql: str) -> str:
 
 
 def _wpagerank_full_local(
-    g: DataFrame, iterations: int, d: float
-) -> DataFrame | None:
+    g: DataFrame, pdf, iterations: int, d: float
+) -> DataFrame:
     """Node-scale tail of ``weighted_pagerank`` in ONE bounded driver
-    pass (r13): collect the distributed (src, dst, Σw|null) pair frame
-    — null weight marks a fully weight-dropped pair whose endpoints
-    must stay in the node universe as dangling/unreferenced nodes (the
-    ADVICE r11 contract) — and replay the identical per-round
-    rank·w/Σ_out w arithmetic in numpy. Float-sum order differences vs
-    Spark's partial aggregation are last-ulp and absorbed by the
-    query-level 6-dp rounding. Returns None on null src/dst."""
+    pass (r13) over ``pdf``, the distributed (src, dst, Σw|null) pair
+    frame collected by the gate — null weight marks a fully
+    weight-dropped pair whose endpoints must stay in the node universe
+    as dangling/unreferenced nodes (the ADVICE r11 contract) — replay
+    the identical per-round rank·w/Σ_out w arithmetic in numpy.
+    Float-sum order differences vs Spark's partial aggregation are
+    last-ulp and absorbed by the query-level 6-dp rounding."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    pdf = g.toPandas()  # Arrow batch transfer — bounded by the gate
-    if not _local_codes_ok(pdf["src"], pdf["dst"]):
-        return None
-    f = g.schema["src"]
-    schema = StructType([
-        StructField("id", f.dataType, f.nullable),
-        StructField("rank", DoubleType(), True),
-    ])
     svals = pdf["src"].to_numpy()
     dvals = pdf["dst"].to_numpy()
     wvals = pdf["__w"].to_numpy(dtype=np.float64)
     if len(svals) == 0:
-        return g.sparkSession.createDataFrame(
-            pd.DataFrame({"id": [], "rank": []}), schema)
+        return _local_frame(g, {"id": [], "rank": []}, ("rank",))
     # hash-coded (pd.factorize) — see _pagerank_full_local
     codes, ids = pd.factorize(np.concatenate([svals, dvals]))
     ids = np.asarray(ids)
@@ -2469,8 +2384,7 @@ def _wpagerank_full_local(
         contrib = np.zeros(n)
         np.add.at(contrib, ld, rank[ls] * lw / outw[ls])
         rank = (1.0 - d) / nd + d * (contrib + dm / nd)
-    out = pd.DataFrame({"id": ids, "rank": rank})
-    return g.sparkSession.createDataFrame(out, schema)
+    return _local_frame(g, {"id": ids, "rank": rank}, ("rank",))
 
 
 def weighted_pagerank(
@@ -2481,7 +2395,6 @@ def weighted_pagerank(
     src: str = "src",
     dst: str = "dst",
     broadcast_ranks: bool = False,
-    local_tail_max: int = 2_000_000,
 ) -> DataFrame:
     """Weighted PageRank over a directed edge list (VERDICT r10 #5):
     each node distributes rank proportional to EDGE WEIGHT — the
@@ -2532,11 +2445,11 @@ def weighted_pagerank(
     # iteration replays off one Arrow collect of the already-reduced
     # pair frame when it fits the gate (6-dp-identical; unit-pinned).
     # 100 TB graphs never enter and run the rounds below.
-    if local_tail_max > 0 and g.count() <= local_tail_max:
-        tail = _wpagerank_full_local(g, iterations, float(damping))
-        if tail is not None:  # None ⇒ nulls present, stay distributed
-            g.unpersist()
-            return tail
+    pdf = local_tail(g, "src", "dst")
+    if pdf is not None:
+        tail = _wpagerank_full_local(g, pdf, iterations, float(damping))
+        g.unpersist()
+        return tail
     e = g.filter(F.col("__w").isNotNull())
     # explode, not union: ONE scan of the cached pair frame feeds the
     # endpoint dedup (the union form scans the cache twice)
@@ -2605,32 +2518,24 @@ def weighted_pagerank(
 
 
 def _wdist_full_local(
-    eprep: DataFrame, seeds: DataFrame, rounds: int
+    eprep: DataFrame, pdf, seeds: DataFrame, rounds: int
 ) -> DataFrame | None:
-    """Fixed-round Bellman-Ford in ONE bounded driver pass (r13):
-    collect the filtered weighted edges and the seed set, relax in
-    numpy. Full relaxation per round is round-for-round identical to
-    the distributed frontier-delta (the weighted_distances docstring's
-    own equivalence argument), and every distance is an exact min over
-    identical per-path double sums — bit-identical output. Returns
-    None on null src/dst/seed (caller stays distributed)."""
+    """Fixed-round Bellman-Ford in ONE bounded driver pass (r13) over
+    ``pdf``, the filtered weighted edges collected by the gate: collect
+    the seed set, relax in numpy. Full relaxation per round is
+    round-for-round identical to the distributed frontier-delta (the
+    weighted_distances docstring's own equivalence argument), and every
+    distance is an exact min over identical per-path double sums —
+    bit-identical output. Returns None on a null seed (caller stays
+    distributed)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    pdf = eprep.toPandas()  # Arrow batch transfer — bounded by the gate
     spdf = seeds.select(
         F.col(seeds.columns[0]).alias("__sid")
     ).distinct().toPandas()
-    if not _local_codes_ok(pdf["src"], pdf["dst"]) or bool(
-        pd.isna(spdf["__sid"]).any()
-    ):
+    if bool(pd.isna(spdf["__sid"]).any()):
         return None
-    f = eprep.schema["src"]
-    schema = StructType([
-        StructField("id", f.dataType, f.nullable),
-        StructField("dist", DoubleType(), True),
-    ])
     svals = pdf["src"].to_numpy()
     dvals = pdf["dst"].to_numpy()
     wvals = pdf["__w"].to_numpy(dtype=np.float64)
@@ -2640,8 +2545,7 @@ def _wdist_full_local(
     ids = np.asarray(ids)
     n = len(ids)
     if n == 0:
-        return eprep.sparkSession.createDataFrame(
-            pd.DataFrame({"id": [], "dist": []}), schema)
+        return _local_frame(eprep, {"id": [], "dist": []}, ("dist",))
     ne = len(svals)
     scode = codes[:ne].astype(np.int64)
     dcode = codes[ne:2 * ne].astype(np.int64)
@@ -2657,8 +2561,8 @@ def _wdist_full_local(
         )
         dist = np.minimum(dist, cand)
     reach = np.isfinite(dist)
-    out = pd.DataFrame({"id": ids[reach], "dist": dist[reach]})
-    return eprep.sparkSession.createDataFrame(out, schema)
+    return _local_frame(eprep, {"id": ids[reach], "dist": dist[reach]},
+                        ("dist",))
 
 
 def weighted_distances(
@@ -2712,9 +2616,10 @@ def weighted_distances(
     # collect stay two scans of the (caller-cached) projection rather
     # than paying a second cache write of the doubled symmetric frame.
     # 100 TB graphs never enter the gate.
-    if e0.count() <= 2_000_000:
-        tail = _wdist_full_local(e0, seeds, rounds)
-        if tail is not None:  # None ⇒ nulls present, stay distributed
+    pdf = local_tail(e0, "src", "dst")
+    if pdf is not None:
+        tail = _wdist_full_local(e0, pdf, seeds, rounds)
+        if tail is not None:  # None ⇒ null seed, stay distributed
             return tail
     # distributed rounds re-read the frame every round — materialize
     # (round_materialize — see pagerank)
@@ -2899,13 +2804,14 @@ def _louvain_rounds(
 
 def _louvain_local_tail(
     sym: DataFrame,
+    pdf,
     init_labels: DataFrame | None,
     rounds: int,
-) -> DataFrame:
+) -> DataFrame | None:
     """Run the Louvain move rounds in ONE bounded driver pass — the
-    ``_coreness_local_tail`` discipline (VERDICT r11 #3): collect the
-    ≤-cap (src, dst, __w) frame via Arrow (plus the node-scale init
-    labels, when given) and replay the EXACT per-round dataflow
+    ``_coreness_local_tail`` discipline (VERDICT r11 #3): over ``pdf``,
+    the ≤-cap (src, dst, __w) frame collected by the gate (plus the
+    node-scale init labels, when given), replay the EXACT per-round dataflow
     vectorized: weighted degrees/community degrees/candidate weights
     as ``np.add.at`` sums (exact — every addend is an integer-valued
     double), ΔQ elementwise in the identical IEEE expression order
@@ -2915,41 +2821,23 @@ def _louvain_local_tail(
     comparisons reproduce the engine's string/int comparisons).
     Returns the (id, com) frame; bit-identical to the distributed
     rounds (unit-pinned: tests/test_round12_ops.py). Returns None —
-    caller falls back to the distributed rounds — when a null src/dst
-    or init label is present, or when ``init_labels`` carries
-    duplicate ids (ADVICE r12: the distributed init join FANS OUT on
-    duplicates; the searchsorted lookup cannot, so the local path must
-    not claim those inputs)."""
+    caller falls back to the distributed rounds — when ``init_labels``
+    has a null or a duplicate id (``_label_frame``)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
 
-    pdf = sym.toPandas()  # Arrow batch transfer — bounded by the gate
-    if not _local_codes_ok(pdf["src"], pdf["dst"]):
-        return None
-    f = sym.schema["src"]
-    schema = StructType([
-        StructField("id", f.dataType, f.nullable),
-        StructField("com", f.dataType, f.nullable),
-    ])
     src = pdf["src"].to_numpy()
     dst = pdf["dst"].to_numpy()
     w = pdf["__w"].to_numpy(dtype=np.float64)
     if len(src) == 0:  # ≡ the old np.unique(src) emptiness check
-        return sym.sparkSession.createDataFrame(
-            pd.DataFrame({"id": [], "com": []}), schema)
+        return _local_frame(sym, {"id": [], "com": []})
     ipdf = None
     # one _sorted_codes pass codes the edge endpoints (and the init
     # labels into the same universe) — identical universe and codes to
     # the old unique+searchsorted (symmetric frame ⇒ src∪dst =
     # unique(src), so folding dst in changes nothing)
     if init_labels is not None:
-        ipdf = init_labels.select(
-            F.col(init_labels.columns[0]).alias("id"),
-            F.col(init_labels.columns[1]).alias("lab"),
-        ).toPandas()
-        if (not _local_codes_ok(ipdf["id"], ipdf["lab"])
-                or bool(ipdf["id"].duplicated().any())):
+        ipdf = _label_frame(init_labels)
+        if ipdf is None:
             return None
         universe, (scode, dcode, _ilc) = _sorted_codes(
             src, dst, ipdf["lab"].to_numpy())
@@ -2959,9 +2847,8 @@ def _louvain_local_tail(
     ids = universe[node_codes]
     full = _louvain_init_full(universe, ids, ipdf)
     full = _louvain_replay(universe, scode, dcode, w, full, rounds)
-    out = pd.DataFrame({"id": ids, "com": universe[full[node_codes]]})
     # Arrow batch transfer back out, mirroring the toPandas on the way in
-    return sym.sparkSession.createDataFrame(out, schema)
+    return _local_frame(sym, {"id": ids, "com": universe[full[node_codes]]})
 
 
 def _louvain_init_full(universe, ids, ipdf):
@@ -3103,53 +2990,24 @@ def _np_symmetrize(svals, dvals, wvals, universe, keep_self=False,
     return (uk // U), (uk % U), np.ones(len(uk), dtype=np.float64)
 
 
-def _louvain_full_local(
-    eprep: DataFrame,
-    src: str,
-    dst: str,
-    weight_col: str | None,
-    init_labels: DataFrame | None,
-    rounds: int,
-    levels: int,
-) -> DataFrame:
-    """The whole (multi-level) Louvain run in ONE bounded driver pass:
-    collect the RAW projected edge frame (≤ gate rows — half the
-    symmetric frame the per-level tail would collect), symmetrize in
-    numpy (``_np_symmetrize``, exact), then per level replay the move
-    rounds (``_louvain_replay``) and contract locally (one
-    integer-exact grouped weight sum, self-rows kept). Skips every
-    distributed symmetrize/shuffle — the level-0 fast path behind the
-    same ``local_tail_max`` gate; output identical to the distributed
-    path (unit-pinned). Returns None — caller falls back to the
-    distributed dataflow — on null src/dst/init values or duplicate
-    init ids (ADVICE r12, see ``_louvain_local_tail``)."""
+def _louvain_local_input(pdf, src, dst, weight_col, init_labels):
+    """Shared start of the whole-run Louvain and Leiden replays: code
+    the collected raw edges — with the init labels' labels and ids in
+    the same sorted universe — and symmetrize them in numpy
+    (``_np_symmetrize``, exact). Returns (universe, scode, dcode, w,
+    ipdf), or None on a null or duplicate init id (``_label_frame``)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
 
-    pdf = eprep.toPandas()  # Arrow batch transfer — bounded by the gate
-    if not _local_codes_ok(pdf[src], pdf[dst]):
-        return None
-    f = eprep.schema[src]
-    schema = StructType([
-        StructField("id", f.dataType, f.nullable),
-        StructField("community", f.dataType, f.nullable),
-    ])
     svals = pdf[src].to_numpy()
     dvals = pdf[dst].to_numpy()
     wvals = pdf["__w"].to_numpy(dtype=np.float64) if weight_col else None
     ipdf = None
     vals = [svals, dvals]
     if init_labels is not None:
-        ipdf = init_labels.select(
-            F.col(init_labels.columns[0]).alias("id"),
-            F.col(init_labels.columns[1]).alias("lab"),
-        ).toPandas()
-        if (not _local_codes_ok(ipdf["id"], ipdf["lab"])
-                or bool(ipdf["id"].duplicated().any())):
+        ipdf = _label_frame(init_labels)
+        if ipdf is None:
             return None
-        vals.append(ipdf["lab"].to_numpy())
-        vals.append(ipdf["id"].to_numpy())
+        vals += [ipdf["lab"].to_numpy(), ipdf["id"].to_numpy()]
     if len(svals) or (ipdf is not None and len(ipdf)):
         universe, codes = _sorted_codes(*vals)  # ≡ unique+searchsorted
         sc0, dc0 = codes[0], codes[1]
@@ -3158,11 +3016,39 @@ def _louvain_full_local(
         sc0 = dc0 = np.array([], dtype=np.int64)
     scode, dcode, w = _np_symmetrize(svals, dvals, wvals, universe,
                                      codes=(sc0, dc0))
+    return universe, scode, dcode, w, ipdf
+
+
+def _louvain_full_local(
+    eprep: DataFrame,
+    pdf,
+    src: str,
+    dst: str,
+    weight_col: str | None,
+    init_labels: DataFrame | None,
+    rounds: int,
+    levels: int,
+) -> DataFrame:
+    """The whole (multi-level) Louvain run in ONE bounded driver pass
+    over ``pdf``, the RAW projected edge frame collected by the gate
+    (half the symmetric frame the per-level tail would collect):
+    symmetrize in numpy (``_louvain_local_input``), then per level
+    replay the move rounds (``_louvain_replay``) and contract locally (one
+    integer-exact grouped weight sum, self-rows kept). Skips every
+    distributed symmetrize/shuffle — the level-0 fast path; output
+    identical to the distributed path (unit-pinned). Returns None —
+    caller falls back to the distributed dataflow — on a null or
+    duplicate init id (``_label_frame``)."""
+    import numpy as np
+
+    coded = _louvain_local_input(pdf, src, dst, weight_col, init_labels)
+    if coded is None:
+        return None
+    universe, scode, dcode, w, ipdf = coded
     node_codes = np.unique(scode)
     ids = universe[node_codes]
     if len(ids) == 0:
-        return eprep.sparkSession.createDataFrame(
-            pd.DataFrame({"id": [], "community": []}), schema)
+        return _local_frame(eprep, {"id": [], "community": []})
     full = _louvain_init_full(universe, ids, ipdf)
     assign = full[node_codes].copy()  # original node → community code
     for lv in range(levels):
@@ -3180,25 +3066,24 @@ def _louvain_full_local(
         cnodes = np.unique(scode)
         full = np.full(U, -1, dtype=np.int64)
         full[cnodes] = cnodes  # contracted level starts at singletons
-    out = pd.DataFrame({"id": ids, "community": universe[assign]})
-    return eprep.sparkSession.createDataFrame(out, schema)
+    return _local_frame(eprep, {"id": ids, "community": universe[assign]})
 
 
 def _louvain_level(
     sym: DataFrame,
     init_labels: DataFrame | None,
     rounds: int,
-    local_tail_max: int,
 ) -> DataFrame:
     """One Louvain move phase over the symmetric weighted frame:
-    bounded local tail when 2·|sym| ≤ ``local_tail_max`` (nodes ⊆ sym
-    src values bounds the collect; the one scalar count also
-    materializes the lazy checkpoint the rounds would force anyway —
-    the coreness gate discipline), else the distributed round core.
+    bounded local tail when 2·|sym| fits ``catalog.LOCAL_TAIL_ROWS``
+    (nodes ⊆ sym src values bounds the collect; the one scalar count
+    also materializes the lazy checkpoint the rounds would force anyway
+    — the coreness gate discipline), else the distributed round core.
     Both paths are output-identical (unit-pinned). Returns (id, com)."""
-    if local_tail_max > 0 and 2 * sym.count() <= local_tail_max:
-        tail = _louvain_local_tail(sym, init_labels, rounds)
-        if tail is not None:  # None ⇒ nulls/dup init ids, stay distributed
+    pdf = local_tail(sym, "src", "dst", fanout=2)
+    if pdf is not None:
+        tail = _louvain_local_tail(sym, pdf, init_labels, rounds)
+        if tail is not None:  # None ⇒ null/dup init ids, stay distributed
             return tail
     deg = _round_materialize(
         sym.groupBy("src")
@@ -3246,7 +3131,6 @@ def louvain_local_move(
     rounds: int = 8,
     init_labels: DataFrame | None = None,
     weight_col: str | None = None,
-    local_tail_max: int = 2_000_000,
 ) -> DataFrame:
     """Deterministic one-level Louvain-style local move (Blondel et al.
     2008, phase 1) — the modularity IMPROVER the evaluation tier was
@@ -3283,12 +3167,11 @@ def louvain_local_move(
 
     **Bounded local tail** (VERDICT r11 #3 — the
     ``_coreness_local_tail`` discipline applied verbatim): the move
-    rounds' wall is a fixed per-round scheduling floor, so once
-    |sym rows| + |nodes| ≤ ``local_tail_max`` (hard gate, default 2M,
-    0 disables) the WHOLE move phase runs in one bounded Arrow
-    collect + local replay of the identical dataflow — bit-identical
-    output (unit-pinned), 100 TB graphs never enter (the gate keeps
-    them fully distributed).
+    rounds' wall is a fixed per-round scheduling floor, so once twice
+    the raw edge count fits ``catalog.LOCAL_TAIL_ROWS`` the WHOLE move
+    phase runs in one bounded Arrow collect + local replay of the
+    identical dataflow — bit-identical output (unit-pinned), 100 TB
+    graphs stay fully distributed.
 
     **Q is provably non-decreasing — the synchronous-stampede guard.**
     Naive synchronous local moves are a known trap: thousands of nodes
@@ -3318,15 +3201,16 @@ def louvain_local_move(
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
     eprep = _louvain_eprep(edges, src, dst, weight_col)
-    if local_tail_max > 0 and 2 * eprep.count() <= local_tail_max:
+    pdf = local_tail(eprep, src, dst, fanout=2)
+    if pdf is not None:
         full = _louvain_full_local(
-            eprep, src, dst, weight_col, init_labels, rounds, levels=1)
-        if full is not None:  # None ⇒ nulls/dup init ids, stay distributed
+            eprep, pdf, src, dst, weight_col, init_labels, rounds, levels=1)
+        if full is not None:  # None ⇒ null/dup init ids, stay distributed
             return full
     sym = _symmetrize_simple(
         eprep, src, dst, "__w" if weight_col else None
     ).localCheckpoint(eager=False).persist()
-    labels = _louvain_level(sym, init_labels, rounds, local_tail_max)
+    labels = _louvain_level(sym, init_labels, rounds)
     # Materialize the returned node-scale frame, then release the
     # edge-scale caches (ADVICE r12): the returned frame stays
     # persisted (callers may unpersist); sym/labels do not outlive the
@@ -3365,7 +3249,6 @@ def louvain_multilevel(
     rounds: int = 4,
     init_labels: DataFrame | None = None,
     weight_col: str | None = None,
-    local_tail_max: int = 2_000_000,
 ) -> DataFrame:
     """Full multi-level Louvain (Blondel et al. 2008, phases 1+2 —
     VERDICT r11 #2): alternate ``louvain_local_move``'s guarded
@@ -3402,16 +3285,17 @@ def louvain_multilevel(
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
     eprep = _louvain_eprep(edges, src, dst, weight_col)
-    if local_tail_max > 0 and 2 * eprep.count() <= local_tail_max:
+    pdf = local_tail(eprep, src, dst, fanout=2)
+    if pdf is not None:
         full = _louvain_full_local(
-            eprep, src, dst, weight_col, init_labels, rounds, levels)
-        if full is not None:  # None ⇒ nulls/dup init ids, stay distributed
+            eprep, pdf, src, dst, weight_col, init_labels, rounds, levels)
+        if full is not None:  # None ⇒ null/dup init ids, stay distributed
             return full
     sym = _symmetrize_simple(
         eprep, src, dst, "__w" if weight_col else None
     ).localCheckpoint(eager=False).persist()
     prior_sym = sym
-    labels = _louvain_level(sym, init_labels, rounds, local_tail_max)
+    labels = _louvain_level(sym, init_labels, rounds)
     mapping = labels
     for lv in range(1, levels):
         ls = labels.select(F.col("id").alias("__ls_id"),
@@ -3428,7 +3312,7 @@ def louvain_multilevel(
         sym = _round_materialize(sym, prior=prior_sym)
         prior_sym = sym
         contract_src = labels
-        labels = _louvain_level(sym, None, rounds, local_tail_max)
+        labels = _louvain_level(sym, None, rounds)
         sl = labels.select(F.col("id").alias("__sl_id"),
                            F.col("com").alias("__sl_com"))
         mapping = _round_materialize(
@@ -3667,6 +3551,7 @@ def _np_leiden_refine(scode, dcode, full, U):
 
 def _leiden_full_local(
     eprep: DataFrame,
+    pdf,
     src: str,
     dst: str,
     weight_col: str | None,
@@ -3675,56 +3560,27 @@ def _leiden_full_local(
     levels: int,
 ) -> DataFrame:
     """The whole leiden run in ONE bounded driver pass (the
-    ``_louvain_full_local`` discipline): collect the raw projected
-    edge frame (≤ gate rows), symmetrize in numpy, then per level
+    ``_louvain_full_local`` discipline) over ``pdf``, the raw
+    projected edge frame collected by the gate: symmetrize in numpy
+    (``_louvain_local_input``), then per level
     replay the move rounds (``_louvain_replay``), refine via the
     vectorized min-label component pass, contract by the refined
     partition with the coarse communities as the next level's start,
     and finish with the connectivity pass over the level-0 frame.
     Output identical to the distributed path (unit-pinned:
     tests/test_round13_ops.py). Returns None — caller falls back to
-    the distributed dataflow — on null src/dst/init values or
-    duplicate init ids (ADVICE r12)."""
+    the distributed dataflow — on a null or duplicate init id
+    (``_label_frame``)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
 
-    pdf = eprep.toPandas()  # Arrow batch transfer — bounded by the gate
-    if not _local_codes_ok(pdf[src], pdf[dst]):
+    coded = _louvain_local_input(pdf, src, dst, weight_col, init_labels)
+    if coded is None:
         return None
-    f = eprep.schema[src]
-    schema = StructType([
-        StructField("id", f.dataType, f.nullable),
-        StructField("community", f.dataType, f.nullable),
-    ])
-    svals = pdf[src].to_numpy()
-    dvals = pdf[dst].to_numpy()
-    wvals = pdf["__w"].to_numpy(dtype=np.float64) if weight_col else None
-    ipdf = None
-    vals = [svals, dvals]
-    if init_labels is not None:
-        ipdf = init_labels.select(
-            F.col(init_labels.columns[0]).alias("id"),
-            F.col(init_labels.columns[1]).alias("lab"),
-        ).toPandas()
-        if (not _local_codes_ok(ipdf["id"], ipdf["lab"])
-                or bool(ipdf["id"].duplicated().any())):
-            return None
-        vals.append(ipdf["lab"].to_numpy())
-        vals.append(ipdf["id"].to_numpy())
-    if len(svals) or (ipdf is not None and len(ipdf)):
-        universe, codes = _sorted_codes(*vals)  # ≡ unique+searchsorted
-        sc0, dc0 = codes[0], codes[1]
-    else:
-        universe = np.array([], dtype=object)
-        sc0 = dc0 = np.array([], dtype=np.int64)
-    scode, dcode, w = _np_symmetrize(svals, dvals, wvals, universe,
-                                     codes=(sc0, dc0))
+    universe, scode, dcode, w, ipdf = coded
     node_codes0 = np.unique(scode)
     ids = universe[node_codes0]
     if len(ids) == 0:
-        return eprep.sparkSession.createDataFrame(
-            pd.DataFrame({"id": [], "community": []}), schema)
+        return _local_frame(eprep, {"id": [], "community": []})
     U = len(universe)
     scode0, dcode0 = scode, dcode  # level-0 frame for the final pass
     full = _louvain_init_full(universe, ids, ipdf)
@@ -3753,9 +3609,8 @@ def _leiden_full_local(
     full_coarse = np.full(U, -1, dtype=np.int64)
     full_coarse[node_codes0] = coarse
     refined_final = _np_leiden_refine(scode0, dcode0, full_coarse, U)
-    out = pd.DataFrame({
+    return _local_frame(eprep, {
         "id": ids, "community": universe[refined_final[node_codes0]]})
-    return eprep.sparkSession.createDataFrame(out, schema)
 
 
 def leiden(
@@ -3766,7 +3621,6 @@ def leiden(
     rounds: int = 4,
     init_labels: DataFrame | None = None,
     weight_col: str | None = None,
-    local_tail_max: int = 2_000_000,
 ) -> DataFrame:
     """Leiden-style community detection (Traag, Waltman & van Eck
     2019 — VERDICT r12 #6): ``louvain_multilevel``'s guarded move +
@@ -3807,17 +3661,18 @@ def leiden(
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
     eprep = _louvain_eprep(edges, src, dst, weight_col)
-    if local_tail_max > 0 and 2 * eprep.count() <= local_tail_max:
+    pdf = local_tail(eprep, src, dst, fanout=2)
+    if pdf is not None:
         full = _leiden_full_local(
-            eprep, src, dst, weight_col, init_labels, rounds, levels)
-        if full is not None:  # None ⇒ nulls/dup init ids, stay distributed
+            eprep, pdf, src, dst, weight_col, init_labels, rounds, levels)
+        if full is not None:  # None ⇒ null/dup init ids, stay distributed
             return full
     sym0 = _symmetrize_simple(
         eprep, src, dst, "__w" if weight_col else None
     ).localCheckpoint(eager=False).persist()
     sym = sym0
     prior_sym = None  # contracted frames only — sym0 lives to the end
-    labels = _louvain_level(sym, init_labels, rounds, local_tail_max)
+    labels = _louvain_level(sym, init_labels, rounds)
     assign = None  # original id → current-level node id
     for _ in range(1, levels):
         refined = _round_materialize(_leiden_refine(sym, labels))
@@ -3850,7 +3705,7 @@ def leiden(
                 .select(assign["id"], F.col("refined").alias("cur")),
                 prior=assign,
             )
-        labels = _louvain_level(sym, rinit, rounds, local_tail_max)
+        labels = _louvain_level(sym, rinit, rounds)
         old_labels.unpersist()
         refined.unpersist()
     if assign is None:
@@ -4001,34 +3856,24 @@ def leiden_oracle_sql(
     SELECT id, refined AS lab FROM {fname})"""
 
 
-def _hits_full_local(eprep: DataFrame, iterations: int) -> DataFrame | None:
+def _hits_full_local(eprep: DataFrame, pdf, iterations: int) -> DataFrame:
     """The whole HITS loop in ONE bounded driver pass (r13, the
-    ``_pagerank_full_local`` discipline): collect the raw projected
-    edges, dedupe locally (the distributed path's .distinct()), replay
-    the textbook a←Σh / normalize / h←Σa rounds in numpy with the
-    identical expression order. Per-node float sums and the L2 norms
+    ``_pagerank_full_local`` discipline) over ``pdf``, the raw
+    projected edges collected by the gate: dedupe locally (the
+    distributed path's .distinct()), replay the textbook a←Σh /
+    normalize / h←Σa rounds in numpy with the identical expression
+    order. Per-node float sums and the L2 norms
     accumulate in a different order than Spark's partial aggregation —
     last-ulp differences absorbed by the query-level 6-dp rounding (the
-    hits_scores docstring's own tolerance argument). Returns None on
-    null src/dst (caller stays distributed)."""
+    hits_scores docstring's own tolerance argument)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    pdf = eprep.toPandas()  # Arrow batch transfer — bounded by the gate
-    if not _local_codes_ok(pdf["src"], pdf["dst"]):
-        return None
-    f = eprep.schema["src"]
-    schema = StructType([
-        StructField("id", f.dataType, f.nullable),
-        StructField("hub", DoubleType(), True),
-        StructField("authority", DoubleType(), True),
-    ])
     svals = pdf["src"].to_numpy()
     dvals = pdf["dst"].to_numpy()
     if len(svals) == 0:
-        return eprep.sparkSession.createDataFrame(
-            pd.DataFrame({"id": [], "hub": [], "authority": []}), schema)
+        return _local_frame(eprep, {"id": [], "hub": [], "authority": []},
+                            ("hub", "authority"))
     # hash-coded (pd.factorize) — see _pagerank_full_local
     codes, ids = pd.factorize(np.concatenate([svals, dvals]))
     ids = np.asarray(ids)
@@ -4051,8 +3896,8 @@ def _hits_full_local(eprep: DataFrame, iterations: int) -> DataFrame | None:
         np.add.at(hraw, es, auth[ed])
         hn = float(np.sqrt(np.sum(hraw * hraw)))
         hub = hraw / hn if hn > 0 else np.zeros(n)
-    out = pd.DataFrame({"id": ids, "hub": hub, "authority": auth})
-    return eprep.sparkSession.createDataFrame(out, schema)
+    return _local_frame(eprep, {"id": ids, "hub": hub, "authority": auth},
+                        ("hub", "authority"))
 
 
 def hits_scores(
@@ -4061,7 +3906,6 @@ def hits_scores(
     src: str = "src",
     dst: str = "dst",
     broadcast_scores: bool = False,
-    local_tail_max: int = 2_000_000,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999, the power-iteration
     formulation) over a directed edge list — the natural centrality
@@ -4097,13 +3941,14 @@ def hits_scores(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ))
     # Bounded local tail (r13, the label_propagation discipline):
-    # below the hard gate the whole loop replays off one Arrow collect
-    # (6-dp-identical; unit-pinned); 100 TB graphs never enter.
-    if local_tail_max > 0 and e0.count() <= local_tail_max:
-        tail = _hits_full_local(e0, iterations)
-        if tail is not None:  # None ⇒ nulls present, stay distributed
-            e0.unpersist()
-            return tail
+    # under ``catalog.LOCAL_TAIL_ROWS`` the whole loop replays off one
+    # Arrow collect (6-dp-identical; unit-pinned); 100 TB graphs never
+    # enter.
+    pdf = local_tail(e0, "src", "dst")
+    if pdf is not None:
+        tail = _hits_full_local(e0, pdf, iterations)
+        e0.unpersist()
+        return tail
     e = _round_materialize(e0.distinct(), prior=e0)
     nodes = _round_materialize(
         e.select(F.col("src").alias("id"))

@@ -19,27 +19,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from census_data_pipeline_spark.sources.catalog import (
+    local_tail,
     round_materialize as _round_materialize,
     round_persist as _round_persist,
 )
 
 
-def _markov_absorption_local(pm: DataFrame, iterations: int, r6):
+def _markov_absorption_local(pm: DataFrame, pdfm, iterations: int, r6):
     """Bounded local replay of the removal×state absorption rounds
-    (r13): collect the model-sized transition frame, iterate in numpy
-    with the identical expression order — p ← r6(P→conv + Σ P·p) with
-    the removed channel's mass pinned to 0 — and hand back the
-    (__rem, __pv) start-state frame the caller's removal-effect
-    arithmetic consumes (that arithmetic, and all its rounding, stays
-    in Spark). Returns None on a null state (caller stays
-    distributed)."""
+    (r13) over ``pdfm``, the model-sized transition frame collected by
+    the gate: iterate in numpy with the identical expression order —
+    p ← r6(P→conv + Σ P·p) with the removed channel's mass pinned to 0
+    — and hand back the (__rem, __pv) start-state frame the caller's
+    removal-effect arithmetic consumes (that arithmetic, and all its
+    rounding, stays in Spark)."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    pdfm = pm.toPandas()
-    if bool(pd.isna(pdfm["__s"]).any() or pd.isna(pdfm["__tt"]).any()):
-        return None
     spark = pm.sparkSession
     schema = StructType([
         StructField("__rem", pm.schema["__s"].dataType, True),
@@ -48,12 +44,8 @@ def _markov_absorption_local(pm: DataFrame, iterations: int, r6):
     states = np.unique(pdfm["__s"].to_numpy())
     slist = states.tolist()
     S = len(slist)
-    if S == 0 or "start" not in slist:
-        rows = []
-        if S:
-            # no 'start' source: every removal's start row is absent
-            rows = []
-        return spark.createDataFrame(rows, schema)
+    if "start" not in slist:  # no 'start' source: no start-state rows
+        return spark.createDataFrame([], schema)
     sidx = {s: i for i, s in enumerate(slist)}
     start_i = sidx["start"]
     removals = [s for s in slist if s != "start"] + ["<none>"]
@@ -409,11 +401,13 @@ def markov_removal_attribution(
     # replay off one Arrow collect with the IDENTICAL per-step
     # arithmetic (r6 floor-half-up is bit-exact on identical doubles;
     # sum-order ulps are absorbed exactly as the DuckDB oracle's
-    # serial sums already are). A >10⁶-cell chain falls back to the
-    # distributed rounds below.
+    # serial sums already are). A chain over half
+    # ``catalog.LOCAL_TAIL_ROWS`` cells (fanout=2: 10⁶ cells at the
+    # default) falls back to the distributed rounds below.
     starts = None
-    if pm.count() <= 1_000_000:
-        starts = _markov_absorption_local(pm, iterations, r6)
+    pdfm = local_tail(pm, "__s", "__tt", fanout=2)
+    if pdfm is not None:
+        starts = _markov_absorption_local(pm, pdfm, iterations, r6)
     if starts is None:
         states = pm.select(F.col("__s").alias("__st")).distinct() \
             .localCheckpoint(eager=False)

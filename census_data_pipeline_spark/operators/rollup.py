@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 
 from census_data_pipeline_spark.operators.geoid import geoid_prefix
 from census_data_pipeline_spark.sources.catalog import (
+    local_tail,
     round_materialize as _round_materialize,
     round_persist as _round_persist,
 )
@@ -2608,18 +2609,19 @@ def markov_stationary(
     # floor-half-up r6 is bit-exact in numpy: floor(x·1e6+0.5)/1e6 on
     # identical doubles). Sum-order ulp differences vs Spark's partial
     # aggregation are absorbed exactly as the DuckDB oracle's serial
-    # sums already are. A >10⁶-cell chain (k > 1000) falls back to the
-    # distributed rounds.
+    # sums already are. A chain over half ``catalog.LOCAL_TAIL_ROWS``
+    # cells (fanout=2: 10⁶ cells, k > 1000, at the default) falls back
+    # to the distributed rounds.
     # lazily persisted (r14): the gate count right below is the first
     # action and materializes the blocks
     pm = _round_persist(pm)
     pi = None
-    if pm.count() <= 1_000_000:
+    pdfm = local_tail(pm, "__s", "__j", fanout=2)
+    if pdfm is not None:
         import numpy as np
         import pandas as pd
         from pyspark.sql.types import DoubleType, StructField, StructType
 
-        pdfm = pm.toPandas()
         # The state UNIVERSE is st (every cnt source) — NOT pm's
         # surviving sources (ADVICE r13, medium): a source whose every
         # out-edge targets sink-only types keeps its st row (and its
@@ -2629,10 +2631,7 @@ def markov_stationary(
         # onto the wrong state; the distributed rounds below start pi
         # on st, so the local replay must too.
         stpdf = st.toPandas()
-        if not bool(
-            pd.isna(pdfm["__s"]).any() or pd.isna(pdfm["__j"]).any()
-            or pd.isna(stpdf["__state"]).any()
-        ):
+        if not bool(pd.isna(stpdf["__state"]).any()):
             states = np.unique(stpdf["__state"].to_numpy())
             kk = len(states)
             sidx = pd.Index(states)

@@ -44,14 +44,11 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
 
     Safe to call repeatedly; used by every public query entry point so the
     engine behaves identically under the driver's session and our own.
+    Every conf here is a runtime SQL conf, so a failure to set one (the
+    UTC zone or ANSI-off would silently change results) raises.
     """
     for k, v in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            # Some confs may be static in exotic deployments; the engine
-            # degrades gracefully (events scan will raise a clear error).
-            pass
+        spark.conf.set(k, v)
     _ship_package(spark)
     return spark
 

@@ -138,6 +138,30 @@ def round_persist(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False).persist()
 
 
+# Row cap of every bounded driver-local tail (the graph, dedup and Markov
+# operators' numpy replays): inputs at or under it are collected and run
+# on the driver, larger ones take the distributed rounds. 0 forces the
+# distributed path everywhere.
+LOCAL_TAIL_ROWS = 2_000_000
+
+
+def local_tail(df: DataFrame, *key_cols: str, fanout: int = 1):
+    """The one local-tail gate. Returns ``df.toPandas()`` when
+    ``fanout * df.count()`` fits ``LOCAL_TAIL_ROWS`` and no ``key_cols``
+    value is null, else None (the caller runs its distributed rounds).
+    ``fanout`` is the rows the local replay makes per input row (2 for
+    an edge list it symmetrizes). Nulls stay distributed because the
+    numpy replays code keys with np.unique/searchsorted, which raise on
+    None in object arrays, while the distributed equi-joins simply
+    never match null keys. With the cap at 0 no job runs."""
+    if LOCAL_TAIL_ROWS <= 0 or fanout * df.count() > LOCAL_TAIL_ROWS:
+        return None
+    pdf = df.toPandas()  # Arrow batch transfer — bounded by the cap
+    if bool(pdf[list(key_cols)].isna().any().any()):
+        return None
+    return pdf
+
+
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 

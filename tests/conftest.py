@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -41,3 +42,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """``with distributed():`` runs its block with
+    ``catalog.LOCAL_TAIL_ROWS`` at 0, so every gated operator built
+    inside it takes its distributed rounds instead of the local tail."""
+    from census_data_pipeline_spark.sources import catalog
+
+    @contextlib.contextmanager
+    def forced():
+        with monkeypatch.context() as m:
+            m.setattr(catalog, "LOCAL_TAIL_ROWS", 0)
+            yield
+
+    return forced

@@ -165,7 +165,7 @@ def test_sq8_mse_retains_signal_at_12dp(spark):
 # --- coreness bounded local tail (VERDICT r10 #2) ----------------------------
 
 
-def test_coreness_local_tail_equals_distributed(spark):
+def test_coreness_local_tail_equals_distributed(spark, distributed):
     """The bounded driver-local tail must be invisible in the output:
     same (id, coreness) multiset as the all-distributed peel on a
     seeded random graph (tail triggers immediately at this size)."""
@@ -183,14 +183,12 @@ def test_coreness_local_tail_equals_distributed(spark):
     with_tail = sorted(
         (r.id, r.coreness) for r in coreness(df).collect()
     )
-    pure = sorted(
-        (r.id, r.coreness)
-        for r in coreness(df, local_tail_max=0).collect()
-    )
+    with distributed():
+        pure = sorted((r.id, r.coreness) for r in coreness(df).collect())
     assert with_tail == pure and len(pure) > 100
 
 
-def test_coreness_tail_switch_mid_peel(spark):
+def test_coreness_tail_switch_mid_peel(spark, monkeypatch, distributed):
     """Force the switch to happen AFTER some distributed rounds (cap
     sized between the full graph and the residue) — the k floor must
     carry over: a path pendant chain (core 1) hanging off a K5
@@ -200,12 +198,14 @@ def test_coreness_tail_switch_mid_peel(spark):
     k5 = [(f"k{i}", f"k{j}") for i in range(5) for j in range(i + 1, 5)]
     chain = [("k0", "p0")] + [(f"p{i}", f"p{i+1}") for i in range(30)]
     df = spark.createDataFrame(k5 + chain, "src string, dst string")
+    from census_data_pipeline_spark.sources import catalog
+
     # n + sum_deg at the start: 36 nodes + 2*51 edges > 60, so a cap
     # of 60 keeps the first rounds distributed.
-    got = {r.id: r.coreness
-           for r in coreness(df, local_tail_max=60).collect()}
-    want = {r.id: r.coreness
-            for r in coreness(df, local_tail_max=0).collect()}
+    with distributed():
+        want = {r.id: r.coreness for r in coreness(df).collect()}
+    monkeypatch.setattr(catalog, "LOCAL_TAIL_ROWS", 60)
+    got = {r.id: r.coreness for r in coreness(df).collect()}
     assert got == want
     assert got["k1"] == 4 and got["p5"] == 1
 

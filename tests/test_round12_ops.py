@@ -110,7 +110,7 @@ def test_weighted_oracle_parity_random_graph(spark):
 # -------------------------------------------------------------- local tail
 
 
-def test_louvain_local_tail_identical_to_distributed(spark):
+def test_louvain_local_tail_identical_to_distributed(spark, distributed):
     """VERDICT r11 #3's done-criterion: the bounded local tail is
     output-IDENTICAL to the all-distributed path, weighted and
     unweighted, on a seeded random graph."""
@@ -124,19 +124,20 @@ def test_louvain_local_tail_identical_to_distributed(spark):
         src = e if wc else e.select("src", "dst")
         local = sorted(G.louvain_local_move(
             src, rounds=4, weight_col=wc).collect())
-        dist = sorted(G.louvain_local_move(
-            src, rounds=4, weight_col=wc, local_tail_max=0).collect())
+        with distributed():
+            dist = sorted(G.louvain_local_move(
+                src, rounds=4, weight_col=wc).collect())
         assert local == dist
     # multilevel too — every level routes through the same gate
     ml_local = sorted(G.louvain_multilevel(e, levels=2, rounds=3,
                                            weight_col="w").collect())
-    ml_dist = sorted(G.louvain_multilevel(e, levels=2, rounds=3,
-                                          weight_col="w",
-                                          local_tail_max=0).collect())
+    with distributed():
+        ml_dist = sorted(G.louvain_multilevel(e, levels=2, rounds=3,
+                                              weight_col="w").collect())
     assert ml_local == ml_dist
 
 
-def test_modularity_local_stats_identical_to_distributed(spark):
+def test_modularity_local_stats_identical_to_distributed(spark, distributed):
     """The bounded modularity stats pass (numpy integer-exact sums off
     one Arrow collect; final round/pow/÷ shared with the distributed
     Spark expressions) is output-identical at string level — weighted
@@ -153,9 +154,9 @@ def test_modularity_local_stats_identical_to_distributed(spark):
         src = e if wc else e.select("src", "dst")
         loc = sorted(tuple(str(v) for v in r) for r in
                      G.modularity(src, lab, weight_col=wc).collect())
-        dist = sorted(tuple(str(v) for v in r) for r in
-                      G.modularity(src, lab, weight_col=wc,
-                                   local_tail_max=0).collect())
+        with distributed():
+            dist = sorted(tuple(str(v) for v in r) for r in
+                          G.modularity(src, lab, weight_col=wc).collect())
         assert loc == dist
     lab2 = spark.createDataFrame(
         [("n0", "A"), ("n1", "A"), ("isolated", "B")], ["id", "community"]
@@ -164,41 +165,29 @@ def test_modularity_local_stats_identical_to_distributed(spark):
                                ["src", "dst"])
     loc = sorted(tuple(str(v) for v in r) for r in
                  G.modularity(e2, lab2).collect())
-    dist = sorted(tuple(str(v) for v in r) for r in
-                  G.modularity(e2, lab2, local_tail_max=0).collect())
+    with distributed():
+        dist = sorted(tuple(str(v) for v in r) for r in
+                      G.modularity(e2, lab2).collect())
     assert loc == dist
     got = {r[0]: r for r in loc}
     assert got["B"][1] == "1" and got["B"][2] == "0"  # edge-free node
     assert got["<all>"][1] == "3"  # unlabeled 'zz' outside n_nodes
 
 
-def test_lpa_local_tail_identical_to_distributed(spark):
-    """ADVICE r12: the LPA local fast paths are output-IDENTICAL to
-    the distributed rounds through BOTH gates — the raw-edge gate
-    (``_lpa_full_local``) and the sym0 gate (``_lpa_local_tail``) —
-    including a self-loop-only node (must survive as a singleton
-    community, the ADVICE r6 contract)."""
+def test_lpa_full_local_identical_to_distributed(spark, distributed):
+    """ADVICE r12: the LPA local fast path (``_lpa_full_local``) is
+    output-IDENTICAL to the distributed rounds on heavily duplicated
+    edges, including a self-loop-only node (must survive as a
+    singleton community, the ADVICE r6 contract)."""
     base = [(f"n{i}", f"n{(i + 1) % 8}") for i in range(8)]
     base += [("a", "b"), ("b", "c"), ("n0", "a"), ("solo", "solo")]
     rows = base * 15  # heavy duplication: |sym0| ≪ |raw rows|
     e = spark.createDataFrame(rows, ["src", "dst"])
-    dist = sorted(G.label_propagation(
-        e, iterations=4, local_tail_max=0).collect())
+    with distributed():
+        dist = sorted(G.label_propagation(e, iterations=4).collect())
     # raw-edge gate: default cap (2M) ≫ 2·|raw|
     raw_gate = sorted(G.label_propagation(e, iterations=4).collect())
     assert raw_gate == dist
-    # sym0 gate ONLY: cap below 2·|raw| (=360) but above 2·|sym0|
-    n_raw = e.count()
-    sym0_n = (
-        e.union(e.select(F.col("dst").alias("src"),
-                         F.col("src").alias("dst")))
-        .distinct().count()
-    )
-    cap = 2 * n_raw - 1
-    assert 2 * sym0_n <= cap  # the chosen cap really exercises the tail
-    sym_gate = sorted(G.label_propagation(
-        e, iterations=4, local_tail_max=cap).collect())
-    assert sym_gate == dist
     comm = {r["id"]: r["community"] for r in dist}
     assert comm["solo"] == "solo"
 

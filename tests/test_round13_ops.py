@@ -2,8 +2,8 @@
 tier's bounded local fast paths: null src/dst (np.unique/searchsorted
 raise on None in object arrays) and duplicate-id label frames (the
 distributed equi-join fans out; a searchsorted lookup cannot) must
-route through the distributed dataflow, identically to a
-``local_tail_max=0`` run; plus the weighted_pagerank single-scan
+route through the distributed dataflow, identically to a run with
+``catalog.LOCAL_TAIL_ROWS`` at 0; plus the weighted_pagerank single-scan
 rewrite's semantics pin.
 """
 
@@ -34,47 +34,49 @@ def _sorted_rows(df):
 # ------------------------------------------------------- null src/dst
 
 
-def test_lpa_null_edges_match_distributed(spark):
+def test_lpa_null_edges_match_distributed(spark, distributed):
     """ADVICE r12 #1: the local gates must not crash on null src/dst —
     they fall back, so gated output ≡ distributed output."""
     e = _null_edges(spark)
     gated = _sorted_rows(G.label_propagation(e, iterations=3))
-    dist = _sorted_rows(G.label_propagation(e, iterations=3,
-                                            local_tail_max=0))
+    with distributed():
+        dist = _sorted_rows(G.label_propagation(e, iterations=3))
     assert gated == dist
 
 
-def test_louvain_null_edges_match_distributed(spark):
+def test_louvain_null_edges_match_distributed(spark, distributed):
     e = _null_edges(spark)
     gated = _sorted_rows(G.louvain_local_move(e, rounds=3))
-    dist = _sorted_rows(G.louvain_local_move(e, rounds=3,
-                                             local_tail_max=0))
+    with distributed():
+        dist = _sorted_rows(G.louvain_local_move(e, rounds=3))
     assert gated == dist
 
 
-def test_multilevel_null_edges_match_distributed(spark):
+def test_multilevel_null_edges_match_distributed(spark, distributed):
     e = _null_edges(spark)
     gated = _sorted_rows(G.louvain_multilevel(e, levels=2, rounds=2))
-    dist = _sorted_rows(G.louvain_multilevel(e, levels=2, rounds=2,
-                                             local_tail_max=0))
+    with distributed():
+        dist = _sorted_rows(G.louvain_multilevel(e, levels=2, rounds=2))
     assert gated == dist
 
 
-def test_modularity_null_edges_match_distributed(spark):
+def test_modularity_null_edges_match_distributed(spark, distributed):
     e = _null_edges(spark)
     lab = spark.createDataFrame(
         [("a", "X"), ("b", "X"), ("c", "X"), ("d", "Y"), ("e", "Y")],
         ["id", "community"],
     )
     gated = _sorted_rows(G.modularity(e, lab))
-    dist = _sorted_rows(G.modularity(e, lab, local_tail_max=0))
+    with distributed():
+        dist = _sorted_rows(G.modularity(e, lab))
     assert gated == dist
 
 
 # -------------------------------------------------- duplicate label ids
 
 
-def test_modularity_duplicate_label_ids_match_distributed(spark):
+def test_modularity_duplicate_label_ids_match_distributed(
+        spark, distributed):
     """ADVICE r12 #2: a labels frame with duplicate ids fans each edge
     out per duplicate row in the distributed join; the gated path must
     produce the SAME (data-size-independent) answer."""
@@ -85,11 +87,12 @@ def test_modularity_duplicate_label_ids_match_distributed(spark):
         ["id", "community"],
     )
     gated = _sorted_rows(G.modularity(e, lab))
-    dist = _sorted_rows(G.modularity(e, lab, local_tail_max=0))
+    with distributed():
+        dist = _sorted_rows(G.modularity(e, lab))
     assert gated == dist
 
 
-def test_louvain_duplicate_init_ids_match_distributed(spark):
+def test_louvain_duplicate_init_ids_match_distributed(spark, distributed):
     """Duplicate ids in ``init_labels``: the distributed init join
     fans the degree frame out; the gated path must match it rather
     than silently last-write-win."""
@@ -102,13 +105,13 @@ def test_louvain_duplicate_init_ids_match_distributed(spark):
     )
     gated = _sorted_rows(
         G.louvain_local_move(e, rounds=2, init_labels=init))
-    dist = _sorted_rows(
-        G.louvain_local_move(e, rounds=2, init_labels=init,
-                             local_tail_max=0))
+    with distributed():
+        dist = _sorted_rows(
+            G.louvain_local_move(e, rounds=2, init_labels=init))
     assert gated == dist
 
 
-def test_louvain_null_init_labels_match_distributed(spark):
+def test_louvain_null_init_labels_match_distributed(spark, distributed):
     """Null init ids/labels also bail to the distributed path."""
     e = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a")], ["src", "dst"])
@@ -119,9 +122,9 @@ def test_louvain_null_init_labels_match_distributed(spark):
     )
     gated = _sorted_rows(
         G.louvain_local_move(e, rounds=2, init_labels=init))
-    dist = _sorted_rows(
-        G.louvain_local_move(e, rounds=2, init_labels=init,
-                             local_tail_max=0))
+    with distributed():
+        dist = _sorted_rows(
+            G.louvain_local_move(e, rounds=2, init_labels=init))
     assert gated == dist
 
 
@@ -143,8 +146,8 @@ def test_weight_flips_lpa_adoption(spark):
     assert wtd["v"] == "z9"
 
 
-def test_weighted_lpa_local_identical_to_distributed(spark):
-    """Both weighted gates (raw and sym0) reproduce the distributed
+def test_weighted_lpa_local_identical_to_distributed(spark, distributed):
+    """The weighted local path reproduces the distributed
     weighted rounds exactly; NULL/non-positive rows drop before the
     node set forms (the _symmetrize_simple dialect)."""
     import random
@@ -154,8 +157,9 @@ def test_weighted_lpa_local_identical_to_distributed(spark):
              float(random.randint(1, 6))) for _ in range(150)]
     rows += [("gone", "n0", -3.0), ("alone", "alone", 2.0)]
     e = spark.createDataFrame(rows, "src string, dst string, w double")
-    dist = _sorted_rows(G.label_propagation(
-        e, iterations=4, weight_col="w", local_tail_max=0))
+    with distributed():
+        dist = _sorted_rows(G.label_propagation(
+            e, iterations=4, weight_col="w"))
     gated = _sorted_rows(G.label_propagation(
         e, iterations=4, weight_col="w"))
     assert gated == dist
@@ -289,9 +293,9 @@ def test_leiden_connected_and_q_not_below_one_level(spark):
     assert _sorted_rows(ld) == ora
 
 
-def test_leiden_local_gate_identical_to_distributed(spark):
+def test_leiden_local_gate_identical_to_distributed(spark, distributed):
     """The louvain local-tail gate inside each leiden move phase must
-    not change output: gated run ≡ local_tail_max=0 run, weighted and
+    not change output: gated run ≡ distributed run, weighted and
     unweighted."""
     import random
 
@@ -303,17 +307,18 @@ def test_leiden_local_gate_identical_to_distributed(spark):
         src = e if wc else e.select("src", "dst")
         gated = _sorted_rows(G.leiden(src, levels=2, rounds=3,
                                       weight_col=wc))
-        dist = _sorted_rows(G.leiden(src, levels=2, rounds=3,
-                                     weight_col=wc, local_tail_max=0))
+        with distributed():
+            dist = _sorted_rows(G.leiden(src, levels=2, rounds=3,
+                                         weight_col=wc))
         assert gated == dist
     # init-labels refinement mode through both paths
     init = spark.createDataFrame(
         [(f"n{i}", f"P{i % 4}") for i in range(30)], ["id", "lab"])
     gated = _sorted_rows(G.leiden(e.select("src", "dst"), levels=2,
                                   rounds=3, init_labels=init))
-    dist = _sorted_rows(G.leiden(e.select("src", "dst"), levels=2,
-                                 rounds=3, init_labels=init,
-                                 local_tail_max=0))
+    with distributed():
+        dist = _sorted_rows(G.leiden(e.select("src", "dst"), levels=2,
+                                     rounds=3, init_labels=init))
     assert gated == dist
 
 

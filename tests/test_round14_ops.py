@@ -53,17 +53,18 @@ def test_markov_stationary_cycle_hand_computed(spark):
     assert rows["b"]["empirical_prob"] == pytest.approx(0.25, abs=1e-9)
 
 
-def test_dup_clusters_local_tail_matches_distributed(spark):
+def test_dup_clusters_local_tail_matches_distributed(spark, distributed):
     """The r14 bounded local tail must return the identical
     (doc_id, cluster_id) multiset as the distributed min-label loop
-    (forced with local_tail_max=0) — including a long path component
+    (forced with ``catalog.LOCAL_TAIL_ROWS`` at 0) — including a long path component
     (propagation depth) and a singleton pair."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 12)] + [(100, 101)],
         "id_a long, id_b long",
     )
     local = dedup.dup_clusters(pairs)
-    dist = dedup.dup_clusters(pairs, local_tail_max=0)
+    with distributed():
+        dist = dedup.dup_clusters(pairs)
     assert sorted(map(tuple, local.collect())) == sorted(
         map(tuple, dist.collect())
     )

@@ -26,6 +26,7 @@ line and a markdown table for SCALING.md.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import math
 import os
@@ -43,6 +44,7 @@ from census_data_pipeline_spark.functions import (  # noqa: E402
     graph,
     similarity,
 )
+from census_data_pipeline_spark.sources import catalog  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 MEGA_TEXT = "dup dup boilerplate license blurb repeated across the crawl " * 5
@@ -118,6 +120,21 @@ def amplify_events(ev: DataFrame, copies: int) -> DataFrame:
         for k in range(copies)
     ]
     return reduce(DataFrame.unionAll, parts)
+
+
+@contextlib.contextmanager
+def distributed_path():
+    """Set ``catalog.LOCAL_TAIL_ROWS`` to 0 for the block (or the
+    decorated family): the rehearsal then measures the DISTRIBUTED
+    path a 100 TB graph takes — the bounded local tails would otherwise
+    absorb the 1x/10x decades (their cap admits up to 2M rows) and the
+    exponent would compare paths, not scaling."""
+    saved = catalog.LOCAL_TAIL_ROWS
+    catalog.LOCAL_TAIL_ROWS = 0
+    try:
+        yield
+    finally:
+        catalog.LOCAL_TAIL_ROWS = saved
 
 
 def timed(build, runs: int | None = None) -> float:
@@ -490,24 +507,18 @@ def main() -> None:
                                       F.col("user_id") % 2 == 0,
                                       "val", n_boot=20)
 
+    @distributed_path()
     def fam_louvain(d, e, g, v):
         # LPA init + 4 disjoint-move rounds (the graph_louvain_move
         # shape); disconnected key-shifted copies keep the round count
         # constant across decades while per-round joins grow with data.
-        # local_tail_max=0 everywhere: the rehearsal measures the
-        # DISTRIBUTED path a 100 TB graph takes — the bounded local
-        # tails would otherwise absorb the 1x/10x decades (their gate
-        # admits up to 2M rows) and the exponent would compare paths,
-        # not scaling.
         from census_data_pipeline_spark.functions import graph as _g
         lpa = _g.label_propagation(g, iterations=5,
-                                   broadcast_labels=True,
-                                   local_tail_max=0)
-        lab = _g.louvain_local_move(g, rounds=4, init_labels=lpa,
-                                    local_tail_max=0)
-        return _g.modularity(g, lab, label_col="community",
-                             local_tail_max=0)
+                                   broadcast_labels=True)
+        lab = _g.louvain_local_move(g, rounds=4, init_labels=lpa)
+        return _g.modularity(g, lab, label_col="community")
 
+    @distributed_path()
     def fam_louvain_multilevel(d, e, g, v):
         # the graph_louvain_multilevel shape (4 levels x 10 rounds,
         # singleton init) on the distributed path — contraction keeps
@@ -515,9 +526,8 @@ def main() -> None:
         # is that the LEVEL-0 rounds dominate and scale like the move
         # family above
         from census_data_pipeline_spark.functions import graph as _g
-        lab = _g.louvain_multilevel(g, levels=4, rounds=10,
-                                    local_tail_max=0)
-        return _g.modularity(g, lab, local_tail_max=0)
+        lab = _g.louvain_multilevel(g, levels=4, rounds=10)
+        return _g.modularity(g, lab)
 
     def _weighted_edges(g):
         # deterministic integer-valued multiplicities (1..5) so every
@@ -527,6 +537,7 @@ def main() -> None:
             "w", ((F.abs(F.hash("src", "dst")) % 5) + 1).cast("double")
         )
 
+    @distributed_path()
     def fam_louvain_weighted(d, e, g, v):
         # the graph_louvain_weighted shape on the distributed path:
         # weighted move rounds + weighted modularity score — the r12
@@ -535,19 +546,20 @@ def main() -> None:
         # weights change constants, not the exponent
         from census_data_pipeline_spark.functions import graph as _g
         ew = _weighted_edges(g)
-        lab = _g.louvain_local_move(ew, rounds=4, weight_col="w",
-                                    local_tail_max=0)
+        lab = _g.louvain_local_move(ew, rounds=4, weight_col="w")
         return _g.modularity(ew, lab, weight_col="w",
-                             label_col="community", local_tail_max=0)
+                             label_col="community")
 
+    @distributed_path()
     def fam_lpa_weighted(d, e, g, v):
         # weighted vote rounds (r13): per round the (dst, label) sum
         # aggregates weights instead of counts — same join shape
         from census_data_pipeline_spark.functions import graph as _g
         return _g.label_propagation(_weighted_edges(g), iterations=5,
                                     broadcast_labels=True,
-                                    weight_col="w", local_tail_max=0)
+                                    weight_col="w")
 
+    @distributed_path()
     def fam_leiden(d, e, g, v):
         # the graph_leiden DATAFLOW on the distributed path: move
         # rounds + per-level min-label component refinement +
@@ -560,9 +572,8 @@ def main() -> None:
         # at 100× would burn ~3 h of rehearsal budget on the same
         # per-round shapes measured here
         from census_data_pipeline_spark.functions import graph as _g
-        lab = _g.leiden(g, levels=2, rounds=4, local_tail_max=0)
-        return _g.modularity(g, lab, label_col="community",
-                             local_tail_max=0)
+        lab = _g.leiden(g, levels=2, rounds=4)
+        return _g.modularity(g, lab, label_col="community")
 
     def fam_mmr(d, e, g, v):
         # the r13 distributed MMR greedy (max_collect=0 forces the
