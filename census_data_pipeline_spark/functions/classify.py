@@ -11,20 +11,26 @@ The training loop follows the kmeans_lloyd / pca_power discipline:
 - every model state rounded to 6 dp at the same points on both engines,
   so an ANSI-SQL oracle replicates the exact trajectory by unrolling
   rounds as CTEs;
-- model state lives in a ONE-ROW DataFrame that is broadcast into each
-  pass — the data is never collected, and each round costs exactly one
-  scan of the (checkpointed) standardized feature frame plus a 1-row
-  aggregate.
+- model state is a driver-side payload of collected scalars (weights,
+  standardization stats, bin edges, split winners): each round is one
+  partial-aggregated scan of the persisted feature frame whose 1-row
+  result is collected and fed back as literals.
 
-Scale shape: features are standardized once (one aggregate pass, means
-and stds broadcast back); each GD round is map-side arithmetic followed
-by a partial-aggregated global mean — the shuffle carries ONE row per
-partition per round. At 100 TB the per-round cost is a single
-whole-stage-codegen scan; the model (d+1 doubles) is trivially
-broadcastable at any realistic feature count. This is exactly how
-distributed full-batch LR runs on a real cluster (each executor
-computes its partial gradient; the driver-side state is one weight
-vector — here kept as a 1-row frame so even that never leaves the JVM).
+Each family fits through ONE trainer (``_logreg_fit_multi``,
+``_decision_tree_build_multi``, ``_boost_fit``, ``_logit_boost_fit``)
+and scores through ONE literal Column compiled from its payload
+(``_logreg_margin_lit``, ``_tree_route_predict``, ``_boost_score``) — a
+single-model fit is the one-spec case of the K-model trainer, and no
+model frame is ever joined back into the data.
+
+Scale shape: features are evaluated once into a persisted frame; each
+GD round is map-side arithmetic followed by a partial-aggregated global
+mean — the shuffle carries ONE row per partition per round. At 100 TB
+the per-round cost is a single whole-stage-codegen scan; the model
+(d+1 doubles per fold) travels to the executors inside the plan as
+literals. This is exactly how distributed full-batch LR runs on a real
+cluster (each executor computes its partial gradient; the driver-side
+state is one weight vector).
 """
 
 from __future__ import annotations
@@ -39,7 +45,7 @@ from census_data_pipeline_spark.sources.catalog import ensure_parallelism
 def _dlit(v) -> Column:
     """A double literal that preserves NULL model state (a fold with an
     empty train side yields NULL gradients; NULL must stay NULL through
-    every later round, exactly as the 1-row-frame formulation behaved)."""
+    every later round, as it does in the oracles' CTEs)."""
     return F.lit(None).cast("double") if v is None else F.lit(float(v))
 
 
@@ -56,103 +62,76 @@ def _sql_dlit(v) -> str:
     )
 
 
-def _row1(spark, cols: dict) -> DataFrame:
-    """One-row literal DataFrame (model/statistics state). Replaces the
-    chained crossJoin(broadcast(...)) model frames: the VALUES are the
-    same doubles the chained plan produced (collected from the identical
-    Spark aggregate), but the frame plans as a flat 1-row scan instead
-    of a round-deep Catalyst tree."""
-    return spark.range(1).select(
-        *[_dlit(v).alias(k) for k, v in cols.items()]
+def _bin_col(x: Column, mn: Column, width: Column, bins: int) -> Column:
+    """Equi-width histogram bin of ``x`` over [mn, mn + bins·width] as
+    an int: ``when(width = 0, 0).otherwise(least(bins-1, greatest(0,
+    floor((x - mn) / width))))`` — constant features land in bin 0. The
+    one engine-side copy of the oracles' ``b_<name>`` CASE; ``mn`` and
+    ``width`` are literals from a collected stats row or columns of an
+    uncollected one."""
+    return (
+        F.when(width == F.lit(0.0), F.lit(0))
+        .otherwise(
+            F.least(
+                F.lit(bins - 1),
+                F.greatest(F.lit(0), F.floor((x - mn) / width).cast("int")),
+            )
+        )
+        .cast("int")
     )
 
 
-def _logreg_fit(
+def _sigmoid6(margin: Column) -> Column:
+    """The 6-dp predicted probability round(1 / (1 + exp(-margin)), 6)
+    — rounded so both engines score, bin and rank identically."""
+    return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-margin)), 6)
+
+
+def _hit(margin: Column, y: Column) -> Column:
+    """1.0 when the margin's sign (≥ 0 ⇔ positive) matches the 0/1
+    label, else 0.0 — a NULL margin or label counts as a miss."""
+    return F.when((margin >= 0) == (y == 1.0), F.lit(1.0)).otherwise(
+        F.lit(0.0)
+    )
+
+
+def _guarded(
     df: DataFrame,
     label: Column,
     features: list[tuple[str, Column]],
-    iterations: int,
-    lr: float,
-):
-    """Shared GD loop behind ``logreg_train`` (coefficient rows),
-    ``logreg_calibration`` (reliability bins), ``logreg_auc`` and
-    ``logreg_holdout_eval``: standardize once, run the fixed rounds,
-    return (z frame, final 1-row weight frame, names, margin builder,
-    1-row standardization frame — holdout scoring standardizes unseen
-    rows with the TRAINING statistics). Semantics and rounding points
-    unchanged from the original inline loop.
+    label_type: str,
+) -> DataFrame:
+    """(__y, features…) with the label cast to ``label_type`` and the
+    features to double, dropping rows with a null label or any null
+    feature — the null-drop rule of the tree, boosting and MI
+    families."""
+    return df.select(
+        label.cast(label_type).alias("__y"),
+        *[e.cast("double").alias(n) for n, e in features],
+    ).na.drop(subset=["__y", *[n for n, _ in features]])
 
-    r13 shape (the MLlib treeAggregate discipline): each round is ONE
-    partial-aggregated scan of the checkpointed z frame whose 1-row
-    result — the UPDATED weights, every rounding still computed by the
-    identical Spark expressions — is collected to the driver (d+1
-    doubles, strictly less driver traffic than the BroadcastExchange
-    the previous 1-row-frame formulation shipped per round) and fed
-    back as literals. The previous shape chained round-deep
-    crossJoin(broadcast(w)) plans through lazy localCheckpoints, and
-    its cost at ANY data scale was dominated by driver-side Catalyst
-    work: 8 rounds × (analyze+optimize+codegen of an ever-deeper tree)
-    ≈ seconds per fit while the sf0.1 execution itself was <0.3 s
-    (measured; OPTIMIZATION_r13.md). Flat per-round plans keep the
-    driver O(1) per round at 100 TB too."""
-    if iterations < 1:
-        raise ValueError("iterations must be >= 1")
-    names = [n for n, _ in features]
-    # persist the EVALUATED label/feature projection, not bare
-    # localCheckpoint (the round_materialize finding: consumers of a
-    # lazy localCheckpoint recompute its lineage): feature expressions
-    # are routinely string-heavy (length/replace over full documents),
-    # and without the cache every GD round — plus the st aggregate —
-    # would re-run them over the source scan
-    raw = ensure_parallelism(df).select(
-        label.cast("double").alias("__y"),
-        *[expr.cast("double").alias(n) for n, expr in features],
-    ).persist()
-    strow = raw.agg(
-        *[F.round(F.avg(n), 6).alias(f"__m_{n}") for n in names],
-        *[F.round(F.stddev_pop(n), 6).alias(f"__s_{n}") for n in names],
-    ).first()
-    spark = df.sparkSession
-    st = _row1(spark, {k: strow[k] for k in strow.asDict()})
-    # z stays a plain projection of the cached raw frame: the per-round
-    # standardization arithmetic is trivial against cached numeric
-    # columns, and one cached frame per fit beats two
-    z = raw.select(
-        "__y",
-        *[
-            F.round(
-                (F.col(n) - _dlit(strow[f"__m_{n}"]))
-                / _dlit(strow[f"__s_{n}"]), 6
-            ).alias(n)
-            for n in names
-        ],
-    )
-    wb = 0.0
-    wf = {n: 0.0 for n in names}
-    for _ in range(iterations):
-        marg = _dlit(wb) + sum(
-            (_dlit(wf[n]) * F.col(n) for n in names), F.lit(0.0)
-        )
-        r = F.lit(1.0) / (F.lit(1.0) + F.exp(-marg)) - F.col("__y")
-        upd = z.agg(
-            F.round(_dlit(wb) - F.lit(lr) * F.round(F.avg(r), 6), 6)
-            .alias("__b"),
-            *[
-                F.round(
-                    _dlit(wf[n])
-                    - F.lit(lr) * F.round(F.avg(r * F.col(n)), 6), 6
-                ).alias(f"__w_{n}")
-                for n in names
-            ],
-        ).first()
-        wb = upd["__b"]
-        wf = {n: upd[f"__w_{n}"] for n in names}
-    w = _row1(spark, {"__b": wb, **{f"__w_{n}": wf[n] for n in names}})
-    margin = lambda: (  # noqa: E731 — rebuilt per round against fresh cols
-        F.col("__b")
-        + sum((F.col(f"__w_{n}") * F.col(n) for n in names), F.lit(0.0))
-    )
-    return z, w, names, margin, st
+
+def _single_prep(
+    df: DataFrame,
+    label: Column,
+    features: list[tuple[str, Column]],
+    test_pred: Column | None,
+) -> tuple[DataFrame, Column]:
+    """One-model callers' shared front: evaluate the label (as ``__y``),
+    the features (as doubles) and the optional fold predicate (as
+    ``__t``) ONCE into a persisted frame — feature expressions are
+    string-heavy, and every fit round plus the scoring scan reads the
+    cached blocks — and return it with the train condition the one-spec
+    fit runs under (``~__t``, or every row)."""
+    cols = [
+        label.alias("__y"),
+        *[e.cast("double").alias(n) for n, e in features],
+    ]
+    if test_pred is not None:
+        cols.insert(0, test_pred.alias("__t"))
+    prep = ensure_parallelism(df).select(*cols).persist()
+    train = F.lit(True) if test_pred is None else ~F.col("__t")
+    return prep, train
 
 
 def _logreg_fit_multi(
@@ -163,24 +142,34 @@ def _logreg_fit_multi(
     iterations: int,
     lr: float,
 ) -> list[dict]:
-    """Fused K-model GD (r14 — VERDICT r13 #3): fit every model of a
-    CV / learning-curve family in ONE scan per round via conditional
-    aggregates — ``avg(when(cond, e))`` aggregates exactly the rows
-    ``filter(cond)`` would, in the same per-partition order over the
-    same cached frame, so each model's trajectory is arithmetically
-    identical to ``_logreg_fit`` run on ``prep.filter(cond)`` (the
-    identical Spark expressions produce the identical doubles; the
-    round-6 points are unchanged). K·(d+1) aggregate expressions per
-    round replace K independent round jobs: the per-round job count
-    drops K-fold at every data scale, and at 100 TB the train fold is
-    scanned once per round instead of K times.
+    """The logistic-regression trainer: full-batch gradient descent for
+    K models at once (one per ``train_conds`` entry; a single fit is
+    the one-spec case with the train condition or ``F.lit(True)``).
+    Every model of a CV / learning-curve family fits in ONE scan per
+    round via conditional aggregates — ``avg(when(cond, e))``
+    aggregates exactly the rows ``filter(cond)`` would, so each model's
+    trajectory is the one a separate fit on ``prep.filter(cond)``
+    computes (``tests/test_round14_ops.py`` pins both against
+    ``logreg_oracle_sql``). K·(d+1) aggregate expressions per round
+    replace K independent round jobs: the per-round job count drops
+    K-fold at every data scale, and at 100 TB the train fold is scanned
+    once per round instead of K times.
+
+    Per model: features are z-scored with the train rows' population
+    mean/std (both rounded 6 dp, z rounded 6 dp); weights start at
+    zero; each round computes p = σ(b + w·z), the mean gradient
+    (rounded 6 dp) and the update w ← round(w − lr·g, 6). Each round's
+    1-row result is collected and fed back as literals, so every
+    round's plan is flat (an ever-deeper chained plan cost seconds of
+    Catalyst work per fit at any data scale — OPTIMIZATION_r13.md).
 
     ``prep`` must be persisted with ``label_col`` (double) and the
     feature columns (double) already evaluated. Returns one dict per
     model: {"wb", "wf": {name: w}, "m": {name}, "s": {name}} — weights
     and the train-fold standardization stats, all collected scalars
-    produced by the same Spark round-6 expressions ``_logreg_fit``
-    collects."""
+    produced by Spark's own round-6 expressions."""
+    if iterations < 1:
+        raise ValueError("iterations must be >= 1")
     kk = len(train_conds)
     stat_exprs = []
     for i, cond in enumerate(train_conds):
@@ -262,10 +251,11 @@ def _logreg_fit_multi(
 
 
 def _logreg_margin_lit(model: dict, names: list[str]) -> Column:
-    """Margin over the standardized features as one literal expression
-    (train-stats z, then w·z + b) — the zt/crossJoin(st)/crossJoin(w)
-    arithmetic of ``logreg_holdout_eval`` on identical literal
-    operands."""
+    """The logistic model's ONE scorer: the margin over the raw feature
+    columns as a literal expression compiled from a collected model —
+    train-stats z = round((x − m)/s, 6), then
+    b + ((((0.0 + w₁z₁) + w₂z₂) + …) + w_dz_d), the training rounds'
+    own grouping."""
     z = {
         n: F.round(
             (F.col(n) - _dlit(model["m"][n])) / _dlit(model["s"][n]), 6
@@ -275,6 +265,27 @@ def _logreg_margin_lit(model: dict, names: list[str]) -> Column:
     return _dlit(model["wb"]) + sum(
         (_dlit(model["wf"][n]) * z[n] for n in names), F.lit(0.0)
     )
+
+
+def _logreg_fit_one(
+    df: DataFrame,
+    label: Column,
+    features: list[tuple[str, Column]],
+    iterations: int,
+    lr: float,
+    test_pred: Column | None = None,
+) -> tuple[DataFrame, Column, dict]:
+    """Fit ONE logistic model — on the rows where ``test_pred`` is
+    false, or on every row — as the one-spec case of
+    ``_logreg_fit_multi``. Returns (prep, margin, model): the persisted
+    (``__t``,) ``__y``, features frame, the model's literal margin over
+    it and the collected model."""
+    names = [n for n, _ in features]
+    prep, train = _single_prep(
+        df, label.cast("double"), features, test_pred
+    )
+    model = _logreg_fit_multi(prep, "__y", names, [train], iterations, lr)
+    return prep, _logreg_margin_lit(model[0], names), model[0]
 
 
 def logreg_train(
@@ -296,42 +307,29 @@ def logreg_train(
     Returns one row per coefficient: (feature, weight, train_accuracy)
     with feature = 'bias' first, accuracy = share of rows where the
     final margin's sign matches the label (margin rounded 6 dp before
-    the sign test so both engines agree at the boundary)."""
-    z, w, names, margin, _st = _logreg_fit(df, label, features,
-                                            iterations, lr)
-    acc = (
-        z.crossJoin(F.broadcast(w))
-        .agg(
-            F.round(
-                F.avg(
-                    F.when(
-                        (F.round(margin(), 6) >= 0) == (F.col("__y") == 1.0),
-                        F.lit(1.0),
-                    ).otherwise(F.lit(0.0))
-                ),
-                6,
-            ).alias("__acc")
-        )
-    )
-    coef = w.crossJoin(F.broadcast(acc))
-    rows = [
-        coef.select(
-            F.lit("bias").alias("feature"),
-            F.col("__b").alias("weight"),
-            F.col("__acc").alias("train_accuracy"),
-        )
-    ] + [
-        coef.select(
-            F.lit(n).alias("feature"),
-            F.col(f"__w_{n}").alias("weight"),
-            F.col("__acc").alias("train_accuracy"),
-        )
-        for n in names
+    the sign test so both engines agree at the boundary).
+
+    Scale shape: the fit's rounds, then ONE scan of the cached prep for
+    the accuracy; the coefficient rows are literals expanded from that
+    1-row aggregate."""
+    prep, margin, model = _logreg_fit_one(df, label, features,
+                                          iterations, lr)
+    coef = [("bias", model["wb"])] + [
+        (n, model["wf"][n]) for n, _ in features
     ]
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
+    return prep.agg(
+        F.round(F.avg(_hit(F.round(margin, 6), F.col("__y"))), 6)
+        .alias("__acc")
+    ).select(
+        F.inline(F.array(*[
+            F.struct(
+                F.lit(n).alias("feature"),
+                _dlit(w).alias("weight"),
+                F.col("__acc").alias("train_accuracy"),
+            )
+            for n, w in coef
+        ]))
+    )
 
 
 def _logreg_oracle_parts(
@@ -460,35 +458,21 @@ def _py_gini(cl: int, pl: int, ct: int, pt: int) -> float:
 
 def _tree_route_predict(names_t: list[str], bins: int, pym: dict) -> Column:
     """Route a null-guarded feature row to its leaf's predict as ONE
-    literal CASE expression over the driver-side model payload (r14 —
-    VERDICT r13 #2: the per-level broadcast-join replay chains executed
-    lazily at the sink, so a 5-tree forest scanned the test fold
-    through five join chains). Arithmetic is the holdout routing's own,
-    on identical literal operands: per feature the train-stats bin
-    ``when(w = 0, 0).otherwise(least(bins-1, greatest(0,
-    floor((x - mn)/w))))``, per level the winner map
-    ``node -> 2·node + (bin_f <= b ? 0 : 1)`` with no-winner nodes
+    literal CASE expression over the driver-side model payload — the
+    tree and forest families' ONE scorer (train rows, held-out folds
+    and every forest member all route through it). Per feature the
+    train-stats bin ``_bin_col(x, mn, w, bins)``, per level the winner
+    map ``node -> 2·node + (bin_f <= b ? 0 : 1)`` with no-winner nodes
     staying put, then the leaf predict map. Rows always land on a leaf
     (levels reassign exactly the split nodes; every terminal node is a
     leaf row by construction)."""
-    bincol = {}
-    for n in names_t:
-        w, m = pym["wd"][n], pym["mn"][n]
-        bincol[n] = (
-            F.when(_dlit(w) == F.lit(0.0), F.lit(0))
-            .otherwise(
-                F.least(
-                    F.lit(bins - 1),
-                    F.greatest(
-                        F.lit(0),
-                        F.floor(
-                            (F.col(n).cast("double") - _dlit(m)) / _dlit(w)
-                        ).cast("int"),
-                    ),
-                )
-            )
-            .cast("int")
+    bincol = {
+        n: _bin_col(
+            F.col(n).cast("double"), _dlit(pym["mn"][n]),
+            _dlit(pym["wd"][n]), bins,
         )
+        for n in names_t
+    }
     node: Column = F.lit(1).cast("bigint")
     for lvl in pym["levels"]:
         upd = None
@@ -515,269 +499,6 @@ def _tree_route_predict(names_t: list[str], bins: int, pym: dict) -> Column:
     return pred.cast("long")
 
 
-def _decision_tree_build(
-    df: DataFrame,
-    label: Column,
-    features: list[tuple[str, Column]],
-    bins: int = 16,
-    depth: int = 2,
-    keep_assigned: bool = True,
-) -> tuple[DataFrame, DataFrame, DataFrame, list[DataFrame], dict]:
-    """Shared trainer behind ``decision_tree_train`` (tree frame) and
-    ``decision_tree_confusion`` (tree frame + final row→node
-    assignments). Trains a depth-bounded binary tree by HISTOGRAM split
-    finding — the distributed-GBDT discipline (LightGBM/XGBoost `hist`:
-    equi-width feature histograms, one data pass per tree level, all
-    split arithmetic over the model-sized histogram). Like the other
-    in-engine trainers (kmeans/pca/logreg), the whole computation is a
-    deterministic dataflow an ANSI-SQL oracle replicates level by level.
-
-    ``label`` must evaluate to 0/1; ``features`` is an ordered list of
-    (name, expression). Rows with a null label or any null feature are
-    dropped. Per feature, ``bins`` equi-width bins over [min, max]
-    (constant features land in bin 0 and can never split). Per level:
-
-    1. ONE pass over the binned data — per (node, feature, bin) counts
-       and positive counts (map-side combined; the shuffle carries at
-       most nodes·F·bins rows);
-    2. candidate splits "bin ≤ b" from prefix sums over the histogram
-       (a window over the model-sized frame), scored by weighted Gini
-       rounded to 12 dp, both children non-empty;
-    3. per-node argmin with a total deterministic order
-       (gini, feature name, bin) — row_number over nodes·F·bins rows;
-    4. node reassignment: winners broadcast back, rows move to child
-       2·node (left) or 2·node+1 (right); nodes with no valid split
-       become leaves and their rows stop moving.
-
-    Returns one row per tree node: (node, depth, kind 'split'|'leaf',
-    feature, threshold, n, pos, pos_rate, predict) — thresholds are the
-    real-valued bin boundary min + (b+1)·width rounded to 6 dp; predict
-    is the majority label (ties → 1).
-
-    Scale shape: ``depth`` scans of the checkpointed binned frame
-    (each a whole-stage-codegen projection + partial-aggregated count),
-    everything else arithmetic over histogram frames whose size is
-    bounded by nodes·F·bins, independent of n. Exactly how distributed
-    histogram-based tree learners place the work: data-scale passes
-    build histograms, split search never touches rows."""
-    if depth < 1:
-        raise ValueError("depth must be >= 1")
-    if bins < 2:
-        raise ValueError("bins must be >= 2")
-    names = [n for n, _ in features]
-    spark = df.sparkSession
-    raw = (
-        ensure_parallelism(df)
-        .select(
-            label.cast("bigint").alias("__y"),
-            *[expr.cast("double").alias(n) for n, expr in features],
-        )
-        .na.drop(subset=["__y", *names])
-    )
-    # r13: collect the 2F-double min/max row (the identical aggregate)
-    # and feed mins/widths back as literals — the binned frame then
-    # plans flat instead of through a crossJoin(broadcast(st)), and the
-    # split search below runs on the driver over the collected
-    # model-sized histogram instead of a per-level window+join+broadcast
-    # plan chain whose Catalyst cost dominated wall-clock at every
-    # data scale (OPTIMIZATION_r13.md: execution at sf0.1 was <1 s
-    # while query construction planned for 10-20 s on the rf family).
-    strow = raw.agg(
-        *[F.min(n).alias(f"__mn_{n}") for n in names],
-        *[F.max(n).alias(f"__mx_{n}") for n in names],
-    ).select(
-        "*",
-        *[
-            ((F.col(f"__mx_{n}") - F.col(f"__mn_{n}")) / F.lit(float(bins)))
-            .alias(f"__w_{n}")
-            for n in names
-        ],
-    ).first()
-    st = _row1(spark, {k: strow[k] for k in strow.asDict()})
-    mn = {n: strow[f"__mn_{n}"] for n in names}
-    wd = {n: strow[f"__w_{n}"] for n in names}
-    # persist, not bare localCheckpoint (the round_materialize finding:
-    # consumers of a lazy localCheckpoint recompute its lineage) — each
-    # level's histogram pass must read the binned blocks, not re-scan
-    # the source
-    binned = (
-        raw.select(
-            "__y",
-            *[
-                F.when(_dlit(wd[n]) == F.lit(0.0), F.lit(0))
-                .otherwise(
-                    F.least(
-                        F.lit(bins - 1),
-                        F.greatest(
-                            F.lit(0),
-                            F.floor(
-                                (F.col(n) - _dlit(mn[n])) / _dlit(wd[n])
-                            ).cast("int"),
-                        ),
-                    )
-                )
-                .cast("int")
-                .alias(f"__b_{n}")
-                for n in names
-            ],
-        )
-        .withColumn("__node", F.lit(1).cast("bigint"))
-        .persist()
-    )
-    stack_expr = "stack({}, {})".format(
-        len(names), ", ".join(f"'{n}', __b_{n}" for n in names)
-    )
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    wsel_schema = StructType([
-        StructField("__wn", LongType()),
-        StructField("__f", StringType()),
-        StructField("__sb", IntegerType()),
-    ])
-    assigned = binned
-    frontier: dict | None = None  # node -> (ct, pt) entering the level
-    tree_rows: list[tuple] = []
-    winners_levels: list[DataFrame] = []  # (__wn, __f, __sb) per level
-    levels_py: list[dict] = []  # node -> (feature, bin) per level (r14)
-    for _lvl in range(depth):
-        # ONE data pass per level (the distributed-GBDT `hist`
-        # contract, unchanged); the nodes·F·bins histogram is
-        # model-sized by construction, so collecting it is the same
-        # driver traffic the old winners/tot plans shipped via
-        # broadcasts — and the whole split search is exact integer
-        # prefix-sum arithmetic plus the 12-dp gini double expression
-        # evaluated on identical operands (_py_gini).
-        hrows = (
-            assigned.select(
-                "__node", "__y", F.expr(stack_expr).alias("__f", "__bin")
-            )
-            .groupBy("__node", "__f", "__bin")
-            .agg(F.count("*").alias("__c"), F.sum("__y").alias("__p"))
-            .collect()
-        )
-        hist: dict = {}
-        for r in hrows:
-            hist.setdefault((r["__node"], r["__f"]), []).append(
-                (r["__bin"], r["__c"], r["__p"])
-            )
-        tot = {
-            node: (
-                sum(c for _b, c, _p in cells),
-                sum(p for _b, _c, p in cells),
-            )
-            for (node, f), cells in hist.items()
-            if f == names[0]
-        }
-        if frontier is None:
-            frontier = dict(tot)
-        winners: dict = {}  # node -> (gini, f, bin, cl, pl, ct, pt)
-        for (node, f), cells in sorted(hist.items()):
-            ct, pt = tot[node]
-            cl = pl = 0
-            for b, c, p in sorted(cells):
-                cl += c
-                pl += p
-                if not (0 < cl < ct):
-                    continue
-                g = _py_gini(cl, pl, ct, pt)
-                if node not in winners or (g, f, b) < winners[node][:3]:
-                    winners[node] = (g, f, b, cl, pl, ct, pt)
-        for node, (_g, f, b, _cl, _pl, ct, pt) in sorted(winners.items()):
-            # raw threshold — the 6-dp round stays a Spark expression in
-            # the tree select below
-            tree_rows.append(
-                (node, "split", f, mn[f] + (b + 1) * wd[f], ct, pt)
-            )
-        for node, (ct, pt) in sorted(frontier.items()):
-            if node not in winners:
-                tree_rows.append((node, "leaf", None, None, ct, pt))
-        frontier = {}
-        for node, (_g, _f, _b, cl, pl, ct, pt) in winners.items():
-            frontier[node * 2] = (cl, pl)
-            frontier[node * 2 + 1] = (ct - cl, pt - pl)
-        wsel = spark.createDataFrame(
-            [
-                (node, f, b)
-                for node, (_g, f, b, *_r) in sorted(winners.items())
-            ],
-            wsel_schema,
-        )
-        winners_levels.append(wsel)
-        levels_py.append(
-            {node: (f, b) for node, (_g, f, b, *_r) in winners.items()}
-        )
-        upd = None
-        for node, (_g, f, b, *_r) in sorted(winners.items()):
-            child = F.lit(node * 2) + F.when(
-                F.col(f"__b_{f}") <= F.lit(b), F.lit(0)
-            ).otherwise(F.lit(1))
-            cond = F.col("__node") == F.lit(node)
-            upd = F.when(cond, child) if upd is None else upd.when(
-                cond, child
-            )
-        if upd is not None:
-            assigned = assigned.select(
-                "__y",
-                *[f"__b_{n}" for n in names],
-                upd.otherwise(F.col("__node")).cast("bigint")
-                .alias("__node"),
-            )
-    for node, (ct, pt) in sorted(frontier.items()):
-        tree_rows.append((node, "leaf", None, None, ct, pt))
-    tree_schema = StructType([
-        StructField("node", LongType()),
-        StructField("kind", StringType()),
-        StructField("feature", StringType()),
-        StructField("__thr", DoubleType()),
-        StructField("n", LongType()),
-        StructField("pos", LongType()),
-    ])
-    tree = spark.createDataFrame(tree_rows, tree_schema).select(
-        "node",
-        F.floor(F.log2("node")).cast("long").alias("depth"),
-        "kind",
-        "feature",
-        F.round(F.col("__thr"), 6).alias("threshold"),
-        "n",
-        "pos",
-        F.round(F.col("pos") / F.col("n"), 6).alias("pos_rate"),
-        F.when(F.col("pos") * 2 >= F.col("n"), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("predict"),
-    )
-    # Driver-side model payload (r14 — VERDICT r13 #2): everything a
-    # caller needs to route unseen rows as ONE literal CASE expression
-    # instead of replaying the per-level broadcast-join chain. Exact
-    # integer arithmetic throughout: predict = (2·pos >= n) on the
-    # collected counts is the tree frame's own Spark expression on
-    # identical operands.
-    pym = {
-        "mn": mn,
-        "wd": wd,
-        "levels": levels_py,
-        "leaves": {
-            node: (1 if 2 * pt >= ct else 0)
-            for node, kind, _f, _thr, ct, pt in tree_rows
-            if kind == "leaf"
-        },
-        "n_nodes": {node: ct for node, _k, _f, _t, ct, _p in tree_rows},
-    }
-    if not keep_assigned:
-        # the model is driver-side literals now; nothing downstream
-        # reads the binned cache (ADVICE r13: threaded tree builds left
-        # every tree's binned frame resident until the next query)
-        binned.unpersist()
-    return tree, assigned, st, winners_levels, pym
-
-
 def _decision_tree_build_multi(
     prep: DataFrame,
     label_col: str,
@@ -785,28 +506,48 @@ def _decision_tree_build_multi(
     bins: int,
     depth: int,
 ) -> list[tuple[list[tuple], dict]]:
-    """Fused K-tree histogram trainer (r14 — VERDICT r13 #3, the
-    _logreg_fit_multi discipline for trees): train every tree of a
-    CV/forest family in ONE scan per level. ``specs`` is one
-    (row_condition, feature_names) pair per tree over the shared
-    persisted ``prep`` frame.
+    """The histogram decision-tree trainer: K depth-bounded binary trees
+    at once, one (row_condition, feature_names) spec per tree over the
+    shared persisted ``prep`` frame (a single tree is the one-spec case
+    with the train condition or ``F.lit(True)``). Histogram split
+    finding is the distributed-GBDT discipline (LightGBM/XGBoost
+    `hist`): equi-width feature histograms, one data pass per level,
+    all split arithmetic over the model-sized histogram — a
+    deterministic dataflow an ANSI-SQL oracle replicates level by level
+    (``_tree_oracle_parts``).
 
-    Equivalence to per-tree ``_decision_tree_build`` runs: the per-tree
-    min/max stats are conditional aggregates (min/max are
-    order-independent, so conditional ≡ filtered exactly); bin widths
-    are the identical Spark division over the identical collected
-    doubles; each level's (tree, node, feature, bin) histogram is an
-    integer count/sum — the inline(struct-array) fan-out guarded by
-    ``when(cond ∧ non-null, node)`` emits exactly the rows the
-    per-tree na.drop+filter pipeline aggregated, and integer sums are
-    order-free — so the collected histograms, and therefore the
-    driver-side gini split search and every tree, are IDENTICAL.
-    Per level the shuffle carries Σ_t nodes·F_t·bins rows (model-sized)
-    and the job count drops K-fold at every data scale.
+    ``label_col`` must evaluate to 0/1. Per tree, rows with a null
+    label or any null feature of that tree are dropped; per feature,
+    ``bins`` equi-width bins over the tree's [min, max] (constant
+    features land in bin 0 and can never split). Per level:
 
-    Returns per tree (tree_rows, pym) — the literal node rows
-    (node, kind, feature, raw_threshold, n, pos) and the routing
-    payload ``_tree_route_predict`` consumes."""
+    1. ONE scan of ``prep`` builds every tree's per-(node, feature,
+       bin) counts and positive counts — the inline(struct-array)
+       fan-out guarded by ``when(cond ∧ non-null, node)``, map-side
+       combined, so the shuffle carries Σ_t nodes·F_t·bins rows;
+    2. the histogram is collected and, per tree and node, candidate
+       splits "bin ≤ b" from prefix sums are scored by weighted Gini
+       rounded to 12 dp (both children non-empty) and argmin'd under
+       the total (gini, feature, bin) order — exact integer arithmetic
+       plus ``_py_gini`` on the driver;
+    3. each tree's node expression gains that level's winner map: rows
+       move to child 2·node (left) or 2·node+1 (right); nodes with no
+       valid split become leaves and their rows stop moving.
+
+    Min/max are order-independent and histogram cells are integer
+    sums, so a conditional tree equals the tree built on
+    ``prep.filter(cond)`` exactly; any K costs one stats scan plus one
+    scan per level.
+
+    Returns per tree (tree_rows, pym): the literal node rows (node,
+    kind, feature, raw_threshold, n, pos) — thresholds are the bin
+    boundary min + (b+1)·width, rounded 6 dp by
+    ``_tree_frame_from_rows`` — and the routing payload
+    ``_tree_route_predict`` consumes."""
+    if depth < 1:
+        raise ValueError("depth must be >= 1")
+    if bins < 2:
+        raise ValueError("bins must be >= 2")
     kk = len(specs)
     y = F.col(label_col).cast("bigint")
     xcol = {}
@@ -848,19 +589,7 @@ def _decision_tree_build_multi(
     ]
     bincol = [
         {
-            n: F.when(_dlit(wd[i][n]) == F.lit(0.0), F.lit(0))
-            .otherwise(
-                F.least(
-                    F.lit(bins - 1),
-                    F.greatest(
-                        F.lit(0),
-                        F.floor(
-                            (xcol[n] - _dlit(mn[i][n])) / _dlit(wd[i][n])
-                        ).cast("int"),
-                    ),
-                )
-            )
-            .cast("int")
+            n: _bin_col(xcol[n], _dlit(mn[i][n]), _dlit(wd[i][n]), bins)
             for n in names_t
         }
         for i, (_c, names_t) in enumerate(specs)
@@ -971,9 +700,10 @@ def _decision_tree_build_multi(
 
 
 def _tree_frame_from_rows(spark, rows: list[tuple]) -> DataFrame:
-    """The tree MODEL frame from literal node rows — the exact select
-    ``_decision_tree_build`` ends with (same schema, same Spark round
-    and predict expressions over the same collected integers)."""
+    """The tree MODEL frame (node, depth, kind, feature, threshold, n,
+    pos, pos_rate, predict) from literal node rows: Spark rounds the
+    threshold and pos_rate to 6 dp, and predict is the majority label
+    (ties → 1)."""
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -1006,6 +736,51 @@ def _tree_frame_from_rows(spark, rows: list[tuple]) -> DataFrame:
     )
 
 
+def _tree_fit_one(
+    df: DataFrame,
+    label: Column,
+    features: list[tuple[str, Column]],
+    bins: int,
+    depth: int,
+    test_pred: Column | None = None,
+) -> tuple[DataFrame, list[tuple], dict]:
+    """Fit ONE tree — on the rows where ``test_pred`` is false, or on
+    every row — as the one-spec case of ``_decision_tree_build_multi``.
+    Returns (prep, tree_rows, pym): the persisted (``__t``,) ``__y``,
+    features frame, the literal node rows and the routing payload."""
+    names = [n for n, _ in features]
+    prep, train = _single_prep(df, label, features, test_pred)
+    rows, pym = _decision_tree_build_multi(
+        prep, "__y", [(train, names)], bins, depth
+    )[0]
+    return prep, rows, pym
+
+
+def _tree_confusion(
+    rows: DataFrame,
+    features: list[tuple[str, Column]],
+    bins: int,
+    pym: dict,
+) -> DataFrame:
+    """(actual, predicted, cnt) confusion cells of a prep frame's
+    null-guarded rows routed through the tree payload."""
+    names = [n for n, _ in features]
+    guarded = _guarded(rows, F.col("__y"), [(n, F.col(n)) for n in names],
+                       "bigint")
+    return (
+        guarded.select(
+            "__y", _tree_route_predict(names, bins, pym).alias("__p")
+        )
+        .groupBy(F.col("__y").alias("actual"), F.col("__p").alias("predicted"))
+        .agg(F.count("*").alias("cnt"))
+        .select(
+            F.col("actual").cast("long").alias("actual"),
+            F.col("predicted").cast("long").alias("predicted"),
+            F.col("cnt").cast("long").alias("cnt"),
+        )
+    )
+
+
 def decision_tree_train(
     df: DataFrame,
     label: Column,
@@ -1016,10 +791,10 @@ def decision_tree_train(
     """Train a depth-bounded binary decision tree by histogram split
     finding; returns the tree frame (node, depth, kind, feature,
     threshold, n, pos, pos_rate, predict). Full algorithm and scale
-    notes: ``_decision_tree_build``."""
-    return _decision_tree_build(
-        df, label, features, bins, depth, keep_assigned=False
-    )[0]
+    notes: ``_decision_tree_build_multi``."""
+    prep, rows, _pym = _tree_fit_one(df, label, features, bins, depth)
+    prep.unpersist()  # the model is driver-side literals now
+    return _tree_frame_from_rows(df.sparkSession, rows)
 
 
 def decision_tree_confusion(
@@ -1032,29 +807,11 @@ def decision_tree_confusion(
     """Train the tree AND score the training rows: confusion matrix
     (actual, predicted, cnt) — the train→apply contract beside
     ``decision_tree_train`` (logreg carries train_accuracy the same
-    way). Scoring costs ONE broadcast hash join: training already left
-    every row at its final tree node (``_decision_tree_build``'s
-    assignment frame), and the ≤ 2^(depth+1)-row (node → predict) map
-    broadcasts into it; no re-walk of the tree, no second data shuffle."""
-    tree, assigned, _st, _wl, _pym = _decision_tree_build(
-        df, label, features, bins, depth
-    )
-    pred = tree.select("node", "predict")
-    return (
-        assigned.join(
-            F.broadcast(pred), assigned["__node"] == pred["node"]
-        )
-        .groupBy(
-            F.col("__y").alias("actual"),
-            F.col("predict").alias("predicted"),
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.col("actual").cast("long").alias("actual"),
-            F.col("predicted").cast("long").alias("predicted"),
-            F.col("cnt").cast("long").alias("cnt"),
-        )
-    )
+    way). Scoring is ONE scan of the cached training rows through the
+    literal router ``_tree_route_predict`` into a 4-cell aggregate — no
+    join, no second data shuffle."""
+    prep, _rows, pym = _tree_fit_one(df, label, features, bins, depth)
+    return _tree_confusion(prep, features, bins, pym)
 
 
 def _tree_oracle_parts(
@@ -1254,62 +1011,26 @@ def decision_tree_confusion_oracle_sql(
     )
 
 
-def _boost_fit(
+def _boost_prologue(
     df: DataFrame,
     target: Column,
     features: list[tuple[str, Column]],
-    rounds: int = 4,
-    bins: int = 16,
-    lr: float = 0.5,
+    rounds: int,
+    bins: int,
 ):
-    """Gradient-boosted regression STUMPS trained in-engine — Friedman's
-    LS_Boost with depth-1 histogram trees, the additive-model companion
-    to ``decision_tree_train`` (classification tree) and ``logreg_train``
-    (linear model). Fit F₀ = mean(y); each round fits one stump to the
-    residuals by the same equi-width-histogram split search and adds
-    ν·leaf-mean to the prediction.
-
-    Determinism/oracle contract (the logreg discipline): per-ROW
-    residual updates are exact row-local double arithmetic (y, the 6-dp
-    base and the 6-dp leaf values — no cross-row accumulation, so both
-    engines hold bit-identical residuals); every cross-row SUM is
-    rounded to 6 dp before use (sums of ~n doubles differ between
-    engines only in the last ulps, absorbed at 6 dp); the split gain
-    sl²/cl + sr²/cr over the ROUNDED sums is rounded to 9 dp and
-    argmax'd under the total (gain DESC, feature, bin) order. A round
-    with no valid split (constant features) adds nothing and emits no
-    stump row — the left-join update keeps residuals intact.
-
-    Returns one row per model term: round 0 is the base prediction
-    (feature 'base', both values F₀); round k the stump (feature,
-    threshold, left_value, right_value) with values already scaled by
-    ``lr``; every row carries the final train_rmse.
-
-    Scale shape: the binned frame is built once (one min/max pass + one
-    projection) and checkpointed; each round is ONE codegen scan into a
-    map-side-combined F·bins-cell histogram plus a broadcast 1-row
-    stump joined back — cost is ``rounds`` linear passes, the
-    distributed-GBDT `hist` contract."""
+    """Stats/binning prologue shared by both boosters: the null-guarded
+    (__y, features…) frame persisted, per-feature min/max/width
+    collected from ONE aggregate, and every feature's train-stats bin
+    as an ``__b_<name>`` column. Returns (raw, names, mn, wd,
+    binned)."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
     if bins < 2:
         raise ValueError("bins must be >= 2")
     names = [n for n, _ in features]
-    spark = df.sparkSession
-    raw = (
-        ensure_parallelism(df)
-        .select(
-            target.cast("double").alias("__y"),
-            *[expr.cast("double").alias(n) for n, expr in features],
-        )
-        .na.drop(subset=["__y", *names])
-        .persist()
-    )
-    # r13 (the _decision_tree_build shape): min/max/width and the base
-    # prediction collect as scalars; each round is ONE histogram scan
-    # of the cached binned frame whose F·bins cells collect to the
-    # driver, where the split search runs as exact integer/rounded-6dp
-    # arithmetic — no per-round window/broadcast plan chains.
+    raw = _guarded(
+        ensure_parallelism(df), target, features, "double"
+    ).persist()
     strow = raw.agg(
         *[F.min(n).alias(f"__mn_{n}") for n in names],
         *[F.max(n).alias(f"__mx_{n}") for n in names],
@@ -1321,119 +1042,85 @@ def _boost_fit(
             for n in names
         ],
     ).first()
-    st = _row1(spark, {k: strow[k] for k in strow.asDict()})
     mn = {n: strow[f"__mn_{n}"] for n in names}
     wd = {n: strow[f"__w_{n}"] for n in names}
     binned = raw.select(
         "__y",
         *[
-            F.when(_dlit(wd[n]) == F.lit(0.0), F.lit(0))
-            .otherwise(
-                F.least(
-                    F.lit(bins - 1),
-                    F.greatest(
-                        F.lit(0),
-                        F.floor(
-                            (F.col(n) - _dlit(mn[n])) / _dlit(wd[n])
-                        ).cast("int"),
-                    ),
-                )
-            )
-            .cast("int")
+            _bin_col(F.col(n), _dlit(mn[n]), _dlit(wd[n]), bins)
             .alias(f"__b_{n}")
             for n in names
         ],
     )
-    f0 = raw.agg(F.round(F.avg("__y"), 6).alias("__f0")).first()["__f0"]
-    base = _row1(spark, {"__f0": f0})
-    resid = binned.select(
-        *[f"__b_{n}" for n in names],
-        (F.col("__y") - _dlit(f0)).alias("__r"),
-    )
+    return raw, names, mn, wd, binned
+
+
+def _stump_round(
+    frame: DataFrame, resid: Column, names: list[str], lr: float
+) -> tuple | None:
+    """One boosting round's split search, shared by both boosters: ONE
+    scan of ``frame`` into the map-side-combined F·bins-cell histogram
+    of ``resid`` (count and sum per feature bin), collected; then on the
+    driver, per candidate "bin ≤ b", the rounded-6-dp prefix sum sl,
+    gain round(sl²/cl + (srt−sl)²/(ct−cl), 9) argmax'd under the total
+    (gain DESC, feature, bin) order, and leaf values round(lr·mean, 6).
+    Returns the winning stump (feature, bin, left_value, right_value),
+    or None when no split leaves both sides non-empty."""
     stack_expr = "stack({}, {})".format(
         len(names), ", ".join(f"'{n}', __b_{n}" for n in names)
     )
+    hrows = (
+        frame.select(
+            resid.alias("__r"), F.expr(stack_expr).alias("__f", "__bin")
+        )
+        .groupBy("__f", "__bin")
+        .agg(F.count("*").alias("__c"), F.sum("__r").alias("__s"))
+        .collect()
+    )
+    hist: dict = {}
+    for r in hrows:
+        hist.setdefault(r["__f"], []).append((r["__bin"], r["__c"], r["__s"]))
+    first = sorted(hist.get(names[0], []))
+    ct = sum(c for _b, c, _s in first)
+    srt = _pyround(sum(s for _b, _c, s in first), 6)
+    best = None  # (key, f, bin, lv, rv)
+    for f, cells in sorted(hist.items()):
+        cl = 0
+        sl_raw = 0.0
+        for b, c, s in sorted(cells):
+            cl += c
+            sl_raw += s
+            sl = _pyround(sl_raw, 6)
+            if not (0 < cl < ct):
+                continue
+            gain = _pyround(
+                sl * sl / cl + (srt - sl) * (srt - sl) / (ct - cl), 9
+            )
+            key = (-gain, f, b)
+            if best is None or key < best[0]:
+                lv = _pyround(lr * sl / cl, 6)
+                rv = _pyround(lr * (srt - sl) / (ct - cl), 6)
+                best = (key, f, b, lv, rv)
+    return None if best is None else best[1:]
+
+
+def _stump_model(
+    spark, payload: dict, loss: DataFrame, loss_name: str
+) -> DataFrame:
+    """The additive MODEL frame (round, feature, threshold, left_value,
+    right_value, <loss_name>): round 0 the base (feature 'base', both
+    values f0), round k the stump of each round that found a split,
+    its threshold the bin boundary min + (b+1)·width rounded 6 dp;
+    every row carries the 1-row ``loss`` frame's ``__loss``."""
     from pyspark.sql.types import (
         DoubleType,
-        IntegerType,
         LongType,
         StringType,
         StructField,
         StructType,
     )
 
-    winner_schema = StructType([
-        StructField("__f", StringType()),
-        StructField("__bin", IntegerType()),
-        StructField("__lv", DoubleType()),
-        StructField("__rv", DoubleType()),
-    ])
-    stump_rows: list[tuple] = []
-    winner_frames: list[DataFrame] = []
-    winners: list[tuple | None] = []  # (f, b, lv, rv) per round (r14)
-    for k in range(1, rounds + 1):
-        hrows = (
-            resid.select("__r", F.expr(stack_expr).alias("__f", "__bin"))
-            .groupBy("__f", "__bin")
-            .agg(F.count("*").alias("__c"), F.sum("__r").alias("__s"))
-            .collect()
-        )
-        hist: dict = {}
-        for r in hrows:
-            hist.setdefault(r["__f"], []).append(
-                (r["__bin"], r["__c"], r["__s"])
-            )
-        first = sorted(hist.get(names[0], []))
-        ct = sum(c for _b, c, _s in first)
-        srt = _pyround(sum(s for _b, _c, s in first), 6)
-        best = None  # (-gain, f, bin, lv, rv)
-        for f, cells in sorted(hist.items()):
-            cl = 0
-            sl_raw = 0.0
-            for b, c, s in sorted(cells):
-                cl += c
-                sl_raw += s
-                sl = _pyround(sl_raw, 6)
-                if not (0 < cl < ct):
-                    continue
-                gain = _pyround(
-                    sl * sl / cl
-                    + (srt - sl) * (srt - sl) / (ct - cl),
-                    9,
-                )
-                key = (-gain, f, b)
-                if best is None or key < best[0]:
-                    lv = _pyround(lr * sl / cl, 6)
-                    rv = _pyround(lr * (srt - sl) / (ct - cl), 6)
-                    best = (key, f, b, lv, rv)
-        if best is not None:
-            _k0, f, b, lv, rv = best
-            winner_frames.append(
-                spark.createDataFrame([(f, b, lv, rv)], winner_schema)
-            )
-            winners.append((f, b, lv, rv))
-            stump_rows.append(
-                (k, f, mn[f] + (b + 1) * wd[f], lv, rv)
-            )
-            resid = resid.select(
-                *[f"__b_{n}" for n in names],
-                (
-                    F.col("__r")
-                    - F.when(
-                        F.col(f"__b_{f}") <= F.lit(b), _dlit(lv)
-                    ).otherwise(_dlit(rv))
-                ).alias("__r"),
-            )
-        else:
-            # no valid split this round: no stump row, residuals intact
-            winner_frames.append(
-                spark.createDataFrame([], winner_schema)
-            )
-            winners.append(None)
-    rmse = resid.agg(
-        F.round(F.sqrt(F.avg(F.col("__r") * F.col("__r"))), 6)
-        .alias("__rmse")
-    )
+    mn, wd, f0 = payload["mn"], payload["wd"], payload["f0"]
     model_schema = StructType([
         StructField("round", LongType()),
         StructField("feature", StringType()),
@@ -1441,19 +1128,81 @@ def _boost_fit(
         StructField("left_value", DoubleType()),
         StructField("right_value", DoubleType()),
     ])
-    out = spark.createDataFrame(
-        [(0, "base", None, f0, f0)]
-        + [(k, f, thr, lv, rv) for k, f, thr, lv, rv in stump_rows],
-        model_schema,
-    )
-    model = out.crossJoin(F.broadcast(rmse)).select(
+    rows = [(0, "base", None, f0, f0)]
+    for k, stump in enumerate(payload["winners"], 1):
+        if stump is not None:
+            f, b, lv, rv = stump
+            rows.append((k, f, mn[f] + (b + 1) * wd[f], lv, rv))
+    out = spark.createDataFrame(rows, model_schema)
+    return out.crossJoin(F.broadcast(loss)).select(
         "round", "feature",
         F.round(F.col("__thr"), 6).alias("threshold"),
         "left_value", "right_value",
-        F.col("__rmse").alias("train_rmse"),
+        F.col("__loss").alias(loss_name),
     )
-    payload = {"mn": mn, "wd": wd, "f0": f0, "winners": winners}
-    return model, st, base, winner_frames, names, payload
+
+
+def _boost_fit(
+    df: DataFrame,
+    target: Column,
+    features: list[tuple[str, Column]],
+    rounds: int = 4,
+    bins: int = 16,
+    lr: float = 0.5,
+) -> tuple[DataFrame, dict]:
+    """Gradient-boosted regression STUMPS trained in-engine — Friedman's
+    LS_Boost with depth-1 histogram trees, the additive-model companion
+    to ``decision_tree_train`` (classification tree) and ``logreg_train``
+    (linear model). Fit F₀ = mean(y); each round fits one stump to the
+    residuals by the shared histogram split search (``_stump_round``)
+    and adds ν·leaf-mean to the prediction.
+
+    Determinism/oracle contract (the logreg discipline): per-ROW
+    residual updates are exact row-local double arithmetic (y, the 6-dp
+    base and the 6-dp leaf values — no cross-row accumulation, so both
+    engines hold bit-identical residuals); every cross-row SUM is
+    rounded to 6 dp before use (sums of ~n doubles differ between
+    engines only in the last ulps, absorbed at 6 dp); the split gain
+    sl²/cl + sr²/cr over the ROUNDED sums is rounded to 9 dp and
+    argmax'd under the total (gain DESC, feature, bin) order. A round
+    with no valid split (constant features) adds nothing and emits no
+    stump row.
+
+    Returns (model, payload): the model frame (``_stump_model``, every
+    row carrying the final train_rmse) and the driver-side payload
+    {"mn", "wd", "f0", "winners"} ``_boost_score`` compiles — one
+    (feature, bin, lv, rv) or None per round.
+
+    Scale shape: the binned frame is built once over the persisted
+    null-guarded rows; each round is ONE codegen scan into a
+    map-side-combined F·bins-cell histogram collected to the driver —
+    cost is ``rounds`` linear passes, the distributed-GBDT `hist`
+    contract."""
+    raw, names, mn, wd, binned = _boost_prologue(
+        df, target, features, rounds, bins
+    )
+    f0 = raw.agg(F.round(F.avg("__y"), 6).alias("__f0")).first()["__f0"]
+    bcols = [f"__b_{n}" for n in names]
+    resid = binned.select(*bcols, (F.col("__y") - _dlit(f0)).alias("__r"))
+    payload = {"mn": mn, "wd": wd, "f0": f0, "winners": []}
+    for _ in range(rounds):
+        stump = _stump_round(resid, F.col("__r"), names, lr)
+        payload["winners"].append(stump)
+        if stump is not None:
+            f, b, lv, rv = stump
+            resid = resid.select(
+                *bcols,
+                (
+                    F.col("__r")
+                    - F.when(F.col(f"__b_{f}") <= F.lit(b), _dlit(lv))
+                    .otherwise(_dlit(rv))
+                ).alias("__r"),
+            )
+    rmse = resid.agg(
+        F.round(F.sqrt(F.avg(F.col("__r") * F.col("__r"))), 6)
+        .alias("__loss")
+    )
+    return _stump_model(df.sparkSession, payload, rmse, "train_rmse"), payload
 
 
 def boost_stumps_train(
@@ -1621,15 +1370,7 @@ def logreg_calibration(
     ``n_bins``-cell partial-aggregated groupBy."""
     if n_bins < 2:
         raise ValueError("n_bins must be >= 2")
-    z, w, names, margin, _st = _logreg_fit(df, label, features,
-                                            iterations, lr)
-    p = F.round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-margin())), 6
-    )
-    scored = z.crossJoin(F.broadcast(w)).select(
-        "__y",
-        p.alias("__p"),
-    ).select(
+    scored = _logreg_scored(df, label, features, iterations, lr).select(
         "__y", "__p",
         F.least(
             F.lit(n_bins - 1),
@@ -1715,50 +1456,73 @@ def logreg_auc(
     Scale shape: the shared GD fit, one codegen scoring scan into a
     ≤10⁶-cell partial-aggregated histogram, one window over that
     bounded frame, one 1-row aggregate."""
-    z, w, names, margin, _st = _logreg_fit(df, label, features,
-                                            iterations, lr)
-    p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-margin())), 6)
-    scored = z.crossJoin(F.broadcast(w)).select(
-        F.col("__y"), p.alias("__p")
-    )
-    return _auc_over_scores(scored).select(
+    return _auc_over_scores(
+        _logreg_scored(df, label, features, iterations, lr)
+    ).select(
         F.col("__P").cast("long").alias("n_pos"),
         F.col("__N").cast("long").alias("n_neg"),
-        F.when(
-            (F.col("__P") > 0) & (F.col("__N") > 0),
-            F.round(F.col("__U") / (F.col("__P") * F.col("__N")), 6),
-        ).alias("auc"),
+        _auc_value().alias("auc"),
     )
 
 
-def _auc_over_scores(scored: DataFrame) -> DataFrame:
-    """Tie-corrected Wilcoxon rank-sum over a (__y, __p) scored frame:
-    histogram by the 6-dp score (bounded at 10⁶+1 cells), one ordered
-    cumulative window over the histogram, return the 1-row
-    (__P, __N, __U) frame. Shared by ``logreg_auc`` and
-    ``logreg_holdout_eval``."""
-    hist = scored.groupBy("__p").agg(
+def _logreg_scored(
+    df: DataFrame,
+    label: Column,
+    features: list[tuple[str, Column]],
+    iterations: int,
+    lr: float,
+) -> DataFrame:
+    """Fit on every row and score every row: (__y, __p) with __p the
+    6-dp predicted probability — the input of the calibration, ROC-AUC
+    and PR-AUC evaluators."""
+    prep, margin, _model = _logreg_fit_one(df, label, features,
+                                           iterations, lr)
+    return prep.select("__y", _sigmoid6(margin).alias("__p"))
+
+
+def _auc_over_scores(scored: DataFrame, *by: str) -> DataFrame:
+    """Tie-corrected Wilcoxon rank-sum over a (by…, __y, __p) scored
+    frame, per ``by`` key (one global row without a key): histogram by
+    the 6-dp score (bounded at 10⁶+1 cells per key), one ordered
+    cumulative window per key over the histogram, then the
+    (by…, __P, __N, __U) sums that ``_auc_value`` turns into the AUC.
+    Per-key sums stay exact (integer counts, half-integer U terms), so
+    keying several evaluations into one scan cannot move a rounding
+    boundary."""
+    hist = scored.groupBy(*by, "__p").agg(
         F.sum("__y").cast("long").alias("__pos"),
         (F.count("*") - F.sum("__y")).cast("long").alias("__neg"),
     )
+    # NULL scores (a null feature) rank above every score, as the
+    # oracles' ORDER BY p does in DuckDB (ASC is NULLS LAST there)
     win = (
-        Window.orderBy("__p")
+        Window.partitionBy(*by).orderBy(F.col("__p").asc_nulls_last())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     contrib = hist.select(
-        "__pos", "__neg",
+        *by, "__pos", "__neg",
         (F.sum("__neg").over(win) - F.col("__neg")).alias("__nb"),
     ).select(
-        "__pos", "__neg",
+        *by, "__pos", "__neg",
         (
             F.col("__nb") * F.col("__pos")
             + F.col("__pos") * F.col("__neg") / F.lit(2.0)
         ).alias("__u"),
     )
-    return contrib.agg(
+    return contrib.groupBy(*by).agg(
         F.sum("__pos").alias("__P"),
         F.sum("__neg").alias("__N"),
         F.sum("__u").alias("__U"),
+    )
+
+
+def _auc_value() -> Column:
+    """AUC = round(U / (P·N), 6) over an ``_auc_over_scores`` row —
+    NULL when either class is empty (undefined, not a division
+    error)."""
+    return F.when(
+        (F.col("__P") > 0) & (F.col("__N") > 0),
+        F.round(F.col("__U") / (F.col("__P") * F.col("__N")), 6),
     )
 
 
@@ -1826,13 +1590,9 @@ def logreg_pr_auc(
     Scale shape: the shared GD fit, one codegen scoring scan into the
     partial-aggregated histogram, one window over that bounded frame,
     one 1-row aggregate — identical cost to the ROC-AUC pass."""
-    z, w, names, margin, _st = _logreg_fit(df, label, features,
-                                           iterations, lr)
-    p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-margin())), 6)
-    scored = z.crossJoin(F.broadcast(w)).select(
-        F.col("__y"), p.alias("__p")
+    return _pr_auc_over_scores(
+        _logreg_scored(df, label, features, iterations, lr)
     )
-    return _pr_auc_over_scores(scored)
 
 
 def _pr_auc_over_scores(scored: DataFrame) -> DataFrame:
@@ -1935,70 +1695,30 @@ def logreg_holdout_eval(
     Returns one row: (n_train, n_test, test_accuracy, test_auc) — AUC
     NULL when the held-out fold is single-class.
 
-    Scale shape: the shared GD fit over the train fold, then ONE
-    codegen scoring scan over the test fold (train st + weights are two
-    broadcast 1-row frames) feeding the bounded score-histogram AUC and
-    a 1-row accuracy aggregate."""
-    names = [n for n, _ in features]
-    # evaluate fold predicate, label and features ONCE, cached (r13):
-    # the GD fit and the test-fold scoring previously each re-ran the
-    # string-heavy feature expressions over the source scan
-    prep = ensure_parallelism(df).select(
-        test_pred.alias("__t"),
-        label.cast("double").alias("__y0"),
-        *[expr.cast("double").alias(n) for n, expr in features],
-    ).persist()
-    train = prep.filter(~F.col("__t"))
-    test = prep.filter(F.col("__t"))
-    _z, w, _names, margin, st = _logreg_fit(
-        train, F.col("__y0"), [(n, F.col(n)) for n in names],
-        iterations, lr
+    Scale shape: the one-spec GD fit over the train rows of the cached
+    prep, then ONE scan of it for the counts and the test accuracy and
+    ONE scoring scan of the test fold (the model is a literal margin)
+    into the bounded score-histogram AUC."""
+    prep, margin, _model = _logreg_fit_one(
+        df, label, features, iterations, lr, test_pred
     )
-    zt = (
-        test.select(
-            F.col("__y0").alias("__y"),
-            *[F.col(n).alias(n) for n in names],
-        )
-        .crossJoin(F.broadcast(st))
-        .select(
-            "__y",
-            *[
-                F.round(
-                    (F.col(n) - F.col(f"__m_{n}")) / F.col(f"__s_{n}"), 6
-                ).alias(n)
-                for n in names
-            ],
-        )
-        .crossJoin(F.broadcast(w))
-        .localCheckpoint(eager=False)
-    )
-    acc = zt.agg(
-        F.count("*").alias("__nt"),
+    test = F.col("__t")
+    stats = prep.agg(
+        F.count(F.when(~test, F.lit(1))).alias("__ntr"),
+        F.count(F.when(test, F.lit(1))).alias("__nt"),
         F.round(
-            F.avg(
-                F.when(
-                    (F.round(margin(), 6) >= 0) == (F.col("__y") == 1.0),
-                    F.lit(1.0),
-                ).otherwise(F.lit(0.0))
-            ),
-            6,
+            F.avg(F.when(test, _hit(F.round(margin, 6), F.col("__y")))), 6
         ).alias("__acc"),
     )
-    ntr = train.agg(F.count("*").alias("__ntr"))
-    p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-margin())), 6)
-    scored = zt.select(F.col("__y"), p.alias("__p"))
+    scored = prep.filter(test).select("__y", _sigmoid6(margin).alias("__p"))
     return (
         _auc_over_scores(scored)
-        .crossJoin(F.broadcast(acc))
-        .crossJoin(F.broadcast(ntr))
+        .crossJoin(F.broadcast(stats))
         .select(
             F.col("__ntr").cast("long").alias("n_train"),
             F.col("__nt").cast("long").alias("n_test"),
             F.col("__acc").alias("test_accuracy"),
-            F.when(
-                (F.col("__P") > 0) & (F.col("__N") > 0),
-                F.round(F.col("__U") / (F.col("__P") * F.col("__N")), 6),
-            ).alias("test_auc"),
+            _auc_value().alias("test_auc"),
         )
     )
 
@@ -2078,52 +1798,18 @@ def decision_tree_holdout(
     ``logreg_holdout_eval``: fit on the rows where ``test_pred`` is
     false, then route the UNSEEN fold through the learned tree — test
     rows are binned with the TRAIN fold's min/width (no test-
-    distribution leakage) and replay the per-level winner reassignment
-    joins, landing each row at a leaf the training run created. Returns
-    the held-out confusion cells (actual, predicted, cnt).
+    distribution leakage) and follow the per-level winner reassignment,
+    landing each row at a leaf the training run created. Returns the
+    held-out confusion cells (actual, predicted, cnt).
 
-    Scale shape: the training build, then per level one broadcast hash
-    join of the ≤ 2^level-row winner frame against the test fold, and
-    the leaf-map broadcast join — the test fold is scanned once."""
-    names = [n for n, _ in features]
-    # evaluate fold predicate, label and features ONCE, cached (r13):
-    # the training build and the test-fold routing previously each
-    # re-ran the string-heavy feature expressions over the source scan
-    prep = ensure_parallelism(df).select(
-        test_pred.alias("__t"),
-        label.alias("__l0"),
-        *[e.alias(n) for n, e in features],
-    ).persist()
-    train = prep.filter(~F.col("__t"))
-    test = prep.filter(F.col("__t"))
-    feats_c = [(n, F.col(n)) for n, _e in features]
-    _tree, _assigned, _st, _wl, pym = _decision_tree_build(
-        train, F.col("__l0"), feats_c, bins, depth, keep_assigned=False
+    Scale shape: the one-spec build over the train rows of the cached
+    prep, then ONE scan of the test fold through the literal router
+    ``_tree_route_predict`` — identical bin arithmetic, winner maps and
+    leaf predicts as the oracle's per-level winner joins."""
+    prep, _rows, pym = _tree_fit_one(
+        df, label, features, bins, depth, test_pred
     )
-    # ONE-PASS routing (r14 — the rf_holdout fusion, VERDICT r13 #2):
-    # the model is driver-side literals, so the per-level
-    # broadcast-join replay collapses into one literal CASE expression
-    # over a single scan of the test fold — identical bin arithmetic,
-    # winner maps and leaf predicts on identical literal operands.
-    tb = test.select(
-        F.col("__l0").cast("bigint").alias("__y"),
-        *[F.col(n).cast("double").alias(n) for n in names],
-    ).na.drop(subset=["__y", *names])
-    return (
-        tb.select(
-            "__y", _tree_route_predict(names, bins, pym).alias("__p")
-        )
-        .groupBy(
-            F.col("__y").alias("actual"),
-            F.col("__p").alias("predicted"),
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.col("actual").cast("long").alias("actual"),
-            F.col("predicted").cast("long").alias("predicted"),
-            F.col("cnt").cast("long").alias("cnt"),
-        )
-    )
+    return _tree_confusion(prep.filter(F.col("__t")), features, bins, pym)
 
 
 def decision_tree_holdout_oracle_sql(
@@ -2195,51 +1881,22 @@ def decision_tree_holdout_oracle_sql(
     )
 
 
-def _boost_score(
-    fold: DataFrame,
-    target: Column,
-    features: list[tuple[str, Column]],
-    bins: int,
-    pym: dict,
-    out_col: str,
-) -> DataFrame:
-    """Null-guarded fold scored through the boost payload as ONE
-    literal projection (r14): train-stats bins per feature, then the
-    additive model — base + per-surviving-round
-    ``when(bin_f <= b, lv).otherwise(rv)``, left-associated in round
-    order, exactly the training-side update arithmetic on identical
-    literal operands. Returns (__y, <out_col>)."""
-    names = [n for n, _ in features]
+def _boost_score(bins: int, pym: dict) -> Column:
+    """The boosted-stump families' ONE scorer: the additive model over
+    the raw feature columns as a literal expression compiled from the
+    boost payload — base + per-surviving-round
+    ``when(bin_f <= b, lv).otherwise(rv)`` over the train-stats bin,
+    left-associated in round order, exactly the training-side update
+    arithmetic on identical literal operands."""
     mn, wd = pym["mn"], pym["wd"]
-    base_rows = fold.select(
-        target.cast("double").alias("__y"),
-        *[expr.cast("double").alias(n) for n, expr in features],
-    ).na.drop(subset=["__y", *names])
-    bincol = {
-        n: F.when(_dlit(wd[n]) == F.lit(0.0), F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(bins - 1),
-                F.greatest(
-                    F.lit(0),
-                    F.floor(
-                        (F.col(n) - _dlit(mn[n])) / _dlit(wd[n])
-                    ).cast("int"),
-                ),
-            )
-        )
-        .cast("int")
-        for n in names
-    }
     pred = _dlit(pym["f0"])
     for w in pym["winners"]:
         if w is None:
             continue
         f, bn, lv, rv = w
-        pred = pred + F.when(
-            bincol[f] <= F.lit(bn), _dlit(lv)
-        ).otherwise(_dlit(rv))
-    return base_rows.select("__y", pred.alias(out_col))
+        x = _bin_col(F.col(f), _dlit(mn[f]), _dlit(wd[f]), bins)
+        pred = pred + F.when(x <= F.lit(bn), _dlit(lv)).otherwise(_dlit(rv))
+    return pred
 
 
 def boost_stumps_holdout(
@@ -2261,23 +1918,15 @@ def boost_stumps_holdout(
     Returns one row: (n_train, n_test, train_rmse, test_rmse).
 
     Scale shape: the training fit, then ONE codegen scan of the test
-    fold through ``rounds`` broadcast 1-row stump joins and a 1-row
-    aggregate."""
+    fold through the literal ``_boost_score`` and a 1-row aggregate."""
     names = [n for n, _ in features]
     b = ensure_parallelism(df)
     train = b.filter(~test_pred)
     test = b.filter(test_pred)
-    model, _st, _fbase, _wf, _, pym = _boost_fit(
-        train, target, features, rounds, bins, lr
+    model, pym = _boost_fit(train, target, features, rounds, bins, lr)
+    tb = _guarded(test, target, features, "double").select(
+        "__y", _boost_score(bins, pym).alias("__pred")
     )
-    # ONE-PASS literal scoring (r14 — the rf_holdout VERDICT #2 shape):
-    # the model is driver-side scalars after the fit, so the test bins
-    # and the additive prediction are literal expressions over one scan
-    # — no st/base crossJoins, no per-round broadcast-join chain. The
-    # arithmetic is the old chain's own on identical literal operands
-    # (per surviving round: pred + when(bin_f <= b, lv).otherwise(rv),
-    # left-associated in round order; skipped rounds left pred intact).
-    tb = _boost_score(test, target, features, bins, pym, "__pred")
     test_stats = tb.agg(
         F.count("*").alias("__nt"),
         F.round(
@@ -2290,10 +1939,9 @@ def boost_stumps_holdout(
             6,
         ).alias("__trm"),
     )
-    ntr = train.select(
-        target.cast("double").alias("__y"),
-        *[expr.cast("double").alias(n) for n, expr in features],
-    ).na.drop(subset=["__y", *names]).agg(F.count("*").alias("__ntr"))
+    ntr = _guarded(train, target, features, "double").agg(
+        F.count("*").alias("__ntr")
+    )
     train_rmse = model.agg(F.max("train_rmse").alias("__rm"))
     return (
         test_stats.crossJoin(F.broadcast(ntr))
@@ -2385,15 +2033,15 @@ def _logit_boost_fit(
     rounds: int = 4,
     bins: int = 16,
     lr: float = 0.5,
-):
+) -> tuple[DataFrame, dict]:
     """Gradient boosting for BINARY CLASSIFICATION with depth-1
     histogram trees — the log-loss companion to ``_boost_fit``'s
     LS_Boost (VERDICT r8 #3): F₀ is the 6-dp log-odds of the clamped
     base rate; each round fits one stump to the log-loss
-    pseudo-residuals rᵢ = yᵢ − σ(Fᵢ) by the SAME equi-width-histogram
-    split search (variance-reduction gain over the residual sums — the
-    unit-hessian gradient step LightGBM's `hist` uses) and adds
-    ν·leaf-mean-residual to the margin.
+    pseudo-residuals rᵢ = yᵢ − σ(Fᵢ) by the SAME histogram split
+    search (``_stump_round``: variance-reduction gain over the
+    residual sums — the unit-hessian gradient step LightGBM's `hist`
+    uses) and adds ν·leaf-mean-residual to the margin.
 
     Determinism/oracle contract: the margin F is row-local exact double
     arithmetic (f0 and every leaf value are 6-dp constants added
@@ -2405,67 +2053,17 @@ def _logit_boost_fit(
     total (gain DESC, feature, bin) order. A round with no valid split
     adds nothing and emits no stump row.
 
-    Returns (model, st, base, winner_frames, names): model has one row
-    per term — round 0 the base margin (feature 'base', both values
-    f0), round k the stump — each carrying train_logloss of the final
-    margin (probabilities clamped to [1e-6, 1−1e-6] before the log).
+    Returns (model, payload): the model frame (``_stump_model``, every
+    row carrying train_logloss of the final margin, probabilities
+    clamped to [1e-6, 1−1e-6] before the log) and the payload
+    ``_boost_score`` compiles.
 
     Scale shape: identical to ``_boost_fit`` — the binned frame is
-    built once and checkpointed; each round is ONE codegen scan into a
-    map-side-combined F·bins-cell residual histogram plus a broadcast
-    1-row stump joined back."""
-    if rounds < 1:
-        raise ValueError("rounds must be >= 1")
-    if bins < 2:
-        raise ValueError("bins must be >= 2")
-    names = [n for n, _ in features]
-    spark = df.sparkSession
-    raw = (
-        ensure_parallelism(df)
-        .select(
-            label.cast("double").alias("__y"),
-            *[expr.cast("double").alias(n) for n, expr in features],
-        )
-        .na.drop(subset=["__y", *names])
-        .persist()
-    )
-    # r13: same driver-side split search as _boost_fit; the margin is
-    # an expression chain over the cached binned frame (f0 and every
-    # leaf value are collected 6-dp constants, so per-row margins stay
-    # bit-identical to the broadcast-join formulation)
-    strow = raw.agg(
-        *[F.min(n).alias(f"__mn_{n}") for n in names],
-        *[F.max(n).alias(f"__mx_{n}") for n in names],
-    ).select(
-        "*",
-        *[
-            ((F.col(f"__mx_{n}") - F.col(f"__mn_{n}")) / F.lit(float(bins)))
-            .alias(f"__w_{n}")
-            for n in names
-        ],
-    ).first()
-    st = _row1(spark, {k: strow[k] for k in strow.asDict()})
-    mn = {n: strow[f"__mn_{n}"] for n in names}
-    wd = {n: strow[f"__w_{n}"] for n in names}
-    binned = raw.select(
-        "__y",
-        *[
-            F.when(_dlit(wd[n]) == F.lit(0.0), F.lit(0))
-            .otherwise(
-                F.least(
-                    F.lit(bins - 1),
-                    F.greatest(
-                        F.lit(0),
-                        F.floor(
-                            (F.col(n) - _dlit(mn[n])) / _dlit(wd[n])
-                        ).cast("int"),
-                    ),
-                )
-            )
-            .cast("int")
-            .alias(f"__b_{n}")
-            for n in names
-        ],
+    built once over the persisted rows; each round is ONE codegen scan
+    into a map-side-combined F·bins-cell residual histogram collected
+    to the driver."""
+    raw, names, mn, wd, binned = _boost_prologue(
+        df, label, features, rounds, bins
     )
     pbar = F.least(
         F.greatest(F.avg("__y"), F.lit(0.000001)), F.lit(0.999999)
@@ -2473,98 +2071,24 @@ def _logit_boost_fit(
     f0 = raw.agg(
         F.round(F.log(pbar / (F.lit(1.0) - pbar)), 6).alias("__f0")
     ).first()["__f0"]
-    base = _row1(spark, {"__f0": f0})
-    pred = binned.select(
-        "__y",
-        *[f"__b_{n}" for n in names],
-        _dlit(f0).alias("__m"),
-    )
-    stack_expr = "stack({}, {})".format(
-        len(names), ", ".join(f"'{n}', __b_{n}" for n in names)
-    )
-    sigmoid = F.round(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("__m"))), 6
-    )
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    winner_schema = StructType([
-        StructField("__f", StringType()),
-        StructField("__bin", IntegerType()),
-        StructField("__lv", DoubleType()),
-        StructField("__rv", DoubleType()),
-    ])
-    stump_rows: list[tuple] = []
-    winner_frames: list[DataFrame] = []
-    winners: list[tuple | None] = []  # (f, b, lv, rv) per round (r14)
-    for k in range(1, rounds + 1):
-        hrows = (
-            pred.select(
-                (F.col("__y") - sigmoid).alias("__r"),
-                F.expr(stack_expr).alias("__f", "__bin"),
-            )
-            .groupBy("__f", "__bin")
-            .agg(F.count("*").alias("__c"), F.sum("__r").alias("__s"))
-            .collect()
-        )
-        hist: dict = {}
-        for r in hrows:
-            hist.setdefault(r["__f"], []).append(
-                (r["__bin"], r["__c"], r["__s"])
-            )
-        first = sorted(hist.get(names[0], []))
-        ct = sum(c for _b, c, _s in first)
-        srt = _pyround(sum(s for _b, _c, s in first), 6)
-        best = None  # (key, f, bin, lv, rv)
-        for f, cells in sorted(hist.items()):
-            cl = 0
-            sl_raw = 0.0
-            for b, c, s in sorted(cells):
-                cl += c
-                sl_raw += s
-                sl = _pyround(sl_raw, 6)
-                if not (0 < cl < ct):
-                    continue
-                gain = _pyround(
-                    sl * sl / cl
-                    + (srt - sl) * (srt - sl) / (ct - cl),
-                    9,
-                )
-                key = (-gain, f, b)
-                if best is None or key < best[0]:
-                    lv = _pyround(lr * sl / cl, 6)
-                    rv = _pyround(lr * (srt - sl) / (ct - cl), 6)
-                    best = (key, f, b, lv, rv)
-        if best is not None:
-            _k0, f, b, lv, rv = best
-            winner_frames.append(
-                spark.createDataFrame([(f, b, lv, rv)], winner_schema)
-            )
-            winners.append((f, b, lv, rv))
-            stump_rows.append(
-                (k, f, mn[f] + (b + 1) * wd[f], lv, rv)
-            )
+    bcols = [f"__b_{n}" for n in names]
+    pred = binned.select("__y", *bcols, _dlit(f0).alias("__m"))
+    sigmoid = _sigmoid6(F.col("__m"))
+    payload = {"mn": mn, "wd": wd, "f0": f0, "winners": []}
+    for _ in range(rounds):
+        stump = _stump_round(pred, F.col("__y") - sigmoid, names, lr)
+        payload["winners"].append(stump)
+        if stump is not None:
+            f, b, lv, rv = stump
             pred = pred.select(
                 "__y",
-                *[f"__b_{n}" for n in names],
+                *bcols,
                 (
                     F.col("__m")
-                    + F.when(
-                        F.col(f"__b_{f}") <= F.lit(b), _dlit(lv)
-                    ).otherwise(_dlit(rv))
+                    + F.when(F.col(f"__b_{f}") <= F.lit(b), _dlit(lv))
+                    .otherwise(_dlit(rv))
                 ).alias("__m"),
             )
-        else:
-            winner_frames.append(
-                spark.createDataFrame([], winner_schema)
-            )
-            winners.append(None)
     pc = F.least(F.greatest(sigmoid, F.lit(0.000001)), F.lit(0.999999))
     loss = pred.agg(
         F.round(
@@ -2575,28 +2099,12 @@ def _logit_boost_fit(
                 )
             ),
             6,
-        ).alias("__ll")
+        ).alias("__loss")
     )
-    model_schema = StructType([
-        StructField("round", LongType()),
-        StructField("feature", StringType()),
-        StructField("__thr", DoubleType()),
-        StructField("left_value", DoubleType()),
-        StructField("right_value", DoubleType()),
-    ])
-    out = spark.createDataFrame(
-        [(0, "base", None, f0, f0)]
-        + [(k, f, thr, lv, rv) for k, f, thr, lv, rv in stump_rows],
-        model_schema,
+    return (
+        _stump_model(df.sparkSession, payload, loss, "train_logloss"),
+        payload,
     )
-    model = out.crossJoin(F.broadcast(loss)).select(
-        "round", "feature",
-        F.round(F.col("__thr"), 6).alias("threshold"),
-        "left_value", "right_value",
-        F.col("__ll").alias("train_logloss"),
-    )
-    payload = {"mn": mn, "wd": wd, "f0": f0, "winners": winners}
-    return model, st, base, winner_frames, names, payload
 
 
 def logit_boost_train(
@@ -2768,37 +2276,23 @@ def logit_boost_holdout(
     NULL when the held-out fold is single-class.
 
     Scale shape: the training fit, then ONE codegen scan of the test
-    fold through ``rounds`` broadcast 1-row stump joins feeding the
-    bounded score-histogram AUC and a 1-row accuracy aggregate."""
-    names = [n for n, _ in features]
+    fold through the literal ``_boost_score`` feeding the bounded
+    score-histogram AUC and a 1-row accuracy aggregate."""
     b = ensure_parallelism(df)
     train = b.filter(~test_pred)
     test = b.filter(test_pred)
-    _model, _st, _fbase, _wf, _, pym = _logit_boost_fit(
-        train, label, features, rounds, bins, lr
-    )
-    # ONE-PASS literal scoring (r14 — see boost_stumps_holdout): the
-    # additive margin as a literal expression chain over one scan.
-    tb = _boost_score(test, label, features, bins, pym, "__m")
-    tb = tb.localCheckpoint(eager=False)
+    _model, pym = _logit_boost_fit(train, label, features, rounds, bins, lr)
+    tb = _guarded(test, label, features, "double").select(
+        "__y", _boost_score(bins, pym).alias("__m")
+    ).localCheckpoint(eager=False)
     acc = tb.agg(
         F.count("*").alias("__nt"),
-        F.round(
-            F.avg(
-                F.when(
-                    (F.col("__m") >= 0) == (F.col("__y") == 1.0),
-                    F.lit(1.0),
-                ).otherwise(F.lit(0.0))
-            ),
-            6,
-        ).alias("__acc"),
+        F.round(F.avg(_hit(F.col("__m"), F.col("__y"))), 6).alias("__acc"),
     )
-    ntr = train.select(
-        label.cast("double").alias("__y"),
-        *[expr.cast("double").alias(n) for n, expr in features],
-    ).na.drop(subset=["__y", *names]).agg(F.count("*").alias("__ntr"))
-    p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("__m"))), 6)
-    scored = tb.select(F.col("__y"), p.alias("__p"))
+    ntr = _guarded(train, label, features, "double").agg(
+        F.count("*").alias("__ntr")
+    )
+    scored = tb.select("__y", _sigmoid6(F.col("__m")).alias("__p"))
     return (
         _auc_over_scores(scored)
         .crossJoin(F.broadcast(acc))
@@ -2807,10 +2301,7 @@ def logit_boost_holdout(
             F.col("__ntr").cast("long").alias("n_train"),
             F.col("__nt").cast("long").alias("n_test"),
             F.col("__acc").alias("test_accuracy"),
-            F.when(
-                (F.col("__P") > 0) & (F.col("__N") > 0),
-                F.round(F.col("__U") / (F.col("__P") * F.col("__N")), 6),
-            ).alias("test_auc"),
+            _auc_value().alias("test_auc"),
         )
     )
 
@@ -2961,63 +2452,30 @@ def logreg_kfold_cv(
     # cannot move a rounding boundary.
     margins = [_logreg_margin_lit(models[f], names) for f in range(k)]
     agg_exprs = []
+    pcol = None
     for f in range(k):
         test_f = F.col("__cvf") == F.lit(f)
-        agg_exprs.append(
-            F.count(F.when(train_conds[f], F.lit(1))).alias(f"__ntr_{f}")
-        )
-        agg_exprs.append(
-            F.count(F.when(test_f, F.lit(1))).alias(f"__nt_{f}")
-        )
-        agg_exprs.append(
+        agg_exprs += [
+            F.count(F.when(train_conds[f], F.lit(1))).alias(f"__ntr_{f}"),
+            F.count(F.when(test_f, F.lit(1))).alias(f"__nt_{f}"),
             F.round(
                 F.avg(
                     F.when(
-                        test_f,
-                        F.when(
-                            (F.round(margins[f], 6) >= 0)
-                            == (F.col("__cvl") == 1.0),
-                            F.lit(1.0),
-                        ).otherwise(F.lit(0.0)),
+                        test_f, _hit(F.round(margins[f], 6), F.col("__cvl"))
                     )
                 ),
                 6,
-            ).alias(f"__acc_{f}")
-        )
+            ).alias(f"__acc_{f}"),
+        ]
+        pf = _sigmoid6(margins[f])
+        pcol = F.when(test_f, pf) if pcol is None else pcol.when(test_f, pf)
     arow = prep.agg(*agg_exprs)
-    pcol = None
-    for f in range(k):
-        pf = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-margins[f])), 6)
-        cond = F.col("__cvf") == F.lit(f)
-        pcol = F.when(cond, pf) if pcol is None else pcol.when(cond, pf)
     scored = prep.select(
         F.col("__cvf").alias("__fold"),
         F.col("__cvl").alias("__y"),
         pcol.alias("__p"),
     )
-    hist = scored.groupBy("__fold", "__p").agg(
-        F.sum("__y").cast("long").alias("__pos"),
-        (F.count("*") - F.sum("__y")).cast("long").alias("__neg"),
-    )
-    win = (
-        Window.partitionBy("__fold").orderBy("__p")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    contrib = hist.select(
-        "__fold", "__pos", "__neg",
-        (F.sum("__neg").over(win) - F.col("__neg")).alias("__nb"),
-    ).select(
-        "__fold", "__pos", "__neg",
-        (
-            F.col("__nb") * F.col("__pos")
-            + F.col("__pos") * F.col("__neg") / F.lit(2.0)
-        ).alias("__u"),
-    )
-    aucf = contrib.groupBy("__fold").agg(
-        F.sum("__pos").alias("__P"),
-        F.sum("__neg").alias("__N"),
-        F.sum("__u").alias("__U"),
-    )
+    aucf = _auc_over_scores(scored, "__fold")
     stacked = arow.select(
         F.expr(
             f"stack({k}, " + ", ".join(
@@ -3034,47 +2492,38 @@ def logreg_kfold_cv(
             F.col("__n_train").cast("long").alias("n_train"),
             F.col("__n_test").cast("long").alias("n_test"),
             F.col("__accuracy").alias("accuracy"),
-            F.when(
-                (F.col("__P") > 0) & (F.col("__N") > 0),
-                F.round(F.col("__U") / (F.col("__P") * F.col("__N")), 6),
-            ).alias("auc"),
+            _auc_value().alias("auc"),
         )
     )
-    mean = per_fold.agg(
-        F.round(F.avg("accuracy"), 6).alias("accuracy"),
-        F.round(F.avg("auc"), 6).alias("auc"),
-    ).select(
-        F.lit("mean").alias("fold"),
-        F.lit(None).cast("long").alias("n_train"),
-        F.lit(None).cast("long").alias("n_test"),
-        "accuracy", "auc",
+    return _with_cv_summary(
+        per_fold, ["n_train", "n_test"], ["accuracy", "auc"]
     )
-    std = per_fold.agg(
-        F.round(
-            F.sqrt(
-                F.greatest(
-                    F.lit(0.0),
-                    F.avg(F.col("accuracy") * F.col("accuracy"))
-                    - F.avg("accuracy") * F.avg("accuracy"),
-                )
-            ),
+
+
+def _with_cv_summary(
+    per_fold: DataFrame, null_cols: list[str], metrics: list[str]
+) -> DataFrame:
+    """Append the 'mean' and population-'std' rows over the per-fold
+    ``metrics`` (NULLs skipped; std = sqrt(max(0, E[x²] − E[x]²)); both
+    rounded 6 dp) to a per-fold frame keyed by ``fold``; the
+    ``null_cols`` are NULL longs on both rows."""
+
+    def summary(name: str, stat) -> DataFrame:
+        return per_fold.agg(
+            *[stat(F.col(m)).alias(m) for m in metrics]
+        ).select(
+            F.lit(name).alias("fold"),
+            *[F.lit(None).cast("long").alias(c) for c in null_cols],
+            *metrics,
+        )
+
+    mean = summary("mean", lambda c: F.round(F.avg(c), 6))
+    std = summary(
+        "std",
+        lambda c: F.round(
+            F.sqrt(F.greatest(F.lit(0.0), F.avg(c * c) - F.avg(c) * F.avg(c))),
             6,
-        ).alias("accuracy"),
-        F.round(
-            F.sqrt(
-                F.greatest(
-                    F.lit(0.0),
-                    F.avg(F.col("auc") * F.col("auc"))
-                    - F.avg("auc") * F.avg("auc"),
-                )
-            ),
-            6,
-        ).alias("auc"),
-    ).select(
-        F.lit("std").alias("fold"),
-        F.lit(None).cast("long").alias("n_train"),
-        F.lit(None).cast("long").alias("n_test"),
-        "accuracy", "auc",
+        ),
     )
     return per_fold.unionByName(mean).unionByName(std)
 
@@ -3199,30 +2648,7 @@ def decision_tree_kfold_cv(
             "accuracy",
         )
     )
-    mean = per_fold.agg(
-        F.round(F.avg("accuracy"), 6).alias("accuracy")
-    ).select(
-        F.lit("mean").alias("fold"),
-        F.lit(None).cast("long").alias("n_test"),
-        "accuracy",
-    )
-    std = per_fold.agg(
-        F.round(
-            F.sqrt(
-                F.greatest(
-                    F.lit(0.0),
-                    F.avg(F.col("accuracy") * F.col("accuracy"))
-                    - F.avg("accuracy") * F.avg("accuracy"),
-                )
-            ),
-            6,
-        ).alias("accuracy")
-    ).select(
-        F.lit("std").alias("fold"),
-        F.lit(None).cast("long").alias("n_test"),
-        "accuracy",
-    )
-    return per_fold.unionByName(mean).unionByName(std)
+    return _with_cv_summary(per_fold, ["n_test"], ["accuracy"])
 
 
 def decision_tree_kfold_cv_oracle_sql(
@@ -3318,9 +2744,10 @@ def random_forest_train(
     features_per_tree: int | None = None,
 ) -> DataFrame:
     """Random forest over the histogram tree trainer (VERDICT r8 #7):
-    ``n_trees`` independent depth-bounded trees, each fit by
-    ``_decision_tree_build`` (unchanged — one codegen scan per level
-    into a nodes·F·bins histogram) on a DETERMINISTIC subsample — rows
+    ``n_trees`` independent depth-bounded trees, all fit together by
+    ``_decision_tree_build_multi`` (one codegen scan per level into
+    every tree's nodes·F·bins histogram), each on a DETERMINISTIC
+    subsample — rows
     whose md5 hex digit of '<id>:<t>' is < ``row_keep``/16, features
     the md5-ranked ``features_per_tree`` (default ceil(√F)) subset per
     tree — no RNG anywhere, so a DuckDB oracle reproduces every tree
@@ -3330,10 +2757,10 @@ def random_forest_train(
     depth, kind, feature, threshold, n, pos, pos_rate, predict).
     Majority voting over the forest is ``random_forest_holdout``.
 
-    Scale shape: n_trees × the single tree's cost — each tree's
-    data-scale work is ``depth`` histogram scans of its subsample;
-    nothing here is new shuffle machinery, so the single tree's 100×
-    rehearsal carries over multiplied by a constant."""
+    Scale shape: the single tree's scans — one stats scan plus one
+    histogram scan per level of the cached prep — with every tree's
+    cells in the same shuffle; nothing here is new shuffle machinery,
+    so the single tree's 100× rehearsal carries over."""
     if n_trees < 1:
         raise ValueError("n_trees must be >= 1")
     if not (1 <= row_keep <= 16):
@@ -3434,10 +2861,9 @@ def random_forest_holdout(
     then ('forest', NULL, n_test, accuracy) for the majority vote — the
     variance-reduction story in one frame.
 
-    Scale shape: per tree the training build plus one broadcast-join
-    routing pass over the test fold; the vote combine is one groupBy on
-    the (n_test · n_trees)-row vote frame. Nothing touches the full
-    corpus beyond the single-tree passes."""
+    Scale shape: the fused build of every tree, then ONE scan of the
+    test fold computing every tree's literal-routed vote, the per-tree
+    accuracies and the majority vote in a single aggregate."""
     if n_trees < 1:
         raise ValueError("n_trees must be >= 1")
     if not (1 <= row_keep <= 16):
@@ -3459,13 +2885,9 @@ def random_forest_holdout(
     ).persist()
     # one shared null-guarded test fold (ALL features) so every tree
     # votes on the same rows
-    test = (
-        prep.filter(F.col("__t"))
-        .select(
-            F.col("__l0").cast("bigint").alias("__y"),
-            *[F.col(n).cast("double").alias(n) for n in names],
-        )
-        .na.drop(subset=["__y", *names])
+    test = _guarded(
+        prep.filter(F.col("__t")), F.col("__l0"),
+        [(n, F.col(n)) for n in names], "bigint",
     )
     prep.count()  # materialize once before the fused level scans
     # FUSED tree fits (r14 — VERDICT r13 #3): every tree's level
@@ -3797,14 +3219,7 @@ def mutual_information(
     if bins < 2:
         raise ValueError("bins must be >= 2")
     names = [n for n, _ in features]
-    raw = (
-        ensure_parallelism(df)
-        .select(
-            label.cast("bigint").alias("__y"),
-            *[expr.cast("double").alias(n) for n, expr in features],
-        )
-        .na.drop(subset=["__y", *names])
-    )
+    raw = _guarded(ensure_parallelism(df), label, features, "bigint")
     st = raw.agg(
         *[F.min(n).alias(f"__mn_{n}") for n in names],
         *[F.max(n).alias(f"__mx_{n}") for n in names],
@@ -3819,20 +3234,7 @@ def mutual_information(
     binned = raw.crossJoin(F.broadcast(st)).select(
         "__y",
         *[
-            F.when(F.col(f"__w_{n}") == 0, F.lit(0))
-            .otherwise(
-                F.least(
-                    F.lit(bins - 1),
-                    F.greatest(
-                        F.lit(0),
-                        F.floor(
-                            (F.col(n) - F.col(f"__mn_{n}"))
-                            / F.col(f"__w_{n}")
-                        ).cast("int"),
-                    ),
-                )
-            )
-            .cast("int")
+            _bin_col(F.col(n), F.col(f"__mn_{n}"), F.col(f"__w_{n}"), bins)
             .alias(f"__b_{n}")
             for n in names
         ],
@@ -3990,28 +3392,15 @@ def logreg_learning_curve(
     margins = [_logreg_margin_lit(models[i], names) for i in range(len(pts))]
     test_c = F.col("__lct")
     agg_exprs = []
-    for i, kk in enumerate(pts):
-        agg_exprs.append(
-            F.count(F.when(train_conds[i], F.lit(1))).alias(f"__ntr_{i}")
-        )
-        agg_exprs.append(
-            F.count(F.when(test_c, F.lit(1))).alias(f"__nt_{i}")
-        )
-        agg_exprs.append(
+    for i, m in enumerate(margins):
+        agg_exprs += [
+            F.count(F.when(train_conds[i], F.lit(1))).alias(f"__ntr_{i}"),
+            F.count(F.when(test_c, F.lit(1))).alias(f"__nt_{i}"),
             F.round(
-                F.avg(
-                    F.when(
-                        test_c,
-                        F.when(
-                            (F.round(margins[i], 6) >= 0)
-                            == (F.col("__lcl") == 1.0),
-                            F.lit(1.0),
-                        ).otherwise(F.lit(0.0)),
-                    )
-                ),
+                F.avg(F.when(test_c, _hit(F.round(m, 6), F.col("__lcl")))),
                 6,
-            ).alias(f"__acc_{i}")
-        )
+            ).alias(f"__acc_{i}"),
+        ]
     arow = prep.agg(*agg_exprs)
     # the test fold is IDENTICAL at every point, so each test row feeds
     # every point's score histogram: stack one (point, y, p_point)
@@ -4022,11 +3411,7 @@ def logreg_learning_curve(
             F.lit(int(kk)).alias(f"__pt_{i}")
             for i, kk in enumerate(pts)
         ],
-        *[
-            F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-margins[i])), 6)
-            .alias(f"__pp_{i}")
-            for i in range(len(pts))
-        ],
+        *[_sigmoid6(m).alias(f"__pp_{i}") for i, m in enumerate(margins)],
     ).select(
         "__y",
         F.expr(
@@ -4038,29 +3423,7 @@ def logreg_learning_curve(
             )
         ).alias("__point", "__p"),
     )
-    hist = scored.groupBy("__point", "__p").agg(
-        F.sum("__y").cast("long").alias("__pos"),
-        (F.count("*") - F.sum("__y")).cast("long").alias("__neg"),
-    )
-    win = (
-        Window.partitionBy("__point").orderBy("__p")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    contrib = hist.select(
-        "__point", "__pos", "__neg",
-        (F.sum("__neg").over(win) - F.col("__neg")).alias("__nb"),
-    ).select(
-        "__point", "__pos", "__neg",
-        (
-            F.col("__nb") * F.col("__pos")
-            + F.col("__pos") * F.col("__neg") / F.lit(2.0)
-        ).alias("__u"),
-    )
-    aucp = contrib.groupBy("__point").agg(
-        F.sum("__pos").alias("__P"),
-        F.sum("__neg").alias("__N"),
-        F.sum("__u").alias("__U"),
-    )
+    aucp = _auc_over_scores(scored, "__point")
     stacked = arow.select(
         F.expr(
             f"stack({len(pts)}, " + ", ".join(
@@ -4078,10 +3441,7 @@ def logreg_learning_curve(
             F.col("__n_train").cast("long").alias("n_train"),
             F.col("__n_test").cast("long").alias("n_test"),
             F.col("__accuracy").alias("accuracy"),
-            F.when(
-                (F.col("__P") > 0) & (F.col("__N") > 0),
-                F.round(F.col("__U") / (F.col("__P") * F.col("__N")), 6),
-            ).alias("auc"),
+            _auc_value().alias("auc"),
         )
     )
 

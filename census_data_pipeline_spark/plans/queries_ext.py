@@ -3305,6 +3305,30 @@ _LOGREG_FEATURES_SQL = [
 ]
 
 
+def _quality_features():
+    """The Spark twin of ``_LOGREG_FEATURES_SQL``: the four surface
+    statistics every learned quality-filter query trains on."""
+    return [
+        ("f_chars", F.col("n_chars")),
+        ("f_words",
+         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
+                                               F.lit(""))) + F.lit(1)),
+        ("f_e_ratio",
+         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"),
+                                                F.lit(""))))
+         / F.col("n_chars").cast("double")),
+        ("f_the_cnt",
+         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
+                                                F.lit("")))) / F.lit(3.0)),
+    ]
+
+
+def _gbt_features():
+    """The three regressors of the boosted-stump queries: the quality
+    features without f_e_ratio, which is their target."""
+    return [f for f in _quality_features() if f[0] != "f_e_ratio"]
+
+
 @query(
     "quality_logreg_train",
     oracle=classify.logreg_oracle_sql(
@@ -3322,27 +3346,17 @@ def quality_logreg_train(spark, sf_dir):
     the English label — the CCNet/GPT-3-style learned quality filter,
     expressed as a deterministic dataflow the oracle unrolls as CTEs
     (the kmeans/pca discipline: fixed rounds, 6-dp rounding at identical
-    points). Per round: ONE whole-stage-codegen scan of the checkpointed
-    feature frame + a 1-row partial-aggregated gradient; the model is a
-    broadcast 1-row frame, never driver state. On this synthetic corpus
+    points). Per round: ONE whole-stage-codegen scan of the persisted
+    feature frame + a 1-row partial-aggregated gradient, collected and
+    fed back as literals; the accuracy scan scores with the model
+    compiled to one literal margin expression, joining nothing. On this
+    synthetic corpus
     the four surface features carry little language signal, so the
     learned weights hover near zero and accuracy near the majority rate
     — the query pins the TRAINING dataflow, not corpus separability
     (tests/test_round6_ops.py proves recovery on separable data)."""
     docs = load_table(spark, sf_dir, "documents")
-    feats = [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_e_ratio",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"),
-                                                F.lit(""))))
-         / F.col("n_chars").cast("double")),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit("")))) / F.lit(3.0)),
-    ]
+    feats = _quality_features()
     return classify.logreg_train(
         docs,
         F.when(F.col("lang") == "en", F.lit(1.0)).otherwise(F.lit(0.0)),
@@ -3372,26 +3386,15 @@ def quality_tree_train(spark, sf_dir):
     per-(node, feature, bin) counts (map-side combined to ≤ nodes·4·16
     cells); split search is prefix sums + 12-dp-rounded Gini argmin
     with a total (gini, feature, bin) order over the model-sized
-    histogram; winners broadcast back to reassign rows. The oracle
+    histogram; each level's winners extend a literal node expression
+    that reassigns rows. The oracle
     replicates every level as CTEs. Output: (node, depth, kind,
     feature, threshold, n, pos, pos_rate, predict) — 3 splits + 4
     leaves on this corpus."""
     from census_data_pipeline_spark.functions import classify as _c
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_e_ratio",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"),
-                                                F.lit(""))))
-         / F.col("n_chars").cast("double")),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit("")))) / F.lit(3.0)),
-    ]
+    feats = _quality_features()
     return _c.decision_tree_train(
         docs,
         F.when(F.col("lang") == "en", F.lit(1)).otherwise(F.lit(0)),
@@ -3413,29 +3416,16 @@ def quality_tree_train(spark, sf_dir):
 )
 def quality_tree_eval(spark, sf_dir):
     """The train→apply contract for the histogram tree
-    (functions/classify.decision_tree_confusion): training already
-    leaves every row at its final leaf (the per-level reassignment
-    frame), so scoring is ONE broadcast hash join of the
-    ≤ 2^(depth+1)-row (node → majority label) map plus a 4-cell
-    aggregate — no second walk of the data. Output: (actual, predicted,
-    cnt) confusion cells for the same tree quality_tree_train emits."""
+    (functions/classify.decision_tree_confusion): the fitted tree
+    compiles to one literal CASE expression (bins, per-level winner
+    maps, leaf majority labels), so scoring is ONE scan of the cached
+    training rows into a 4-cell aggregate — no join, no second
+    shuffle. Output: (actual, predicted, cnt) confusion cells for the
+    same tree quality_tree_train emits."""
     from census_data_pipeline_spark.functions import classify as _c
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_e_ratio",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"),
-                                                F.lit(""))))
-         / F.col("n_chars").cast("double")),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit(""))))
-         / F.lit(3.0)),
-    ]
+    feats = _quality_features()
     return _c.decision_tree_confusion(
         docs,
         F.when(F.col("lang") == "en", F.lit(1)).otherwise(F.lit(0)),
@@ -3466,8 +3456,8 @@ def quality_gbt_train(spark, sf_dir):
     histogram split search): predict each document's 'e'-character
     ratio from the other three surface statistics, 4 boosting rounds.
     Per round ONE codegen scan of the checkpointed binned frame builds
-    a map-side-combined F·16-cell residual histogram; the stump (1 row)
-    broadcasts back and residual updates stay row-local exact doubles,
+    a map-side-combined F·16-cell residual histogram; the winning stump
+    returns as literals and residual updates stay row-local exact doubles,
     so the oracle replicates the trajectory with sums rounded 6 dp and
     gains 9 dp at identical points. On this corpus boosting picks the
     'the'-count feature first — the cross-feature language signal —
@@ -3475,15 +3465,7 @@ def quality_gbt_train(spark, sf_dir):
     from census_data_pipeline_spark.functions import classify as _c
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit("")))) / F.lit(3.0)),
-    ]
+    feats = _gbt_features()
     target = (
         F.length("text")
         - F.length(F.replace(F.col("text"), F.lit("e"), F.lit("")))
@@ -3517,20 +3499,7 @@ def quality_logreg_calibration(spark, sf_dir):
     from census_data_pipeline_spark.functions import classify as _c
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_e_ratio",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"),
-                                                F.lit(""))))
-         / F.col("n_chars").cast("double")),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit(""))))
-         / F.lit(3.0)),
-    ]
+    feats = _quality_features()
     return _c.logreg_calibration(
         docs,
         F.when(F.col("lang") == "en", F.lit(1.0)).otherwise(F.lit(0.0)),
@@ -3564,20 +3533,7 @@ def quality_logreg_auc(spark, sf_dir):
     from census_data_pipeline_spark.functions import classify as _c
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_e_ratio",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"),
-                                                F.lit(""))))
-         / F.col("n_chars").cast("double")),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit(""))))
-         / F.lit(3.0)),
-    ]
+    feats = _quality_features()
     return _c.logreg_auc(
         docs,
         F.when(F.col("lang") == "en", F.lit(1.0)).otherwise(F.lit(0.0)),
@@ -3613,20 +3569,7 @@ def quality_pr_auc(spark, sf_dir):
     from census_data_pipeline_spark.functions import classify as _c
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_e_ratio",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"),
-                                                F.lit(""))))
-         / F.col("n_chars").cast("double")),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit(""))))
-         / F.lit(3.0)),
-    ]
+    feats = _quality_features()
     return _c.logreg_pr_auc(
         docs,
         F.when(F.col("lang") == "en", F.lit(1.0)).otherwise(F.lit(0.0)),
@@ -3666,20 +3609,7 @@ def quality_logreg_holdout(spark, sf_dir):
     from census_data_pipeline_spark.functions import classify as _c
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_e_ratio",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"),
-                                                F.lit(""))))
-         / F.col("n_chars").cast("double")),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit(""))))
-         / F.lit(3.0)),
-    ]
+    feats = _quality_features()
     test_pred = F.substring(
         F.md5(F.col("doc_id").cast("string")), 1, 1
     ).isin("0", "1", "2")
@@ -3709,28 +3639,15 @@ def quality_tree_holdout(spark, sf_dir):
     (functions/classify.decision_tree_holdout), mirroring the logreg
     holdout: same md5-prefix ~3/16 hash split, fit on the train fold,
     route the UNSEEN fold through the learned tree — test rows binned
-    with TRAIN min/width (no test-distribution leakage), then replayed
-    through the per-level winner reassignment joins to a training
-    leaf. Output: held-out confusion cells (actual, predicted, cnt).
+    with TRAIN min/width (no test-distribution leakage), then routed
+    through the tree's literal CASE expression to a training leaf.
+    Output: held-out confusion cells (actual, predicted, cnt).
     Oracle: the tree CTEs over the filtered train table plus the
     identical test-fold binning and routing."""
     from census_data_pipeline_spark.functions import classify as _c
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_e_ratio",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"),
-                                                F.lit(""))))
-         / F.col("n_chars").cast("double")),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit(""))))
-         / F.lit(3.0)),
-    ]
+    feats = _quality_features()
     test_pred = F.substring(
         F.md5(F.col("doc_id").cast("string")), 1, 1
     ).isin("0", "1", "2")
@@ -3773,16 +3690,7 @@ def quality_gbt_holdout(spark, sf_dir):
     from census_data_pipeline_spark.functions import classify as _c
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit(""))))
-         / F.lit(3.0)),
-    ]
+    feats = _gbt_features()
     target = (
         F.length("text")
         - F.length(F.replace(F.col("text"), F.lit("e"), F.lit("")))
@@ -3815,27 +3723,15 @@ def quality_gbt_classify(spark, sf_dir):
     filter families are directly comparable. Per round ONE codegen scan
     of the checkpointed binned frame builds a map-side-combined
     4·16-cell pseudo-residual histogram (r = y − round(σ(margin), 6) —
-    the unit-hessian log-loss gradient); the stump (1 row) broadcasts
-    back and margin updates stay row-local exact doubles. Output: the
+    the unit-hessian log-loss gradient); the winning stump returns as
+    literals and margin updates stay row-local exact doubles. Output: the
     additive model (round, feature, threshold, left_value, right_value,
     train_logloss). The oracle replicates the trajectory round by round
     with residual sums 6 dp and gains 9 dp at identical points."""
     from census_data_pipeline_spark.functions import classify as _c
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_e_ratio",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"),
-                                                F.lit(""))))
-         / F.col("n_chars").cast("double")),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit("")))) / F.lit(3.0)),
-    ]
+    feats = _quality_features()
     return _c.logit_boost_train(
         docs,
         F.when(F.col("lang") == "en", F.lit(1.0)).otherwise(F.lit(0.0)),
@@ -3872,19 +3768,7 @@ def quality_gbt_classify_holdout(spark, sf_dir):
     from census_data_pipeline_spark.functions import classify as _c
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_e_ratio",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"),
-                                                F.lit(""))))
-         / F.col("n_chars").cast("double")),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit("")))) / F.lit(3.0)),
-    ]
+    feats = _quality_features()
     test_pred = F.substring(
         F.md5(F.col("doc_id").cast("string")), 1, 1
     ).isin("0", "1", "2")
@@ -3932,19 +3816,7 @@ def quality_logreg_cv(spark, sf_dir):
     from census_data_pipeline_spark.functions import classify as _c
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_e_ratio",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"),
-                                                F.lit(""))))
-         / F.col("n_chars").cast("double")),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit("")))) / F.lit(3.0)),
-    ]
+    feats = _quality_features()
     fold = F.expr(
         "(instr('0123456789abcdef', "
         "substr(md5(cast(doc_id as string)), 1, 1)) - 1) % 4"
@@ -3984,19 +3856,7 @@ def quality_tree_cv(spark, sf_dir):
     from census_data_pipeline_spark.functions import classify as _c
 
     docs = load_table(spark, sf_dir, "documents")
-    feats = [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_e_ratio",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"),
-                                                F.lit(""))))
-         / F.col("n_chars").cast("double")),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit("")))) / F.lit(3.0)),
-    ]
+    feats = _quality_features()
     fold = F.expr(
         "(instr('0123456789abcdef', "
         "substr(md5(cast(doc_id as string)), 1, 1)) - 1) % 4"
@@ -4013,22 +3873,6 @@ def quality_tree_cv(spark, sf_dir):
 
 
 _RF_ID_SQL = "CAST(doc_id AS VARCHAR)"
-
-
-def _rf_features():
-    return [
-        ("f_chars", F.col("n_chars")),
-        ("f_words",
-         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "),
-                                               F.lit(""))) + F.lit(1)),
-        ("f_e_ratio",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("e"),
-                                                F.lit(""))))
-         / F.col("n_chars").cast("double")),
-        ("f_the_cnt",
-         (F.length("text") - F.length(F.replace(F.col("text"), F.lit("the"),
-                                                F.lit("")))) / F.lit(3.0)),
-    ]
 
 
 @query(
@@ -4060,7 +3904,7 @@ def quality_rf_train(spark, sf_dir):
     return _c.random_forest_train(
         docs,
         F.when(F.col("lang") == "en", F.lit(1)).otherwise(F.lit(0)),
-        _rf_features(),
+        _quality_features(),
         F.col("doc_id").cast("string"),
         n_trees=5,
         row_keep=12,
@@ -4102,7 +3946,7 @@ def quality_rf_holdout(spark, sf_dir):
     return _c.random_forest_holdout(
         docs,
         F.when(F.col("lang") == "en", F.lit(1)).otherwise(F.lit(0)),
-        _rf_features(),
+        _quality_features(),
         F.col("doc_id").cast("string"),
         test_pred,
         n_trees=5,
@@ -4144,7 +3988,7 @@ def quality_rf_importance(spark, sf_dir):
     forest = _c.random_forest_train(
         docs,
         F.when(F.col("lang") == "en", F.lit(1)).otherwise(F.lit(0)),
-        _rf_features(),
+        _quality_features(),
         F.col("doc_id").cast("string"),
         n_trees=5,
         row_keep=12,
@@ -4409,7 +4253,7 @@ def quality_mi_features(spark, sf_dir):
     return _c.mutual_information(
         docs,
         F.when(F.col("lang") == "en", F.lit(1)).otherwise(F.lit(0)),
-        _rf_features(),
+        _quality_features(),
         bins=16,
     )
 
@@ -4490,7 +4334,7 @@ def quality_learning_curve(spark, sf_dir):
     return _c.logreg_learning_curve(
         docs,
         F.when(F.col("lang") == "en", F.lit(1.0)).otherwise(F.lit(0.0)),
-        _rf_features(),
+        _quality_features(),
         F.col("doc_id").cast("string"),
         test_pred,
         train_sixteenths=(4, 8, 12, 16),

@@ -1,0 +1,214 @@
+"""Adversarial parity for the classifier tier: every public evaluator of
+functions/classify.py runs on one small hostile frame and must match its
+DuckDB oracle, compared the way tests/test_oracle_parity.py compares the
+registered queries (sorted columns, 9 dp, NaN token, -0.0 distinct).
+
+The frame holds a constant feature (zero std: logreg z-scores are x/0.0,
+NULL on both engines with ANSI off; zero bin width for trees and
+boosters), a null-label row, a null-feature row, duplicate rows (tied
+scores) and a fold (fold 3, also the holdout test side) whose rows are
+all positive, so its AUC is undefined.
+"""
+
+from __future__ import annotations
+
+import duckdb
+import pytest
+from pyspark.sql import functions as F
+
+from census_data_pipeline_spark.functions import classify
+from test_oracle_parity import _canon_rows
+
+
+def _rows():
+    rows = []
+    for i in range(36):
+        fold = i % 4
+        lab = 1.0 if fold == 3 or (i * 7) % 5 < 2 else 0.0
+        f_b = None if i == 6 else float((i * 5) % 7)
+        rows.append(
+            (f"d{i}", fold, float((i * 13) % 17), f_b, 5.0, lab)
+        )
+    rows[9] = rows[9][:5] + (None,)  # null label, fold 1
+    # duplicates of rows 0..3 (one per fold) under fresh ids: tied scores
+    rows += [(f"dup{i}",) + rows[i][1:] for i in range(4)]
+    return rows
+
+
+SCHEMA = (
+    "doc_id string, fold int, f_a double, f_b double, f_const double, "
+    "lab double"
+)
+DUCK_SCHEMA = (
+    "doc_id VARCHAR, fold INTEGER, f_a DOUBLE, f_b DOUBLE, "
+    "f_const DOUBLE, lab DOUBLE"
+)
+
+# the logistic family standardizes by the std, so the constant feature
+# turns every margin NULL: it runs once with it (logreg_train_const) and
+# otherwise on the two varying features
+LR = ["f_a", "f_b"]
+ALL = ["f_a", "f_b", "f_const"]
+
+
+def _feats(names):
+    return [(n, F.col(n)) for n in names]
+
+
+def _sql(names):
+    return [(n, n) for n in names]
+
+
+def _test():
+    return F.col("fold") == F.lit(3)
+
+
+TEST_SQL = "fold = 3"
+TREE = {"bins": 4, "depth": 2}
+BOOST = {"rounds": 3, "bins": 4, "lr": 0.5}
+RF = {"n_trees": 3, "row_keep": 12, "bins": 4, "depth": 2}
+
+CASES = {
+    "logreg_train": (
+        lambda df: classify.logreg_train(df, F.col("lab"), _feats(LR), 4),
+        lambda: classify.logreg_oracle_sql("t", "lab", _sql(LR), 4),
+    ),
+    "logreg_train_const": (
+        lambda df: classify.logreg_train(df, F.col("lab"), _feats(ALL), 4),
+        lambda: classify.logreg_oracle_sql("t", "lab", _sql(ALL), 4),
+    ),
+    "logreg_calibration": (
+        lambda df: classify.logreg_calibration(
+            df, F.col("lab"), _feats(LR), 4
+        ),
+        lambda: classify.logreg_calibration_oracle_sql(
+            "t", "lab", _sql(LR), 4
+        ),
+    ),
+    "logreg_auc": (
+        lambda df: classify.logreg_auc(df, F.col("lab"), _feats(LR), 4),
+        lambda: classify.logreg_auc_oracle_sql("t", "lab", _sql(LR), 4),
+    ),
+    "logreg_pr_auc": (
+        lambda df: classify.logreg_pr_auc(df, F.col("lab"), _feats(LR), 4),
+        lambda: classify.logreg_pr_auc_oracle_sql("t", "lab", _sql(LR), 4),
+    ),
+    "logreg_holdout_eval": (
+        lambda df: classify.logreg_holdout_eval(
+            df, F.col("lab"), _feats(LR), _test(), 4
+        ),
+        lambda: classify.logreg_holdout_oracle_sql(
+            "t", "lab", _sql(LR), TEST_SQL, 4
+        ),
+    ),
+    "logreg_kfold_cv": (
+        lambda df: classify.logreg_kfold_cv(
+            df, F.col("lab"), _feats(LR), F.col("fold"), 4, 4
+        ),
+        lambda: classify.logreg_kfold_cv_oracle_sql(
+            "t", "lab", _sql(LR), "fold", 4, 4
+        ),
+    ),
+    "logreg_learning_curve": (
+        lambda df: classify.logreg_learning_curve(
+            df, F.col("lab"), _feats(LR), F.col("doc_id"), _test(), (8, 16), 4
+        ),
+        lambda: classify.logreg_learning_curve_oracle_sql(
+            "t", "lab", _sql(LR), "doc_id", TEST_SQL, (8, 16), 4
+        ),
+    ),
+    "decision_tree_train": (
+        lambda df: classify.decision_tree_train(
+            df, F.col("lab"), _feats(ALL), **TREE
+        ),
+        lambda: classify.decision_tree_oracle_sql(
+            "t", "lab", _sql(ALL), **TREE
+        ),
+    ),
+    "decision_tree_confusion": (
+        lambda df: classify.decision_tree_confusion(
+            df, F.col("lab"), _feats(ALL), **TREE
+        ),
+        lambda: classify.decision_tree_confusion_oracle_sql(
+            "t", "lab", _sql(ALL), **TREE
+        ),
+    ),
+    "decision_tree_holdout": (
+        lambda df: classify.decision_tree_holdout(
+            df, F.col("lab"), _feats(ALL), _test(), **TREE
+        ),
+        lambda: classify.decision_tree_holdout_oracle_sql(
+            "t", "lab", _sql(ALL), TEST_SQL, **TREE
+        ),
+    ),
+    "decision_tree_kfold_cv": (
+        lambda df: classify.decision_tree_kfold_cv(
+            df, F.col("lab"), _feats(ALL), F.col("fold"), 4, **TREE
+        ),
+        lambda: classify.decision_tree_kfold_cv_oracle_sql(
+            "t", "lab", _sql(ALL), "fold", 4, **TREE
+        ),
+    ),
+    "boost_stumps_holdout": (
+        lambda df: classify.boost_stumps_holdout(
+            df, F.col("lab"), _feats(ALL), _test(), **BOOST
+        ),
+        lambda: classify.boost_stumps_holdout_oracle_sql(
+            "t", "lab", _sql(ALL), TEST_SQL, **BOOST
+        ),
+    ),
+    "logit_boost_holdout": (
+        lambda df: classify.logit_boost_holdout(
+            df, F.col("lab"), _feats(ALL), _test(), **BOOST
+        ),
+        lambda: classify.logit_boost_holdout_oracle_sql(
+            "t", "lab", _sql(ALL), TEST_SQL, **BOOST
+        ),
+    ),
+    "random_forest_holdout": (
+        lambda df: classify.random_forest_holdout(
+            df, F.col("lab"), _feats(ALL), F.col("doc_id"), _test(), **RF
+        ),
+        lambda: classify.random_forest_holdout_oracle_sql(
+            "t", "lab", _sql(ALL), "doc_id", TEST_SQL, **RF
+        ),
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def frames(spark):
+    rows = _rows()
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE t ({DUCK_SCHEMA})")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?, ?, ?)", rows)
+    yield spark.createDataFrame(rows, SCHEMA), con
+    con.close()
+
+
+def test_frame_is_adversarial(frames):
+    """The fixture really holds what the module docstring promises."""
+    _df, con = frames
+    (n, const, null_lab, null_feat, fold3_neg, dups) = con.execute(
+        """SELECT count(*), count(DISTINCT f_const),
+                  count(*) FILTER (WHERE lab IS NULL),
+                  count(*) FILTER (WHERE f_b IS NULL),
+                  count(*) FILTER (WHERE fold = 3 AND lab <> 1.0),
+                  count(*) - (SELECT count(*) FROM (SELECT DISTINCT
+                    fold, f_a, f_b, f_const, lab FROM t))
+           FROM t"""
+    ).fetchone()
+    assert (n, const, null_lab, null_feat, fold3_neg) == (40, 1, 1, 1, 0)
+    assert dups == 4
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_evaluator_matches_oracle(name, frames):
+    df, con = frames
+    engine, oracle = CASES[name]
+    sdf = engine(df)
+    rel = con.sql(oracle())
+    assert sorted(sdf.columns) == sorted(rel.columns)
+    got = _canon_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+    want = _canon_rows(list(rel.columns), rel.fetchall())
+    assert got == want

@@ -355,3 +355,16 @@ def test_wasserstein_and_ccf_no_cartesian(spark, sf_dir):
               "events_ccf_click_purchase", "events_trend_kendall"):
         plan = _plan(spark, sf_dir, q)
         assert "CartesianProduct" not in plan, q
+
+
+@pytest.mark.parametrize("name", [
+    "quality_logreg_train",
+    "quality_logreg_calibration",
+    "quality_logreg_auc",
+    "quality_pr_auc",
+    "quality_tree_eval",
+])
+def test_classifier_scoring_joins_nothing(spark, sf_dir, name):
+    # a fitted model scores as one literal expression over the cached
+    # feature rows: no weight frame or tree frame is joined back in
+    assert "Join" not in _plan(spark, sf_dir, name)
