@@ -72,7 +72,6 @@ def _local_frame(like: DataFrame, cols: dict, doubles=()) -> DataFrame:
     Columns named in ``doubles`` are DOUBLE; the rest hold node ids and
     take the type of ``like``'s first column (the id column the tail
     collected)."""
-    import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     f = like.schema.fields[0]
@@ -81,7 +80,7 @@ def _local_frame(like: DataFrame, cols: dict, doubles=()) -> DataFrame:
         else StructField(c, f.dataType, f.nullable)
         for c in cols
     ])
-    return like.sparkSession.createDataFrame(pd.DataFrame(cols), schema)
+    return catalog.local_frame(like.sparkSession, schema, list(cols.values()))
 
 
 def _pagerank_full_local(
@@ -894,17 +893,15 @@ def _coreness_local_tail(cur: DataFrame, deg: DataFrame, k: int) -> DataFrame:
                 buckets[du].discard(u)
                 buckets[du - 1].add(u)
                 alive[u] = du - 1
-    import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
     schema = StructType([
         deg.schema["id"],
         StructField("coreness", LongType(), False),
     ])
-    out = pd.DataFrame(res, columns=["id", "coreness"])
     # Arrow batch transfer back out, mirroring the toPandas on the way
     # in — a list-of-tuples createDataFrame at the cap is py4j-heavy
-    return deg.sparkSession.createDataFrame(out, schema)
+    return catalog.local_frame(deg.sparkSession, schema, list(zip(*res)) or [(), ()])
 
 
 def coreness(

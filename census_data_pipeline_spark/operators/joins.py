@@ -19,6 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from census_data_pipeline_spark.sources import catalog
 
 # State FIPS -> (name, abbrev); reference: src/geography.py:20-37,119-131.
 STATE_FIPS: dict[str, tuple[str, str]] = {
@@ -46,8 +49,14 @@ STATE_FIPS: dict[str, tuple[str, str]] = {
 def states_dim(spark: SparkSession) -> DataFrame:
     """The FIPS lookup dicts (reference: src/geography.py:20-37) as a
     broadcast-able dimension table (FIXTURES.md §B states_dim shape)."""
-    rows = [(fips, name, ab) for fips, (name, ab) in STATE_FIPS.items()]
-    return spark.createDataFrame(rows, "fips string, name string, abbrev string")
+    schema = T.StructType([
+        T.StructField(c, T.StringType()) for c in ("fips", "name", "abbrev")
+    ])
+    return catalog.local_frame(spark, schema, [
+        list(STATE_FIPS),
+        [name for name, _ in STATE_FIPS.values()],
+        [ab for _, ab in STATE_FIPS.values()],
+    ])
 
 
 def dim_lookup(

@@ -4,6 +4,11 @@ The reference's orchestrator eagerly fetches, parses, keys and joins pandas
 frames. Here the facade only *composes lazy DataFrames*: each method returns
 an unevaluated plan; Catalyst fuses the whole fetch→clean→derive→join→export
 chain into one job at the first action (SURVEY.md §3.1 design note).
+
+Nothing is cached: each sink (every export format) re-runs the chain from
+its source. That re-run is cheap because the parsed responses and boundary
+records live in the JVM as Arrow local relations (``catalog.local_frame``),
+so it scans them in place and starts no Python worker.
 """
 
 from __future__ import annotations

@@ -20,6 +20,7 @@ every knob is chosen to scale to a 1000-executor cluster reading ~100 TB:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -80,9 +81,15 @@ def _ship_package(spark: SparkSession) -> None:
         )
         sc.addPyFile(archive)
         sc._cdps_pkg_shipped = True
-    except Exception:
-        # non-fatal: JVM-only queries never need worker-side imports
-        pass
+    except Exception as e:
+        # Non-fatal (JVM-only queries never need worker-side imports), but
+        # said out loud: Python-side operators may fail on the workers.
+        # The flag stays unset, so the next call tries again.
+        warnings.warn(
+            f"could not ship census_data_pipeline_spark to Python workers: {e!r}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
 
 
 def get_spark(

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from census_data_pipeline_spark.session import apply_runtime_confs
 
@@ -160,6 +161,35 @@ def local_tail(df: DataFrame, *key_cols: str, fanout: int = 1):
     if bool(pdf[list(key_cols)].isna().any().any()):
         return None
     return pdf
+
+
+def local_frame(spark: SparkSession, schema: T.StructType, columns) -> DataFrame:
+    """The one constructor for frames built from driver data: a
+    ``pyarrow.Table`` typed from ``schema`` (``columns`` holds one
+    sequence per field, in field order) handed to
+    ``spark.createDataFrame``. The batches reach the JVM once as a local
+    relation, so every later action scans inside the JVM — the list path
+    (``createDataFrame(rows, schema)``) is a PythonRDD that starts Python
+    workers on every action. No pandas step, so nothing can fall back to
+    that path. String fields keep the list path's cells: a non-string
+    value becomes its ``str()``, lower-case for bools."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    arrays = []
+    for f, values in zip(schema.fields, columns, strict=True):
+        at = to_arrow_type(f.dataType)
+        try:
+            arrays.append(pa.array(values, at))
+        except pa.ArrowException:
+            if not isinstance(f.dataType, T.StringType):
+                raise
+            arrays.append(pa.array([
+                v if v is None or isinstance(v, str)
+                else str(v).lower() if isinstance(v, bool) else str(v)
+                for v in values
+            ], at))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, names=schema.names), schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

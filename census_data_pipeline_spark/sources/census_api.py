@@ -11,7 +11,9 @@ The reference fetches eagerly on the driver with a thread pool
    fully offline.
 2. **Parse** (`response_to_dataframe`): header row -> explicit all-string
    StructType, rename through var_dict, coerce numeric casts
-   (census_pipeline.py:343-365) — one lazy DataFrame definition.
+   (census_pipeline.py:343-365). The rows reach the JVM once, as an Arrow
+   local relation (`catalog.local_frame`); every later action scans them
+   inside the JVM, so re-running the lazy chain starts no Python worker.
 3. **Python DataSource V2** (`CensusDataSource`, Spark 4): one input
    partition per state, so a 50-state fetch parallelizes across executors
    (replacing the reference's 4-thread pool, census_pipeline.py:300) with
@@ -30,6 +32,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from census_data_pipeline_spark.sources import catalog
 
 BASE_URL = "https://api.census.gov/data"
 
@@ -192,15 +196,17 @@ def search_variables(
         payload = fetch(url)
     except Exception as e:  # noqa: BLE001
         raise CensusAPIError(f"catalog fetch failed: {url}") from e
-    rows = [
-        (code, meta.get("label", ""), meta.get("concept", ""))
-        for code, meta in payload.get("variables", {}).items()
-    ]
-    catalog = spark.createDataFrame(
-        rows, "variable string, label string, concept string"
-    )
+    variables = payload.get("variables", {})
+    schema = T.StructType([
+        T.StructField(c, T.StringType()) for c in ("variable", "label", "concept")
+    ])
+    table = catalog.local_frame(spark, schema, [
+        list(variables),
+        [meta.get("label", "") for meta in variables.values()],
+        [meta.get("concept", "") for meta in variables.values()],
+    ])
     kw = keyword.lower()
-    return catalog.filter(
+    return table.filter(
         F.lower(F.col("label")).contains(kw)
         | F.lower(F.col("concept")).contains(kw)
     )
@@ -224,10 +230,24 @@ def response_to_dataframe(
     """S6 parse (reference: src/census_pipeline.py:343-365): header row is
     the schema; all values string; rename through var_dict; numeric-coerce
     every renamed variable column (cast -> NULL on bad input, matching
-    ``pd.to_numeric(errors='coerce')``)."""
+    ``pd.to_numeric(errors='coerce')``). A data row whose width differs
+    from the header's raises ValueError (checked first: the transpose
+    below would silently truncate it).
+
+    The rows become one Arrow local relation that every re-run scans
+    inside the JVM, coalesced to ONE partition — one response, one
+    partition, as in the V2 source below: a local relation otherwise
+    spreads its rows over every slot, which for one response only adds
+    tasks and output files."""
     header, *rows = response
+    for i, row in enumerate(rows):
+        if len(row) != len(header):
+            raise ValueError(
+                f"response data row {i} has {len(row)} values, "
+                f"header has {len(header)}")
     schema = T.StructType([T.StructField(h, T.StringType()) for h in header])
-    df = spark.createDataFrame(rows, schema)
+    columns = list(zip(*rows)) if rows else [()] * len(header)
+    df = catalog.local_frame(spark, schema, columns).coalesce(1)
     var_dict = var_dict or {}
     df = df.withColumnsRenamed(var_dict)
     numeric_cols = [v for v in var_dict.values() if v in df.columns]

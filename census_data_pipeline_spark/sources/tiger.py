@@ -21,6 +21,9 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from census_data_pipeline_spark.sources import catalog
 
 TIGER_BASE = "https://www2.census.gov/geo/tiger/GENZ{year}/shp"
 
@@ -61,8 +64,11 @@ def boundaries_from_records(
     """Build a boundary DataFrame from (GEOID, wkt) records — the offline
     ingest path used by tests; the online path would read the shapefile with
     geopandas on the driver (small data) and pass records here."""
-    df = spark.createDataFrame(list(records), "GEOID string, geometry string")
-    return normalize_boundaries(df)
+    schema = T.StructType([
+        T.StructField("GEOID", T.StringType()), T.StructField("geometry", T.StringType())
+    ])
+    columns = list(zip(*records)) or [(), ()]
+    return normalize_boundaries(catalog.local_frame(spark, schema, columns))
 
 
 def normalize_boundaries(df: DataFrame, geoid_col: str = "GEOID",

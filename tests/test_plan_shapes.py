@@ -368,3 +368,32 @@ def test_classifier_scoring_joins_nothing(spark, sf_dir, name):
     # a fitted model scores as one literal expression over the cached
     # feature rows: no weight frame or tree frame is joined back in
     assert "Join" not in _plan(spark, sf_dir, name)
+
+
+def test_census_path_runs_without_python_workers(spark):
+    # the parsed responses and boundary records enter as Arrow local
+    # relations, so re-running the chain for each export starts no
+    # Python worker: no PythonRDD anywhere in the executed lineage
+    from census_data_pipeline_spark.pipeline import CensusSparkPipeline
+    from census_data_pipeline_spark.sources import tiger
+
+    def fetch(url):
+        state = url.split("state%3A")[1][:2]
+        return [
+            ["NAME", "B23025_003E", "B23025_005E", "state", "county", "tract"],
+            ["a", "100", "-666666666", state, "001", "000100"],
+            ["b", " 80 ", "8", state, "001", "000200"],
+        ]
+
+    pipe = CensusSparkPipeline(spark, fetch=fetch)
+    df = pipe.fetch_batch_states(
+        {"B23025_003E": "labor_force", "B23025_005E": "unemployed"},
+        "tract", ["06", "48"])
+    df = pipe.clean_missing_values(df, ["labor_force", "unemployed"])
+    df = pipe.calculate_rates(df, {"rate": ("unemployed", "labor_force")})
+    b = tiger.boundaries_from_records(
+        spark, [("06001000100", "POINT (1 1)"), ("48001000200", None)])
+    df = pipe.join_tiger_geometries(df, b)
+    lineage = df._jdf.queryExecution().executedPlan().execute().toDebugString()
+    assert "PythonRDD" not in lineage
+    assert df.count() == 4

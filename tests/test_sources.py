@@ -100,6 +100,108 @@ def test_pipeline_facade_end_to_end(spark):
     assert batch.count() == 4  # 2 states x 2 rows (union of partitions)
 
 
+# -- driver frames as Arrow local relations: differential vs the list path --
+_SENTINELS = ["-666666666", "-999999999", "-888888888", "-222222222", "-333333333"]
+ADVERSARIAL_RESPONSE = [
+    ["NAME", "B01003_001E", "B19013_001E", "state", "county"],
+    ["Doña Ana County, Nuevo México ✓", "  1200 ", None, "35", "013"],
+    [None, None, "N/A", "35", "015"],
+    *[[f"Sentinel {i}", v, "(X)", "35", f"{17 + i:03d}"] for i, v in enumerate(_SENTINELS)],
+    ["Junk", "", "**", "35", "029"],
+    ["Junk 2", "null", "-", "35", "031"],
+    ["Typed", 1, 1.5, True, 12345678901234567890],
+    ["Typed 2", False, -0.0, 7, None],
+]
+
+
+def _string_schema(names):
+    from pyspark.sql import types as T
+
+    return T.StructType([T.StructField(n, T.StringType()) for n in names])
+
+
+def _reference_frame(spark, response, var_dict=None):
+    """The list path, ``createDataFrame(rows, schema)``, kept inline as
+    the reference."""
+    header, *rows = response
+    df = spark.createDataFrame(rows, _string_schema(header))
+    var_dict = var_dict or {}
+    return df.withColumnsRenamed(var_dict).withColumns(
+        {c: F.trim(F.col(c)).cast("double") for c in var_dict.values()})
+
+
+@pytest.mark.parametrize("var_dict", [
+    None, {"B01003_001E": "total_population", "B19013_001E": "income"},
+])
+def test_response_to_dataframe_matches_list_path(spark, var_dict):
+    got = census_api.response_to_dataframe(spark, ADVERSARIAL_RESPONSE, var_dict)
+    want = _reference_frame(spark, ADVERSARIAL_RESPONSE, var_dict)
+    rows = got.collect()
+    assert got.schema == want.schema and rows == want.collect()
+    typed = {r.NAME: r for r in rows}
+    if var_dict is None:  # the list path's str() of non-string cells
+        assert tuple(typed["Typed"])[1:] == ("1", "1.5", "true", "12345678901234567890")
+        assert tuple(typed["Typed 2"])[1:] == ("false", "-0.0", "7", None)
+
+
+def test_header_only_response_is_empty_frame(spark):
+    header = ADVERSARIAL_RESPONSE[0]
+    got = census_api.response_to_dataframe(spark, [header], {"B01003_001E": "pop"})
+    want = _reference_frame(spark, [header], {"B01003_001E": "pop"})
+    assert got.schema == want.schema and got.count() == 0
+
+
+def test_ragged_response_row_raises():
+    response = [["NAME", "state"], ["a", "01"], ["b", "02", "extra"]]
+    with pytest.raises(ValueError, match="data row 1 has 3 values, header has 2"):
+        census_api.response_to_dataframe(None, response)
+
+
+def test_boundaries_match_list_path(spark):
+    records = [
+        ("35013", "POINT (1 1)"), ("35013", "POINT (2 2)"),  # duplicate GEOID
+        ("35015", None), ("35017", "POLYGON ((0 0, 1 0, 1 1, 0 0))"),
+    ]
+    got = tiger.boundaries_from_records(spark, iter(records))
+    want = tiger.normalize_boundaries(
+        spark.createDataFrame(records, "GEOID string, geometry string"))
+    assert got.schema == want.schema
+    g = sorted(got.collect(), key=lambda r: r.GEOID)
+    w = sorted(want.collect(), key=lambda r: r.GEOID)
+    assert [r.GEOID for r in g] == ["35013", "35015", "35017"]
+    # which duplicate survives is the engine's choice on either path
+    assert g[0].geometry in {"POINT (1 1)", "POINT (2 2)"}
+    assert g[1:] == w[1:]
+    assert g[1].geometry is None and g[1].geometry_bytes is None
+
+
+def test_driver_frames_built_only_by_local_frame():
+    """The census path builds every frame from driver data through
+    ``catalog.local_frame``: no other ``createDataFrame`` call in
+    ``sources/``, ``pipeline.py`` or ``operators/joins.py``."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(census_api.__file__).resolve().parent.parent
+    files = [*sorted((pkg / "sources").glob("*.py")), pkg / "pipeline.py",
+             pkg / "operators" / "joins.py"]
+    calls = []
+    for path in files:
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        for node in ast.walk(tree):
+            if (path.name == "catalog.py" and isinstance(node, ast.FunctionDef)
+                    and node.name == "local_frame"):
+                allowed |= {id(n) for n in ast.walk(node)}
+        calls += [
+            f"{path.relative_to(pkg)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame" and id(node) not in allowed
+        ]
+    assert calls == [], "build driver frames through catalog.local_frame"
+
+
 # -- TIGER lake (reference: geography.py) --------------------------------
 def test_tiger_urls():
     assert tiger.build_tiger_url("county", 2022) == (
