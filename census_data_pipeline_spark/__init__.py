@@ -10,7 +10,7 @@ equivalent here):
 
 | reference (src/__init__.py)     | this engine                              |
 |---------------------------------|------------------------------------------|
-| ``CensusPipeline``              | ``CensusSparkPipeline`` (lazy DataFrames)|
+| ``CensusPipeline``              | ``CensusSparkPipeline`` (lazy chain, materialized once at the boundary join) |
 | ``CensusAPIClient``             | ``CensusAPIClient`` (injectable HTTP)    |
 | ``GeographyManager``            | ``sources.tiger`` (GeoParquet ingest) + ``operators.geoid`` |
 | ``DataTransformer``             | ``operators.{cleaning,rates,normalize,change,rollup,index}`` |

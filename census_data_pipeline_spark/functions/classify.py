@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from census_data_pipeline_spark.sources.catalog import ensure_parallelism
+from census_data_pipeline_spark.sources.catalog import ensure_parallelism, local_frame
 
 
 def _dlit(v) -> Column:
@@ -720,7 +720,7 @@ def _tree_frame_from_rows(spark, rows: list[tuple]) -> DataFrame:
         StructField("n", LongType()),
         StructField("pos", LongType()),
     ])
-    return spark.createDataFrame(rows, tree_schema).select(
+    return local_frame(spark, tree_schema, zip(*rows)).select(
         "node",
         F.floor(F.log2("node")).cast("long").alias("depth"),
         "kind",
@@ -1133,7 +1133,7 @@ def _stump_model(
         if stump is not None:
             f, b, lv, rv = stump
             rows.append((k, f, mn[f] + (b + 1) * wd[f], lv, rv))
-    out = spark.createDataFrame(rows, model_schema)
+    out = local_frame(spark, model_schema, zip(*rows))
     return out.crossJoin(F.broadcast(loss)).select(
         "round", "feature",
         F.round(F.col("__thr"), 6).alias("threshold"),

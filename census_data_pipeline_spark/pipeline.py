@@ -1,14 +1,14 @@
 """Pipeline facade (reference: src/census_pipeline.py — class CensusPipeline).
 
 The reference's orchestrator eagerly fetches, parses, keys and joins pandas
-frames. Here the facade only *composes lazy DataFrames*: each method returns
-an unevaluated plan; Catalyst fuses the whole fetch→clean→derive→join→export
-chain into one job at the first action (SURVEY.md §3.1 design note).
+frames. Here the fetch, clean and derive steps compose lazy DataFrames:
+each returns an unevaluated plan that Catalyst fuses into one job
+(SURVEY.md §3.1 design note).
 
-Nothing is cached: each sink (every export format) re-runs the chain from
-its source. That re-run is cheap because the parsed responses and boundary
-records live in the JVM as Arrow local relations (``catalog.local_frame``),
-so it scans them in place and starts no Python worker.
+The joined frame is materialized once, at the join, because N sinks share
+it: ``join_tiger_geometries`` runs the fetch→clean→derive→dedup→join
+chain once into a local checkpoint, and each export then scans that
+checkpoint in one job instead of re-planning and re-running the chain.
 """
 
 from __future__ import annotations
@@ -63,7 +63,17 @@ class CensusSparkPipeline:
     # -- enrich / write (reference: census_pipeline.py:237-341) ----------
     def join_tiger_geometries(self, df: DataFrame,
                               boundaries: DataFrame) -> DataFrame:
-        return joins.join_boundaries(df, boundaries)
+        """Right-join the boundary geometries onto ``df``
+        (``joins.join_boundaries``) and materialize the result EAGERLY,
+        as the reference's GeoDataFrame is: the whole chain runs here,
+        once, and every later action scans the checkpoint, so all sinks
+        see the same rows (one boundary per duplicated GEOID).
+
+        The checkpoint's blocks are freed when the returned frame is
+        garbage-collected; the caller owes no ``unpersist``. Like any
+        ``localCheckpoint``, they live on the executors and cannot be
+        recomputed from lineage if one is lost."""
+        return joins.join_boundaries(df, boundaries).localCheckpoint()
 
     def export(self, df: DataFrame, output: str, fmt: str, **kw) -> None:
         exporters.export(df, output, fmt, **kw)

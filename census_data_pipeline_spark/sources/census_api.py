@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from census_data_pipeline_spark.operators import cleaning
 from census_data_pipeline_spark.sources import catalog
 
 BASE_URL = "https://api.census.gov/data"
@@ -251,9 +252,7 @@ def response_to_dataframe(
     var_dict = var_dict or {}
     df = df.withColumnsRenamed(var_dict)
     numeric_cols = [v for v in var_dict.values() if v in df.columns]
-    return df.withColumns(
-        {c: F.trim(F.col(c)).cast("double") for c in numeric_cols}
-    )
+    return cleaning.coerce_numeric(df, numeric_cols)
 
 
 # ---------------------------------------------------------------------------

@@ -76,6 +76,9 @@ def main(out_dir: str | None = None) -> int:
         [(r.GEOID, f"POINT({i} {i})")
          for i, r in enumerate(tracts.select("GEOID").collect())],
     )
+    # the join runs the lazy chain once and checkpoints it (eager, like the
+    # reference's GeoDataFrame): the export and the three actions below
+    # all scan that one result
     geo = pipeline.join_tiger_geometries(tracts, boundaries)
 
     out = f"{out_dir}/ohio_tracts_2022.parquet"

@@ -212,3 +212,40 @@ def test_evaluator_matches_oracle(name, frames):
     got = _canon_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
     want = _canon_rows(list(rel.columns), rel.fetchall())
     assert got == want
+
+
+def test_model_frames_match_list_path(spark, monkeypatch):
+    """Differential: the tree and booster MODEL frames built from Arrow
+    local relations (``catalog.local_frame``) vs the list path,
+    ``createDataFrame(rows, schema)``, inline as the reference. The tree
+    holds leaf rows with null feature and threshold; the booster's base
+    row has a null threshold and round 2 found no split."""
+    tree_rows = [
+        (1, "split", "f_a", 4.25, 9, 4),
+        (2, "leaf", None, None, 5, 1),
+        (3, "split", "f_b", 0.1 + 0.2, 4, 3),
+        (6, "leaf", None, None, 1, 1),
+        (7, "leaf", None, None, 3, 2),
+    ]
+    payload = {
+        "mn": {"f_a": 0.0, "f_b": -1.5}, "wd": {"f_a": 1.0625, "f_b": 0.1},
+        "f0": 0.444444, "winners": [("f_a", 3, -0.2, 0.3), None, ("f_b", 0, 0.05, -0.0)],
+    }
+    loss = spark.range(1).select(F.lit(0.4123456789).alias("__loss"))
+
+    def build():
+        return (classify._tree_frame_from_rows(spark, tree_rows),
+                classify._stump_model(spark, payload, loss, "train_rmse"))
+
+    def canon(frame):
+        return frame.schema, sorted(repr(tuple(r)) for r in frame.collect())
+
+    got = build()
+    with monkeypatch.context() as m:
+        m.setattr(classify, "local_frame", lambda spark, schema, columns:
+                  spark.createDataFrame(list(zip(*columns)), schema))
+        want = build()
+    for g, w in zip(got, want):
+        assert "ExistingRDD" not in g._jdf.queryExecution().executedPlan().toString()
+        assert canon(g) == canon(w)
+    assert [r["round"] for r in got[1].orderBy("round").collect()] == [0, 1, 3]

@@ -53,6 +53,63 @@ def test_coerce_numeric_matrix(spark):
     assert out == [1.5, 2.5, 1000.0, None, None, None, -4.0]
 
 
+@pytest.mark.parametrize("strategy", ["nan", "fill", "drop"])
+def test_sql_built_cleaning_matches_column_form(spark, strategy):
+    """Differential: the SQL-text expressions ``clean_missing_values``
+    and ``coerce_numeric`` hand to one ``selectExpr`` vs the per-name
+    Column form (``F.when(F.col(c).isin(codes), None).otherwise(...)``,
+    ``F.trim(F.col(c)).cast("double")``). The reference runs on
+    positional names (``toDF``), since ``F.col`` cannot take a name
+    holding a backtick or a dot."""
+    nan = float("nan")
+    codes = cleaning.MISSING_CODES
+    rows = [
+        *[(float(c), c, str(c), float(c), f" {c} ") for c in codes],
+        (nan, 7, "N/A", nan, "NaN"),
+        (0.0, 0, "", -0.0, "-0.0"),
+        (-0.0, None, "(X)", 0.0, " 12 "),
+        (None, -1, "null", None, None),
+        (5.5, 2**40, "-", 1e300, "**"),
+        (-1.0, -666666667, " 1e3 ", -5.0, "-"),
+    ]
+    names = ["v", "i", "s", "block group", "we`ird.x"]
+    df = spark.createDataFrame(
+        rows, "v double, i bigint, s string, bg double, w string").toDF(*names)
+
+    def column_form(frame, build):
+        pos = [f"c{k}" for k in range(len(frame.columns))]
+        renamed = frame.toDF(*pos)
+        return renamed.withColumns(
+            {p: build(F.col(p)) for p in pos}).toDF(*frame.columns)
+
+    def clean_ref(c):
+        return F.when(c.isin(*codes), F.lit(None)).otherwise(c)
+
+    def coerce_ref(c):
+        return F.trim(c).cast("double")
+
+    def canon(frame):
+        return frame.schema, [repr(tuple(r)) for r in frame.collect()]
+
+    # na.fill / na.drop parse their subset names, so the backtick-and-dot
+    # name reaches only the "nan" strategy, on either path
+    frame = df if strategy == "nan" else df.select(*names[:4])
+    cols = frame.columns
+    got = cleaning.clean_missing_values(frame, cols, strategy=strategy)
+    want = column_form(frame, clean_ref)
+    if strategy == "fill":
+        want = want.na.fill(0.0, subset=cols)
+    elif strategy == "drop":
+        want = want.na.drop(subset=cols)
+    assert canon(got) == canon(want)
+    if strategy == "nan":
+        assert [r["v"] for r in got.collect()][:5] == [None] * 5
+    assert canon(cleaning.coerce_numeric(df, names)) == canon(column_form(df, coerce_ref))
+    # a name the frame lacks still fails analysis, as withColumns does
+    with pytest.raises(Exception, match="UNRESOLVED_COLUMN"):
+        cleaning.clean_missing_values(df, ["missing"]).schema
+
+
 # -- rates (reference: transformers.py:74-150) ---------------------------
 def test_zero_policies(spark):
     df = spark.createDataFrame(

@@ -176,15 +176,16 @@ def test_boundaries_match_list_path(spark):
 
 
 def test_driver_frames_built_only_by_local_frame():
-    """The census path builds every frame from driver data through
-    ``catalog.local_frame``: no other ``createDataFrame`` call in
-    ``sources/``, ``pipeline.py`` or ``operators/joins.py``."""
+    """The census path and the classifier model frames build every frame
+    from driver data through ``catalog.local_frame``: no other
+    ``createDataFrame`` call in ``sources/``, ``pipeline.py``,
+    ``operators/joins.py`` or ``functions/classify.py``."""
     import ast
     from pathlib import Path
 
     pkg = Path(census_api.__file__).resolve().parent.parent
     files = [*sorted((pkg / "sources").glob("*.py")), pkg / "pipeline.py",
-             pkg / "operators" / "joins.py"]
+             pkg / "operators" / "joins.py", pkg / "functions" / "classify.py"]
     calls = []
     for path in files:
         tree = ast.parse(path.read_text(), str(path))
@@ -200,6 +201,26 @@ def test_driver_frames_built_only_by_local_frame():
             and node.func.attr == "createDataFrame" and id(node) not in allowed
         ]
     assert calls == [], "build driver frames through catalog.local_frame"
+
+
+def test_facade_join_gives_every_sink_the_same_geometry(spark, tmp_path):
+    # 20 GEOIDs, each listed twice with two WKTs: the dedup keeps one per
+    # GEOID, and because the facade's join is materialized once, the
+    # parquet export, the json export and collect() all carry that one
+    dup = [(f"35{i:03d}", f"POINT ({i} {k})") for i in range(1, 40, 2) for k in (1, 2)]
+    response = [["NAME", "B01003_001E", "state", "county"],
+                *[[f"c{g}", "1", g[:2], g[2:]] for g, _ in dup[::2]]]
+    pipe = CensusSparkPipeline(spark, fetch=lambda url: response)
+    df = pipe.fetch_acs5({"B01003_001E": "pop"}, "county", state="35")
+    b = tiger.boundaries_from_records(spark, dup[1::2] + dup[::2])
+    geo = pipe.join_tiger_geometries(df, b)
+    pipe.export(geo, str(tmp_path / "p"), "parquet")
+    pipe.export(geo, str(tmp_path / "j"), "json")
+    want = {r.GEOID: r.geometry for r in geo.collect()}
+    assert len(want) == 20
+    assert all(w in {f"POINT ({int(g[2:])} {k})" for k in (1, 2)} for g, w in want.items())
+    for read, path in ((spark.read.parquet, "p"), (spark.read.json, "j")):
+        assert {r.GEOID: r.geometry for r in read(str(tmp_path / path)).collect()} == want
 
 
 # -- TIGER lake (reference: geography.py) --------------------------------
