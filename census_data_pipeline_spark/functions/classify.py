@@ -35,6 +35,9 @@ state is one weight vector).
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1011,29 +1014,36 @@ def decision_tree_confusion_oracle_sql(
     )
 
 
+def _boost_rows(
+    df: DataFrame, target: Column, features: list[tuple[str, Column]]
+) -> DataFrame:
+    """The null-guarded (__y, features…) rows a booster fits on,
+    persisted: every round's histogram scan reads the cached blocks."""
+    return _guarded(
+        ensure_parallelism(df), target, features, "double"
+    ).persist()
+
+
 def _boost_prologue(
-    df: DataFrame,
-    target: Column,
-    features: list[tuple[str, Column]],
+    raw: DataFrame,
+    names: list[str],
     rounds: int,
     bins: int,
+    f0: Column,
 ):
-    """Stats/binning prologue shared by both boosters: the null-guarded
-    (__y, features…) frame persisted, per-feature min/max/width
-    collected from ONE aggregate, and every feature's train-stats bin
-    as an ``__b_<name>`` column. Returns (raw, names, mn, wd,
-    binned)."""
+    """Stats/binning prologue shared by both boosters over ``raw``, the
+    null-guarded (__y, features…) rows: per-feature min/max/width and
+    the base score ``f0`` (an aggregate over ``__y``) collected from
+    ONE aggregate, and every feature's train-stats bin as an
+    ``__b_<name>`` column. Returns (mn, wd, f0, binned)."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
     if bins < 2:
         raise ValueError("bins must be >= 2")
-    names = [n for n, _ in features]
-    raw = _guarded(
-        ensure_parallelism(df), target, features, "double"
-    ).persist()
     strow = raw.agg(
         *[F.min(n).alias(f"__mn_{n}") for n in names],
         *[F.max(n).alias(f"__mx_{n}") for n in names],
+        f0.alias("__f0"),
     ).select(
         "*",
         *[
@@ -1052,7 +1062,7 @@ def _boost_prologue(
             for n in names
         ],
     )
-    return raw, names, mn, wd, binned
+    return mn, wd, strow["__f0"], binned
 
 
 def _stump_round(
@@ -1143,9 +1153,8 @@ def _stump_model(
 
 
 def _boost_fit(
-    df: DataFrame,
-    target: Column,
-    features: list[tuple[str, Column]],
+    raw: DataFrame,
+    names: list[str],
     rounds: int = 4,
     bins: int = 16,
     lr: float = 0.5,
@@ -1168,20 +1177,21 @@ def _boost_fit(
     with no valid split (constant features) adds nothing and emits no
     stump row.
 
-    Returns (model, payload): the model frame (``_stump_model``, every
-    row carrying the final train_rmse) and the driver-side payload
-    {"mn", "wd", "f0", "winners"} ``_boost_score`` compiles — one
-    (feature, bin, lv, rv) or None per round.
+    Fits on ``raw``, the null-guarded (__y, features…) rows. Returns
+    (resid, payload): the per-row final residual frame (``__r``) and
+    the driver-side payload {"mn", "wd", "f0", "winners"}
+    ``_boost_score`` compiles — one (feature, bin, lv, rv) or None per
+    round.
 
-    Scale shape: the binned frame is built once over the persisted
-    null-guarded rows; each round is ONE codegen scan into a
+    Scale shape: the binned frame is built once over the null-guarded
+    rows, which the caller keeps persisted; the stats and base F₀ come
+    from one aggregate; each round is ONE codegen scan into a
     map-side-combined F·bins-cell histogram collected to the driver —
     cost is ``rounds`` linear passes, the distributed-GBDT `hist`
     contract."""
-    raw, names, mn, wd, binned = _boost_prologue(
-        df, target, features, rounds, bins
+    mn, wd, f0, binned = _boost_prologue(
+        raw, names, rounds, bins, F.round(F.avg("__y"), 6)
     )
-    f0 = raw.agg(F.round(F.avg("__y"), 6).alias("__f0")).first()["__f0"]
     bcols = [f"__b_{n}" for n in names]
     resid = binned.select(*bcols, (F.col("__y") - _dlit(f0)).alias("__r"))
     payload = {"mn": mn, "wd": wd, "f0": f0, "winners": []}
@@ -1198,11 +1208,13 @@ def _boost_fit(
                     .otherwise(_dlit(rv))
                 ).alias("__r"),
             )
-    rmse = resid.agg(
-        F.round(F.sqrt(F.avg(F.col("__r") * F.col("__r"))), 6)
-        .alias("__loss")
-    )
-    return _stump_model(df.sparkSession, payload, rmse, "train_rmse"), payload
+    return resid, payload
+
+
+def _rmse6(err: Column) -> Column:
+    """round(sqrt(avg(err²)), 6) — NULL errors are skipped, and no
+    rows give NULL."""
+    return F.round(F.sqrt(F.avg(err * err)), 6)
 
 
 def boost_stumps_train(
@@ -1216,7 +1228,12 @@ def boost_stumps_train(
     """Train gradient-boosted regression stumps; returns the model
     frame (round, feature, threshold, left_value, right_value,
     train_rmse). Full algorithm and contracts: ``_boost_fit``."""
-    return _boost_fit(df, target, features, rounds, bins, lr)[0]
+    names = [n for n, _ in features]
+    resid, pym = _boost_fit(
+        _boost_rows(df, target, features), names, rounds, bins, lr
+    )
+    rmse = resid.agg(_rmse6(F.col("__r")).alias("__loss"))
+    return _stump_model(df.sparkSession, pym, rmse, "train_rmse")
 
 
 def boost_stumps_oracle_sql(
@@ -1881,22 +1898,31 @@ def decision_tree_holdout_oracle_sql(
     )
 
 
+def _boost_leaves(bins: int, pym: dict) -> list[Column]:
+    """Each surviving round's stump over the raw feature columns as a
+    literal ``when(bin_f <= b, lv).otherwise(rv)``, binned with the
+    train stats, in round order."""
+    mn, wd = pym["mn"], pym["wd"]
+    leaves = []
+    for w in pym["winners"]:
+        if w is not None:
+            f, bn, lv, rv = w
+            x = _bin_col(F.col(f), _dlit(mn[f]), _dlit(wd[f]), bins)
+            leaves.append(
+                F.when(x <= F.lit(bn), _dlit(lv)).otherwise(_dlit(rv))
+            )
+    return leaves
+
+
 def _boost_score(bins: int, pym: dict) -> Column:
     """The boosted-stump families' ONE scorer: the additive model over
     the raw feature columns as a literal expression compiled from the
-    boost payload — base + per-surviving-round
-    ``when(bin_f <= b, lv).otherwise(rv)`` over the train-stats bin,
-    left-associated in round order, exactly the training-side update
-    arithmetic on identical literal operands."""
-    mn, wd = pym["mn"], pym["wd"]
-    pred = _dlit(pym["f0"])
-    for w in pym["winners"]:
-        if w is None:
-            continue
-        f, bn, lv, rv = w
-        x = _bin_col(F.col(f), _dlit(mn[f]), _dlit(wd[f]), bins)
-        pred = pred + F.when(x <= F.lit(bn), _dlit(lv)).otherwise(_dlit(rv))
-    return pred
+    boost payload — base + per-surviving-round leaf values
+    (``_boost_leaves``), left-associated in round order, exactly the
+    training-side update arithmetic on identical literal operands."""
+    return functools.reduce(
+        operator.add, _boost_leaves(bins, pym), _dlit(pym["f0"])
+    )
 
 
 def boost_stumps_holdout(
@@ -1915,43 +1941,37 @@ def boost_stumps_holdout(
     left-associated in round order — the exact training arithmetic) and
     compare held-out RMSE to train RMSE.
 
-    Returns one row: (n_train, n_test, train_rmse, test_rmse).
+    Returns one row: (n_train, n_test, train_rmse, test_rmse); a row
+    whose ``test_pred`` is NULL belongs to neither fold.
 
-    Scale shape: the training fit, then ONE codegen scan of the test
-    fold through the literal ``_boost_score`` and a 1-row aggregate."""
+    Scale shape: label, features and fold flag are evaluated ONCE into
+    the persisted ``_single_prep`` frame; the fit reads its null-guarded
+    train rows (stats and F₀ in one aggregate, then one histogram scan
+    per round). Then the model is literals, the prep is released, and
+    ONE conditional aggregate over the null-guarded rows returns all
+    four values: the train residual chain (``y − F₀ − leaf₁ − …``, the
+    fit's exact arithmetic) on the train side, y − (F₀ + leaf₁ + …),
+    the ``_boost_score`` arithmetic, on the test side — no model frame,
+    no join, one scan."""
     names = [n for n, _ in features]
-    b = ensure_parallelism(df)
-    train = b.filter(~test_pred)
-    test = b.filter(test_pred)
-    model, pym = _boost_fit(train, target, features, rounds, bins, lr)
-    tb = _guarded(test, target, features, "double").select(
-        "__y", _boost_score(bins, pym).alias("__pred")
+    prep, train = _single_prep(df, target.cast("double"), features,
+                               test_pred)
+    rows = prep.na.drop(subset=["__y", *names])  # the ``_guarded`` rule
+    _resid, pym = _boost_fit(
+        rows.filter(train).select("__y", *names), names, rounds, bins, lr
     )
-    test_stats = tb.agg(
-        F.count("*").alias("__nt"),
-        F.round(
-            F.sqrt(
-                F.avg(
-                    (F.col("__y") - F.col("__pred"))
-                    * (F.col("__y") - F.col("__pred"))
-                )
-            ),
-            6,
-        ).alias("__trm"),
-    )
-    ntr = _guarded(train, target, features, "double").agg(
-        F.count("*").alias("__ntr")
-    )
-    train_rmse = model.agg(F.max("train_rmse").alias("__rm"))
-    return (
-        test_stats.crossJoin(F.broadcast(ntr))
-        .crossJoin(F.broadcast(train_rmse))
-        .select(
-            F.col("__ntr").cast("long").alias("n_train"),
-            F.col("__nt").cast("long").alias("n_test"),
-            F.col("__rm").alias("train_rmse"),
-            F.col("__trm").alias("test_rmse"),
-        )
+    prep.unpersist()  # the model is driver-side literals now
+    # the leaves are compiled once and shared by both chains: each
+    # Column costs py4j round trips
+    leaves = _boost_leaves(bins, pym)
+    y, test, f0 = F.col("__y"), F.col("__t"), _dlit(pym["f0"])
+    resid = functools.reduce(operator.sub, leaves, y - f0)
+    pred = functools.reduce(operator.add, leaves, f0)  # ≡ _boost_score
+    return rows.agg(
+        F.count(F.when(train, F.lit(1))).cast("long").alias("n_train"),
+        F.count(F.when(test, F.lit(1))).cast("long").alias("n_test"),
+        _rmse6(F.when(train, resid)).alias("train_rmse"),
+        _rmse6(F.when(test, y - pred)).alias("test_rmse"),
     )
 
 
@@ -2027,9 +2047,8 @@ def boost_stumps_holdout_oracle_sql(
     )
 
 def _logit_boost_fit(
-    df: DataFrame,
-    label: Column,
-    features: list[tuple[str, Column]],
+    raw: DataFrame,
+    names: list[str],
     rounds: int = 4,
     bins: int = 16,
     lr: float = 0.5,
@@ -2053,24 +2072,21 @@ def _logit_boost_fit(
     total (gain DESC, feature, bin) order. A round with no valid split
     adds nothing and emits no stump row.
 
-    Returns (model, payload): the model frame (``_stump_model``, every
-    row carrying train_logloss of the final margin, probabilities
-    clamped to [1e-6, 1−1e-6] before the log) and the payload
-    ``_boost_score`` compiles.
+    Fits on ``raw``, the null-guarded (__y, features…) rows. Returns
+    (pred, payload): the per-row (``__y``, final margin ``__m``) frame
+    and the payload ``_boost_score`` compiles.
 
     Scale shape: identical to ``_boost_fit`` — the binned frame is
-    built once over the persisted rows; each round is ONE codegen scan
-    into a map-side-combined F·bins-cell residual histogram collected
-    to the driver."""
-    raw, names, mn, wd, binned = _boost_prologue(
-        df, label, features, rounds, bins
-    )
+    built once over the persisted rows, stats and F₀ come from one
+    aggregate; each round is ONE codegen scan into a map-side-combined
+    F·bins-cell residual histogram collected to the driver."""
     pbar = F.least(
         F.greatest(F.avg("__y"), F.lit(0.000001)), F.lit(0.999999)
     )
-    f0 = raw.agg(
-        F.round(F.log(pbar / (F.lit(1.0) - pbar)), 6).alias("__f0")
-    ).first()["__f0"]
+    mn, wd, f0, binned = _boost_prologue(
+        raw, names, rounds, bins,
+        F.round(F.log(pbar / (F.lit(1.0) - pbar)), 6),
+    )
     bcols = [f"__b_{n}" for n in names]
     pred = binned.select("__y", *bcols, _dlit(f0).alias("__m"))
     sigmoid = _sigmoid6(F.col("__m"))
@@ -2089,22 +2105,7 @@ def _logit_boost_fit(
                     .otherwise(_dlit(rv))
                 ).alias("__m"),
             )
-    pc = F.least(F.greatest(sigmoid, F.lit(0.000001)), F.lit(0.999999))
-    loss = pred.agg(
-        F.round(
-            F.avg(
-                -(
-                    F.col("__y") * F.log(pc)
-                    + (F.lit(1.0) - F.col("__y")) * F.log(F.lit(1.0) - pc)
-                )
-            ),
-            6,
-        ).alias("__loss")
-    )
-    return (
-        _stump_model(df.sparkSession, payload, loss, "train_logloss"),
-        payload,
-    )
+    return pred, payload
 
 
 def logit_boost_train(
@@ -2117,9 +2118,25 @@ def logit_boost_train(
 ) -> DataFrame:
     """Train log-loss gradient-boosted classification stumps; returns
     the model frame (round, feature, threshold, left_value,
-    right_value, train_logloss). Algorithm and determinism contracts:
-    ``_logit_boost_fit``."""
-    return _logit_boost_fit(df, label, features, rounds, bins, lr)[0]
+    right_value, train_logloss — of the final margin, probabilities
+    clamped to [1e-6, 1−1e-6] before the log). Algorithm and
+    determinism contracts: ``_logit_boost_fit``."""
+    names = [n for n, _ in features]
+    pred, pym = _logit_boost_fit(
+        _boost_rows(df, label, features), names, rounds, bins, lr
+    )
+    pc = F.least(
+        F.greatest(_sigmoid6(F.col("__m")), F.lit(0.000001)),
+        F.lit(0.999999),
+    )
+    y = F.col("__y")
+    loss = pred.agg(
+        F.round(
+            F.avg(-(y * F.log(pc) + (F.lit(1.0) - y) * F.log(F.lit(1.0) - pc))),
+            6,
+        ).alias("__loss")
+    )
+    return _stump_model(df.sparkSession, pym, loss, "train_logloss")
 
 
 def logit_boost_oracle_sql(
@@ -2281,7 +2298,10 @@ def logit_boost_holdout(
     b = ensure_parallelism(df)
     train = b.filter(~test_pred)
     test = b.filter(test_pred)
-    _model, pym = _logit_boost_fit(train, label, features, rounds, bins, lr)
+    names = [n for n, _ in features]
+    _pred, pym = _logit_boost_fit(
+        _boost_rows(train, label, features), names, rounds, bins, lr
+    )
     tb = _guarded(test, label, features, "double").select(
         "__y", _boost_score(bins, pym).alias("__m")
     ).localCheckpoint(eager=False)

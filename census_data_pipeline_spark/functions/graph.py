@@ -844,17 +844,65 @@ def kcore_oracle_sql(
     )
 
 
+def _coreness_peel(like: DataFrame, ids, es, ed, k: int) -> DataFrame:
+    """The ascending-k peel in ONE driver pass, shared by ``coreness``'s
+    entry path and its mid-peel hand-off: nodes ``ids`` (coded 0..n−1)
+    over the coded symmetric simple edges ``es → ed``, degrees counted
+    from them, the Batagelj & Zaveršnik (2003) min-degree bucket peel
+    with the level floor k−1 the distributed rounds established (1 at
+    entry), handed back as the (id, coreness) frame, the id typed as
+    ``like``'s first column."""
+    import numpy as np
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    n = len(ids)
+    order = np.argsort(es, kind="stable")
+    nbr = ed[order].tolist()
+    ptr = np.searchsorted(es[order], np.arange(n + 1)).tolist()
+    deg = np.bincount(es, minlength=n).tolist()
+    alive = [True] * n
+    core = [0] * n
+    buckets: list[set] = [set() for _ in range(max(deg, default=0) + 1)]
+    for v, dv in enumerate(deg):
+        buckets[dv].add(v)
+    # Min-degree serial processing ≡ the distributed batch rounds:
+    # within a drop batch every node's degree-at-processing is < the
+    # batch level, so max(kcur, d) reproduces the batch's k−1; the
+    # popped-degree sequence is non-decreasing (neighbors never move
+    # below the current level), so kcur is the running peel level.
+    kcur = k - 1
+    d = 0
+    for _ in range(n):
+        while not buckets[d]:
+            d += 1
+        v = buckets[d].pop()
+        kcur = max(kcur, d)
+        core[v] = kcur
+        alive[v] = False
+        for u in nbr[ptr[v]:ptr[v + 1]]:
+            du = deg[u]
+            if alive[u] and du > d:
+                buckets[du].discard(u)
+                buckets[du - 1].add(u)
+                deg[u] = du - 1
+    f = like.schema.fields[0]
+    schema = StructType([
+        StructField("id", f.dataType, f.nullable),
+        StructField("coreness", LongType(), False),
+    ])
+    return catalog.local_frame(like.sparkSession, schema, [ids, core])
+
+
 def _coreness_local_tail(cur: DataFrame, deg: DataFrame, k: int) -> DataFrame:
-    """Finish ``coreness``'s ascending-k peel on the ≤-cap alive
-    residue in ONE bounded driver pass: collect the maintained
-    (id, degree) frame plus the both-endpoints-alive probe of the
-    static symmetric edge frame (the same broadcast join a normal
-    round performs), run the identical min-degree bucket peel locally
-    (Batagelj & Zaveršnik 2003 ordering with the level floor k−1 the
-    distributed rounds established), and return the (id, coreness)
-    frame. The collect is bounded by ``catalog.LOCAL_TAIL_ROWS`` —
-    callers gate on alive n + Σdeg before entering."""
-    alive = {r["id"]: int(r["__deg"]) for r in deg.collect()}
+    """Finish ``coreness``'s distributed peel on the ≤-cap alive
+    residue: collect the alive ids plus the both-endpoints-alive probe
+    of the static symmetric edge frame (the same broadcast join a normal
+    round performs) and run ``_coreness_peel`` from level k — an alive
+    node's probe edges count its maintained degree exactly (every edge
+    to a dropped node was debited, and a frame prune only removes dead
+    edges). The collect is bounded by ``catalog.LOCAL_TAIL_ROWS`` — the
+    caller gates on alive n + Σdeg before entering."""
+    alive = deg.select("id").toPandas()
     a1 = deg.select(F.col("id").alias("__a1"))
     a2 = deg.select(F.col("id").alias("__a2"))
     pdf = (
@@ -863,45 +911,10 @@ def _coreness_local_tail(cur: DataFrame, deg: DataFrame, k: int) -> DataFrame:
         .select("src", "dst")
         .toPandas()  # Arrow batch transfer — the collect stays bounded
     )
-    adj: dict = {}
-    for s_, d_ in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-        adj.setdefault(s_, []).append(d_)
-    maxd = max(alive.values(), default=0)
-    buckets: list[set] = [set() for _ in range(maxd + 1)]
-    for v, dv in alive.items():
-        buckets[dv].add(v)
-    # Min-degree serial processing ≡ the distributed batch rounds:
-    # within a drop batch every node's degree-at-processing is < the
-    # batch level, so max(kcur, d) reproduces the batch's k−1; the
-    # popped-degree sequence is non-decreasing (neighbors never move
-    # below the current level), so kcur is the running peel level.
-    kcur = k - 1
-    res = []
-    d = 0
-    remaining = len(alive)
-    while remaining:
-        while not buckets[d]:
-            d += 1
-        v = buckets[d].pop()
-        kcur = max(kcur, d)
-        res.append((v, kcur))
-        del alive[v]
-        remaining -= 1
-        for u in adj.get(v, ()):
-            du = alive.get(u)
-            if du is not None and du > d:
-                buckets[du].discard(u)
-                buckets[du - 1].add(u)
-                alive[u] = du - 1
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType([
-        deg.schema["id"],
-        StructField("coreness", LongType(), False),
-    ])
-    # Arrow batch transfer back out, mirroring the toPandas on the way
-    # in — a list-of-tuples createDataFrame at the cap is py4j-heavy
-    return catalog.local_frame(deg.sparkSession, schema, list(zip(*res)) or [(), ()])
+    ids, (_ic, es, ed) = _sorted_codes(
+        alive["id"].to_numpy(), pdf["src"].to_numpy(), pdf["dst"].to_numpy()
+    )
+    return _coreness_peel(deg, ids, es, ed, k)
 
 
 def coreness(
@@ -944,14 +957,20 @@ def coreness(
       lineage-cut with lazy localCheckpoint.
 
     * **Bounded local tail** (the BLAS-path discipline: a hybrid with a
-      HARD documented cap, r11). The peel's round count is dominated by
-      the long high-k tail, where the alive graph has shrunk to a sliver
-      of the input; once the per-round scalar shows alive n + Σdeg ≤
-      ``catalog.LOCAL_TAIL_ROWS`` the remaining peel runs in one pass —
-      collect the ≤-cap alive subgraph (both-endpoints-alive probe of
-      the static frame, the SAME broadcast join a normal round does),
-      finish the identical ascending-k bucket peel locally, and union
-      the result back. Coreness is a unique fixpoint, so the split point cannot
+      HARD documented cap). At entry the projected raw edges go through
+      ``catalog.local_tail(e, "src", "dst", fanout=2)``, the
+      ``connected_components`` gate: when twice the raw edge count fits
+      ``catalog.LOCAL_TAIL_ROWS`` the whole decomposition runs off that
+      one Arrow collect — self-loops dropped, symmetrized and deduped in
+      numpy, degrees counted, the bucket peel run from k=1
+      (``_coreness_peel``) — and no distributed degree frame or round
+      is built. Over the cap the distributed rounds run, and once the
+      per-round scalar shows alive n + Σdeg ≤ ``catalog.LOCAL_TAIL_ROWS``
+      the remaining peel hands off mid-way: collect the ≤-cap alive
+      subgraph (both-endpoints-alive probe of the static frame, the SAME
+      broadcast join a normal round does), finish with the same
+      ``_coreness_peel`` from the level reached, and union the result
+      back. Coreness is a unique fixpoint, so neither split point can
       change any value — unit-pinned against the all-distributed path.
       At 100 TB the early data-scale rounds stay fully distributed; the
       cap only ever admits a bounded residue.
@@ -967,14 +986,20 @@ def coreness(
     exact-no-op iterations) — run-to-completion, so both engines compute
     the unique peel fixpoint. Cite: reference has no graph tier; this
     extends SURVEY §2.11 alongside kcore_nodes/pagerank/LPA/BFS."""
-    e = ensure_parallelism(edges).select(
+    # persisted lazily: the gate count materializes the blocks; the
+    # local collect, or the distributed symmetrize, reads them
+    e = _round_persist(ensure_parallelism(edges).select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
-    )
-    # lazily persisted (r14): the first degree-probe aggregate below
-    # materializes the blocks; the k-probe aggregates, the local
-    # tail's two collects and every distributed round then read cur
-    # instead of re-running the symmetrize+distinct (r13's eager count
-    # duplicated that first probe)
+    ))
+    pdf = local_tail(e, "src", "dst", fanout=2)
+    if pdf is not None:
+        tail = _coreness_peel(e, *_simple_codes(pdf), 1)
+        e.unpersist()
+        return tail
+    # lazily persisted: the first degree-probe aggregate below
+    # materializes the blocks (and e is released then); the k-probe
+    # aggregates, the mid-peel tail's collects and every distributed
+    # round read cur instead of re-running the symmetrize+distinct
     cur = _round_persist(
         e.unionByName(e.select(F.col("dst").alias("src"),
                                F.col("src").alias("dst")))
@@ -995,6 +1020,8 @@ def coreness(
             F.min("__deg").alias("mn"), F.count("*").alias("n"),
             F.sum("__deg").alias("sd"),
         ).first()
+        if frame_rows is None:
+            e.unpersist()  # the first aggregate materialized cur
         if row["n"] == 0:
             break
         if frame_rows is None:
@@ -2182,29 +2209,38 @@ def _min_label_fixpoint(es, ed, n, max_rounds=None):
     return None
 
 
-def _cc_full_local(eprep: DataFrame, pdf, max_rounds: int) -> DataFrame:
-    """The whole min-label fixpoint in ONE bounded driver pass (r13)
-    over ``pdf``, the raw projected edges collected by the gate:
-    symmetrize/dedupe/drop-self in numpy (codes over the sorted
-    universe, so min-code ≡ min-id), run the SYNCHRONOUS neighbor-min
-    rounds — same round semantics and the same ``max_rounds``
-    RuntimeError contract as the distributed loop, no pointer jumping
-    — and return (id, component) over non-isolated nodes. Exact:
-    labels are ids, no float arithmetic."""
+def _simple_codes(pdf):
+    """The raw edges the gate collected as a SIMPLE undirected graph in
+    numpy: self-loops dropped before the node set forms, then
+    symmetrized and deduped over codes of the sorted id universe (so
+    min-code ≡ min-id). Returns (ids, es, ed): the universe and the
+    coded symmetric edges ``es → ed``."""
     import numpy as np
 
     svals = pdf["src"].to_numpy()
     dvals = pdf["dst"].to_numpy()
-    keep = svals != dvals  # self-loops dropped before the node set forms
+    keep = svals != dvals
     svals, dvals = svals[keep], dvals[keep]
     if len(svals) == 0:
-        return _local_frame(eprep, {"id": [], "component": []})
+        empty = np.zeros(0, dtype=np.int64)
+        return svals, empty, empty
     ids, (sc0, dc0) = _sorted_codes(svals, dvals)
-    n = len(ids)
-    keys = np.unique(
-        np.concatenate([sc0 * n + dc0, dc0 * n + sc0])
-    )  # symmetrized + deduped
-    lab = _min_label_fixpoint(keys // n, keys % n, n, max_rounds)
+    es, ed, _w = _np_symmetrize(svals, dvals, None, ids, codes=(sc0, dc0))
+    return ids, es, ed
+
+
+def _cc_full_local(eprep: DataFrame, pdf, max_rounds: int) -> DataFrame:
+    """The whole min-label fixpoint in ONE bounded driver pass (r13)
+    over ``pdf``, the raw projected edges collected by the gate:
+    symmetrize/dedupe/drop-self in numpy (``_simple_codes``), run the
+    SYNCHRONOUS neighbor-min rounds — same round semantics and the same
+    ``max_rounds`` RuntimeError contract as the distributed loop, no
+    pointer jumping — and return (id, component) over non-isolated
+    nodes. Exact: labels are ids, no float arithmetic."""
+    ids, es, ed = _simple_codes(pdf)
+    if len(ids) == 0:
+        return _local_frame(eprep, {"id": [], "component": []})
+    lab = _min_label_fixpoint(es, ed, len(ids), max_rounds)
     if lab is None:
         raise RuntimeError(
             f"connected_components did not converge within "

@@ -19,7 +19,10 @@ parquet scan; at 100 TB this adds ~zero cost over the scan itself.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 # Census sentinel codes for missing/suppressed data
 # (reference: src/transformers.py:30-36).
@@ -71,6 +74,14 @@ def clean_missing_values(
     strategy: ``nan`` -> sentinels become NULL; ``fill`` -> then
     ``fillna(fill_value)`` on those columns; ``drop`` -> then drop rows with
     any NULL in those columns.
+
+    ``fill`` and ``drop`` keep ``DataFrame.na``'s rules but are built as
+    SQL text like the sentinel step, so any column name works (``na``
+    parses its ``subset`` names, which rejects a backtick and reads a dot
+    as a struct field). ``fill``: a number fills the numeric columns, cast
+    to each column's type; a string fills string columns, a bool boolean
+    ones; a float or double NaN is filled too. ``drop``: a row goes when
+    any of the columns is NULL, or NaN for a float or double column.
     """
     if strategy not in ("nan", "fill", "drop"):
         raise ValueError(f"unknown strategy: {strategy!r}")
@@ -82,10 +93,46 @@ def clean_missing_values(
         for c in cols
     })
     if strategy == "fill":
-        out = out.na.fill(fill_value, subset=cols)
-    elif strategy == "drop":
-        out = out.na.drop(subset=cols)
+        out = _with_sql_columns(out, _fill_exprs(out, cols, fill_value))
+    elif strategy == "drop" and cols:
+        out = out.filter(" AND ".join(
+            f"({_quote(c)} IS NOT NULL AND NOT isnan({_quote(c)}))"
+            if isinstance(out.schema[c].dataType, _FLOATS)
+            else f"{_quote(c)} IS NOT NULL"
+            for c in cols
+        ))
     return out
+
+
+_FLOATS = (T.DoubleType, T.FloatType)
+
+
+def _fill_exprs(df: DataFrame, cols: list[str], value) -> dict[str, str]:
+    """``df.na.fill(value, subset=cols)`` as SQL text per column: the
+    columns of the value's type family become ``coalesce(c, CAST(value
+    AS <c's type>))``, a float or double column through ``nanvl(c,
+    NULL)`` first; the others are left out."""
+    if isinstance(value, bool):
+        family, lit = T.BooleanType, "true" if value else "false"
+    elif isinstance(value, (int, float)):
+        # a double literal (``-0.0D``, ``1e+300D``) is non-null, as
+        # ``lit(value)`` is; inf and NaN have no literal form
+        v = float(value)
+        family = T.NumericType
+        lit = f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+    elif isinstance(value, str):
+        family = T.StringType
+        lit = "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    else:
+        raise TypeError(f"fill_value must be a bool, number or string, "
+                        f"not {type(value).__name__}")
+    exprs = {}
+    for c in cols:
+        t = df.schema[c].dataType
+        if isinstance(t, family):
+            v = f"nanvl({_quote(c)}, NULL)" if isinstance(t, _FLOATS) else _quote(c)
+            exprs[c] = f"coalesce({v}, CAST({lit} AS {t.simpleString()}))"
+    return exprs
 
 
 def coerce_numeric(df: DataFrame, columns: list[str]) -> DataFrame:

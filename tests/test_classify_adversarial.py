@@ -249,3 +249,62 @@ def test_model_frames_match_list_path(spark, monkeypatch):
         assert "ExistingRDD" not in g._jdf.queryExecution().executedPlan().toString()
         assert canon(g) == canon(w)
     assert [r["round"] for r in got[1].orderBy("round").collect()] == [0, 1, 3]
+
+
+def _old_boost_holdout(df, target, features, test_pred, rounds, bins, lr):
+    """The booster holdout's earlier three-aggregate form, as the
+    reference: the fit on the filtered train fold, a test-fold
+    aggregate, a second scan of the train fold for its count, and the
+    model frame's train_rmse, cross-joined."""
+    from census_data_pipeline_spark.sources.catalog import ensure_parallelism
+
+    names = [n for n, _ in features]
+    b = ensure_parallelism(df)
+    train, test = b.filter(~test_pred), b.filter(test_pred)
+    resid, pym = classify._boost_fit(
+        classify._boost_rows(train, target, features), names, rounds, bins,
+        lr)
+    model = classify._stump_model(
+        df.sparkSession, pym,
+        resid.agg(classify._rmse6(F.col("__r")).alias("__loss")),
+        "train_rmse")
+    err = F.col("__y") - F.col("__pred")
+    test_stats = classify._guarded(test, target, features, "double").select(
+        "__y", classify._boost_score(bins, pym).alias("__pred")
+    ).agg(F.count("*").alias("__nt"),
+          F.round(F.sqrt(F.avg(err * err)), 6).alias("__trm"))
+    ntr = classify._guarded(train, target, features, "double").agg(
+        F.count("*").alias("__ntr"))
+    train_rmse = model.agg(F.max("train_rmse").alias("__rm"))
+    return test_stats.crossJoin(ntr).crossJoin(train_rmse).select(
+        F.col("__ntr").cast("long").alias("n_train"),
+        F.col("__nt").cast("long").alias("n_test"),
+        F.col("__rm").alias("train_rmse"),
+        F.col("__trm").alias("test_rmse"),
+    )
+
+
+@pytest.mark.parametrize("test_fold", [3, 9])
+def test_boost_holdout_matches_three_aggregate_form(spark, test_fold):
+    """Differential: ``boost_stumps_holdout``'s one conditional
+    aggregate vs the three-aggregate form it replaced. On top of the
+    module frame (a null label in the train fold): a test-fold row with
+    a null feature, and a row whose fold — so whose fold predicate — is
+    NULL, which belongs to neither fold. Fold 9 leaves the test fold
+    empty: n_test 0 and a NULL test_rmse."""
+    rows = _rows() + [("t_null_feat", 3, 2.0, None, 5.0, 1.0),
+                      ("no_fold", None, 3.0, 1.0, 5.0, 0.0)]
+    df = spark.createDataFrame(rows, SCHEMA)
+    args = (df, F.col("lab"), _feats(ALL), F.col("fold") == F.lit(test_fold))
+    got = classify.boost_stumps_holdout(*args, **BOOST)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan
+    assert plan.count("Aggregate(") == 2  # one aggregate: partial + final
+    want = _old_boost_holdout(*args, **BOOST)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    n_train, n_test, _rm, test_rmse = got.collect()[0]
+    if test_fold == 3:
+        assert (n_train, n_test) == (28, 10)
+    else:
+        assert (n_train, n_test, test_rmse) == (38, 0, None)

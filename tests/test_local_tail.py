@@ -117,6 +117,49 @@ def test_markov_query_matches_distributed(spark, sf_dir, distributed,
     assert gated == dist and gated
 
 
+_CORENESS_INPUTS = {
+    # a node whose only edge is a self-loop has no coreness row
+    "self_loop_only": ([("solo", "solo"), ("a", "b"), ("b", "c"),
+                        ("c", "a"), ("a", "a")], "string"),
+    "duplicates_both_ways": ([("a", "b")] * 3 + [("b", "a")] * 2
+                             + [("b", "c"), ("c", "b"), ("c", "a"),
+                                ("a", "d")], "string"),
+    # ids beyond 2^31 must come back as bigint on both paths
+    "bigint_ids": ([(2**40 + i, 2**40 + j) for i in range(5)
+                    for j in range(i + 1, 5)] + [(2**40, 7)], "bigint"),
+    "null_endpoint": ([("a", "b"), ("b", "c"), ("c", "a"), ("a", None),
+                       (None, "d"), ("d", "a")], "string"),
+    "empty": ([], "string"),
+}
+
+
+@pytest.mark.parametrize("case", list(_CORENESS_INPUTS))
+def test_coreness_entry_gate_matches_distributed(spark, monkeypatch,
+                                                 distributed, case):
+    """``coreness`` gates once at entry through ``local_tail``: every
+    input under the cap takes the whole numpy peel, a null endpoint
+    keeps it distributed, and either way the (id, coreness) frame
+    equals the all-distributed peel, id type included."""
+    rows, id_type = _CORENESS_INPUTS[case]
+    df = spark.createDataFrame(rows, f"src {id_type}, dst {id_type}")
+    gate = []
+
+    def spy(*args, **kwargs):
+        gate.append(catalog.local_tail(*args, **kwargs))
+        return gate[-1]
+
+    monkeypatch.setattr(G, "local_tail", spy)
+    got = G.coreness(df)
+    assert len(gate) == 1
+    assert (gate[0] is None) == (case == "null_endpoint")
+    with distributed():
+        want = G.coreness(df)
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+    if case != "empty":
+        assert _rows(got)
+
+
 # ------------------------------------------------------ the gate itself
 
 

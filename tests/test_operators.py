@@ -76,11 +76,11 @@ def test_sql_built_cleaning_matches_column_form(spark, strategy):
     df = spark.createDataFrame(
         rows, "v double, i bigint, s string, bg double, w string").toDF(*names)
 
-    def column_form(frame, build):
+    def column_form(frame, build, finish=None):
         pos = [f"c{k}" for k in range(len(frame.columns))]
         renamed = frame.toDF(*pos)
-        return renamed.withColumns(
-            {p: build(F.col(p)) for p in pos}).toDF(*frame.columns)
+        out = renamed.withColumns({p: build(F.col(p)) for p in pos})
+        return (finish(out, pos) if finish else out).toDF(*frame.columns)
 
     def clean_ref(c):
         return F.when(c.isin(*codes), F.lit(None)).otherwise(c)
@@ -91,16 +91,13 @@ def test_sql_built_cleaning_matches_column_form(spark, strategy):
     def canon(frame):
         return frame.schema, [repr(tuple(r)) for r in frame.collect()]
 
-    # na.fill / na.drop parse their subset names, so the backtick-and-dot
-    # name reaches only the "nan" strategy, on either path
-    frame = df if strategy == "nan" else df.select(*names[:4])
-    cols = frame.columns
-    got = cleaning.clean_missing_values(frame, cols, strategy=strategy)
-    want = column_form(frame, clean_ref)
-    if strategy == "fill":
-        want = want.na.fill(0.0, subset=cols)
-    elif strategy == "drop":
-        want = want.na.drop(subset=cols)
+    finish = {
+        "nan": None,
+        "fill": lambda out, pos: out.na.fill(0.0, subset=pos),
+        "drop": lambda out, pos: out.na.drop(subset=pos),
+    }[strategy]
+    got = cleaning.clean_missing_values(df, names, strategy=strategy)
+    want = column_form(df, clean_ref, finish)
     assert canon(got) == canon(want)
     if strategy == "nan":
         assert [r["v"] for r in got.collect()][:5] == [None] * 5
@@ -109,6 +106,27 @@ def test_sql_built_cleaning_matches_column_form(spark, strategy):
     with pytest.raises(Exception, match="UNRESOLVED_COLUMN"):
         cleaning.clean_missing_values(df, ["missing"]).schema
 
+
+
+@pytest.mark.parametrize("value", [-1, 2.5, "x'\\y", True])
+def test_sql_built_fill_matches_na_fill(spark, value):
+    """The "fill" strategy against ``na.fill`` (on positional names) for
+    each fill-value family: numbers fill the numeric columns cast to
+    their type, a string the string columns, and a bool none of these
+    (the sentinel step takes no boolean column)."""
+    rows = [(None, None, None, None), (float("nan"), 3, "a", 1.5),
+            (-666666666.0, -999999999, "-888888888", float("nan"))]
+    names = ["v", "i", "s", "we`ird.x"]
+    df = spark.createDataFrame(
+        rows, "v double, i bigint, s string, f float").toDF(*names)
+    pos = [f"c{k}" for k in range(len(names))]
+    cleaned = cleaning.clean_missing_values(df, names)
+    want = cleaned.toDF(*pos).na.fill(value, subset=pos).toDF(*names)
+    got = cleaning.clean_missing_values(df, names, strategy="fill",
+                                        fill_value=value)
+    assert got.schema == want.schema
+    assert [repr(tuple(r)) for r in got.collect()] == [
+        repr(tuple(r)) for r in want.collect()]
 
 # -- rates (reference: transformers.py:74-150) ---------------------------
 def test_zero_policies(spark):

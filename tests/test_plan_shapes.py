@@ -363,6 +363,7 @@ def test_wasserstein_and_ccf_no_cartesian(spark, sf_dir):
     "quality_logreg_auc",
     "quality_pr_auc",
     "quality_tree_eval",
+    "quality_gbt_holdout",
 ])
 def test_classifier_scoring_joins_nothing(spark, sf_dir, name):
     # a fitted model scores as one literal expression over the cached

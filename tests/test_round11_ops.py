@@ -193,6 +193,7 @@ def test_coreness_tail_switch_mid_peel(spark, monkeypatch, distributed):
     sized between the full graph and the residue) — the k floor must
     carry over: a path pendant chain (core 1) hanging off a K5
     (core 4) peels the chain distributed, the clique locally."""
+    from census_data_pipeline_spark.functions import graph
     from census_data_pipeline_spark.functions.graph import coreness
 
     k5 = [(f"k{i}", f"k{j}") for i in range(5) for j in range(i + 1, 5)]
@@ -200,12 +201,28 @@ def test_coreness_tail_switch_mid_peel(spark, monkeypatch, distributed):
     df = spark.createDataFrame(k5 + chain, "src string, dst string")
     from census_data_pipeline_spark.sources import catalog
 
-    # n + sum_deg at the start: 36 nodes + 2*51 edges > 60, so a cap
-    # of 60 keeps the first rounds distributed.
+    # The entry gate sees 2 * 41 raw edges > 60, and the first round's
+    # n + sum_deg is 36 nodes + 82 > 60, so a cap of 60 keeps the first
+    # rounds distributed until the chain has peeled down under it.
     with distributed():
         want = {r.id: r.coreness for r in coreness(df).collect()}
     monkeypatch.setattr(catalog, "LOCAL_TAIL_ROWS", 60)
+    gate, levels = [], []
+    peel = graph._coreness_peel
+
+    def gate_spy(*args, **kwargs):
+        gate.append(catalog.local_tail(*args, **kwargs))
+        return gate[-1]
+
+    def peel_spy(like, ids, es, ed, k):
+        levels.append(k)
+        return peel(like, ids, es, ed, k)
+
+    monkeypatch.setattr(graph, "local_tail", gate_spy)
+    monkeypatch.setattr(graph, "_coreness_peel", peel_spy)
     got = {r.id: r.coreness for r in coreness(df).collect()}
+    assert gate == [None]  # the entry gate rejects the input
+    assert len(levels) == 1 and levels[0] > 1  # handed off mid-peel
     assert got == want
     assert got["k1"] == 4 and got["p5"] == 1
 
