@@ -682,13 +682,7 @@ def dup_clusters(
         return _dup_clusters_star(pairs)[0]
     if algorithm != "label":
         raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
-    # persisted, lazily (r14): the pair-generation lineage upstream is
-    # routinely the query's whole cost (edit-1 variant self-join,
-    # minhash banding), and the label loop's per-round join AND the
-    # per-round consistency count each re-ran it through the bare lazy
-    # localCheckpoint; the gate count below materializes the blocks
-    # once and every consumer reads them
-    edges = round_persist(
+    edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
@@ -699,9 +693,13 @@ def dup_clusters(
     # 100 TB pair sets never enter and run the distributed loop below.
     pdf = local_tail(edges, "src", "dst")
     if pdf is not None:
-        tail = _dup_clusters_local(edges, pdf)
-        edges.unpersist()
-        return tail
+        return _dup_clusters_local(edges, pdf)
+    # persisted: the pair-generation lineage upstream is routinely the
+    # query's whole cost (edit-1 variant self-join, minhash banding),
+    # and the label loop's per-round join AND the per-round consistency
+    # count would each re-run it; the checkpoint of the gated object
+    # reuses the stages the gate's count already ran
+    edges = round_persist(edges)
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -786,7 +784,6 @@ def _dup_clusters_star(pairs: DataFrame) -> tuple[DataFrame, int]:
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     # Bounded local tail (r14, the label-path discipline): the star
     # rounds' converged labels ARE the component minimum per node, so
@@ -798,6 +795,7 @@ def _dup_clusters_star(pairs: DataFrame) -> tuple[DataFrame, int]:
     pdf = local_tail(edges, "src", "dst")
     if pdf is not None:
         return _dup_clusters_local(edges, pdf, symmetrize=True), 0
+    edges = edges.localCheckpoint(eager=False)
     all_nodes = edges.select(F.col("src").alias("id")).union(
         edges.select(F.col("dst").alias("id"))
     ).distinct()

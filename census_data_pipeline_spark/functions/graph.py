@@ -35,6 +35,16 @@ from census_data_pipeline_spark.sources.catalog import (
 )
 
 
+def _persist_gated(e: DataFrame) -> DataFrame:
+    """An edge frame the gate refused, spread to the cluster's
+    parallelism and persisted for the distributed rounds that read it
+    more than once. Called on the SAME object ``local_tail`` counted:
+    when that object is already spread, its checkpoint reuses the
+    shuffle stages the count ran; a few-file input that
+    ``ensure_parallelism`` repartitions is evaluated once more."""
+    return _round_persist(ensure_parallelism(e))
+
+
 def _sorted_codes(*arrays):
     """``universe = np.unique(concatenate(arrays))`` plus each array's
     ``np.searchsorted(universe, a)`` codes — computed via one
@@ -188,19 +198,7 @@ def pagerank(
     both sides then repartition on the same key every round."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    # the edge frame is re-read EVERY round (contribution join) and per
-    # round twice more via the dangling broadcast's lineage — cut its
-    # upstream plan (which may itself be a multi-join graph build) once
-    # persist the projected edge list ONCE, lazily (r14 — a bare lazy
-    # localCheckpoint's consumers recompute its lineage): the GATE
-    # count right below is the first action and materializes the
-    # blocks, so the local tail's collect and the distributed rounds
-    # read them instead of re-running the upstream graph build; the
-    # r13 eager count inside round_materialize was a duplicate of the
-    # gate count
-    e = _round_persist(ensure_parallelism(edges).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ))
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # Bounded local tail (r13, the label_propagation discipline): the
     # power iteration's wall-clock under ~1M edges is pure per-round
     # scheduling/planning floor, so under ``catalog.LOCAL_TAIL_ROWS``
@@ -212,8 +210,10 @@ def pagerank(
             e, pdf, iterations, float(damping), personalization
         )
         if tail is not None:  # None ⇒ null seed, stay distributed
-            e.unpersist()
             return tail
+    # the edge frame is re-read EVERY round (contribution join) and per
+    # round twice more via the dangling broadcast's lineage
+    e = _persist_gated(e)
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
@@ -507,23 +507,15 @@ def label_propagation(
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     weighted = weight_col is not None
-    # lazily persisted (r14): the GATE count right below is the first
-    # action and materializes the blocks; the full-local Arrow collect
-    # and the distributed symmetrize then read them instead of
-    # re-running the upstream graph build (the round_materialize
-    # finding, minus r13's duplicate eager count)
+    cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
     if weighted:
-        e = _round_persist(ensure_parallelism(edges).select(
-            F.col(src).alias("src"), F.col(dst).alias("dst"),
-            F.col(weight_col).cast("double").alias("__w"),
-        ))
-    else:
-        e = _round_persist(ensure_parallelism(edges).select(
-            F.col(src).alias("src"), F.col(dst).alias("dst")
-        ))
+        cols.append(F.col(weight_col).cast("double").alias("__w"))
+    e = edges.select(*cols)
     pdf = local_tail(e, "src", "dst", fanout=2)
     if pdf is not None:
         return _lpa_full_local(e, pdf, iterations, weighted=weighted)
+    # the distributed symmetrize scans e twice (both union branches)
+    e = _persist_gated(e)
     # ONE checkpointed frame serves both the vote edges and the node
     # set: symmetrize + dedupe WITHOUT dropping self-loops, so its src
     # side covers every node — including self-loop-only nodes, which
@@ -986,16 +978,12 @@ def coreness(
     exact-no-op iterations) — run-to-completion, so both engines compute
     the unique peel fixpoint. Cite: reference has no graph tier; this
     extends SURVEY §2.11 alongside kcore_nodes/pagerank/LPA/BFS."""
-    # persisted lazily: the gate count materializes the blocks; the
-    # local collect, or the distributed symmetrize, reads them
-    e = _round_persist(ensure_parallelism(edges).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ))
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     pdf = local_tail(e, "src", "dst", fanout=2)
     if pdf is not None:
-        tail = _coreness_peel(e, *_simple_codes(pdf), 1)
-        e.unpersist()
-        return tail
+        return _coreness_peel(e, *_simple_codes(pdf), 1)
+    # the distributed symmetrize scans e twice (both union branches)
+    e = _persist_gated(e)
     # lazily persisted: the first degree-probe aggregate below
     # materializes the blocks (and e is released then); the k-probe
     # aggregates, the mid-peel tail's collects and every distributed
@@ -1328,7 +1316,8 @@ def modularity(
             epdf, lpdf, lab, src, dst, weight_col)
     if joined is None:
         sym = _symmetrize_simple(
-            eprep, src, dst, "__w" if weight_col else None
+            _persist_gated(eprep), src, dst,
+            "__w" if weight_col else None,
         )
         la = lab.select(F.col("id").alias("__sid"),
                         F.col("lab").alias("lsrc"))
@@ -1829,7 +1818,8 @@ def conductance(
         )
     if combined is None:
         sym = _symmetrize_simple(
-            eprep, src, dst, "__w" if weight_col else None
+            _persist_gated(eprep), src, dst,
+            "__w" if weight_col else None,
         )
         la = lab.select(F.col("id").alias("__sid"),
                         F.col("lab").alias("lsrc"))
@@ -2282,12 +2272,7 @@ def connected_components(
     raises rather than returning a silent partial labeling. Cite:
     reference has no graph tier; extends SURVEY §2.11 beside
     coreness/label_propagation."""
-    # persist the projected edge list ONCE, lazily (r14 — see
-    # pagerank): the gate count right below materializes the blocks;
-    # the local collect and the distributed symmetrize read them
-    e = _round_persist(ensure_parallelism(edges).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ))
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # Bounded local tail (r13, the label_propagation discipline): the
     # min-label fixpoint under ~1M edges is pure per-round scheduling
     # floor — below the gate the whole loop (symmetrize, dedupe,
@@ -2296,9 +2281,9 @@ def connected_components(
     # float arithmetic anywhere). 100 TB graphs never enter.
     pdf = local_tail(e, "src", "dst", fanout=2)
     if pdf is not None:
-        tail = _cc_full_local(e, pdf, max_rounds)
-        e.unpersist()
-        return tail
+        return _cc_full_local(e, pdf, max_rounds)
+    # the distributed symmetrize scans e twice (both union branches)
+    e = _persist_gated(e)
     sym = _round_materialize(
         e.unionByName(e.select(F.col("dst").alias("src"),
                                F.col("src").alias("dst")))
@@ -2465,14 +2450,14 @@ def weighted_pagerank(
     # persisted raw projection twice (filtered agg + union-distinct
     # over 2·|E| raw rows); here the raw lineage runs once and the
     # node dedup runs over the already-deduped pair frame.
-    g = _round_persist(
-        ensure_parallelism(edges).select(
+    g = (
+        edges.select(
             F.col(src).alias("src"), F.col(dst).alias("dst"),
             F.col(weight_col).cast("double").alias("__w"),
         )
         .groupBy("src", "dst")
         .agg(F.sum(F.when(F.col("__w") > 0, F.col("__w"))).alias("__w"))
-    )  # lazily persisted (r14): the gate count below materializes it
+    )
     # Bounded local tail (r13): the data-scale parallel-edge weight
     # aggregation above stays DISTRIBUTED; only the node-scale power
     # iteration replays off one Arrow collect of the already-reduced
@@ -2480,9 +2465,10 @@ def weighted_pagerank(
     # 100 TB graphs never enter and run the rounds below.
     pdf = local_tail(g, "src", "dst")
     if pdf is not None:
-        tail = _wpagerank_full_local(g, pdf, iterations, float(damping))
-        g.unpersist()
-        return tail
+        return _wpagerank_full_local(g, pdf, iterations, float(damping))
+    # the node frame and every round read the pair frame (already
+    # spread by its groupBy): its checkpoint reuses the gate's stages
+    g = _round_persist(g)
     e = g.filter(F.col("__w").isNotNull())
     # explode, not union: ONE scan of the cached pair frame feeds the
     # endpoint dedup (the union form scans the cache twice)
@@ -2636,8 +2622,7 @@ def weighted_distances(
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
     e0 = (
-        ensure_parallelism(edges)
-        .select(
+        edges.select(
             F.col(src).alias("src"), F.col(dst).alias("dst"),
             F.col(weight_col).cast("double").alias("__w"),
         )
@@ -2645,10 +2630,8 @@ def weighted_distances(
     )
     # Bounded local tail (r13): fixed-round relaxation is exact min
     # arithmetic over per-path weight sums — the local replay is
-    # bit-identical, not merely 6-dp-identical. The gate count and the
-    # collect stay two scans of the (caller-cached) projection rather
-    # than paying a second cache write of the doubled symmetric frame.
-    # 100 TB graphs never enter the gate.
+    # bit-identical, not merely 6-dp-identical. 100 TB graphs never
+    # enter the gate.
     pdf = local_tail(e0, "src", "dst")
     if pdf is not None:
         tail = _wdist_full_local(e0, pdf, seeds, rounds)
@@ -2656,7 +2639,7 @@ def weighted_distances(
             return tail
     # distributed rounds re-read the frame every round — materialize
     # (round_materialize — see pagerank)
-    e = _round_materialize(e0)
+    e = _round_materialize(ensure_parallelism(e0))
     dist = (
         seeds.select(F.col(seeds.columns[0]).alias("id"))
         .distinct()
@@ -3241,7 +3224,7 @@ def louvain_local_move(
         if full is not None:  # None ⇒ null/dup init ids, stay distributed
             return full
     sym = _symmetrize_simple(
-        eprep, src, dst, "__w" if weight_col else None
+        _persist_gated(eprep), src, dst, "__w" if weight_col else None
     ).localCheckpoint(eager=False).persist()
     labels = _louvain_level(sym, init_labels, rounds)
     # Materialize the returned node-scale frame, then release the
@@ -3260,18 +3243,14 @@ def _louvain_eprep(
     edges: DataFrame, src: str, dst: str, weight_col: str | None
 ) -> DataFrame:
     """Projected raw edge frame shared by the gate/full-local path and
-    the distributed symmetrize: (src, dst[, __w]). Materialized (r13):
-    the gate count, the local tail's Arrow collect and the distributed
-    symmetrize each re-ran the upstream graph build otherwise (a lazy
-    localCheckpoint's consumers recompute its lineage — the
-    round_materialize finding)."""
+    the distributed symmetrize: (src, dst[, __w]), lazy. The gate's
+    count and collect run this one object's plan, so the collect reuses
+    the count's shuffle stages; only the distributed branch persists it
+    (``_persist_gated``)."""
     cols = [F.col(src).alias(src), F.col(dst).alias(dst)]
     if weight_col is not None:
         cols.append(F.col(weight_col).cast("double").alias("__w"))
-    # lazily persisted (r14): every caller's gate count is the first
-    # action over this frame and materializes the blocks; r13's eager
-    # count inside round_materialize duplicated it
-    return _round_persist(ensure_parallelism(edges).select(*cols))
+    return edges.select(*cols)
 
 
 def louvain_multilevel(
@@ -3325,7 +3304,7 @@ def louvain_multilevel(
         if full is not None:  # None ⇒ null/dup init ids, stay distributed
             return full
     sym = _symmetrize_simple(
-        eprep, src, dst, "__w" if weight_col else None
+        _persist_gated(eprep), src, dst, "__w" if weight_col else None
     ).localCheckpoint(eager=False).persist()
     prior_sym = sym
     labels = _louvain_level(sym, init_labels, rounds)
@@ -3701,7 +3680,7 @@ def leiden(
         if full is not None:  # None ⇒ null/dup init ids, stay distributed
             return full
     sym0 = _symmetrize_simple(
-        eprep, src, dst, "__w" if weight_col else None
+        _persist_gated(eprep), src, dst, "__w" if weight_col else None
     ).localCheckpoint(eager=False).persist()
     sym = sym0
     prior_sym = None  # contracted frames only — sym0 lives to the end
@@ -3967,22 +3946,15 @@ def hits_scores(
     extends SURVEY §2.11 beside pagerank/weighted_pagerank."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    # persist the projected edge list ONCE, lazily (r14 — see
-    # pagerank): the gate count right below materializes the blocks;
-    # local collect and distributed rounds read them
-    e0 = _round_persist(ensure_parallelism(edges).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ))
+    e0 = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # Bounded local tail (r13, the label_propagation discipline):
     # under ``catalog.LOCAL_TAIL_ROWS`` the whole loop replays off one
     # Arrow collect (6-dp-identical; unit-pinned); 100 TB graphs never
     # enter.
     pdf = local_tail(e0, "src", "dst")
     if pdf is not None:
-        tail = _hits_full_local(e0, pdf, iterations)
-        e0.unpersist()
-        return tail
-    e = _round_materialize(e0.distinct(), prior=e0)
+        return _hits_full_local(e0, pdf, iterations)
+    e = _round_materialize(ensure_parallelism(e0).distinct())
     nodes = _round_materialize(
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))

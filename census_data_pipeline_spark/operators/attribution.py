@@ -386,8 +386,7 @@ def markov_removal_attribution(
     )
     cnt = trans.groupBy("__s", "__tt").agg(F.count("*").alias("__n"))
     tot = cnt.groupBy("__s").agg(F.sum("__n").alias("__tot"))
-    # lazily persisted (r14): the gate count right below materializes
-    pm = _round_persist(
+    pm = (
         cnt.join(tot, "__s")
         .select(
             "__s", "__tt",
@@ -409,6 +408,10 @@ def markov_removal_attribution(
     if pdfm is not None:
         starts = _markov_absorption_local(pm, pdfm, iterations, r6)
     if starts is None:
+        # the state, cp and ptrans frames and every round read pm:
+        # persist the gated object (its checkpoint reuses the stages
+        # the gate's count already ran)
+        pm = _round_persist(pm)
         states = pm.select(F.col("__s").alias("__st")).distinct() \
             .localCheckpoint(eager=False)
         channels = states.filter(F.col("__st") != "start")

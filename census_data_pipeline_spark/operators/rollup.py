@@ -2612,9 +2612,6 @@ def markov_stationary(
     # sums already are. A chain over half ``catalog.LOCAL_TAIL_ROWS``
     # cells (fanout=2: 10⁶ cells, k > 1000, at the default) falls back
     # to the distributed rounds.
-    # lazily persisted (r14): the gate count right below is the first
-    # action and materializes the blocks
-    pm = _round_persist(pm)
     pi = None
     pdfm = local_tail(pm, "__s", "__j", fanout=2)
     if pdfm is not None:
@@ -2684,6 +2681,9 @@ def markov_stationary(
                 ]),
             )
     if pi is None:
+        # every distributed round joins pm: persist the gated object, so
+        # its checkpoint reuses the stages the gate's count already ran
+        pm = _round_persist(pm)
         k = F.broadcast(st.agg(F.count("*").alias("__k")))
         pi = st.crossJoin(k).select(
             F.col("__state").alias("__s"),

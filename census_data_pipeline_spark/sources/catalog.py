@@ -99,6 +99,18 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     return df.repartition(target)
 
 
+def row_count(df: DataFrame) -> int:
+    """Row count of ``df`` over ``df``'s own executed plan, with no
+    aggregate exchange of its own: one job on a plan without shuffles
+    (``DataFrame.count()`` plans a second query, a global aggregate
+    with its own exchange — 2 jobs even on a small local relation), the
+    plan's own shuffle stages plus one otherwise. Because it runs the
+    plan ``df`` itself will run, a later action on the SAME object
+    (``toPandas``, ``localCheckpoint``) reuses the shuffle stages the
+    count executed instead of running them again."""
+    return int(df._jdf.queryExecution().toRdd().count())
+
+
 def round_materialize(df: DataFrame, prior: DataFrame | None = None) -> DataFrame:
     """Round-boundary materialization for chained iterative frames
     (r12, shared by the graph community tier and the trained-in-engine
@@ -111,31 +123,33 @@ def round_materialize(df: DataFrame, prior: DataFrame | None = None) -> DataFram
     rewrites consumer plans to InMemoryTableScan, which DOES reuse
     blocks (measured flat 1.1 s/round over 10 chained rounds) — while
     the lazy ``localCheckpoint`` underneath keeps the LOGICAL plan a
-    flat LogicalRDD so per-round analysis stays O(1). One count
-    materializes the blocks (the coreness one-bounded-action-per-round
-    discipline); ``prior`` — the previous round's frame, when supplied
-    — is unpersisted once the new frame is live, so cache residency
-    stays O(one round's frames) at any round count."""
+    flat LogicalRDD so per-round analysis stays O(1). One
+    ``row_count`` job materializes the blocks (the coreness
+    one-bounded-action-per-round discipline); ``prior`` — the previous
+    round's frame, when supplied — is unpersisted once the new frame is
+    live, so cache residency stays O(one round's frames) at any round
+    count."""
     out = df.localCheckpoint(eager=False).persist()
-    out.count()
+    row_count(out)
     if prior is not None:
         prior.unpersist()
     return out
 
 
 def round_persist(df: DataFrame) -> DataFrame:
-    """Lazy sibling of ``round_materialize`` (r14 — VERDICT r13 #1: the
-    eager persist+count charged a full extra pass to frames with one
-    effective consumer). Cut lineage and ``persist`` WITHOUT the eager
-    count: the blocks materialize at the FIRST consuming action and
-    every later consumer reads them (the cache manager rewrites consumer
-    plans to InMemoryTableScan), so total compute is identical to
-    ``round_materialize`` minus the up-front count job. Use for shared
-    frames whose first consumer runs soon anyway (the query's own sink,
-    or a local-tail gate count); keep ``round_materialize`` for
-    iterative round boundaries, where the eager count IS the
-    one-bounded-action-per-round discipline and the ``prior`` unpersist
-    keeps cache residency O(one round)."""
+    """Lazy sibling of ``round_materialize``: cut lineage and
+    ``persist`` WITHOUT an eager count, so the blocks materialize at
+    the FIRST consuming action and every later consumer reads them (the
+    cache manager rewrites consumer plans to InMemoryTableScan). For a
+    frame with several consumers — a query-level frame several
+    operators read, a prep frame every fit round scans, or the
+    distributed branch behind a ``local_tail`` gate. Never persist a
+    frame only so a gate can count it: gate the lazy frame, then call
+    this on the SAME object in the distributed branch, where the
+    checkpoint reuses the shuffle stages the gate's count already ran.
+    Keep ``round_materialize`` for iterative round boundaries, where the
+    eager count IS the one-bounded-action-per-round discipline and the
+    ``prior`` unpersist keeps cache residency O(one round)."""
     return df.localCheckpoint(eager=False).persist()
 
 
@@ -148,14 +162,20 @@ LOCAL_TAIL_ROWS = 2_000_000
 
 def local_tail(df: DataFrame, *key_cols: str, fanout: int = 1):
     """The one local-tail gate. Returns ``df.toPandas()`` when
-    ``fanout * df.count()`` fits ``LOCAL_TAIL_ROWS`` and no ``key_cols``
-    value is null, else None (the caller runs its distributed rounds).
-    ``fanout`` is the rows the local replay makes per input row (2 for
-    an edge list it symmetrizes). Nulls stay distributed because the
-    numpy replays code keys with np.unique/searchsorted, which raise on
-    None in object arrays, while the distributed equi-joins simply
-    never match null keys. With the cap at 0 no job runs."""
-    if LOCAL_TAIL_ROWS <= 0 or fanout * df.count() > LOCAL_TAIL_ROWS:
+    ``fanout * row_count(df)`` fits ``LOCAL_TAIL_ROWS`` and no
+    ``key_cols`` value is null, else None (the caller runs its
+    distributed rounds). ``fanout`` is the rows the local replay makes
+    per input row (2 for an edge list it symmetrizes). Nulls stay
+    distributed because the numpy replays code keys with
+    np.unique/searchsorted, which raise on None in object arrays, while
+    the distributed equi-joins simply never match null keys.
+
+    Cost under the cap: one ``row_count`` and one Arrow collect. Both
+    run the plan of the same ``df`` object, so the collect skips every
+    shuffle stage the count executed and runs one stage. Pass the LAZY frame: persisting
+    or repartitioning it first only adds a cache write nobody reads on
+    the local path. With the cap at 0 no job runs."""
+    if LOCAL_TAIL_ROWS <= 0 or fanout * row_count(df) > LOCAL_TAIL_ROWS:
         return None
     pdf = df.toPandas()  # Arrow batch transfer — bounded by the cap
     if bool(pdf[list(key_cols)].isna().any().any()):

@@ -12,6 +12,8 @@ all positive, so its AUC is undefined.
 
 from __future__ import annotations
 
+import contextlib
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -308,3 +310,33 @@ def test_boost_holdout_matches_three_aggregate_form(spark, test_fold):
         assert (n_train, n_test) == (28, 10)
     else:
         assert (n_train, n_test, test_rmse) == (38, 0, None)
+
+
+# feature names Spark would parse: a nested-field path and a backtick
+ODD_NAMES = {"f_a": "a.b", "f_b": "c`d"}
+ODD_FITS = {
+    "boost_stumps_train": lambda df, feats: classify.boost_stumps_train(
+        df, F.col("lab"), feats, **BOOST),
+    "boost_stumps_holdout": lambda df, feats: classify.boost_stumps_holdout(
+        df, F.col("lab"), feats, _test(), **BOOST),
+    "decision_tree_train": lambda df, feats: classify.decision_tree_train(
+        df, F.col("lab"), feats, **TREE),
+}
+
+
+@pytest.mark.parametrize("path", ["local", "distributed"])
+@pytest.mark.parametrize("name", sorted(ODD_FITS))
+def test_feature_names_are_not_parsed(frames, distributed, name, path):
+    """Features named ``a.b`` and ``c`d`` train the same model as
+    ``f_a`` and ``f_b`` (the names sort the same way, so split ties
+    break the same way), on the local fit and the distributed rounds."""
+    df, _con = frames
+    back = {v: k for k, v in ODD_NAMES.items()}
+
+    def rows(names):
+        feats = [(names.get(n, n), F.col(n)) for n in ALL]
+        out = ODD_FITS[name](df, feats).collect()
+        return sorted(repr(tuple(back.get(v, v) for v in r)) for r in out)
+
+    with distributed() if path == "distributed" else contextlib.nullcontext():
+        assert rows(ODD_NAMES) == rows({})
