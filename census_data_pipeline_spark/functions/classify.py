@@ -40,6 +40,7 @@ import operator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from census_data_pipeline_spark.sources.catalog import (
@@ -1201,6 +1202,24 @@ def _stump_model(
     )
 
 
+def _np_bin(x, mn: float, width: float, bins: int):
+    """``_bin_lit`` over the finite doubles ``x`` in numpy, to the
+    bit: Spark's ``floor`` is a BIGINT (a double past its range
+    saturates) and the non-ANSI ``CAST(... AS INT)`` keeps its low 32
+    bits, so a row far outside the train range can wrap before the
+    clip to [0, bins − 1]."""
+    import numpy as np
+
+    if width == 0.0:
+        return np.zeros(len(x), dtype=np.int64)
+    q = np.floor((x - mn) / width)
+    hi, lo = q >= 2.0 ** 63, q < -(2.0 ** 63)
+    big = np.where(hi | lo, 0.0, q).astype(np.int64)
+    big[hi], big[lo] = np.iinfo(np.int64).max, np.iinfo(np.int64).min
+    as_int = ((big & 0xFFFFFFFF) ^ 0x80000000) - 0x80000000
+    return np.clip(as_int, 0, bins - 1)
+
+
 def _boost_fit_local(
     pdf, names: list[str], rounds: int, bins: int, lr: float
 ) -> dict | None:
@@ -1227,11 +1246,7 @@ def _boost_fit_local(
         lo = float(x.min())
         w = (float(x.max()) - lo) / float(bins)
         mn[n], wd[n] = lo, w
-        codes.append(
-            np.zeros(len(x), dtype=np.int64) if w == 0.0
-            else np.clip(np.floor((x - lo) / w), 0, bins - 1)
-            .astype(np.int64)
-        )
+        codes.append(_np_bin(x, lo, w, bins))
     # Spark's avg is sum / count; its round never yields -0.0 (+ 0.0
     # turns a HALF_UP -0.0 into 0.0 the same way)
     f0 = _pyround(float(y.sum()) / len(y), 6) + 0.0
@@ -2041,6 +2056,56 @@ def _boost_score(bins: int, pym: dict) -> Column:
     )
 
 
+def _boost_holdout_local(spark, pdf, names: list[str], rounds: int,
+                         bins: int, lr: float) -> DataFrame | None:
+    """``boost_stumps_holdout``'s row on the driver, over ``pdf``, the
+    gate's one collect of the null-guarded (__t, __y, features…) rows:
+    the train fold (``__t`` false) fits through ``_boost_fit_local``,
+    then every row takes the train-stats bins (``_np_bin``) and the
+    same row-local double chains as the distributed aggregate — the
+    train residual y − F₀ − leaf₁ − … and the test error
+    y − (F₀ + leaf₁ + …) — and each fold's RMSE is
+    round(sqrt(Σ err² / n), 6), NULL for an empty fold. None when a
+    value or a squared-error sum is non-finite or the train fold is
+    empty: those stay with the distributed path."""
+    import math
+
+    import numpy as np
+
+    y = pdf["__y"].to_numpy(dtype=np.float64)
+    xs = {n: pdf[n].to_numpy(dtype=np.float64) for n in names}
+    if not all(np.isfinite(a).all() for a in (y, *xs.values())):
+        return None
+    # a NULL fold flag belongs to neither fold
+    train = pdf["__t"].eq(False).to_numpy()
+    test = pdf["__t"].eq(True).to_numpy()
+    pym = _boost_fit_local(pdf[train], names, rounds, bins, lr)
+    if pym is None:
+        return None
+    resid, pred = y - pym["f0"], pym["f0"]
+    for w in pym["winners"]:
+        if w is not None:
+            f, bn, lv, rv = w
+            leaf = np.where(
+                _np_bin(xs[f], pym["mn"][f], pym["wd"][f], bins) <= bn,
+                lv, rv)
+            resid, pred = resid - leaf, pred + leaf
+    counts = [int(train.sum()), int(test.sum())]
+    sums = [float(np.sum(e * e)) for e in (resid[train], (y - pred)[test])]
+    if not all(math.isfinite(v) for v in sums):
+        return None  # an overflowed square: Spark's inf semantics
+    # _rmse6: round(sqrt(avg(err²)), 6), NULL over no rows
+    rmse = [None if n == 0 else _pyround(math.sqrt(v / n), 6)
+            for v, n in zip(sums, counts)]
+    schema = T.StructType([
+        T.StructField("n_train", T.LongType(), False),
+        T.StructField("n_test", T.LongType(), False),
+        T.StructField("train_rmse", T.DoubleType()),
+        T.StructField("test_rmse", T.DoubleType()),
+    ])
+    return local_frame(spark, schema, [[v] for v in counts + rmse])
+
+
 def boost_stumps_holdout(
     df: DataFrame,
     target: Column,
@@ -2060,16 +2125,31 @@ def boost_stumps_holdout(
     Returns one row: (n_train, n_test, train_rmse, test_rmse); a row
     whose ``test_pred`` is NULL belongs to neither fold.
 
-    Scale shape: label, features and fold flag are evaluated ONCE into
-    the persisted ``_single_prep`` frame; the fit reads its null-guarded
-    train rows (stats and F₀ in one aggregate, then one histogram scan
-    per round). Then the model is literals, the prep is released, and
-    ONE conditional aggregate over the null-guarded rows returns all
-    four values: the train residual chain (``y − F₀ − leaf₁ − …``, the
-    fit's exact arithmetic) on the train side, y − (F₀ + leaf₁ + …),
-    the ``_boost_score`` arithmetic, on the test side — no model frame,
-    no join, one scan."""
+    Scale shape: the lazy null-guarded (__t, __y, features…) rows go
+    through the one local-tail gate. Under ``catalog.LOCAL_TAIL_ROWS``
+    the operator finishes on the driver off that one collect
+    (``_boost_holdout_local``) and returns a 1-row local frame. Over the
+    cap — or with a non-finite value or an empty train fold — label,
+    features and fold flag are evaluated ONCE into the persisted
+    ``_single_prep`` frame; the fit reads its null-guarded train rows
+    (stats and F₀ in one aggregate, then one histogram scan per round).
+    Then the model is literals, the prep is released, and ONE
+    conditional aggregate over the null-guarded rows returns all four
+    values: the train residual chain (``y − F₀ − leaf₁ − …``, the fit's
+    exact arithmetic) on the train side, y − (F₀ + leaf₁ + …), the
+    ``_boost_score`` arithmetic, on the test side — no model frame, no
+    join, one scan."""
+    _boost_check(rounds, bins)
     names = [n for n, _ in features]
+    pdf = local_tail(df.select(
+        test_pred.alias("__t"),
+        target.cast("double").alias("__y"),
+        *[e.cast("double").alias(n) for n, e in features],
+    ).na.drop(subset=["__y", *[_q(n) for n in names]]))
+    out = None if pdf is None else _boost_holdout_local(
+        df.sparkSession, pdf, names, rounds, bins, lr)
+    if out is not None:
+        return out
     prep, train = _single_prep(df, target.cast("double"), features,
                                test_pred)
     # the ``_guarded`` rule

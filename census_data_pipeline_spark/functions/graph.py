@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from census_data_pipeline_spark.sources import catalog
 from census_data_pipeline_spark.sources.catalog import (
@@ -39,9 +40,10 @@ def _persist_gated(e: DataFrame) -> DataFrame:
     """An edge frame the gate refused, spread to the cluster's
     parallelism and persisted for the distributed rounds that read it
     more than once. Called on the SAME object ``local_tail`` counted:
-    when that object is already spread, its checkpoint reuses the
-    shuffle stages the count ran; a few-file input that
-    ``ensure_parallelism`` repartitions is evaluated once more."""
+    when that object is already spread (a file scan of enough files, or
+    a plan that ends in an exchange), ``ensure_parallelism`` leaves it
+    as it is and its checkpoint reuses the shuffle stages the count
+    ran; only a few-file scan is repartitioned and read once more."""
     return _round_persist(ensure_parallelism(e))
 
 
@@ -1156,18 +1158,28 @@ def _symmetrize_simple(
     )
 
 
-def _label_frame(labels: DataFrame):
-    """Collect a 2-column (id, label) frame for the local tails as a
-    pandas (id, lab) frame, or None — the caller stays distributed —
-    when an id or label is null or an id repeats (ADVICE r12: the
-    distributed equi-joins fan each edge out per duplicate label row;
-    a coded lookup resolves one label per id, so the local path must
-    not claim those inputs)."""
-    lpdf = labels.select(
-        F.col(labels.columns[0]).alias("id"),
-        F.col(labels.columns[1]).alias("lab"),
-    ).toPandas()
-    if bool(lpdf.isna().any().any() or lpdf["id"].duplicated().any()):
+def _label_frame(labels: DataFrame, id_col: str | None = None,
+                 label_col: str | None = None):
+    """The (id, label) columns of ``labels`` — by default its first two
+    — as a pandas (id, lab) frame for the local tails, through the
+    local-tail gate (so the collect is row-bounded, and a frame
+    ``catalog.local_frame`` built, such as another tail's result, comes
+    back with no Spark job), or None — the caller stays distributed —
+    when the gate refuses, an id or label is null or an id repeats
+    (ADVICE r12: the distributed equi-joins fan each edge out per
+    duplicate label row; a coded lookup resolves one label per id, so
+    the local path must not claim those inputs)."""
+    cols = labels.columns
+    id_col = cols[0] if id_col is None else id_col
+    label_col = cols[1] if label_col is None else label_col
+    if cols != [id_col, label_col]:
+        labels = labels.select(F.col(id_col).alias("id"),
+                               F.col(label_col).alias("lab"))
+    lpdf = local_tail(labels, *labels.columns)
+    if lpdf is None:
+        return None
+    lpdf.columns = ["id", "lab"]
+    if bool(lpdf["id"].duplicated().any()):
         return None
     return lpdf
 
@@ -1208,23 +1220,27 @@ def _labelled_sym(epdf, lpdf, src, dst, weight_col):
             w_sym[keep])
 
 
-def _modularity_local_joined(epdf, lpdf, lab, src, dst, weight_col):
-    """``modularity``'s bounded local stats pass (r12, the
-    coreness/louvain gate discipline) over the gate-collected edge and
-    label frames: the heavy part — two |E|-scale label joins + the
-    (s_c, d_c) groupBy — runs in numpy (every sum is over exact
-    integer-valued doubles, so order cannot matter), while the
-    ROUNDING-SENSITIVE final arithmetic (round/pow/÷, the '<all>' sum
-    of rounded contributions) stays in the SAME Spark expressions in
-    ``modularity`` over the tiny per-community stats frame — the two
-    paths share every division and F.round call, so they cannot
-    diverge at rounding boundaries. 100 TB graphs never enter the
-    gate. Returns the per-community (community, n_nodes, __s, __d,
-    __St) frame."""
+# label types whose '<all>' union column is their plain str(): the union
+# widens an integral label to string, which Spark writes as its digits
+_LOCAL_LABEL_TYPES = (T.StringType, T.LongType, T.IntegerType,
+                      T.ShortType, T.ByteType)
+
+
+def _modularity_local(epdf, lpdf, spark, lab_field, src, dst,
+                      weight_col) -> DataFrame:
+    """``modularity``'s whole result on the driver, over the
+    gate-collected edge and label frames: the (s_c, d_c, n_nodes) stats
+    in numpy (every sum is over exact integer-valued doubles, so order
+    cannot matter) and the final arithmetic as the distributed
+    expressions' Python twins — S = Σ d_c, q_c = round(s_c/S −
+    (d_c/S)·(d_c/S), 6) + 0.0 with Spark's HALF_UP ``round``
+    (``_pyround``; ``pow(x, 2)`` is exactly ``x*x``), the '<all>' row's
+    sums and its 6-dp rounded Σ q_c. Returns one ``catalog.local_frame``
+    in the distributed path's schema: the per-community rows in label
+    order, then '<all>'."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
+
+    from census_data_pipeline_spark.functions.classify import _pyround
 
     coms, n_nodes_a, lsrc_k, ldst_k, w_k = _labelled_sym(
         epdf, lpdf, src, dst, weight_col)
@@ -1234,24 +1250,33 @@ def _modularity_local_joined(epdf, lpdf, lab, src, dst, weight_col):
     np.add.at(d_a, lsrc_k, w_k)
     intra = lsrc_k == ldst_k
     np.add.at(s_a, lsrc_k[intra], w_k[intra])
-    lab_field = lab.schema["lab"]
-    stats_schema = StructType([
-        StructField("community", lab_field.dataType,
-                    lab_field.nullable),
-        StructField("n_nodes", LongType(), False),
-        StructField("__s", DoubleType(), False),
-        StructField("__d", DoubleType(), False),
+    S = float(d_a.sum())
+    s_l, d_l = s_a.tolist(), d_a.tolist()
+    q = ([0.0] * C if S == 0 else
+         [_pyround(s / S - (d / S) * (d / S), 6) + 0.0
+          for s, d in zip(s_l, d_l)])
+    n = n_nodes_a.tolist()
+    if weight_col is None:
+        mass_t, names = T.LongType(), ["intra_edges", "degree_sum"]
+        intra_m = [int(s / 2) for s in s_l]
+        deg_m = [int(d) for d in d_l]
+    else:
+        mass_t, names = T.DoubleType(), ["intra_weight", "weight_sum"]
+        intra_m = [s / 2 for s in s_l]
+        deg_m = d_l
+    schema = T.StructType([
+        T.StructField("community", T.StringType(), lab_field.nullable),
+        T.StructField("n_nodes", T.LongType()),
+        T.StructField(names[0], mass_t),
+        T.StructField(names[1], mass_t),
+        T.StructField("q_contrib", T.DoubleType()),
     ])
-    stats_pdf = pd.DataFrame({
-        "community": coms, "n_nodes": n_nodes_a,
-        "__s": s_a, "__d": d_a,
-    })
-    per_stats = lab.sparkSession.createDataFrame(
-        stats_pdf, stats_schema)
-    total = per_stats.agg(
-        F.coalesce(F.sum("__d"), F.lit(0.0)).alias("__St")
-    )
-    return per_stats.crossJoin(F.broadcast(total))
+    # the '<all>' row: SUM over no rows is NULL
+    return catalog.local_frame(spark, schema, [
+        [*(str(c) for c in coms.tolist()), "<all>"],
+        *([*v, sum(v) if C else None] for v in (n, intra_m, deg_m)),
+        [*q, _pyround(sum(q), 6) + 0.0],
+    ])
 
 
 def modularity(
@@ -1297,54 +1322,56 @@ def modularity(
     (s_c, d_c) per community, the grand total S broadcast back as a
     1-row crossJoin (never an unbounded driver collect) — closed-form,
     no iteration, no window. While twice the raw edge count fits
-    ``catalog.LOCAL_TAIL_ROWS`` (the coreness/louvain discipline) the
-    integer-exact (s_c, d_c, n_nodes) stats pass runs in numpy off
-    one bounded Arrow collect while ALL rounding-sensitive arithmetic
-    (÷, pow, F.round, the '<all>' sum) stays in the shared Spark
-    expressions — the two paths cannot diverge at rounding boundaries.
-    Cite: reference has no graph tier; this is the missing evaluation
-    beside LPA (SURVEY §2.11)."""
+    ``catalog.LOCAL_TAIL_ROWS`` (the coreness/louvain discipline) and
+    the labels are strings or integers, the operator finishes on the
+    driver off one bounded Arrow collect of the edges and the gated
+    labels (no job at all when they are another local tail's result):
+    ``_modularity_local`` computes the stats in numpy and the final
+    arithmetic as the Python twins of the expressions below, and
+    returns one local frame. Cite: reference has no graph tier; this is
+    the missing evaluation beside LPA (SURVEY §2.11)."""
     eprep = _louvain_eprep(edges, src, dst, weight_col)
     lab = labels.select(
         F.col(id_col).alias("id"), F.col(label_col).alias("lab")
     )
-    joined = None
-    epdf = local_tail(eprep, src, dst, fanout=2)
-    lpdf = None if epdf is None else _label_frame(lab)
-    if lpdf is not None:
-        joined = _modularity_local_joined(
-            epdf, lpdf, lab, src, dst, weight_col)
-    if joined is None:
-        sym = _symmetrize_simple(
-            _persist_gated(eprep), src, dst,
-            "__w" if weight_col else None,
-        )
-        la = lab.select(F.col("id").alias("__sid"),
-                        F.col("lab").alias("lsrc"))
-        lb = lab.select(F.col("id").alias("__did"),
-                        F.col("lab").alias("ldst"))
-        labeled = (
-            sym.join(la, sym["src"] == la["__sid"])
-            .join(lb, sym["dst"] == lb["__did"])
-            .select("lsrc", "ldst", "__w")
-        )
-        stats = labeled.groupBy(F.col("lsrc").alias("community")).agg(
-            F.sum(
-                F.when(F.col("lsrc") == F.col("ldst"), F.col("__w"))
-                .otherwise(F.lit(0.0))
-            ).alias("__s"),
-            F.sum("__w").alias("__d"),
-        )
-        sizes = lab.groupBy(F.col("lab").alias("community")).agg(
-            F.count("*").alias("n_nodes")
-        )
-        total = stats.agg(
-            F.coalesce(F.sum("__d"), F.lit(0.0)).alias("__St")
-        )
-        joined = (
-            sizes.join(stats, "community", "left")
-            .crossJoin(F.broadcast(total))
-        )
+    lab_field = lab.schema["lab"]
+    if isinstance(lab_field.dataType, _LOCAL_LABEL_TYPES):
+        epdf = local_tail(eprep, src, dst, fanout=2)
+        lpdf = (None if epdf is None
+                else _label_frame(labels, id_col, label_col))
+        if lpdf is not None:
+            return _modularity_local(epdf, lpdf, lab.sparkSession,
+                                     lab_field, src, dst, weight_col)
+    sym = _symmetrize_simple(
+        _persist_gated(eprep), src, dst,
+        "__w" if weight_col else None,
+    )
+    la = lab.select(F.col("id").alias("__sid"),
+                    F.col("lab").alias("lsrc"))
+    lb = lab.select(F.col("id").alias("__did"),
+                    F.col("lab").alias("ldst"))
+    labeled = (
+        sym.join(la, sym["src"] == la["__sid"])
+        .join(lb, sym["dst"] == lb["__did"])
+        .select("lsrc", "ldst", "__w")
+    )
+    stats = labeled.groupBy(F.col("lsrc").alias("community")).agg(
+        F.sum(
+            F.when(F.col("lsrc") == F.col("ldst"), F.col("__w"))
+            .otherwise(F.lit(0.0))
+        ).alias("__s"),
+        F.sum("__w").alias("__d"),
+    )
+    sizes = lab.groupBy(F.col("lab").alias("community")).agg(
+        F.count("*").alias("n_nodes")
+    )
+    total = stats.agg(
+        F.coalesce(F.sum("__d"), F.lit(0.0)).alias("__St")
+    )
+    joined = (
+        sizes.join(stats, "community", "left")
+        .crossJoin(F.broadcast(total))
+    )
     if weight_col is None:
         mass_cols = [
             (F.coalesce(F.col("__s"), F.lit(0.0)) / 2)
@@ -1706,15 +1733,13 @@ def _conductance_local_stats(
     epdf, lpdf, lab: DataFrame, src: str, dst: str,
     weight_col: str | None,
 ) -> DataFrame:
-    """Bounded local stats pass for ``conductance`` (r13, the
-    ``_modularity_local_joined`` discipline) over the gate-collected
-    edge and label frames: the integer-exact (cut_c, vol_c, n_nodes)
-    sums run in numpy while ALL rounding-sensitive arithmetic (min, ÷,
-    F.round, the '<all>' row) stays in the shared Spark expressions —
-    the two paths cannot diverge at rounding boundaries. Returns the
-    (community, n_nodes, __cut, __vol) frame."""
+    """Bounded local stats pass for ``conductance`` (r13) over the
+    gate-collected edge and label frames: the integer-exact (cut_c,
+    vol_c, n_nodes) sums run in numpy while ALL rounding-sensitive
+    arithmetic (min, ÷, F.round, the '<all>' row) stays in the shared
+    Spark expressions — the two paths cannot diverge at rounding
+    boundaries. Returns the (community, n_nodes, __cut, __vol) frame."""
     import numpy as np
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     coms, n_nodes_a, lsrc_k, ldst_k, w_k = _labelled_sym(
         epdf, lpdf, src, dst, weight_col)
@@ -1727,25 +1752,21 @@ def _conductance_local_stats(
     np.add.at(cut_a, lsrc_k[boundary], w_k[boundary])
     has[lsrc_k] = True
     lab_field = lab.schema["lab"]
-    stats_schema = StructType([
-        StructField("community", lab_field.dataType, lab_field.nullable),
-        StructField("n_nodes", LongType(), False),
-        StructField("__cut", DoubleType(), True),
-        StructField("__vol", DoubleType(), True),
+    stats_schema = T.StructType([
+        T.StructField("community", lab_field.dataType, lab_field.nullable),
+        T.StructField("n_nodes", T.LongType(), False),
+        T.StructField("__cut", T.DoubleType(), True),
+        T.StructField("__vol", T.DoubleType(), True),
     ])
     # edge-less communities carry NULL cut/vol, exactly like the
-    # distributed sizes ⟕ stats left join (list-of-tuples, not a
-    # pandas float column: NaN would survive as NaN, not NULL)
-    rows = [
-        (
-            c,
-            int(n_nodes_a[i]),
-            float(cut_a[i]) if has[i] else None,
-            float(vol_a[i]) if has[i] else None,
-        )
-        for i, c in enumerate(coms.tolist())
-    ]
-    return lab.sparkSession.createDataFrame(rows, stats_schema)
+    # distributed sizes ⟕ stats left join (None cells, not a float
+    # array: NaN would survive as NaN, not NULL)
+    return catalog.local_frame(lab.sparkSession, stats_schema, [
+        coms.tolist(),
+        n_nodes_a.tolist(),
+        np.where(has, cut_a, None).tolist(),
+        np.where(has, vol_a, None).tolist(),
+    ])
 
 
 def conductance(
@@ -1804,14 +1825,13 @@ def conductance(
     else:
         zero = F.lit(0.0)
         cut_name, cast_t = "cut_weight", "double"
-    # Bounded local stats pass (r13, the _modularity_local_joined
-    # discipline): integer-exact cut/vol sums in numpy off one Arrow
-    # collect; every rounding-sensitive expression below is shared by
-    # both paths. 100 TB graphs never enter the gate.
+    # Bounded local stats pass (r13): integer-exact cut/vol sums in
+    # numpy off one Arrow collect; every rounding-sensitive expression
+    # below is shared by both paths. 100 TB graphs never enter the gate.
     eprep = _louvain_eprep(edges, src, dst, weight_col)
     combined = None
     epdf = local_tail(eprep, src, dst, fanout=2)
-    lpdf = None if epdf is None else _label_frame(lab)
+    lpdf = None if epdf is None else _label_frame(labels, id_col, label_col)
     if lpdf is not None:
         combined = _conductance_local_stats(
             epdf, lpdf, lab, src, dst, weight_col

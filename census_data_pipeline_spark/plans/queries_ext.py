@@ -3285,11 +3285,12 @@ def graph_modularity(spark, sf_dir):
             F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
         )
     )
-    # lazily persisted (r14 — VERDICT r13 #1): LPA and the modularity
+    # persisted once (r14 — VERDICT r13 #1): LPA and the modularity
     # scorer both consume e, and each gates its own lazy projection of
-    # it, so the FIRST gate count materializes these blocks; the r13
-    # eager count here was a redundant third pass over the
-    # orders⋈lineitem join
+    # it. round_persist runs the join's shuffle map stages here; the
+    # FIRST gate count runs the final stage and writes these blocks,
+    # which the second gate reads (no eager count: that was a redundant
+    # third pass over the orders⋈lineitem join)
     e = round_persist(e)
     labels = _g.label_propagation(e, iterations=5, broadcast_labels=True)
     return _g.modularity(e, labels)
@@ -4683,10 +4684,11 @@ def graph_louvain_move(spark, sf_dir):
             F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
         )
     )
-    # lazily persisted (r14 — VERDICT r13 #1): LPA init, the mover and
-    # the modularity scorer all consume e; LPA's gate count over its
-    # projection of e materializes these blocks and the other two
-    # operators' gates read them
+    # persisted once (r14 — VERDICT r13 #1): LPA init, the mover and
+    # the modularity scorer all consume e. round_persist runs the
+    # join's shuffle map stages here; LPA's gate count over its
+    # projection of e runs the final stage and writes these blocks, and
+    # the other two operators' gates read them
     e = round_persist(e)
     lpa = _g.label_propagation(e, iterations=5, broadcast_labels=True)
     labels = _g.louvain_local_move(e, rounds=4, init_labels=lpa)
@@ -4799,8 +4801,9 @@ def _sparse_purchase_graphs(spark, sf_dir):
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .select("o_custkey", "l_suppkey")
     )
-    # lazily persisted (r14 — VERDICT r13 #1): both forms consume base,
-    # and the first consumer's gate count materializes these blocks;
+    # persisted once (r14 — VERDICT r13 #1): both forms consume base.
+    # round_persist runs the join's shuffle map stages here, and the
+    # first consumer's gate count writes these blocks;
     # e/ew stay lazy because every graph operator gates its own lazy
     # projection and persists only when the gate refuses it
     base = round_persist(base)
@@ -4983,9 +4986,10 @@ def graph_leiden(spark, sf_dir):
             F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
         )
     )
-    # lazily persisted (r14 — VERDICT r13 #1): leiden and the modularity
-    # scorer both consume e; the first consumer's gate count over its
-    # projection of e materializes these blocks
+    # persisted once (r14 — VERDICT r13 #1): leiden and the modularity
+    # scorer both consume e. round_persist runs the join's shuffle map
+    # stages here; the first consumer's gate count over its projection
+    # of e runs the final stage and writes these blocks
     e = round_persist(e)
     labels = _g.leiden(e, levels=4, rounds=14)
     return _g.modularity(e, labels)
@@ -5033,9 +5037,11 @@ def graph_louvain_multilevel(spark, sf_dir):
             F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
         )
     )
-    # lazily persisted (r14 — VERDICT r13 #1): the multilevel mover and
-    # the modularity scorer both consume e; the first consumer's gate
-    # count over its projection of e materializes these blocks
+    # persisted once (r14 — VERDICT r13 #1): the multilevel mover and
+    # the modularity scorer both consume e. round_persist runs the
+    # join's shuffle map stages here; the first consumer's gate count
+    # over its projection of e runs the final stage and writes these
+    # blocks
     e = round_persist(e)
     labels = _g.louvain_multilevel(e, levels=4, rounds=10)
     return _g.modularity(e, labels)

@@ -14,6 +14,8 @@ a single file per table.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -78,7 +80,10 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     parallelism. Small parquet files scan as ONE partition, which serializes
     every downstream narrow transformation onto one core — fatal for
     CPU-heavy per-row work (hashing, shingling, vector math). At real scale
-    inputs arrive multi-file and this is a no-op."""
+    inputs arrive multi-file and this is a no-op, and so it is for a frame
+    whose physical plan already ends in at least ``target`` partitions (a
+    join, distinct or groupBy output is spread by its exchange however few
+    files feed it)."""
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism
     # File count stands in for scan parallelism without the df.rdd hop
@@ -89,6 +94,11 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     files = df.inputFiles()
     if files and len(files) >= target:
         return df
+    # inputFiles lists every file scan under the plan, so a few-file
+    # source says nothing about a shuffled frame: ask the planned output
+    # partitioning (planning only, no job)
+    if _planned_partitions(df) >= target:
+        return df
     if not files:
         # Non-file-backed frame (in-memory, shuffled intermediate): fall
         # back to the physical partition count before forcing a shuffle —
@@ -97,6 +107,16 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
         if df.rdd.getNumPartitions() >= target:
             return df
     return df.repartition(target)
+
+
+def _planned_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``'s planned output partitioning, 0 when
+    the planner does not know it (a file or local scan). Under AQE it is
+    the current plan's, exchanges included; reading it runs no job."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return int(plan.outputPartitioning().numPartitions())
 
 
 def row_count(df: DataFrame) -> int:
@@ -137,11 +157,14 @@ def round_materialize(df: DataFrame, prior: DataFrame | None = None) -> DataFram
 
 
 def round_persist(df: DataFrame) -> DataFrame:
-    """Lazy sibling of ``round_materialize``: cut lineage and
-    ``persist`` WITHOUT an eager count, so the blocks materialize at
-    the FIRST consuming action and every later consumer reads them (the
-    cache manager rewrites consumer plans to InMemoryTableScan). For a
-    frame with several consumers — a query-level frame several
+    """Sibling of ``round_materialize`` without its eager count: cut
+    lineage and ``persist``, so every consumer after the first reads the
+    stored blocks (the cache manager rewrites consumer plans to
+    InMemoryTableScan). Not fully lazy: ``localCheckpoint`` builds its
+    RDD from the executed plan, and under AQE that runs the plan's
+    shuffle map stages at this call; only the final stage waits for the
+    first consuming action. A plan without an exchange runs no job here.
+    For a frame with several consumers — a query-level frame several
     operators read, a prep frame every fit round scans, or the
     distributed branch behind a ``local_tail`` gate. Never persist a
     frame only so a gate can count it: gate the lazy frame, then call
@@ -172,15 +195,29 @@ def local_tail(df: DataFrame, *key_cols: str, fanout: int = 1):
 
     Cost under the cap: one ``row_count`` and one Arrow collect. Both
     run the plan of the same ``df`` object, so the collect skips every
-    shuffle stage the count executed and runs one stage. Pass the LAZY frame: persisting
-    or repartitioning it first only adds a cache write nobody reads on
-    the local path. With the cap at 0 no job runs."""
-    if LOCAL_TAIL_ROWS <= 0 or fanout * row_count(df) > LOCAL_TAIL_ROWS:
+    shuffle stage the count executed and runs one stage. Pass the LAZY
+    frame: persisting or repartitioning it first only adds a cache write
+    nobody reads on the local path. With the cap at 0 no job runs. A
+    frame ``local_frame`` returned is already on the driver: its Arrow
+    table's pandas form comes back under the same rules with no job."""
+    if LOCAL_TAIL_ROWS <= 0:
         return None
-    pdf = df.toPandas()  # Arrow batch transfer — bounded by the cap
+    table = _LOCAL_TABLES.get(df)
+    n = row_count(df) if table is None else table.num_rows
+    if fanout * n > LOCAL_TAIL_ROWS:
+        return None
+    # Arrow batch transfer — bounded by the cap
+    pdf = df.toPandas() if table is None else table.to_pandas()
     if bool(pdf[list(key_cols)].isna().any().any()):
         return None
     return pdf
+
+
+# The Arrow table behind each live frame ``local_frame`` built, for the
+# field types whose ``to_pandas()`` is exactly ``toPandas()``'s.
+_LOCAL_TABLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_ARROW_EXACT = (T.StringType, T.LongType, T.IntegerType, T.ShortType,
+                T.ByteType, T.DoubleType, T.FloatType, T.BooleanType)
 
 
 def local_frame(spark: SparkSession, schema: T.StructType, columns) -> DataFrame:
@@ -192,7 +229,9 @@ def local_frame(spark: SparkSession, schema: T.StructType, columns) -> DataFrame
     (``createDataFrame(rows, schema)``) is a PythonRDD that starts Python
     workers on every action. No pandas step, so nothing can fall back to
     that path. String fields keep the list path's cells: a non-string
-    value becomes its ``str()``, lower-case for bools."""
+    value becomes its ``str()``, lower-case for bools. The table stays
+    with the frame while the frame lives, so ``local_tail`` hands it
+    back without a job."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
@@ -209,7 +248,11 @@ def local_frame(spark: SparkSession, schema: T.StructType, columns) -> DataFrame
                 else str(v).lower() if isinstance(v, bool) else str(v)
                 for v in values
             ], at))
-    return spark.createDataFrame(pa.Table.from_arrays(arrays, names=schema.names), schema)
+    table = pa.Table.from_arrays(arrays, names=schema.names)
+    out = spark.createDataFrame(table, schema)
+    if all(isinstance(f.dataType, _ARROW_EXACT) for f in schema.fields):
+        _LOCAL_TABLES[out] = table
+    return out
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

@@ -287,24 +287,32 @@ def _old_boost_holdout(df, target, features, test_pred, rounds, bins, lr):
 
 
 @pytest.mark.parametrize("test_fold", [3, 9])
-def test_boost_holdout_matches_three_aggregate_form(spark, test_fold):
+def test_boost_holdout_matches_three_aggregate_form(spark, distributed,
+                                                     test_fold):
     """Differential: ``boost_stumps_holdout``'s one conditional
-    aggregate vs the three-aggregate form it replaced. On top of the
-    module frame (a null label in the train fold): a test-fold row with
-    a null feature, and a row whose fold — so whose fold predicate — is
-    NULL, which belongs to neither fold. Fold 9 leaves the test fold
-    empty: n_test 0 and a NULL test_rmse."""
+    aggregate (the distributed path) and its driver-built row (the
+    local path) vs the three-aggregate form they replaced. On top of
+    the module frame (a null label in the train fold): a test-fold row
+    with a null feature, and a row whose fold — so whose fold predicate
+    — is NULL, which belongs to neither fold. Fold 9 leaves the test
+    fold empty: n_test 0 and a NULL test_rmse."""
     rows = _rows() + [("t_null_feat", 3, 2.0, None, 5.0, 1.0),
                       ("no_fold", None, 3.0, 1.0, 5.0, 0.0)]
     df = spark.createDataFrame(rows, SCHEMA)
     args = (df, F.col("lab"), _feats(ALL), F.col("fold") == F.lit(test_fold))
-    got = classify.boost_stumps_holdout(*args, **BOOST)
-    plan = got._jdf.queryExecution().executedPlan().toString()
+    with distributed():
+        dist = classify.boost_stumps_holdout(*args, **BOOST)
+    plan = dist._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     assert plan.count("Aggregate(") == 2  # one aggregate: partial + final
+    got = classify.boost_stumps_holdout(*args, **BOOST)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "Exchange" not in plan and "Join" not in plan
     want = _old_boost_holdout(*args, **BOOST)
-    assert got.schema == want.schema
-    assert got.collect() == want.collect()
+    for out in (dist, got):
+        assert out.schema == want.schema
+        assert out.collect() == want.collect()
     n_train, n_test, _rm, test_rmse = got.collect()[0]
     if test_fold == 3:
         assert (n_train, n_test) == (28, 10)

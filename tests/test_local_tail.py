@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from census_data_pipeline_spark.functions import classify, dedup
 from census_data_pipeline_spark.functions import graph as G
@@ -410,3 +411,199 @@ def test_boost_holdout_empty_train_fold_matches_distributed(spark,
     with distributed():
         want = holdout()
     assert got == want and got[0][0] == 0  # n_train
+
+
+# ------------------- local results: modularity and the booster holdout
+
+
+def _exact(df):
+    """Schema and rows, each row by repr, so -0.0 and NULL stay distinct."""
+    return df.schema, sorted(repr(tuple(r)) for r in df.collect())
+
+
+_MOD_EDGES = [("a", "b", 1.0), ("b", "c", 2.0), ("c", "a", 1.0),
+              ("c", "d", 3.0), ("d", "e", 1.0), ("e", "e", 4.0),
+              ("a", "b", 2.0), ("f", "g", -1.0)]
+# "lone" is a labelled node without edges, the only member of "w"
+_MOD_LABELS = [("a", "x"), ("b", "x"), ("c", "y"), ("d", "y"), ("e", "z"),
+               ("g", "q"), ("lone", "w")]
+_MOD_CODES = {"x": 1, "y": 2, "z": 3, "q": 4, "w": 5}
+# a one-edge community beside 1101 edges: q = −(1/2202)² rounds to −0.0
+_CHAIN = [(f"n{i}", f"n{i + 1}", 1.0) for i in range(1100)]
+_MOD_CASES = {
+    "string": (_MOD_EDGES, _MOD_LABELS, "string"),
+    "bigint": (_MOD_EDGES, [(i, _MOD_CODES[c]) for i, c in _MOD_LABELS],
+               "bigint"),
+    "self_loops_only": ([("a", "a", 1.0), ("b", "b", 2.0)], _MOD_LABELS,
+                        "string"),
+    "empty_labels": (_MOD_EDGES, [], "string"),
+    "negative_zero": (_CHAIN + [("t", "n0", 1.0)],
+                      [(f"n{i}", "big") for i in range(1101)]
+                      + [("t", "tiny")], "string"),
+    # the coded lookup resolves one label per id: stays distributed
+    "duplicate_ids": (_MOD_EDGES, _MOD_LABELS + [("a", "y")], "string"),
+    # the '<all>' union writes a double label in Spark's format
+    "double_labels": (_MOD_EDGES,
+                      [(i, float(_MOD_CODES[c])) for i, c in _MOD_LABELS],
+                      "double"),
+}
+_MOD_DISTRIBUTED = {"duplicate_ids", "double_labels"}
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+@pytest.mark.parametrize("case", list(_MOD_CASES))
+def test_modularity_local_result_matches_distributed(
+        spark, monkeypatch, distributed, case, weighted):
+    edges, labels, lab_type = _MOD_CASES[case]
+    e = spark.createDataFrame(edges, _EDGES)
+    lab = spark.createDataFrame(labels, f"id string, community {lab_type}")
+    w = "w" if weighted else None
+    calls = []
+    local = G._modularity_local
+    monkeypatch.setattr(G, "_modularity_local",
+                        lambda *a: calls.append(a) or local(*a))
+    got = _exact(G.modularity(e, lab, weight_col=w))
+    assert bool(calls) == (case not in _MOD_DISTRIBUTED)
+    with distributed():
+        want = _exact(G.modularity(e, lab, weight_col=w))
+    assert got == want
+    if case == "negative_zero":
+        assert any(r.startswith("('tiny',") and r.endswith(" 0.0)")
+                   for r in got[1])
+
+
+def test_modularity_q_twin_matches_spark(spark):
+    """``_modularity_local``'s q_c arithmetic against Spark's own
+    expression on random integer-valued (s, d, S) triples."""
+    import random
+
+    from census_data_pipeline_spark.functions.classify import _pyround
+
+    rng = random.Random(11)
+    cols = ([], [], [])
+    for _ in range(12_000):
+        big = rng.randint(1, 10 ** rng.randint(1, 7))
+        d = rng.randint(0, big)
+        for col, v in zip(cols, (rng.randint(0, d), d, big)):
+            col.append(float(v))
+    schema = T.StructType([T.StructField(n, T.DoubleType())
+                           for n in ("s", "d", "tot")])
+    df = catalog.local_frame(spark, schema, cols)
+    s, d, tot = F.col("s"), F.col("d"), F.col("tot")
+    q = F.round(s / tot - F.pow(d / tot, F.lit(2)), 6) + F.lit(0.0)
+    got = [(r[0], r[1], r[2], repr(r[3]))
+           for r in df.select(s, d, tot, q).collect()]
+    want = [(a, b, c, repr(_pyround(a / c - (b / c) * (b / c), 6) + 0.0))
+            for a, b, c in zip(*cols)]
+    assert got == want
+
+
+def _holdout_rows(*extra):
+    return [(float(i % 5) / 7, float(i % 11), float(i % 3), i % 4)
+            for i in range(24)] + list(extra)
+
+
+_HOLDOUT_CASES = {
+    # NULL-fold rows belong to neither fold; null label/feature drop
+    "null_fold": (_holdout_rows((0.5, 3.0, 1.0, None), (0.25, 4.0, 2.0, None),
+                                (None, 1.0, 1.0, 1), (0.3, None, 1.0, 0)), 1),
+    "empty_test_fold": (_holdout_rows(), 9),
+    # train f_a spans [0, 10], width 2.5: below, at floor = 2^31 (the
+    # INT cast wraps to bin 0) and past BIGINT (saturates, wraps to 0)
+    "outside_train_range": (_holdout_rows(
+        (0.3, -50.0, 1.0, 1), (0.6, 5368709120.0, 7.0, 1),
+        (0.1, 1e300, -3.0, 1)), 1),
+    "constant_feature": ([(y, a, 5.0, f) for y, a, _b, f in _holdout_rows()],
+                         1),
+    # the null guard (na.drop) drops a NaN row on both paths
+    "nan_feature": (_holdout_rows((0.2, float("nan"), 1.0, 1)), 1),
+    # an infinite value survives the guard: Spark's inf arithmetic stays
+    # with the distributed path
+    "inf_feature": (_holdout_rows((0.2, float("inf"), 1.0, 1)), 1),
+}
+
+
+@pytest.mark.parametrize("case", list(_HOLDOUT_CASES))
+def test_boost_holdout_local_result_matches_distributed(
+        spark, monkeypatch, distributed, case):
+    rows, test_fold = _HOLDOUT_CASES[case]
+    df = spark.createDataFrame(rows, "y double, f_a double, f_b double, "
+                                     "fold int")
+    preps = []
+    prep = classify._single_prep
+    monkeypatch.setattr(classify, "_single_prep",
+                        lambda *a: preps.append(a) or prep(*a))
+
+    def holdout():
+        return _exact(classify.boost_stumps_holdout(
+            df, F.col("y"), [("f_a", F.col("f_a")), ("f_b", F.col("f_b"))],
+            F.col("fold") == F.lit(test_fold), rounds=3, bins=4))
+
+    got = holdout()
+    assert bool(preps) == (case == "inf_feature")
+    with distributed():
+        want = holdout()
+    assert got == want
+    if case == "empty_test_fold":
+        assert got[1][0].endswith(", None)")
+
+
+def test_handoffs_run_no_job_and_local_results_sink_in_one(spark, frames):
+    """The label hand-offs of the LPA → Louvain → modularity chain read
+    the driver-built frames back with no Spark job; modularity's and the
+    holdout's local results run one job at the sink."""
+    sc = spark.sparkContext
+    e = frames["adversarial"][0]
+    lpa = G.label_propagation(e, iterations=2)
+    moved = G.louvain_local_move(e, rounds=1, init_labels=lpa)
+    for name, handoff in (("lpa", lambda: G._label_frame(lpa)),
+                          ("louvain", lambda: G._label_frame(
+                              moved, "id", "community"))):
+        lpdf, jobs = _jobs(sc, f"handoff-{name}", handoff)
+        assert lpdf is not None and len(lpdf) and jobs == []
+    holdout = classify.boost_stumps_holdout(
+        e, F.length("src").cast("double"), [("f", F.length("dst"))],
+        F.col("src") > F.lit("d"), rounds=2, bins=4)
+    for name, out in (("modularity", G.modularity(e, moved)),
+                      ("holdout", holdout)):
+        _, jobs = _jobs(sc, f"sink-{name}", lambda: out.write.format(
+            "noop").mode("overwrite").save())
+        assert len(jobs) == 1
+
+
+# ------------------------------------------ materialization at the call
+
+
+def _single_file(spark, path, n):
+    df = spark.range(n).select((F.col("id") % 13).alias("k"),
+                               (F.col("id") % 5).alias("v"))
+    df.coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_round_persist_runs_map_stages_at_the_call(spark, tmp_path):
+    """``localCheckpoint(eager=False)`` builds its RDD from the executed
+    plan, and under AQE that runs a shuffled plan's map stages where
+    ``round_persist`` is called; a bare scan runs no job there."""
+    sc = spark.sparkContext
+    scan = _single_file(spark, str(tmp_path / "t.parquet"), 40)
+    for name, df, ran in (("shuffled", scan.select("k").distinct(), True),
+                          ("scan", scan, False)):
+        out, jobs = _jobs(sc, f"persist-{name}",
+                          lambda: catalog.round_persist(df))
+        out.unpersist()
+        assert bool(jobs) == ran
+
+
+def test_ensure_parallelism_keeps_a_spread_plan(spark, tmp_path):
+    """A join + distinct over two single-file sources is spread by its
+    exchanges and stays as it is; a bare single-file scan is
+    repartitioned."""
+    a = _single_file(spark, str(tmp_path / "a.parquet"), 60)
+    b = _single_file(spark, str(tmp_path / "b.parquet"), 30)
+    assert len(a.inputFiles()) == 1 and len(b.inputFiles()) == 1
+    spread = a.join(b.select(F.col("k").alias("k2"), F.col("v").alias("w")),
+                    F.col("k") == F.col("k2")).select("v", "w").distinct()
+    assert catalog.ensure_parallelism(spread) is spread
+    out = catalog.ensure_parallelism(a)
+    assert "Repartition" in out._jdf.queryExecution().optimizedPlan().toString()

@@ -290,12 +290,21 @@ def test_quantile_bottomk_sample_is_take_ordered(spark, sf_dir):
     assert not sort_lines, sort_lines
 
 
-def test_modularity_broadcasts_grand_total(spark, sf_dir):
-    # the 1-row S total must broadcast back (never a driver collect),
-    # and the label joins must be hash equi-joins
-    plan = _plan(spark, sf_dir, "graph_modularity")
+def test_modularity_broadcasts_grand_total(spark, sf_dir, distributed):
+    # the distributed path: the 1-row S total must broadcast back (never
+    # a driver collect), and the label joins must be hash equi-joins
+    with distributed():
+        plan = _plan(spark, sf_dir, "graph_modularity")
     assert "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_modularity_local_result_is_one_local_scan(spark, sf_dir):
+    # under the local-tail cap the result is built on the driver: one
+    # local relation, nothing left to shuffle or join
+    plan = _plan(spark, sf_dir, "graph_modularity")
+    assert "LocalTableScan" in plan
+    assert "Exchange" not in plan and "Join" not in plan
 
 
 def test_pr_auc_single_bounded_window(spark, sf_dir):

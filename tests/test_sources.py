@@ -176,16 +176,18 @@ def test_boundaries_match_list_path(spark):
 
 
 def test_driver_frames_built_only_by_local_frame():
-    """The census path and the classifier model frames build every frame
-    from driver data through ``catalog.local_frame``: no other
-    ``createDataFrame`` call in ``sources/``, ``pipeline.py``,
-    ``operators/joins.py`` or ``functions/classify.py``."""
+    """The census path, the classifier model frames and the graph
+    local tails build every frame from driver data through
+    ``catalog.local_frame``: no other ``createDataFrame`` call in
+    ``sources/``, ``pipeline.py``, ``operators/joins.py``,
+    ``functions/classify.py`` or ``functions/graph.py``."""
     import ast
     from pathlib import Path
 
     pkg = Path(census_api.__file__).resolve().parent.parent
     files = [*sorted((pkg / "sources").glob("*.py")), pkg / "pipeline.py",
-             pkg / "operators" / "joins.py", pkg / "functions" / "classify.py"]
+             pkg / "operators" / "joins.py", pkg / "functions" / "classify.py",
+             pkg / "functions" / "graph.py"]
     calls = []
     for path in files:
         tree = ast.parse(path.read_text(), str(path))
