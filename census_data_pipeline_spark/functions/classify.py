@@ -47,6 +47,7 @@ from census_data_pipeline_spark.sources.catalog import (
     ensure_parallelism,
     local_frame,
     local_tail,
+    round_persist,
     row_count,
 )
 
@@ -2129,40 +2130,42 @@ def boost_stumps_holdout(
     through the one local-tail gate. Under ``catalog.LOCAL_TAIL_ROWS``
     the operator finishes on the driver off that one collect
     (``_boost_holdout_local``) and returns a 1-row local frame. Over the
-    cap — or with a non-finite value or an empty train fold — label,
-    features and fold flag are evaluated ONCE into the persisted
-    ``_single_prep`` frame; the fit reads its null-guarded train rows
-    (stats and F₀ in one aggregate, then one histogram scan per round).
-    Then the model is literals, the prep is released, and ONE
-    conditional aggregate over the null-guarded rows returns all four
-    values: the train residual chain (``y − F₀ − leaf₁ − …``, the fit's
-    exact arithmetic) on the train side, y − (F₀ + leaf₁ + …), the
-    ``_boost_score`` arithmetic, on the test side — no model frame, no
-    join, one scan."""
+    cap — or with a non-finite value or an empty train fold — the gated
+    rows are persisted (``round_persist``) on the object the gate
+    counted; the fit reads their train fold (stats and F₀ in one
+    aggregate, then one histogram scan per round). Then the model is
+    literals, and ONE conditional aggregate over the persisted rows
+    returns all four values: the train residual chain
+    (``y − F₀ − leaf₁ − …``, the fit's exact arithmetic) on the train
+    side, y − (F₀ + leaf₁ + …), the ``_boost_score`` arithmetic, on the
+    test side — no model frame, no join, one scan."""
     _boost_check(rounds, bins)
     names = [n for n, _ in features]
-    pdf = local_tail(df.select(
+    # the ``_guarded`` rule
+    rows = df.select(
         test_pred.alias("__t"),
         target.cast("double").alias("__y"),
         *[e.cast("double").alias(n) for n, e in features],
-    ).na.drop(subset=["__y", *[_q(n) for n in names]]))
+    ).na.drop(subset=["__y", *[_q(n) for n in names]])
+    pdf = local_tail(rows)
     out = None if pdf is None else _boost_holdout_local(
         df.sparkSession, pdf, names, rounds, bins, lr)
     if out is not None:
         return out
-    prep, train = _single_prep(df, target.cast("double"), features,
-                               test_pred)
-    # the ``_guarded`` rule
-    rows = prep.na.drop(subset=["__y", *[_q(n) for n in names]])
+    # persisted from the object the gate counted (as graph's
+    # ``_persist_gated``): the fit rounds and the fold metrics read its
+    # blocks instead of featurizing ``df`` again
+    rows = round_persist(ensure_parallelism(rows))
+    y, test = F.col("__y"), F.col("__t")
+    train = ~test
     _resid, pym = _boost_fit(
         rows.filter(train).select("__y", *[_qcol(n) for n in names]),
         names, rounds, bins, lr,
     )
-    prep.unpersist()  # the model is driver-side literals now
     # the leaves are compiled once and shared by both chains: each
     # Column costs py4j round trips
     leaves = _boost_leaves(bins, pym)
-    y, test, f0 = F.col("__y"), F.col("__t"), _dlit(pym["f0"])
+    f0 = _dlit(pym["f0"])
     resid = functools.reduce(operator.sub, leaves, y - f0)
     pred = functools.reduce(operator.add, leaves, f0)  # ≡ _boost_score
     return rows.agg(
@@ -2703,8 +2706,6 @@ def logreg_kfold_cv(
             ) + ")"
         ).alias("__f", "__n_train", "__n_test", "__accuracy")
     )
-    from census_data_pipeline_spark.sources.catalog import round_persist
-
     per_fold = round_persist(
         stacked.join(aucf, stacked["__f"] == aucf["__fold"], "left")
         .select(
@@ -2853,8 +2854,6 @@ def decision_tree_kfold_cv(
                 6,
             ).alias(f"__acc_{f}")
         )
-    from census_data_pipeline_spark.sources.catalog import round_persist
-
     per_fold = round_persist(
         prep.agg(*agg_exprs).select(
             F.expr(

@@ -40,10 +40,9 @@ def _persist_gated(e: DataFrame) -> DataFrame:
     """An edge frame the gate refused, spread to the cluster's
     parallelism and persisted for the distributed rounds that read it
     more than once. Called on the SAME object ``local_tail`` counted:
-    when that object is already spread (a file scan of enough files, or
-    a plan that ends in an exchange), ``ensure_parallelism`` leaves it
-    as it is and its checkpoint reuses the shuffle stages the count
-    ran; only a few-file scan is repartitioned and read once more."""
+    when that object is already spread, its checkpoint reuses the
+    shuffle stages the count ran; a few-file input that
+    ``ensure_parallelism`` repartitions is evaluated once more."""
     return _round_persist(ensure_parallelism(e))
 
 

@@ -80,10 +80,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     parallelism. Small parquet files scan as ONE partition, which serializes
     every downstream narrow transformation onto one core — fatal for
     CPU-heavy per-row work (hashing, shingling, vector math). At real scale
-    inputs arrive multi-file and this is a no-op, and so it is for a frame
-    whose physical plan already ends in at least ``target`` partitions (a
-    join, distinct or groupBy output is spread by its exchange however few
-    files feed it)."""
+    inputs arrive multi-file and this is a no-op."""
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism
     # File count stands in for scan parallelism without the df.rdd hop
@@ -94,11 +91,6 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     files = df.inputFiles()
     if files and len(files) >= target:
         return df
-    # inputFiles lists every file scan under the plan, so a few-file
-    # source says nothing about a shuffled frame: ask the planned output
-    # partitioning (planning only, no job)
-    if _planned_partitions(df) >= target:
-        return df
     if not files:
         # Non-file-backed frame (in-memory, shuffled intermediate): fall
         # back to the physical partition count before forcing a shuffle —
@@ -107,16 +99,6 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
         if df.rdd.getNumPartitions() >= target:
             return df
     return df.repartition(target)
-
-
-def _planned_partitions(df: DataFrame) -> int:
-    """Partition count of ``df``'s planned output partitioning, 0 when
-    the planner does not know it (a file or local scan). Under AQE it is
-    the current plan's, exchanges included; reading it runs no job."""
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        plan = plan.executedPlan()
-    return int(plan.outputPartitioning().numPartitions())
 
 
 def row_count(df: DataFrame) -> int:

@@ -530,9 +530,9 @@ def test_boost_holdout_local_result_matches_distributed(
     df = spark.createDataFrame(rows, "y double, f_a double, f_b double, "
                                      "fold int")
     preps = []
-    prep = classify._single_prep
-    monkeypatch.setattr(classify, "_single_prep",
-                        lambda *a: preps.append(a) or prep(*a))
+    persist = classify.round_persist
+    monkeypatch.setattr(classify, "round_persist",
+                        lambda d: preps.append(d) or persist(d))
 
     def holdout():
         return _exact(classify.boost_stumps_holdout(
@@ -594,16 +594,3 @@ def test_round_persist_runs_map_stages_at_the_call(spark, tmp_path):
         out.unpersist()
         assert bool(jobs) == ran
 
-
-def test_ensure_parallelism_keeps_a_spread_plan(spark, tmp_path):
-    """A join + distinct over two single-file sources is spread by its
-    exchanges and stays as it is; a bare single-file scan is
-    repartitioned."""
-    a = _single_file(spark, str(tmp_path / "a.parquet"), 60)
-    b = _single_file(spark, str(tmp_path / "b.parquet"), 30)
-    assert len(a.inputFiles()) == 1 and len(b.inputFiles()) == 1
-    spread = a.join(b.select(F.col("k").alias("k2"), F.col("v").alias("w")),
-                    F.col("k") == F.col("k2")).select("v", "w").distinct()
-    assert catalog.ensure_parallelism(spread) is spread
-    out = catalog.ensure_parallelism(a)
-    assert "Repartition" in out._jdf.queryExecution().optimizedPlan().toString()
