@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from census_data_pipeline_spark.operators.cleaning import _quote
 from census_data_pipeline_spark.sources.catalog import (
     ensure_parallelism,
     local_frame,
@@ -72,16 +73,9 @@ def _sql_dlit(v) -> str:
     )
 
 
-def _q(name: str) -> str:
-    """``name`` as a backtick-quoted SQL identifier: a feature name with
-    a ``.`` or a backtick then resolves as the one column it names
-    instead of being parsed as a nested field or a syntax error."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _qcol(name: str) -> Column:
-    """The column named exactly ``name`` (see ``_q``)."""
-    return F.col(_q(name))
+    """The column named exactly ``name`` (see ``_quote``)."""
+    return F.col(_quote(name))
 
 
 def _bin_lit(x_sql: str, mn, width, bins: int) -> Column:
@@ -144,7 +138,7 @@ def _guarded(
     return df.select(
         label.cast(label_type).alias("__y"),
         *[e.cast("double").alias(n) for n, e in features],
-    ).na.drop(subset=["__y", *[_q(n) for n, _ in features]])
+    ).na.drop(subset=["__y", *[_quote(n) for n, _ in features]])
 
 
 def _single_prep(
@@ -503,7 +497,7 @@ def _tree_route_predict(names_t: list[str], bins: int, pym: dict) -> Column:
     (levels reassign exactly the split nodes; every terminal node is a
     leaf row by construction)."""
     bincol = {
-        n: _bin_lit(f"CAST({_q(n)} AS DOUBLE)", pym["mn"][n],
+        n: _bin_lit(f"CAST({_quote(n)} AS DOUBLE)", pym["mn"][n],
                     pym["wd"][n], bins)
         for n in names_t
     }
@@ -624,7 +618,7 @@ def _decision_tree_build_multi(
     ]
     bincol = [
         {
-            n: _bin_lit(f"CAST({_q(n)} AS DOUBLE)", mn[i][n], wd[i][n], bins)
+            n: _bin_lit(f"CAST({_quote(n)} AS DOUBLE)", mn[i][n], wd[i][n], bins)
             for n in names_t
         }
         for i, (_c, names_t) in enumerate(specs)
@@ -1099,7 +1093,7 @@ def _boost_prologue(
     binned = raw.select(
         "__y",
         *[
-            _bin_lit(_q(n), mn[n], wd[n], bins).alias(f"__b{i}")
+            _bin_lit(_quote(n), mn[n], wd[n], bins).alias(f"__b{i}")
             for i, n in enumerate(names)
         ],
     )
@@ -2039,7 +2033,7 @@ def _boost_leaves(bins: int, pym: dict) -> list[Column]:
     for w in pym["winners"]:
         if w is not None:
             f, bn, lv, rv = w
-            x = _bin_lit(_q(f), mn[f], wd[f], bins)
+            x = _bin_lit(_quote(f), mn[f], wd[f], bins)
             leaves.append(
                 F.when(x <= F.lit(bn), _dlit(lv)).otherwise(_dlit(rv))
             )
@@ -2146,7 +2140,7 @@ def boost_stumps_holdout(
         test_pred.alias("__t"),
         target.cast("double").alias("__y"),
         *[e.cast("double").alias(n) for n, e in features],
-    ).na.drop(subset=["__y", *[_q(n) for n in names]])
+    ).na.drop(subset=["__y", *[_quote(n) for n in names]])
     pdf = local_tail(rows)
     out = None if pdf is None else _boost_holdout_local(
         df.sparkSession, pdf, names, rounds, bins, lr)

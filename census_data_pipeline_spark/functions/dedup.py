@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from census_data_pipeline_spark.functions.text import shingles, tokens
+from census_data_pipeline_spark.operators.cleaning import _quote
 from census_data_pipeline_spark.sources.catalog import (
     ensure_parallelism,
     local_tail,
@@ -172,6 +173,17 @@ def minhash_signature(text_col: Column | str, num_hashes: int = 8,
     return F.array(*out)
 
 
+def _shingle_arrays(
+    df: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """(id, sh): each document's id and its distinct word-n-gram
+    shingle array, the exact-Jaccard verification's input."""
+    return ensure_parallelism(df).select(
+        F.col(_quote(id_col)).alias("id"),
+        shingles(F.col(_quote(text_col)), n).alias("sh"),
+    )
+
+
 def _minhash_band_frame(
     df: DataFrame,
     id_col: str,
@@ -183,44 +195,32 @@ def _minhash_band_frame(
     """(id, band, bucket) LSH band frame shared by the self-join dedup
     and the cross-corpus form: one shingle explode (md5 computed ONCE
     per (doc, shingle) — 8 hash fns from substrings of 2 digests), one
-    groupBy(id) for the whole signature, band buckets exploded
-    num_hashes/band_size rows per doc."""
-    n_bands = num_hashes // band_size
-
-    rows = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles(text_col, n)).alias("shingle"),
-    )
-    hashed = rows.select(
+    groupBy(id) for the whole signature, band buckets inlined
+    num_hashes/band_size rows per doc. Built as SQL text: one parse per
+    stage instead of a py4j call per Column node."""
+    # explode the shingle expression, not an (id, sh) frame's column:
+    # over an attribute Catalyst infers a size/isnotnull filter, which
+    # runs the shingle regex twice per row and lands under the
+    # repartition, so the verification side can no longer reuse it
+    sig = ensure_parallelism(df).select(
+        F.col(_quote(id_col)).alias("id"),
+        F.explode(shingles(F.col(_quote(text_col)), n)).alias("shingle"),
+    ).selectExpr(
         "id",
-        F.md5(F.concat(F.lit("a|"), F.col("shingle"))).alias("ha"),
-        F.md5(F.concat(F.lit("b|"), F.col("shingle"))).alias("hb"),
+        "md5(concat('a|', shingle)) AS ha",
+        "md5(concat('b|', shingle)) AS hb",
+    ).groupBy("id").agg(*[
+        F.expr(f"min(substring({'ha' if i < 4 else 'hb'}, {i % 4 * 8 + 1}, 8))"
+               f" AS m{i}")
+        for i in range(num_hashes)
+    ])
+    bands = ", ".join(
+        f"named_struct('band', {bi}, 'bucket', md5(concat_ws('|', "
+        + ", ".join(f"m{bi * band_size + r}" for r in range(band_size))
+        + ")))"
+        for bi in range(num_hashes // band_size)
     )
-    min_exprs = []
-    for i in range(num_hashes):
-        src, off = ("ha", i * 8 + 1) if i < 4 else ("hb", (i - 4) * 8 + 1)
-        min_exprs.append(F.min(F.substring(F.col(src), off, 8)).alias(f"m{i}"))
-    sig = hashed.groupBy("id").agg(*min_exprs)
-
-    return sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[F.col(f"m{bi * band_size + r}") for r in range(band_size)],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for bi in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+    return sig.selectExpr("id", f"inline(array({bands}))")
 
 
 def _cap_buckets(bands: DataFrame, bucket_cap: int | None) -> DataFrame:
@@ -261,14 +261,21 @@ def minhash_lsh_pairs(
          (doc, shingle) — 8 hash fns come from substrings of 2 digests),
       2. one groupBy(id) computes the whole signature (8 min-aggs,
          map-side partial),
-      3. band buckets explode 4 rows/doc; equi-self-join on (band, bucket)
-         yields candidates — no all-pairs comparison anywhere,
+      3. band buckets ``inline`` num_hashes/band_size rows/doc (4 at
+         the defaults); equi-self-join on (band, bucket) plus a distinct
+         yields each candidate pair once, id_a < id_b — no all-pairs
+         comparison anywhere,
       4. verification joins candidates back to the per-doc shingle ARRAYS
          and takes ``size(array_intersect(...))`` — data moved is
          ∝ candidates + docs, never the exploded shingle set. No
          broadcast hint: candidate volume is O(Σ bucket²) and a forced
          broadcast OOMs the driver on duplicate-heavy corpora; AQE
          broadcasts when the set is actually small.
+
+    Every stage is built from SQL text (``selectExpr``/``F.expr``): one
+    parse per stage instead of a py4j call per Column node. The output
+    is the one-way pair list; ``dup_clusters`` gates it as is and
+    symmetrizes on the driver, so this plan runs once per gate.
 
     ``bucket_cap``: optional hot-bucket guard. A (band, bucket) with b
     members emits b(b-1)/2 candidates — a million-row exact-duplicate
@@ -287,31 +294,21 @@ def minhash_lsh_pairs(
         bucket_cap,
     )
 
-    x, y = bands.alias("x"), bands.alias("y")
     candidates = (
-        x.join(y, on=["band", "bucket"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
+        bands.alias("x").join(bands.alias("y"), on=["band", "bucket"])
+        .where("x.id < y.id")
+        .selectExpr("x.id AS id_a", "y.id AS id_b")
         .distinct()
     )
-
-    arrays = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"), shingles(text_col, n).alias("sh")
-    )
-    a = arrays.withColumnsRenamed({"id": "id_a", "sh": "sh_a"})
-    b = arrays.withColumnsRenamed({"id": "id_b", "sh": "sh_b"})
-    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
+    arrays = _shingle_arrays(df, id_col, text_col, n)
+    n_common = "size(array_intersect(sh_a, sh_b))"
     return (
-        a.join(candidates, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                n_common / (F.size("sh_a") + F.size("sh_b") - n_common), 6
-            ),
-        )
+        arrays.selectExpr("id AS id_a", "sh AS sh_a")
+        .join(candidates, "id_a")
+        .join(arrays.selectExpr("id AS id_b", "sh AS sh_b"), "id_b")
+        .selectExpr("id_a", "id_b", f"round({n_common} / (size(sh_a) + "
+                    f"size(sh_b) - {n_common}), 6) AS jaccard")
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -385,12 +382,9 @@ def minhash_dedup_against(
         .select("id", "ref_id")
         .distinct()
     )
-    new_arr = ensure_parallelism(new_df).select(
-        F.col(id_col).alias("id"), shingles(text_col, n).alias("sh_n")
-    )
-    ref_arr = ensure_parallelism(ref_df).select(
-        F.col(id_col).alias("ref_id"), shingles(text_col, n).alias("sh_r")
-    )
+    new_arr = _shingle_arrays(new_df, id_col, text_col, n)
+    ref_arr = _shingle_arrays(ref_df, id_col, text_col, n).selectExpr(
+        "id AS ref_id", "sh AS sh_r")
     return _verify_best_match(candidates, new_arr, ref_arr, threshold)
 
 
@@ -402,12 +396,12 @@ def _verify_best_match(
 ) -> DataFrame:
     """Shared tail of the cross-corpus flaggers: exact shingle-Jaccard
     verification of (id, ref_id) candidates against the per-doc shingle
-    arrays, then each flagged new doc's best reference match (max
-    jaccard, ties to smallest ref id) via a groupBy min-struct — no
-    window."""
+    arrays — (id, sh) new-side, (ref_id, sh_r) reference-side — then
+    each flagged new doc's best reference match (max jaccard, ties to
+    smallest ref id) via a groupBy min-struct — no window."""
     n_common = F.size(F.array_intersect("sh_n", "sh_r"))
     verified = (
-        new_arr.join(candidates, "id")
+        new_arr.withColumnRenamed("sh", "sh_n").join(candidates, "id")
         .join(ref_arr, "ref_id")
         .withColumn(
             "jaccard",
@@ -478,10 +472,9 @@ def write_dedup_index(
     bands = _minhash_band_frame(ref_df, id_col, text_col, num_hashes,
                                 band_size, n)
     bands.write.partitionBy("band").mode(mode).parquet(path + "/bands")
-    arrays = ensure_parallelism(ref_df).select(
-        F.col(id_col).alias("ref_id"), shingles(text_col, n).alias("sh_r")
-    )
-    arrays.write.mode(mode).parquet(path + "/shingles")
+    arrays = _shingle_arrays(ref_df, id_col, text_col, n)
+    arrays.selectExpr("id AS ref_id", "sh AS sh_r").write.mode(mode).parquet(
+        path + "/shingles")
     meta = spark.createDataFrame(
         [(num_hashes, band_size, n)], "num_hashes int, band_size int, n int"
     )
@@ -516,10 +509,8 @@ def minhash_dedup_against_index(
         .select("id", "ref_id")
         .distinct()
     )
-    new_arr = ensure_parallelism(new_df).select(
-        F.col(id_col).alias("id"), shingles(text_col, meta.n).alias("sh_n")
-    )
     ref_arr = spark.read.parquet(index_path + "/shingles")
+    new_arr = _shingle_arrays(new_df, id_col, text_col, meta.n)
     return _verify_best_match(candidates, new_arr, ref_arr, threshold)
 
 
@@ -616,21 +607,18 @@ def simhash_hamming_pairs(
     )
 
 
-def _dup_clusters_local(
-    edges: DataFrame, pdf, symmetrize: bool = False
-) -> DataFrame:
+def _dup_clusters_local(like: DataFrame, pdf) -> DataFrame:
     """The whole min-label fixpoint in ONE bounded driver pass (r14 —
     the graph tier's ``_cc_full_local`` discipline, applied to the
-    dedup cluster resolver) over ``pdf``, the gate-collected pair edges
-    — already symmetrized, or one-directional canonical pairs with
-    ``symmetrize=True`` (both code directions are added locally, a
-    numpy int concat): run synchronous neighbor-min rounds to the
-    no-change fixpoint in numpy and return the (doc_id, cluster_id)
-    literal frame. Exact: labels are ids coded over the SORTED id
-    universe (min-code ≡ min-id), no float arithmetic anywhere, and
-    the fixpoint is the same component-minimum the distributed label
-    loop's consistency stop — and the star rounds' converged star
-    shape — certify."""
+    dedup cluster resolver) over ``pdf``, the gate-collected one-way
+    pair list (both code directions are added locally, a numpy int
+    concat): run synchronous neighbor-min rounds to the no-change
+    fixpoint in numpy and return the (doc_id, cluster_id) literal
+    frame, typed like ``like``'s first column. Exact: labels are ids
+    coded over the SORTED id universe (min-code ≡ min-id), no float
+    arithmetic anywhere, and the fixpoint is the same component-minimum
+    the distributed label loop's consistency stop — and the star
+    rounds' converged star shape — certify."""
     import numpy as np
 
     from census_data_pipeline_spark.functions.graph import (
@@ -642,12 +630,11 @@ def _dup_clusters_local(
     svals = pdf["src"].to_numpy()
     dvals = pdf["dst"].to_numpy()
     if len(svals) == 0:
-        return _local_frame(edges, {"doc_id": [], "cluster_id": []})
+        return _local_frame(like, {"doc_id": [], "cluster_id": []})
     ids, (sc, dc) = _sorted_codes(svals, dvals)  # ≡ unique+searchsorted
-    if symmetrize:
-        sc, dc = np.concatenate([sc, dc]), np.concatenate([dc, sc])
+    sc, dc = np.concatenate([sc, dc]), np.concatenate([dc, sc])
     lab = _min_label_fixpoint(sc, dc, len(ids))
-    return _local_frame(edges, {"doc_id": ids, "cluster_id": ids[lab]})
+    return _local_frame(like, {"doc_id": ids, "cluster_id": ids[lab]})
 
 
 def dup_clusters(
@@ -682,24 +669,34 @@ def dup_clusters(
         return _dup_clusters_star(pairs)[0]
     if algorithm != "label":
         raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-    )
+    def both_ways(e: DataFrame) -> DataFrame:
+        return e.union(e.select(F.col("dst").alias("src"),
+                                F.col("src").alias("dst")))
+
+    one_way = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    both = both_ways(one_way)
+    t = both.schema.fields[0].dataType  # analysis only, no job
+    one_way = one_way.select(F.col("src").cast(t), F.col("dst").cast(t))
     # Bounded local tail (r14, the graph _cc_full_local discipline):
-    # under the gate the whole min-label fixpoint replays off one Arrow
-    # collect, bit-identical (integer/string mins, no float arithmetic).
-    # 100 TB pair sets never enter and run the distributed loop below.
-    pdf = local_tail(edges, "src", "dst")
+    # gate the ONE-WAY list, typed as the union would type it, and
+    # symmetrize on the driver — gating the union would plan the whole
+    # pair pipeline once per branch. Under the gate the min-label
+    # fixpoint replays off one Arrow collect, bit-identical
+    # (integer/string mins, no float arithmetic); 100 TB pair sets
+    # never enter and run the distributed loop below.
+    pdf = local_tail(one_way, "src", "dst", fanout=2)
     if pdf is not None:
-        return _dup_clusters_local(edges, pdf)
+        return _dup_clusters_local(both, pdf)
     # persisted: the pair-generation lineage upstream is routinely the
     # query's whole cost (edit-1 variant self-join, minhash banding),
     # and the label loop's per-round join AND the per-round consistency
-    # count would each re-run it; the checkpoint of the gated object
-    # reuses the stages the gate's count already ran
-    edges = round_persist(edges)
+    # count would each re-run it. The checkpoint of the gated object
+    # reuses the stages the gate's count ran; the symmetrized edges'
+    # checkpoint runs its distinct's map stage here, after which the
+    # one-way cache has no reader.
+    one_way = round_persist(one_way)
+    edges = round_persist(both_ways(one_way).distinct())
+    one_way.unpersist()
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -777,25 +774,23 @@ def _dup_clusters_star(pairs: DataFrame) -> tuple[DataFrame, int]:
     # 4.4→5.6 s; the checkpoint conversion already executes each round
     # under AQE, and the InMemoryRelation writes cost more than the
     # probe-scan recomputes they saved)
-    edges = (
-        pairs.select(
-            F.greatest("id_a", "id_b").alias("src"),
-            F.least("id_a", "id_b").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    edges = pairs.select(
+        F.greatest("id_a", "id_b").alias("src"),
+        F.least("id_a", "id_b").alias("dst"),
+    ).filter(F.col("src") != F.col("dst"))
     # Bounded local tail (r14, the label-path discipline): the star
     # rounds' converged labels ARE the component minimum per node, so
-    # the same exact min-label fixpoint replay applies (symmetrize:
-    # these edges are one-directional canonical pairs). The per-round
+    # the same exact min-label fixpoint replay applies to the one-way
+    # list, symmetrized on the driver (fanout 2). The per-round
     # convergence probes are the resolver's whole cost at bench scale
     # (geo_dbscan_grid measured 4.4 s, dominated by this loop); 100 TB
     # pair sets never enter and run the log-round star rounds below.
-    pdf = local_tail(edges, "src", "dst")
+    pdf = local_tail(edges, "src", "dst", fanout=2)
     if pdf is not None:
-        return _dup_clusters_local(edges, pdf, symmetrize=True), 0
-    edges = edges.localCheckpoint(eager=False)
+        return _dup_clusters_local(edges, pdf), 0
+    # the checkpoint of the gated object reuses the count's stages
+    edges = edges.localCheckpoint(eager=False).distinct().localCheckpoint(
+        eager=False)
     all_nodes = edges.select(F.col("src").alias("id")).union(
         edges.select(F.col("dst").alias("id"))
     ).distinct()

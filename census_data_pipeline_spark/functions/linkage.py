@@ -10,7 +10,7 @@ join is quadratic; the scalable relational form is *neighborhood blocking*:
   2. self equi-join on (position, variant): two names that differ in
      exactly one substitution share exactly one variant (so the join also
      needs no distinct pass),
-  3. verify the survivors with ``levenshtein``.
+  3. verify the survivors: unequal names (see ``edit1_pairs``).
 
 Every stage is a scan or a hash shuffle on a compact key — the same
 explode/bucket/verify shape as the minhash LSH dedup (functions/dedup.py).
@@ -22,7 +22,8 @@ deletion variants, same plan shape.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from census_data_pipeline_spark.operators.cleaning import _quote
 
 
 def edit1_pairs(
@@ -30,39 +31,28 @@ def edit1_pairs(
 ) -> DataFrame:
     """All pairs (id_a < id_b) whose names differ by exactly one
     substitution. Output: (id_a, id_b, name_a, name_b)."""
-    c = F.col("name")
-    variants = df.select(
-        F.col(id_col).alias("id"), F.col(name_col).alias("name")
-    ).select(
+    variants = df.selectExpr(
+        f"{_quote(id_col)} AS id", f"{_quote(name_col)} AS name"
+    ).selectExpr(
         "id",
         "name",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length(c)),
-                lambda i: F.struct(
-                    i.alias("pos"),
-                    F.concat(
-                        c.substr(F.lit(1), i - 1),
-                        F.lit("*"),
-                        c.substr(i + 1, F.length(c)),
-                    ).alias("variant"),
-                ),
-            )
-        ).alias("v"),
-    ).select("id", "name", "v.pos", "v.variant")
-
-    a, b = variants.alias("a"), variants.alias("b")
+        "inline(transform(sequence(1, length(name)), i -> named_struct("
+        "'pos', i, 'variant', concat(substr(name, 1, i - 1), '*', "
+        "substr(name, i + 1, length(name))))))",
+    )
+    # Verification is ``a.name <> b.name``, which on every joined row is
+    # ``levenshtein(a.name, b.name) = 1``: the variant keeps the pos - 1
+    # code points before the wildcard and every one after it, so two
+    # names sharing (pos, variant) have equal length and differ at most
+    # at pos — one substitution when unequal, none when equal. The one
+    # exception is the empty name: sequence(1, 0) gives it variant '*'
+    # at pos 1 and pos 0, which meet only one-code-point names (one
+    # insertion away) and other empty names (equal, dropped). A NULL
+    # name makes no variants.
     return (
-        a.join(b, on=["pos", "variant"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        # names sharing a wildcard slot and unequal => levenshtein == 1;
-        # the check stays as the verification step of the block-verify
-        # pattern (and drops exact-duplicate names if ids differ)
-        .filter(F.levenshtein(F.col("a.name"), F.col("b.name")) == 1)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.name").alias("name_a"),
-            F.col("b.name").alias("name_b"),
-        )
+        variants.alias("a")
+        .join(variants.alias("b"), on=["pos", "variant"])
+        .where("a.id < b.id AND a.name <> b.name")
+        .selectExpr("a.id AS id_a", "b.id AS id_b",
+                    "a.name AS name_a", "b.name AS name_b")
     )

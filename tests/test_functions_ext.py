@@ -126,6 +126,23 @@ def test_minhash_lsh_identical_docs(spark):
         dedup.minhash_lsh_pairs(df, num_hashes=16)
 
 
+@pytest.mark.parametrize("prefix", ["my doc", "a.b", "x`y"])
+def test_minhash_pairs_take_any_column_name(spark, prefix):
+    """The SQL-text builders quote ``id_col`` and ``text_col``: a name
+    with a space, a dot or a backtick names its one column."""
+    df = _docs(spark, [(1, "a b c d e f g h"), (2, "a b c d e f g h"),
+                       (3, "q r s t u v w x"), (4, "a b c d e f g x")])
+    named = df.toDF(prefix + "_id", prefix + "_text")
+    cols = {"id_col": prefix + "_id", "text_col": prefix + "_text"}
+    for build in (
+        lambda d, **kw: dedup.minhash_lsh_pairs(d, n=3, threshold=0.5, **kw),
+        lambda d, **kw: dedup.minhash_dedup_against(
+            d, d, n=3, threshold=0.5, **kw),
+    ):
+        want = sorted(map(tuple, build(df).collect()))
+        assert want and sorted(map(tuple, build(named, **cols).collect())) == want
+
+
 def test_minhash_bucket_cap_bounds_hot_buckets(spark):
     """SCALING.md 'Hot buckets in banded LSH': an exact-duplicate cluster
     of size b emits b(b-1)/2 candidates; bucket_cap bounds that at

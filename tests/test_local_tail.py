@@ -14,8 +14,10 @@ run through their registry queries at the test lake. The LS booster's
 local fit runs against its distributed rounds on small hostile frames.
 
 The gate's own cost is pinned too: one count job and one collect that
-reuses the count's shuffle stages, no job at a cap of 0, and no cache
-left behind by an operator that returns from its local path.
+reuses the count's shuffle stages, no job at a cap of 0, no cache left
+behind by an operator that returns from its local path, and a
+``dup_clusters`` gate on the one-way pair list (no ``Union``) whose
+local result keeps the distributed path's id type.
 """
 
 from __future__ import annotations
@@ -279,6 +281,76 @@ def test_gate_collect_reruns_no_shuffle_stage(spark, monkeypatch):
     assert _stages_run(sc, count_jobs) >= 2  # a shuffle ran
     assert len(collect_jobs) == 1
     assert _stages_run(sc, collect_jobs) == 1
+
+
+def test_dup_clusters_gates_the_one_way_list(spark, frames, monkeypatch):
+    """Under the cap ``dup_clusters`` counts and collects the one-way
+    pair list — no ``Union`` in the plan, so the pair pipeline is
+    planned once — in one count job and one collect."""
+    sc = spark.sparkContext
+    pairs = frames["adversarial"][3]
+    counted = []
+    count = catalog.row_count
+
+    def spy(df):
+        counted.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return count(df)
+
+    monkeypatch.setattr(catalog, "row_count", spy)
+    for algorithm in ("label", "star"):
+        counted.clear()
+        out, jobs = _jobs(sc, f"dup-gate-{algorithm}",
+                          lambda: dedup.dup_clusters(pairs, algorithm))
+        assert len(counted) == 1 and "Union" not in counted[0]
+        assert len(jobs) == 2 and out.collect()
+
+
+_ID_SCHEMAS = {
+    "int_bigint": T.StructType([T.StructField("id_a", T.IntegerType()),
+                                T.StructField("id_b", T.LongType())]),
+    "bigint_string": T.StructType([T.StructField("id_a", T.LongType()),
+                                   T.StructField("id_b", T.StringType())]),
+    "nullability": T.StructType([
+        T.StructField("id_a", T.LongType(), nullable=False),
+        T.StructField("id_b", T.LongType(), nullable=True)]),
+}
+
+
+# the star resolver's greatest/least reject bigint/string ids on
+# either path
+@pytest.mark.parametrize("types,algorithm", [
+    (t, a) for t in _ID_SCHEMAS for a in ("label", "star")
+    if (t, a) != ("bigint_string", "star")])
+def test_dup_clusters_local_types_match_distributed(spark, distributed,
+                                                     types, algorithm):
+    """The local result takes the type and nullability the distributed
+    union gives its ids: widened int/bigint, bigint/string ordered as
+    strings ("10" < "9"), nullable when either side is."""
+    conv = str if types == "bigint_string" else int
+    rows = [(10, conv(9)), (9, conv(100)), (7, conv(7)), (3, conv(4))]
+    pairs = spark.createDataFrame(rows, _ID_SCHEMAS[types])
+    local = dedup.dup_clusters(pairs, algorithm)
+    with distributed():
+        dist = dedup.dup_clusters(pairs, algorithm)
+    assert local.schema == dist.schema
+    assert _rows(local) == _rows(dist)
+    assert dict(_rows(local))[conv(100)] == conv(10 if conv is str else 9)
+
+
+def test_dup_clusters_null_id_stays_distributed(spark, distributed,
+                                                monkeypatch):
+    """A NULL id keeps the label path distributed (the star resolver's
+    greatest/least turn a half-NULL pair into a dropped self-loop)."""
+    pairs = spark.createDataFrame([(1, 2), (2, None), (None, 5)],
+                                  "id_a long, id_b long")
+    with distributed():
+        dist = _rows(dedup.dup_clusters(pairs))
+
+    def refuse(*_):
+        raise AssertionError("a NULL id reached the local tail")
+
+    monkeypatch.setattr(dedup, "_dup_clusters_local", refuse)
+    assert _rows(dedup.dup_clusters(pairs)) == dist
 
 
 # ------------------------------------------- no cache outlives the gate
