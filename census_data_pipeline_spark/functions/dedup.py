@@ -663,28 +663,16 @@ def dup_clusters(
     rounds, see tests/test_functions_ext.py).
 
     Output: (doc_id, cluster_id). Only docs that appear in >=1 pair are
-    returned (singletons are their own cluster implicitly).
+    returned (singletons are their own cluster implicitly). Both
+    algorithms give the same rows: ids are compared in the type the
+    pair union widens them to, a self-pair makes its id a node, and a
+    NULL id is the one node ``_with_null_id`` describes.
     """
     if algorithm == "star":
         return _dup_clusters_star(pairs)[0]
     if algorithm != "label":
         raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
-    def both_ways(e: DataFrame) -> DataFrame:
-        return e.union(e.select(F.col("dst").alias("src"),
-                                F.col("src").alias("dst")))
-
-    one_way = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    both = both_ways(one_way)
-    t = both.schema.fields[0].dataType  # analysis only, no job
-    one_way = one_way.select(F.col("src").cast(t), F.col("dst").cast(t))
-    # Bounded local tail (r14, the graph _cc_full_local discipline):
-    # gate the ONE-WAY list, typed as the union would type it, and
-    # symmetrize on the driver — gating the union would plan the whole
-    # pair pipeline once per branch. Under the gate the min-label
-    # fixpoint replays off one Arrow collect, bit-identical
-    # (integer/string mins, no float arithmetic); 100 TB pair sets
-    # never enter and run the distributed loop below.
-    pdf = local_tail(one_way, "src", "dst", fanout=2)
+    one_way, both, pdf = _gate_pairs(pairs)
     if pdf is not None:
         return _dup_clusters_local(both, pdf)
     # persisted: the pair-generation lineage upstream is routinely the
@@ -695,7 +683,7 @@ def dup_clusters(
     # checkpoint runs its distinct's map stage here, after which the
     # one-way cache has no reader.
     one_way = round_persist(one_way)
-    edges = round_persist(both_ways(one_way).distinct())
+    edges = round_persist(_both_ways(one_way).distinct())
     one_way.unpersist()
     labels = (
         edges.select(F.col("src").alias("id"))
@@ -738,9 +726,52 @@ def dup_clusters(
             prior = labels
         if inconsistent == 0:
             break
-    return labels.select(
+    return _with_null_id(labels.select(
         F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
+    ), edges)
+
+
+def _both_ways(e: DataFrame) -> DataFrame:
+    return e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+
+
+def _gate_pairs(pairs: DataFrame):
+    """Both resolvers' local-tail gate: the one-way (src, dst) pair
+    list with both ids cast to the type the symmetrized union gives
+    them (int/bigint widen, bigint/string compare as strings), the
+    union itself (analysis only, no job) and ``local_tail``'s pandas
+    frame of the one-way list, or None. Gating the ONE-WAY list and
+    symmetrizing on the driver plans the pair pipeline once; gating the
+    union would plan it once per branch. Under the gate the min-label
+    fixpoint replays off one Arrow collect, bit-identical
+    (integer/string mins, no float arithmetic); 100 TB pair sets, and
+    any pair set holding a NULL id, run the distributed rounds."""
+    one_way = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    both = _both_ways(one_way)
+    t = both.schema.fields[0].dataType  # analysis only, no job
+    one_way = one_way.select(F.col("src").cast(t), F.col("dst").cast(t))
+    return one_way, both, local_tail(one_way, "src", "dst", fanout=2)
+
+
+def _with_null_id(labels: DataFrame, edges: DataFrame) -> DataFrame:
+    """Give the NULL id of half-NULL pairs one well-defined row. An
+    equi-join never matches NULL, so a NULL id joins no component; it is
+    still a node, labeled with the least final ``cluster_id`` among its
+    non-NULL partners (NULL when it has none). ``edges`` holds the pairs
+    in both directions. Pair sets whose ids cannot be NULL pass through
+    unchanged (a schema check, no job)."""
+    if not any(f.nullable for f in edges.schema.fields):
+        return labels
+    t = labels.schema.fields[0].dataType
+    valid = labels.filter(F.col("doc_id").isNotNull())
+    partners = edges.filter(F.col("src").isNull()).select(
+        F.col("dst").alias("doc_id"))
+    null_row = (
+        partners.join(valid, "doc_id", "left")
+        .groupBy(F.lit(None).cast(t).alias("doc_id"))
+        .agg(F.min("cluster_id").alias("cluster_id"))
     )
+    return valid.unionByName(null_row)
 
 
 def _dup_clusters_star(pairs: DataFrame) -> tuple[DataFrame, int]:
@@ -774,26 +805,27 @@ def _dup_clusters_star(pairs: DataFrame) -> tuple[DataFrame, int]:
     # 4.4→5.6 s; the checkpoint conversion already executes each round
     # under AQE, and the InMemoryRelation writes cost more than the
     # probe-scan recomputes they saved)
-    edges = pairs.select(
-        F.greatest("id_a", "id_b").alias("src"),
-        F.least("id_a", "id_b").alias("dst"),
-    ).filter(F.col("src") != F.col("dst"))
-    # Bounded local tail (r14, the label-path discipline): the star
+    #
+    # Bounded local tail (r14, shared with the label path): the star
     # rounds' converged labels ARE the component minimum per node, so
-    # the same exact min-label fixpoint replay applies to the one-way
-    # list, symmetrized on the driver (fanout 2). The per-round
+    # the same exact min-label fixpoint replay applies. The per-round
     # convergence probes are the resolver's whole cost at bench scale
-    # (geo_dbscan_grid measured 4.4 s, dominated by this loop); 100 TB
-    # pair sets never enter and run the log-round star rounds below.
-    pdf = local_tail(edges, "src", "dst", fanout=2)
+    # (geo_dbscan_grid measured 4.4 s, dominated by this loop).
+    one_way, both, pdf = _gate_pairs(pairs)
     if pdf is not None:
-        return _dup_clusters_local(edges, pdf), 0
+        return _dup_clusters_local(both, pdf), 0
     # the checkpoint of the gated object reuses the count's stages
-    edges = edges.localCheckpoint(eager=False).distinct().localCheckpoint(
-        eager=False)
-    all_nodes = edges.select(F.col("src").alias("id")).union(
-        edges.select(F.col("dst").alias("id"))
-    ).distinct()
+    one_way = one_way.localCheckpoint(eager=False)
+    edges = one_way.filter(
+        F.col("src").isNotNull() & F.col("dst").isNotNull()
+    ).select(
+        F.greatest("src", "dst").alias("src"),
+        F.least("src", "dst").alias("dst"),
+    ).filter(F.col("src") != F.col("dst")).distinct().localCheckpoint(eager=False)
+    # every non-NULL id is a node, a self-pair's too (it has no edge)
+    all_nodes = one_way.select(F.col("src").alias("id")).union(
+        one_way.select(F.col("dst").alias("id"))
+    ).filter(F.col("id").isNotNull()).distinct()
 
     def not_converged(e: DataFrame) -> int:
         nonstar = (
@@ -851,7 +883,7 @@ def _dup_clusters_star(pairs: DataFrame) -> tuple[DataFrame, int]:
         F.col("id").alias("doc_id"),
         F.coalesce("label", "id").alias("cluster_id"),
     )
-    return labels, rounds
+    return _with_null_id(labels, _both_ways(one_way)), rounds
 
 
 def span_dedup(

@@ -141,5 +141,9 @@ def coerce_numeric(df: DataFrame, columns: list[str]) -> DataFrame:
     NULL. Spark's non-ANSI cast has the same contract; we trim first so
     whitespace-padded API values parse the same way pandas parses them.
     """
-    return _with_sql_columns(
-        df, {c: f"CAST(TRIM({_quote(c)}) AS DOUBLE)" for c in columns})
+    return _with_sql_columns(df, {c: numeric_sql(c) for c in columns})
+
+
+def numeric_sql(name: str) -> str:
+    """``coerce_numeric``'s expression for column ``name``, as SQL text."""
+    return f"CAST(TRIM({_quote(name)}) AS DOUBLE)"

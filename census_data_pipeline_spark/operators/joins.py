@@ -82,10 +82,23 @@ def join_boundaries(
     Keeps every attribute row; NULL geometry where no boundary matches.
     Boundaries are deduped on the key first — the reference does not
     enforce GEOID uniqueness and a dup key would fan out attribute rows
-    (SURVEY.md §7.3 risk).
+    (SURVEY.md §7.3 risk). A boundary frame ``catalog.local_frame``
+    built whose key is already unique (checked on its Arrow table, a
+    NULL key counting as one value) skips that dedup and its shuffle;
+    every other boundary frame keeps it.
     """
-    b = boundaries.select(on, geometry_col).dropDuplicates([on])
+    b = boundaries.select(on, geometry_col)
+    table = catalog.local_table(boundaries)
+    if (table is None or on not in table.column_names
+            or _has_duplicates(table.column(on))):
+        b = b.dropDuplicates([on])
     return b.join(attributes, on=on, how="right")
+
+
+def _has_duplicates(keys) -> bool:
+    import pyarrow.compute as pc
+
+    return pc.count_distinct(keys, mode="all").as_py() < len(keys)
 
 
 def resolve_state_fips(state: str) -> str:

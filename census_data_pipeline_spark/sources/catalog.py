@@ -19,6 +19,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 from census_data_pipeline_spark.session import apply_runtime_confs
 
@@ -180,11 +181,15 @@ def local_tail(df: DataFrame, *key_cols: str, fanout: int = 1):
     shuffle stage the count executed and runs one stage. Pass the LAZY
     frame: persisting or repartitioning it first only adds a cache write
     nobody reads on the local path. With the cap at 0 no job runs. A
-    frame ``local_frame`` returned is already on the driver: its Arrow
-    table's pandas form comes back under the same rules with no job."""
+    frame ``local_frame`` returned is already on the driver: when every
+    field is of an ``_ARROW_EXACT`` type, its Arrow table's pandas form
+    comes back under the same rules with no job."""
     if LOCAL_TAIL_ROWS <= 0:
         return None
-    table = _LOCAL_TABLES.get(df)
+    table = local_table(df)
+    if table is not None and not all(
+            isinstance(from_arrow_type(f.type), _ARROW_EXACT) for f in table.schema):
+        table = None
     n = row_count(df) if table is None else table.num_rows
     if fanout * n > LOCAL_TAIL_ROWS:
         return None
@@ -195,11 +200,18 @@ def local_tail(df: DataFrame, *key_cols: str, fanout: int = 1):
     return pdf
 
 
-# The Arrow table behind each live frame ``local_frame`` built, for the
-# field types whose ``to_pandas()`` is exactly ``toPandas()``'s.
+# The Arrow table behind each live frame ``local_frame`` built.
 _LOCAL_TABLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# Field types whose Arrow ``to_pandas()`` is exactly Spark's ``toPandas()``.
 _ARROW_EXACT = (T.StringType, T.LongType, T.IntegerType, T.ShortType,
                 T.ByteType, T.DoubleType, T.FloatType, T.BooleanType)
+
+
+def local_table(df: DataFrame):
+    """The ``pyarrow.Table`` behind ``df`` when ``local_frame`` built
+    ``df`` itself (not a frame derived from it), else None. Reading it
+    runs no Spark job."""
+    return _LOCAL_TABLES.get(df)
 
 
 def local_frame(spark: SparkSession, schema: T.StructType, columns) -> DataFrame:
@@ -212,8 +224,8 @@ def local_frame(spark: SparkSession, schema: T.StructType, columns) -> DataFrame
     workers on every action. No pandas step, so nothing can fall back to
     that path. String fields keep the list path's cells: a non-string
     value becomes its ``str()``, lower-case for bools. The table stays
-    with the frame while the frame lives, so ``local_tail`` hands it
-    back without a job."""
+    with the frame while the frame lives (``local_table``), so
+    ``local_tail`` hands it back without a job."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
@@ -232,8 +244,7 @@ def local_frame(spark: SparkSession, schema: T.StructType, columns) -> DataFrame
             ], at))
     table = pa.Table.from_arrays(arrays, names=schema.names)
     out = spark.createDataFrame(table, schema)
-    if all(isinstance(f.dataType, _ARROW_EXACT) for f in schema.fields):
-        _LOCAL_TABLES[out] = table
+    _LOCAL_TABLES[out] = table
     return out
 
 

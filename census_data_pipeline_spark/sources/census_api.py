@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from census_data_pipeline_spark.operators import cleaning
+from census_data_pipeline_spark.operators.cleaning import _quote, numeric_sql
 from census_data_pipeline_spark.sources import catalog
 
 BASE_URL = "https://api.census.gov/data"
@@ -231,9 +231,9 @@ def response_to_dataframe(
     """S6 parse (reference: src/census_pipeline.py:343-365): header row is
     the schema; all values string; rename through var_dict; numeric-coerce
     every renamed variable column (cast -> NULL on bad input, matching
-    ``pd.to_numeric(errors='coerce')``). A data row whose width differs
-    from the header's raises ValueError (checked first: the transpose
-    below would silently truncate it).
+    ``pd.to_numeric(errors='coerce')``), both in one ``selectExpr``. A
+    data row whose width differs from the header's raises ValueError
+    (checked first: the transpose below would silently truncate it).
 
     The rows become one Arrow local relation that every re-run scans
     inside the JVM, coalesced to ONE partition — one response, one
@@ -250,9 +250,13 @@ def response_to_dataframe(
     columns = list(zip(*rows)) if rows else [()] * len(header)
     df = catalog.local_frame(spark, schema, columns).coalesce(1)
     var_dict = var_dict or {}
-    df = df.withColumnsRenamed(var_dict)
-    numeric_cols = [v for v in var_dict.values() if v in df.columns]
-    return cleaning.coerce_numeric(df, numeric_cols)
+    numeric = set(var_dict.values())
+    # rename and coerce in one projection
+    names = [var_dict.get(h, h) for h in header]
+    return df.selectExpr(*[
+        f"{numeric_sql(h) if n in numeric else _quote(h)} AS {_quote(n)}"
+        for h, n in zip(header, names)
+    ])
 
 
 # ---------------------------------------------------------------------------

@@ -15,8 +15,14 @@ same contract as the reference (exporters.py:65-69).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from census_data_pipeline_spark.operators.cleaning import _quote
+from census_data_pipeline_spark.sources import catalog
 
 _JDBC_MODES = {"fail": "error", "replace": "overwrite", "append": "append"}
 
@@ -70,18 +76,15 @@ def to_geojson(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:
     geometry object requires a WKT->GeoJSON geometry parser (Sedona's
     ST_AsGeoJSON at scale). Distributed text sink — one Feature per line
     (newline-delimited GeoJSON)."""
-    props = [
-        c for c in df.columns
+    props = ", ".join(
+        f"{_quote(c)} AS {_quote(c)}" for c in df.columns
         if c not in (geometry_col, "geometry_bytes", "geometry_encoding")
-    ]
-    feature = F.to_json(
-        F.struct(
-            F.lit("Feature").alias("type"),
-            F.struct(*[F.col(c).alias(c) for c in props]).alias("properties"),
-            F.col(geometry_col).alias("geometry_wkt"),
-        )
     )
-    return df.select(feature.alias("value"))
+    # one SQL projection, not a py4j Column per property
+    return df.selectExpr(
+        "to_json(named_struct('type', 'Feature', 'properties', "
+        f"struct({props}), 'geometry_wkt', {_quote(geometry_col)})) AS value"
+    )
 
 
 def _driver_side_geo_export(df: DataFrame, path: str, fmt: str,
@@ -190,6 +193,37 @@ def execute_sql(spark: SparkSession, sql: str) -> DataFrame:
     return spark.sql(sql)
 
 
+# The manifest file a shard export keeps beside its data. Spark's file
+# listing skips names that start with "_", so data readers never see it.
+_MANIFEST = "_manifest.json"
+# JSON timestamps at full microsecond precision (Spark's default JSON
+# format stops at milliseconds), so the typed read returns what was written.
+_JSON_TIMES = {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+               "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"}
+
+
+def _shard_manifest(df: DataFrame, shard_col: str, text_col: str) -> DataFrame:
+    """Per shard: the key as text, n_docs, n_tokens and sha_xor. One
+    definition for the writer and the verifying reader."""
+    text = _quote(text_col)
+    return df.groupBy(F.col(_quote(shard_col))).agg(
+        F.expr(f"CAST({_quote(shard_col)} AS STRING)").alias("__key"),
+        F.count("*").alias("n_docs"),
+        F.expr(f"CAST(SUM(SIZE(SPLIT({text}, ' '))) AS BIGINT)").alias("n_tokens"),
+        F.expr(
+            f"BIT_XOR(CAST(CONV(SUBSTRING(MD5({text}), 1, 15), 16, 10) AS BIGINT))"
+        ).alias("sha_xor"),
+    )
+
+
+def _hadoop_file(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path`` through the session's Hadoop
+    configuration, so HDFS and object stores work as the data writer
+    does, and the local filesystem keeps its ``.crc`` checksums."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def write_training_shards(
     df: DataFrame,
     path: str,
@@ -199,74 +233,89 @@ def write_training_shards(
     """Training-data export — the final mile of the curation pipeline:
     write the mixed/sharded corpus as shard-partitioned JSONL (the
     format training loaders consume: one JSON document per line,
-    ``path/<shard_col>=N/*.json``) plus a MANIFEST dataframe
-    (shard, n_docs, n_tokens, sha_xor) that is also persisted at
-    ``path/_manifest`` — a loader can verify shard completeness without
-    reading payloads.
+    ``path/<shard_col>=N/*.json``) plus a manifest ``path/_manifest.json``
+    — a loader can verify shard completeness without reading payloads.
 
-    ``sha_xor`` is an order-independent per-shard content fingerprint:
-    ``bit_xor`` of the first 8 md5 bytes of each document — any
-    dropped/duplicated/corrupted line changes it, and it is computable
-    identically by any engine (no dependence on file layout or row
-    order, which Spark does not guarantee).
+    The manifest holds the written schema (Spark's JSON form), the shard
+    and text column names, and one row per shard: the key as Spark casts
+    it to STRING (so every partition-column type round-trips, NULL
+    included), n_docs, n_tokens and sha_xor. ``sha_xor`` is an
+    order-independent per-shard content fingerprint: ``bit_xor`` of the
+    first 8 md5 bytes of each document — any dropped/duplicated/
+    corrupted line changes it, and it is computable identically by any
+    engine (no dependence on file layout or row order, which Spark does
+    not guarantee).
 
     Scale shape: ONE pass writes the data (partitionBy on the shard
     column → one directory per shard, executor-parallel), one
-    shard-keyed aggregate builds the manifest. No driver-side rows."""
-    out = df.write.partitionBy(shard_col).mode("overwrite")
-    out.json(path)
-    manifest = (
-        df.groupBy(shard_col)
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.size(F.split(F.col(text_col), " ")))
-            .cast("long").alias("n_tokens"),
-            F.bit_xor(
-                F.conv(F.substring(F.md5(F.col(text_col)), 1, 15), 16, 10)
-                .cast("long")
-            ).alias("sha_xor"),
-        )
-    )
-    manifest.write.mode("overwrite").parquet(path + "/_manifest")
-    return manifest
+    shard-keyed aggregate builds the manifest, whose one row per shard
+    is collected and written as one small file through the Hadoop
+    FileSystem API. Returns the manifest (shard, n_docs, n_tokens,
+    sha_xor) as a driver-built frame: reading it runs no Spark job."""
+    spark = df.sparkSession
+    df.write.partitionBy(shard_col).mode("overwrite").options(**_JSON_TIMES).json(path)
+    agg = _shard_manifest(df, shard_col, text_col)
+    rows = agg.collect()
+    schema = T.StructType([f for f in agg.schema.fields if f.name != "__key"])
+    manifest = {
+        "schema": json.loads(df.schema.json()),
+        "shard_col": shard_col,
+        "text_col": text_col,
+        "shards": [[r["__key"], r["n_docs"], r["n_tokens"], r["sha_xor"]]
+                   for r in rows],
+    }
+    fs, p = _hadoop_file(spark, f"{path}/{_MANIFEST}")
+    out = fs.create(p, True)
+    try:
+        out.write(bytearray(json.dumps(manifest).encode("utf-8")))
+    finally:
+        out.close()
+    return catalog.local_frame(spark, schema, [
+        [r[f.name] for r in rows] for f in schema.fields])
+
+
+def _read_manifest(spark: SparkSession, path: str) -> dict:
+    fs, p = _hadoop_file(spark, f"{path}/{_MANIFEST}")
+    if not fs.exists(p):
+        raise FileNotFoundError(
+            f"no training-shard manifest at {path}/{_MANIFEST}: "
+            "not a write_training_shards export, or an incomplete one")
+    stream = fs.open(p)
+    try:
+        raw = spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+    finally:
+        stream.close()
+    return json.loads(bytes(raw).decode("utf-8"))
 
 
 def read_training_shards(
     spark: SparkSession, path: str, verify: bool = True
 ) -> DataFrame:
-    """Load a ``write_training_shards`` export. With ``verify=True``
-    (default) the per-shard (count, fingerprint) is recomputed from the
-    loaded data and compared against the stored manifest — a missing
-    file, truncated shard, or corrupted line raises instead of silently
-    training on a damaged corpus."""
-    data = spark.read.json(path)
+    """Load a ``write_training_shards`` export with the schema it was
+    written with: the manifest's schema, columns in the written order,
+    so an int stays an int and a timestamp a timestamp (no JSON
+    inference, no partition-value inference). A missing manifest raises
+    FileNotFoundError naming it. With ``verify=True`` (default) the
+    per-shard (count, tokens, fingerprint) is recomputed from the loaded
+    data and compared against the manifest — a missing file, truncated
+    shard, or corrupted line raises instead of silently training on a
+    damaged corpus."""
+    manifest = _read_manifest(spark, path)
+    schema = T.StructType.fromJson(manifest["schema"])
+    data = spark.read.schema(schema).options(**_JSON_TIMES).json(path).selectExpr(
+        *[_quote(c) for c in schema.names])
     if verify:
-        stored = {
-            r[0]: (r[1], r[2], r[3])
-            for r in spark.read.parquet(path + "/_manifest").collect()
-        }
+        stored = {k: tuple(v) for k, *v in manifest["shards"]}
         got = {
-            r[0]: (r[1], r[2], r[3])
-            for r in (
-                data.groupBy("shard")
-                .agg(
-                    F.count("*").alias("n_docs"),
-                    F.sum(F.size(F.split(F.col("text"), " ")))
-                    .cast("long").alias("n_tokens"),
-                    F.bit_xor(
-                        F.conv(
-                            F.substring(F.md5(F.col("text")), 1, 15), 16, 10
-                        ).cast("long")
-                    ).alias("sha_xor"),
-                )
-                .collect()
-            )
+            r["__key"]: (r["n_docs"], r["n_tokens"], r["sha_xor"])
+            for r in _shard_manifest(
+                data, manifest["shard_col"], manifest["text_col"]).collect()
         }
         if stored != got:
             bad = {k for k in set(stored) | set(got)
                    if stored.get(k) != got.get(k)}
             raise ValueError(
-                f"training-shard manifest mismatch for shards {sorted(bad)}: "
-                "the export is incomplete or corrupted"
+                f"training-shard manifest mismatch for shards "
+                f"{sorted(bad, key=str)}: the export is incomplete or corrupted"
             )
     return data

@@ -57,18 +57,40 @@ def build_tiger_url(geography: str, year: int, resolution: str = "500k",
     return f"{TIGER_BASE.format(year=year)}/{name}.zip"
 
 
+# ``normalize_boundaries``' output schema, nullability included.
+_BOUNDARY_SCHEMA = T.StructType([
+    T.StructField("GEOID", T.StringType()),
+    T.StructField("geometry", T.StringType()),
+    T.StructField("geometry_bytes", T.BinaryType()),
+    T.StructField("geometry_encoding", T.StringType(), nullable=False),
+])
+
+
 def boundaries_from_records(
     spark: SparkSession,
     records: Iterable[tuple[str, str]],
 ) -> DataFrame:
     """Build a boundary DataFrame from (GEOID, wkt) records — the offline
     ingest path used by tests; the online path would read the shapefile with
-    geopandas on the driver (small data) and pass records here."""
-    schema = T.StructType([
-        T.StructField("GEOID", T.StringType()), T.StructField("geometry", T.StringType())
+    geopandas on the driver (small data) and pass records here.
+
+    The records are already on the driver, so ``normalize_boundaries``
+    runs here in Python: the first record per GEOID is kept (a NULL
+    GEOID counts as one key, as in ``dropDuplicates``), and the binary
+    and encoding columns are filled in. The result is one
+    ``catalog.local_frame`` with ``normalize_boundaries``' schema, which
+    ``joins.join_boundaries`` recognizes as key-unique and joins without
+    a dedup shuffle."""
+    first: dict = {}
+    for geoid, wkt in records:
+        first.setdefault(geoid, wkt)
+    wkts = list(first.values())
+    return catalog.local_frame(spark, _BOUNDARY_SCHEMA, [
+        list(first),
+        wkts,
+        [None if w is None else w.encode("utf-8") for w in wkts],
+        ["wkt-utf8"] * len(wkts),
     ])
-    columns = list(zip(*records)) or [(), ()]
-    return normalize_boundaries(catalog.local_frame(spark, schema, columns))
 
 
 def normalize_boundaries(df: DataFrame, geoid_col: str = "GEOID",

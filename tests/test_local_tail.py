@@ -316,11 +316,8 @@ _ID_SCHEMAS = {
 }
 
 
-# the star resolver's greatest/least reject bigint/string ids on
-# either path
 @pytest.mark.parametrize("types,algorithm", [
-    (t, a) for t in _ID_SCHEMAS for a in ("label", "star")
-    if (t, a) != ("bigint_string", "star")])
+    (t, a) for t in _ID_SCHEMAS for a in ("label", "star")])
 def test_dup_clusters_local_types_match_distributed(spark, distributed,
                                                      types, algorithm):
     """The local result takes the type and nullability the distributed
@@ -339,8 +336,8 @@ def test_dup_clusters_local_types_match_distributed(spark, distributed,
 
 def test_dup_clusters_null_id_stays_distributed(spark, distributed,
                                                 monkeypatch):
-    """A NULL id keeps the label path distributed (the star resolver's
-    greatest/least turn a half-NULL pair into a dropped self-loop)."""
+    """A NULL id keeps the label path distributed: the numpy replay
+    cannot code a None key."""
     pairs = spark.createDataFrame([(1, 2), (2, None), (None, 5)],
                                   "id_a long, id_b long")
     with distributed():
@@ -351,6 +348,42 @@ def test_dup_clusters_null_id_stays_distributed(spark, distributed,
 
     monkeypatch.setattr(dedup, "_dup_clusters_local", refuse)
     assert _rows(dedup.dup_clusters(pairs)) == dist
+
+
+# a chain whose far end pairs with NULL: the NULL id's label is the
+# chain's minimum, not a label one round stale
+_STAR_LABEL_CASES = {
+    "int_bigint": (_ID_SCHEMAS["int_bigint"],
+                   [(10, 9), (9, 100), (7, 7), (3, 4), (4, 5), (5, 6)]),
+    "bigint_string": (_ID_SCHEMAS["bigint_string"],
+                      [(10, "9"), (9, "100"), (7, "7"), (3, "4"), (4, "30")]),
+    "half_null": (_ID_SCHEMAS["int_bigint"],
+                  [(1, 2), (2, 3), (3, None), (None, 5), (8, None),
+                   (None, None), (7, 7)]),
+}
+
+
+@pytest.mark.parametrize("case", list(_STAR_LABEL_CASES))
+def test_dup_clusters_star_agrees_with_label(spark, distributed, case):
+    """The star and label resolvers give the same schema and rows, under
+    the local tail and with ``LOCAL_TAIL_ROWS = 0``: ids widened to the
+    union's type, a self-pair's id kept as a node, and the NULL id of
+    half-NULL pairs labeled with its partners' least cluster id."""
+    schema, rows = _STAR_LABEL_CASES[case]
+    pairs = spark.createDataFrame(rows, schema)
+    got = {}
+    for forced in (False, True):
+        for algorithm in ("label", "star"):
+            if forced:
+                with distributed():
+                    df = dedup.dup_clusters(pairs, algorithm)
+            else:
+                df = dedup.dup_clusters(pairs, algorithm)
+            got[forced, algorithm] = (df.schema, _rows(df))
+    assert len({repr(v) for v in got.values()}) == 1, got
+    if case == "half_null":
+        assert dict(got[True, "star"][1]) == {
+            1: 1, 2: 1, 3: 1, 5: 5, 7: 7, 8: 8, None: 1}
 
 
 # ------------------------------------------- no cache outlives the gate
