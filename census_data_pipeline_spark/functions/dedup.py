@@ -21,11 +21,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from census_data_pipeline_spark.functions.text import shingles, tokens
 from census_data_pipeline_spark.operators.cleaning import _quote
 from census_data_pipeline_spark.sources.catalog import (
     ensure_parallelism,
+    local_frame,
     local_tail,
     round_persist,
 )
@@ -475,8 +477,9 @@ def write_dedup_index(
     arrays = _shingle_arrays(ref_df, id_col, text_col, n)
     arrays.selectExpr("id AS ref_id", "sh AS sh_r").write.mode(mode).parquet(
         path + "/shingles")
-    meta = spark.createDataFrame(
-        [(num_hashes, band_size, n)], "num_hashes int, band_size int, n int"
+    meta = local_frame(
+        spark, T.StructType.fromDDL("num_hashes int, band_size int, n int"),
+        [[num_hashes], [band_size], [n]],
     )
     meta.write.mode("overwrite").parquet(path + "/meta")
 

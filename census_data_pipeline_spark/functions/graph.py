@@ -110,20 +110,21 @@ def _pagerank_full_local(
     back (id, rank). Per-dst float sums accumulate in a different order
     than Spark's partial aggregation, which differs by last-ulp amounts
     absorbed by the query-level 6-dp rounding (the hits_scores
-    tolerance argument; the green driver rows pin it). Returns None on
-    a null seed (the caller falls back to the distributed rounds)."""
+    tolerance argument; the green driver rows pin it). The seed set
+    comes through its own ``local_tail``; returns None when that gate
+    refuses it (a null seed, or over the cap) and the caller falls back
+    to the distributed rounds."""
     import numpy as np
     import pandas as pd
 
     seeds_vals = None
     if personalization is not None:
         sc0 = personalization.columns[0]
-        spdf = (
-            personalization.select(F.col(sc0).alias("__sid"))
-            .distinct()
-            .toPandas()
+        spdf = local_tail(
+            personalization.select(F.col(sc0).alias("__sid")).distinct(),
+            "__sid",
         )
-        if bool(pd.isna(spdf["__sid"]).any()):
+        if spdf is None:
             return None
         seeds_vals = spdf["__sid"].to_numpy()
     svals = pdf["src"].to_numpy()
@@ -210,7 +211,7 @@ def pagerank(
         tail = _pagerank_full_local(
             e, pdf, iterations, float(damping), personalization
         )
-        if tail is not None:  # None ⇒ null seed, stay distributed
+        if tail is not None:  # None ⇒ seeds refused, stay distributed
             return tail
     # the edge frame is re-read EVERY round (contribution join) and per
     # round twice more via the dangling broadcast's lineage
@@ -2560,19 +2561,20 @@ def _wdist_full_local(
 ) -> DataFrame | None:
     """Fixed-round Bellman-Ford in ONE bounded driver pass (r13) over
     ``pdf``, the filtered weighted edges collected by the gate: collect
-    the seed set, relax in numpy. Full relaxation per round is
-    round-for-round identical to the distributed frontier-delta (the
-    weighted_distances docstring's own equivalence argument), and every
-    distance is an exact min over identical per-path double sums —
-    bit-identical output. Returns None on a null seed (caller stays
-    distributed)."""
+    the seed set through its own ``local_tail``, relax in numpy. Full
+    relaxation per round is round-for-round identical to the
+    distributed frontier-delta (the weighted_distances docstring's own
+    equivalence argument), and every distance is an exact min over
+    identical per-path double sums — bit-identical output. Returns None
+    when the seed gate refuses (a null seed, or over the cap); the
+    caller stays distributed."""
     import numpy as np
     import pandas as pd
 
-    spdf = seeds.select(
+    spdf = local_tail(seeds.select(
         F.col(seeds.columns[0]).alias("__sid")
-    ).distinct().toPandas()
-    if bool(pd.isna(spdf["__sid"]).any()):
+    ).distinct(), "__sid")
+    if spdf is None:
         return None
     svals = pdf["src"].to_numpy()
     dvals = pdf["dst"].to_numpy()
@@ -2654,7 +2656,7 @@ def weighted_distances(
     pdf = local_tail(e0, "src", "dst")
     if pdf is not None:
         tail = _wdist_full_local(e0, pdf, seeds, rounds)
-        if tail is not None:  # None ⇒ null seed, stay distributed
+        if tail is not None:  # None ⇒ seeds refused, stay distributed
             return tail
     # distributed rounds re-read the frame every round — materialize
     # (round_materialize — see pagerank)
@@ -3233,29 +3235,8 @@ def louvain_local_move(
     localCheckpoint (the LPA round shape). Cite: reference has no
     graph tier; extends SURVEY §2.11 beside
     label_propagation/modularity."""
-    if rounds < 1:
-        raise ValueError("rounds must be >= 1")
-    eprep = _louvain_eprep(edges, src, dst, weight_col)
-    pdf = local_tail(eprep, src, dst, fanout=2)
-    if pdf is not None:
-        full = _louvain_full_local(
-            eprep, pdf, src, dst, weight_col, init_labels, rounds, levels=1)
-        if full is not None:  # None ⇒ null/dup init ids, stay distributed
-            return full
-    sym = _symmetrize_simple(
-        _persist_gated(eprep), src, dst, "__w" if weight_col else None
-    ).localCheckpoint(eager=False).persist()
-    labels = _louvain_level(sym, init_labels, rounds)
-    # Materialize the returned node-scale frame, then release the
-    # edge-scale caches (ADVICE r12): the returned frame stays
-    # persisted (callers may unpersist); sym/labels do not outlive the
-    # call.
-    out = _round_materialize(
-        labels.select("id", F.col("com").alias("community")),
-        prior=labels,  # unpersist is a no-op on the local-tail frame
-    )
-    sym.unpersist()
-    return out
+    return louvain_multilevel(edges, src, dst, levels=1, rounds=rounds,
+                              init_labels=init_labels, weight_col=weight_col)
 
 
 def _louvain_eprep(
@@ -3322,9 +3303,9 @@ def louvain_multilevel(
             eprep, pdf, src, dst, weight_col, init_labels, rounds, levels)
         if full is not None:  # None ⇒ null/dup init ids, stay distributed
             return full
-    sym = _symmetrize_simple(
+    sym = _round_persist(_symmetrize_simple(
         _persist_gated(eprep), src, dst, "__w" if weight_col else None
-    ).localCheckpoint(eager=False).persist()
+    ))
     prior_sym = sym
     labels = _louvain_level(sym, init_labels, rounds)
     mapping = labels
@@ -3549,35 +3530,13 @@ def _leiden_refine(sym: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def _np_cc_min_label(es, ed, U):
-    """Vectorized min-label connected components over coded symmetric
-    edges: per round one np.minimum.at neighbor gather + a
-    pointer-jump shortcut (labels only decrease and always name a
-    same-component node, so the fixpoint is the component min — the
-    ``connected_components`` labeling, in O(E·log n) worst case).
-    Returns the label array over ``U`` codes (identity for isolated
-    codes)."""
-    import numpy as np
-
-    lab = np.arange(U, dtype=np.int64)
-    while True:
-        prev = lab
-        nl = lab.copy()
-        if len(es):
-            np.minimum.at(nl, ed, lab[es])
-        nl = np.minimum(nl, nl[nl])
-        lab = nl
-        if np.array_equal(lab, prev):
-            return lab
-
-
 def _np_leiden_refine(scode, dcode, full, U):
     """Numpy replica of ``_leiden_refine`` over coded arrays: connected
     components of the intra-community subgraph (codes over a SORTED
     universe, so min-code ≡ the distributed min-id convention).
     Returns the refined array over ``U`` codes (identity outside)."""
     m = (full[scode] == full[dcode]) & (scode != dcode)
-    return _np_cc_min_label(scode[m], dcode[m], U)
+    return _min_label_fixpoint(scode[m], dcode[m], U)
 
 
 def _leiden_full_local(
@@ -3698,9 +3657,9 @@ def leiden(
             eprep, pdf, src, dst, weight_col, init_labels, rounds, levels)
         if full is not None:  # None ⇒ null/dup init ids, stay distributed
             return full
-    sym0 = _symmetrize_simple(
+    sym0 = _round_persist(_symmetrize_simple(
         _persist_gated(eprep), src, dst, "__w" if weight_col else None
-    ).localCheckpoint(eager=False).persist()
+    ))
     sym = sym0
     prior_sym = None  # contracted frames only — sym0 lives to the end
     labels = _louvain_level(sym, init_labels, rounds)

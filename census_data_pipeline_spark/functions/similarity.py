@@ -31,10 +31,13 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from census_data_pipeline_spark.operators.topk import top_k_per_group
 from census_data_pipeline_spark.sources.catalog import (
     ensure_parallelism,
+    local_frame,
+    local_tail,
     round_persist,
 )
 
@@ -423,7 +426,7 @@ def _coef_frame(spark, nbits: int, n_tables: int, dim: int, seed: int) -> DataFr
 
     Memoized per session: a knn call builds the bucket frame for BOTH the
     corpus and query sides, and reusing one DataFrame lets Spark reuse a
-    single broadcast exchange instead of shipping (and createDataFrame-ing)
+    single broadcast exchange instead of shipping (and building)
     the coefficients twice."""
     key = (spark.sparkContext.applicationId, nbits, n_tables, dim, seed)
     if key not in _COEF_FRAME_CACHE:
@@ -432,9 +435,9 @@ def _coef_frame(spark, nbits: int, n_tables: int, dim: int, seed: int) -> DataFr
         ):
             _COEF_FRAME_CACHE.clear()  # stale sessions or unbounded growth
         projs = random_projections(dim, nbits, n_tables, seed)
-        _COEF_FRAME_CACHE[key] = spark.createDataFrame(
-            [(t, projs[t]) for t in range(n_tables)],
-            "tbl int, __coefs array<array<double>>",
+        _COEF_FRAME_CACHE[key] = local_frame(
+            spark, T.StructType.fromDDL("tbl int, __coefs array<array<double>>"),
+            [range(n_tables), projs],
         )
     return _COEF_FRAME_CACHE[key]
 
@@ -922,12 +925,10 @@ def knn_ivf(
     # scoring path as the seeded quantizer (r4): no second MLlib
     # transform pass over the corpus, and no n_centroids×dim literal
     # probe trees in the plan (the r3 driver-tax lesson)
-    centers = [
-        (i, [float(x) for x in ctr])
-        for i, ctr in enumerate(model.clusterCenters())
-    ]
-    cent = corpus.sparkSession.createDataFrame(
-        centers, "__cell int, __cv array<double>"
+    centers = [[float(x) for x in ctr] for ctr in model.clusterCenters()]
+    cent = local_frame(
+        corpus.sparkSession, T.StructType.fromDDL("__cell int, __cv array<double>"),
+        [range(len(centers)), centers],
     ).select("__cell", "__cv", dot(F.col("__cv"), F.col("__cv")).alias("__nc2"))
     return _ivf_score(corpus, queries, cent, k, id_col, vec_col, n_probes)
 
@@ -1283,20 +1284,19 @@ def semantic_dedup(
         F.col("__nv2") - F.lit(2.0) * dot(F.col("__v"), F.col("__cv"))
         + F.col("__nc2")
     )
-    assigned = (
+    # lineage cut + persist (r14): the crossJoin+argmin feeds BOTH
+    # self-join sides and the final keep frame — uncut (or cut but
+    # unpersisted) it executes three times
+    assigned = round_persist(
         vecs.crossJoin(F.broadcast(cent))
         .select("id", "__cell", dist2.alias("__d2"))
         .groupBy("id")
         .agg(F.min(F.struct("__d2", "__cell")).alias("__m"))
         .select("id", F.col("__m.__cell").alias("cell"))
-        # lineage cut + persist (r14): the crossJoin+argmin feeds BOTH
-        # self-join sides and the final keep frame — uncut (or cut but
-        # unpersisted) it executes three times
-        .localCheckpoint(eager=False).persist()
     )
-    cellv = vecs.join(assigned, "id").select(
+    cellv = round_persist(vecs.join(assigned, "id").select(
         "id", "cell", "__v", F.sqrt("__nv2").alias("__n")
-    ).localCheckpoint(eager=False).persist()
+    ))
     a = cellv.select(
         F.col("id").alias("id_a"), F.col("cell").alias("__ca"),
         F.col("__v").alias("__va"), F.col("__n").alias("__na"),
@@ -1811,11 +1811,10 @@ def pca_power_dominant(
     )
     v, lam6 = comps[0], _round6_portable(lams[0])
     ratio6 = _round6_portable(lams[0] / tr)
-    return df.sparkSession.createDataFrame(
-        [(i, float(v[i]), lam6, ratio6) for i in range(d)],
+    return local_frame(df.sparkSession, T.StructType.fromDDL(
         "dim_idx long, loading double, eigenvalue double, "
         "explained_ratio double",
-    )
+    ), [range(d), [float(v[i]) for i in range(d)], [lam6] * d, [ratio6] * d])
 
 
 def pca_power_oracle_sql(
@@ -1936,11 +1935,10 @@ def pca_power_topr(
         rows.extend(
             (k, i, float(v[i]), lam6, ratio6) for i in range(d)
         )
-    return df.sparkSession.createDataFrame(
-        rows,
+    return local_frame(df.sparkSession, T.StructType.fromDDL(
         "component long, dim_idx long, loading double, "
         "eigenvalue double, explained_ratio double",
-    )
+    ), list(zip(*rows)))
 
 
 def pca_power_topr_oracle_sql(
@@ -2355,6 +2353,25 @@ def _mmr_select(qsim: dict, sims: dict, lam: float, k: int) -> list:
     return out
 
 
+def _mmr_rows(pdf, lam: float, k: int) -> list:
+    """``_mmr_select`` for every query in ``pdf``, in query order:
+    marker rows (``__ib == __ia``) map candidate ``__ia`` to its query
+    similarity ``__qsim``, pair rows map (``__ia``, ``__ib``) to
+    ``__sim``. Returns [(query_id, rank, vec_id, qsim, mmr_score)]."""
+    m = pdf["__ia"] == pdf["__ib"]
+    qsim: dict = {}
+    sims: dict = {}
+    for q, i, s in zip(pdf.loc[m, "query_id"], pdf.loc[m, "__ia"],
+                       pdf.loc[m, "__qsim"]):
+        qsim.setdefault(q, {})[i] = float(s)
+    for q, ia, ib, s in zip(pdf.loc[~m, "query_id"], pdf.loc[~m, "__ia"],
+                            pdf.loc[~m, "__ib"], pdf.loc[~m, "__sim"]):
+        sims.setdefault(q, {})[(ia, ib)] = float(s)
+    return [(q, r, pick, qs, score) for q in sorted(qsim)
+            for r, pick, qs, score in _mmr_select(qsim[q], sims.get(q, {}),
+                                                   lam, k)]
+
+
 def mmr_rerank(
     corpus: DataFrame,
     queries: DataFrame,
@@ -2363,7 +2380,6 @@ def mmr_rerank(
     lam: float = 0.7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_collect: int = 1_000_000,
     candidates: str = "bruteforce",
     n_centroids: int = 16,
     n_probes: int = 3,
@@ -2392,16 +2408,17 @@ def mmr_rerank(
     pairwise-similarity frame is a bounded per-query self-join
     (n_queries × N × (N−1) rows — N is a caller-bounded constant like
     top-k's k) computed distributed. The greedy is sequential only
-    WITHIN a query — across queries it is embarrassingly parallel —
-    so above ``max_collect`` candidate·N rows the selection runs as
-    ``groupBy(query_id).applyInPandas`` (each group is N + N·(N−1)
-    rows, a caller-bounded constant, so no executor ever holds more
-    than one query's surface); at or below it, ONE bounded driver
-    collect runs the same greedy loop (measured faster at bench
-    scale: no Python-worker spin-up). Both routes share the
-    ``_mmr_select`` greedy verbatim and are unit-pinned identical;
-    the row-count guard runs BEFORE any collect (ADVICE r12). There
-    is no n_queries ceiling — only the route changes."""
+    WITHIN a query — across queries it is embarrassingly parallel.
+    Both routes read one frame of marker and pair rows (Σ N_q² rows,
+    N_q ≤ N candidates of query q) and run it through ``_mmr_rows``.
+    When ``catalog.local_tail`` admits that frame, ONE bounded driver
+    collect runs the greedy for every query and the result comes back
+    as one ``catalog.local_frame`` (measured faster at bench scale: no
+    Python-worker spin-up); otherwise the selection runs as
+    ``groupBy(query_id).applyInPandas`` (each group is one query's
+    N_q², so no executor ever holds more than one query's surface).
+    The two routes are unit-pinned identical. There is no n_queries
+    ceiling — only the route changes."""
     if not 0.0 <= lam <= 1.0:
         raise ValueError("lam must be in [0, 1]")
     if k < 1 or n_candidates < k:
@@ -2430,10 +2447,9 @@ def mmr_rerank(
         _as_double(F.col(vec_col)).alias("__cv"),
         norm(F.col(vec_col)).alias("__cn"),
     )
-    # lazy persist (r14): cf is consumed by the route-guard count, the
-    # per-query collect AND both sides of the pairwise self-join — a
-    # bare lazy checkpoint re-ran the whole candidate pipeline
-    # (bruteforce or IVF scoring) once per consumer
+    # lazy persist (r14): cf feeds the marker rows AND both sides of
+    # the pairwise self-join — a bare lazy checkpoint re-ran the whole
+    # candidate pipeline (bruteforce or IVF scoring) once per consumer
     cf = round_persist(
         cands.join(cv, cands["neighbor_id"] == F.col("__cid"))
         .select("query_id", "neighbor_id", "cosine_sim", "__cv", "__cn")
@@ -2466,38 +2482,14 @@ def mmr_rerank(
         StructField("qsim", DoubleType(), True),
         StructField("mmr_score", DoubleType(), True),
     ])
-    # Route guard BEFORE any collect (ADVICE r12): the one count also
-    # materializes the lazy checkpoint both downstream consumers share.
-    n_cand_rows = cf.count()
-    if n_cand_rows * n_candidates <= max_collect:
-        # Bounded driver fast path: one collect, the same greedy.
-        qpdf = cf.select("query_id", "neighbor_id", "cosine_sim").toPandas()
-        ppdf = pair.toPandas()
-        by_q: dict = {}
-        for q, n, s in zip(qpdf["query_id"], qpdf["neighbor_id"],
-                           qpdf["cosine_sim"]):
-            by_q.setdefault(q, {})[n] = float(s)
-        sims: dict = {}
-        for q, ia, ib, s in zip(ppdf["query_id"], ppdf["__ia"],
-                                ppdf["__ib"], ppdf["__sim"]):
-            sims.setdefault(q, {})[(ia, ib)] = float(s)
-        rows = []
-        for q in sorted(by_q):
-            for r, pick, qs, score in _mmr_select(
-                    by_q[q], sims.get(q, {}), lam, k):
-                rows.append((q, r, pick, qs, score))
-        out = pd.DataFrame(rows, columns=["query_id", "rank", "vec_id",
-                                          "qsim", "mmr_score"])
-        return corpus.sparkSession.createDataFrame(out, schema)
-    # Distributed greedy (VERDICT r12 #2): ONE unioned per-query frame
-    # — a marker row per candidate (__ib null, carrying qsim) plus the
-    # pairwise rows — grouped by query_id so each Arrow batch holds
-    # exactly one query's bounded surface; the greedy stays sequential
-    # only inside the group.
+    # ONE per-query frame for both routes: a marker row per candidate
+    # (__ib = __ia, carrying qsim) plus the pairwise rows (__ib != __ia)
+    # — Σ N_q² rows. A null marker would make a bigint __ib float64 in
+    # pandas, and ids above 2⁵³ would no longer match their pairs.
     cand_rows = cf.select(
         "query_id",
         F.col("neighbor_id").alias("__ia"),
-        F.lit(None).cast(nf.dataType).alias("__ib"),
+        F.col("neighbor_id").alias("__ib"),
         F.col("cosine_sim").alias("__qsim"),
         F.lit(None).cast("double").alias("__sim"),
     )
@@ -2506,20 +2498,15 @@ def mmr_rerank(
         F.lit(None).cast("double").alias("__qsim"), "__sim",
     )
     grouped = cand_rows.unionByName(pair_rows)
-    lam_v, k_v = lam, k
-
+    pdf = local_tail(grouped, "query_id")
+    if pdf is not None:
+        rows = _mmr_rows(pdf, lam, k)
+        return local_frame(corpus.sparkSession, schema,
+                           [[r[i] for r in rows] for i in range(5)])
+    # Distributed greedy (VERDICT r12 #2): grouped by query_id so each
+    # Arrow batch holds exactly one query's bounded surface; the greedy
+    # stays sequential only inside the group.
     def _mmr_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        q = pdf["query_id"].iloc[0]
-        m = pdf["__ib"].isna()
-        qsim = {i: float(s) for i, s in
-                zip(pdf.loc[m, "__ia"], pdf.loc[m, "__qsim"])}
-        sims = {(ia, ib): float(s) for ia, ib, s in
-                zip(pdf.loc[~m, "__ia"], pdf.loc[~m, "__ib"],
-                    pdf.loc[~m, "__sim"])}
-        rows = [(q, r, pick, qs, score)
-                for r, pick, qs, score in _mmr_select(qsim, sims,
-                                                      lam_v, k_v)]
-        return pd.DataFrame(rows, columns=["query_id", "rank", "vec_id",
-                                           "qsim", "mmr_score"])
+        return pd.DataFrame(_mmr_rows(pdf, lam, k), columns=schema.names)
 
     return grouped.groupBy("query_id").applyInPandas(_mmr_group, schema)

@@ -17,8 +17,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from census_data_pipeline_spark.sources.catalog import (
+    local_frame,
     local_tail,
     round_materialize as _round_materialize,
     round_persist as _round_persist,
@@ -34,18 +36,17 @@ def _markov_absorption_local(pm: DataFrame, pdfm, iterations: int, r6):
     removal-effect arithmetic consumes (that arithmetic, and all its
     rounding, stays in Spark)."""
     import numpy as np
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
     spark = pm.sparkSession
-    schema = StructType([
-        StructField("__rem", pm.schema["__s"].dataType, True),
-        StructField("__pv", DoubleType(), True),
+    schema = T.StructType([
+        T.StructField("__rem", pm.schema["__s"].dataType, True),
+        T.StructField("__pv", T.DoubleType(), True),
     ])
     states = np.unique(pdfm["__s"].to_numpy())
     slist = states.tolist()
     S = len(slist)
     if "start" not in slist:  # no 'start' source: no start-state rows
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, schema, [[], []])
     sidx = {s: i for i, s in enumerate(slist)}
     start_i = sidx["start"]
     removals = [s for s in slist if s != "start"] + ["<none>"]
@@ -84,8 +85,7 @@ def _markov_absorption_local(pm: DataFrame, pdfm, iterations: int, r6):
             np.add.at(acc, scode, vals)
             new[r] = _r6a(cp + acc)
         PV = new
-    rows = [(removals[r], float(PV[r, start_i])) for r in range(R)]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, schema, [removals, PV[:, start_i].tolist()])
 
 
 def touch_attribution(
@@ -416,9 +416,8 @@ def markov_removal_attribution(
             .localCheckpoint(eager=False)
         channels = states.filter(F.col("__st") != "start")
         removals = channels.select(F.col("__st").alias("__rem")).unionByName(
-            channels.sparkSession.createDataFrame(
-                [("<none>",)], "__rem string"
-            )
+            local_frame(channels.sparkSession,
+                        T.StructType.fromDDL("__rem string"), [["<none>"]])
         ).localCheckpoint(eager=False)
         cp = pm.filter(F.col("__tt") == "conv").select(
             F.col("__s").alias("__st"), F.col("__p").alias("__cp")

@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 
 from census_data_pipeline_spark.operators.geoid import geoid_prefix
 from census_data_pipeline_spark.sources.catalog import (
+    local_frame,
     local_tail,
     round_materialize as _round_materialize,
     round_persist as _round_persist,
@@ -241,9 +242,8 @@ def exact_median_scalable(df: DataFrame, value_col: str):
         b = exact_kth_scalable(df, value_col, k_lo + 1)
         med = (a + b) / 2.0
     spark = df.sparkSession
-    return spark.createDataFrame(
-        [(n, round(med, 6))], "n long, median double"
-    )
+    return local_frame(spark, T.StructType.fromDDL("n long, median double"),
+                       [[n], [round(med, 6)]])
 
 
 def cms_build(
@@ -2614,36 +2614,30 @@ def markov_stationary(
     # to the distributed rounds.
     pi = None
     pdfm = local_tail(pm, "__s", "__j", fanout=2)
-    if pdfm is not None:
+    # The state UNIVERSE is st (every cnt source) — NOT pm's surviving
+    # sources (ADVICE r13, medium): a source whose every out-edge
+    # targets sink-only types keeps its st row (and its 1/k share of
+    # the initial mass) while contributing no pm row, and a pm __j can
+    # name such a state. Coding over pm.__s alone mapped those targets
+    # out of bounds (np.add.at IndexError) or onto the wrong state; the
+    # distributed rounds below start pi on st, so the local replay
+    # must too.
+    stpdf = None if pdfm is None else local_tail(st, "__state")
+    if stpdf is not None:
         import numpy as np
         import pandas as pd
-        from pyspark.sql.types import DoubleType, StructField, StructType
 
-        # The state UNIVERSE is st (every cnt source) — NOT pm's
-        # surviving sources (ADVICE r13, medium): a source whose every
-        # out-edge targets sink-only types keeps its st row (and its
-        # 1/k share of the initial mass) while contributing no pm row,
-        # and a pm __j can name such a state. Coding over pm.__s alone
-        # mapped those targets out of bounds (np.add.at IndexError) or
-        # onto the wrong state; the distributed rounds below start pi
-        # on st, so the local replay must too.
-        stpdf = st.toPandas()
-        if not bool(pd.isna(stpdf["__state"]).any()):
-            states = np.unique(stpdf["__state"].to_numpy())
-            kk = len(states)
-            sidx = pd.Index(states)
-            scode = sidx.get_indexer(pdfm["__s"].to_numpy())
-            jcode = sidx.get_indexer(pdfm["__j"].to_numpy())
-            pv = pdfm["__p"].to_numpy(dtype=np.float64)
-            if (scode < 0).any() or (jcode < 0).any():
-                # a pm endpoint outside the st universe cannot happen
-                # by construction (keep joins __j against st; __s ⊆
-                # cnt sources) — but if it ever does, the distributed
-                # rounds handle it; never guess a code
-                scode = jcode = None  # type: ignore[assignment]
-        else:
-            scode = jcode = None  # type: ignore[assignment]
-        if scode is not None:
+        states = np.unique(stpdf["__state"].to_numpy())
+        kk = len(states)
+        sidx = pd.Index(states)
+        scode = sidx.get_indexer(pdfm["__s"].to_numpy())
+        jcode = sidx.get_indexer(pdfm["__j"].to_numpy())
+        pv = pdfm["__p"].to_numpy(dtype=np.float64)
+        # a pm endpoint outside the st universe cannot happen by
+        # construction (keep joins __j against st; __s ⊆ cnt sources)
+        # — but if it ever does, the distributed rounds handle it;
+        # never guess a code
+        if not ((scode < 0).any() or (jcode < 0).any()):
 
             def _r6a(x):
                 return np.floor(x * 1_000_000.0 + 0.5) / 1_000_000.0
@@ -2666,19 +2660,16 @@ def markov_stationary(
                 scode, jcode, pv = (
                     scode[scode_keep], jcode[scode_keep], pv[scode_keep]
                 )
-            svals = states.tolist()  # preserves the id type
-            rows = [
-                (svals[i], float(piv[i]))
-                for i in range(kk)
-                if not np.isnan(piv[i])
-            ]
+            live = ~np.isnan(piv)
             f = pm.schema["__s"]
-            pi = pm.sparkSession.createDataFrame(
-                rows,
-                StructType([
-                    StructField("__s", f.dataType, f.nullable),
-                    StructField("__pi", DoubleType(), True),
+            pi = local_frame(
+                pm.sparkSession,
+                T.StructType([
+                    T.StructField("__s", f.dataType, f.nullable),
+                    T.StructField("__pi", T.DoubleType(), True),
                 ]),
+                # tolist() preserves the id type
+                [states[live].tolist(), piv[live].tolist()],
             )
     if pi is None:
         # every distributed round joins pm: persist the gated object, so

@@ -12,6 +12,7 @@ units sit >=5 orders of magnitude above double noise at these magnitudes.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from census_data_pipeline_spark.operators import (
     change,
@@ -26,7 +27,7 @@ from census_data_pipeline_spark.operators import (
 )
 from census_data_pipeline_spark.operators.rates import derive_demographics, safe_rate
 from census_data_pipeline_spark.plans.registry import query
-from census_data_pipeline_spark.sources.catalog import load_table
+from census_data_pipeline_spark.sources.catalog import load_table, local_frame
 from census_data_pipeline_spark.streaming import joins as stream_joins
 from census_data_pipeline_spark.streaming import windows
 
@@ -184,8 +185,9 @@ _CATALOG_VALUES = ", ".join(
 def variable_catalog_search(spark, sf_dir):
     """``search_variables`` semantics (reference: census_pipeline.py:426-457):
     keyword match against label or concept, case-insensitive."""
-    catalog = spark.createDataFrame(
-        _CATALOG, "variable string, label string, concept string"
+    catalog = local_frame(
+        spark, T.StructType.fromDDL("variable string, label string, concept string"),
+        list(zip(*_CATALOG)),
     )
     kw = "income"
     return catalog.filter(
@@ -988,8 +990,9 @@ def streaming_enriched_rollup(spark, sf_dir):
     staged = staged_root + "/events"
     load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(staged)
 
-    weights = spark.createDataFrame(
-        [("purchase", 2.0), ("click", 0.5)], "event_type string, weight double"
+    weights = local_frame(
+        spark, T.StructType.fromDDL("event_type string, weight double"),
+        [["purchase", "click"], [2.0, 0.5]],
     )
     stream = windows.stream_from_parquet(
         spark, staged, spark.read.parquet(staged).schema

@@ -15,6 +15,7 @@ Oracle parity notes:
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from census_data_pipeline_spark.functions import (
     classify,
@@ -32,6 +33,7 @@ from census_data_pipeline_spark.plans.registry import query
 from census_data_pipeline_spark.sources.catalog import (
     ensure_parallelism,
     load_table,
+    local_frame,
     round_materialize,
     round_persist,
 )
@@ -2740,8 +2742,8 @@ def text_tag_keywords(spark, sf_dir):
     contains L−1 spaces), so the SQL oracle can union all gram lengths
     into one join."""
     docs = load_table(spark, sf_dir, "documents")
-    phrases = spark.createDataFrame([(p,) for p in _GAZETTEER],
-                                    "phrase string")
+    phrases = local_frame(spark, T.StructType.fromDDL("phrase string"),
+                          [_GAZETTEER])
     out = text.tag_keywords(docs, phrases)
     return out.select(F.col("id").alias("doc_id"), "phrase", "n_hits")
 

@@ -169,6 +169,48 @@ def test_coreness_entry_gate_matches_distributed(spark, monkeypatch,
         assert _rows(got)
 
 
+def test_mmr_local_route_matches_distributed(spark, monkeypatch,
+                                             distributed):
+    """``mmr_rerank`` gates its one marker-and-pair frame through
+    ``local_tail`` once, and the local greedy returns the rows and
+    schema of the per-query ``applyInPandas`` greedy. Vectors 1 and 2
+    are identical, so query 10 (equal to both) ties at rank 1 and the
+    smallest id wins. The corpus is smaller than ``n_candidates``, and
+    query 4, a corpus member, loses its self-match: it has one
+    candidate fewer than query 10, and fewer than ``k``. Corpus ids are
+    offset by 2⁵³, where a float64 id column could no longer tell them
+    apart."""
+    from census_data_pipeline_spark.functions import similarity as S
+
+    big = 2**53
+    schema = "vec_id bigint, embedding array<double>"
+    corpus = spark.createDataFrame(
+        [(big + i, v) for i, v in enumerate(
+            [[1.0, 0.0, 0.0], [1.0, 0.0, 0.0], [0.9, 0.1, 0.0],
+             [0.0, 1.0, 0.0], [0.0, 0.7, 0.7], [0.2, 0.2, 0.9]], start=1)],
+        schema)
+    queries = spark.createDataFrame(
+        [(big + 4, [0.0, 1.0, 0.0]), (10, [1.0, 0.0, 0.0])], schema)
+    gate = []
+
+    def spy(*args, **kwargs):
+        gate.append(catalog.local_tail(*args, **kwargs))
+        return gate[-1]
+
+    monkeypatch.setattr(S, "local_tail", spy)
+    got = S.mmr_rerank(corpus, queries, k=6, n_candidates=8, lam=0.5)
+    assert len(gate) == 1 and gate[0] is not None
+    with distributed():
+        want = S.mmr_rerank(corpus, queries, k=6, n_candidates=8, lam=0.5)
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+    picks = {}
+    for r in sorted(got.collect(), key=lambda r: r["rank"]):
+        picks.setdefault(r["query_id"], []).append(r["vec_id"])
+    assert {q: len(p) for q, p in picks.items()} == {big + 4: 5, 10: 6}
+    assert picks[10][0] == big + 1
+
+
 # ------------------------------------------------------ the gate itself
 
 

@@ -345,12 +345,13 @@ def test_weighted_pagerank_single_scan_semantics(spark):
     assert min(out["a"], out["b"]) > out["x"]
 
 
-def test_mmr_distributed_greedy_identical_to_driver_path(spark):
+def test_mmr_distributed_greedy_identical_to_driver_path(spark,
+                                                        distributed):
     """VERDICT r12 #2's done-criterion: the per-query applyInPandas
-    greedy (forced via max_collect=0) is output-identical to the
-    bounded driver fast path — same _mmr_select, same 6-dp scores,
-    same smallest-id tie-break — and no n_queries ceiling exists:
-    max_collect=0 no longer raises."""
+    greedy (forced by a local-tail cap of 0) is output-identical to
+    the bounded driver fast path — same _mmr_select, same 6-dp scores,
+    same smallest-id tie-break — and no n_queries ceiling exists: the
+    distributed route takes every query."""
     import random
 
     from census_data_pipeline_spark.functions.similarity import mmr_rerank
@@ -368,8 +369,9 @@ def test_mmr_distributed_greedy_identical_to_driver_path(spark):
     )
     driver = _sorted_rows(mmr_rerank(emb, q, k=4, n_candidates=8,
                                      lam=0.6))
-    dist = _sorted_rows(mmr_rerank(emb, q, k=4, n_candidates=8,
-                                   lam=0.6, max_collect=0))
+    with distributed():
+        dist = _sorted_rows(mmr_rerank(emb, q, k=4, n_candidates=8,
+                                       lam=0.6))
     assert driver == dist
     assert len(driver) == 5 * 4
 

@@ -175,34 +175,55 @@ def test_boundaries_match_list_path(spark):
     assert g[1].geometry is None and g[1].geometry_bytes is None
 
 
-def test_driver_frames_built_only_by_local_frame():
-    """The census path, the classifier model frames and the graph
-    local tails build every frame from driver data through
-    ``catalog.local_frame``: no other ``createDataFrame`` call in
-    ``sources/``, ``pipeline.py``, ``operators/joins.py``,
-    ``functions/classify.py`` or ``functions/graph.py``."""
+def _calls(pkg, paths, attr, allowed):
+    """``path:line`` of every ``.<attr>(...)`` call in ``paths`` outside
+    the functions ``allowed`` names as (file name, function name)."""
     import ast
-    from pathlib import Path
 
-    pkg = Path(census_api.__file__).resolve().parent.parent
-    files = [*sorted((pkg / "sources").glob("*.py")), pkg / "pipeline.py",
-             pkg / "operators" / "joins.py", pkg / "functions" / "classify.py",
-             pkg / "functions" / "graph.py"]
     calls = []
-    for path in files:
+    for path in paths:
         tree = ast.parse(path.read_text(), str(path))
-        allowed = set()
+        inside = set()
         for node in ast.walk(tree):
-            if (path.name == "catalog.py" and isinstance(node, ast.FunctionDef)
-                    and node.name == "local_frame"):
-                allowed |= {id(n) for n in ast.walk(node)}
+            if (isinstance(node, ast.FunctionDef)
+                    and (path.name, node.name) in allowed):
+                inside |= {id(n) for n in ast.walk(node)}
         calls += [
             f"{path.relative_to(pkg)}:{node.lineno}"
             for node in ast.walk(tree)
             if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "createDataFrame" and id(node) not in allowed
+            and node.func.attr == attr and id(node) not in inside
         ]
+    return calls
+
+
+def test_driver_frames_built_only_by_local_frame():
+    """Every frame the package builds from driver data goes through
+    ``catalog.local_frame``: no other ``createDataFrame`` call in any
+    module."""
+    from pathlib import Path
+
+    pkg = Path(census_api.__file__).resolve().parent.parent
+    calls = _calls(pkg, sorted(pkg.rglob("*.py")), "createDataFrame",
+                   {("catalog.py", "local_frame")})
     assert calls == [], "build driver frames through catalog.local_frame"
+
+
+def test_operator_collects_only_through_local_tail():
+    """Every collect of an operator frame to pandas goes through
+    ``catalog.local_tail``, so its row cap applies: no ``.toPandas()``
+    in ``functions/`` or ``operators/``. The one exception is
+    ``graph._coreness_local_tail``, the mid-peel hand-off of a graph
+    that was over the cap at entry; the peel loop calls it only once
+    the alive n + Σdeg has dropped to ``catalog.LOCAL_TAIL_ROWS``."""
+    from pathlib import Path
+
+    pkg = Path(census_api.__file__).resolve().parent.parent
+    paths = sorted([*(pkg / "functions").glob("*.py"),
+                    *(pkg / "operators").glob("*.py")])
+    calls = _calls(pkg, paths, "toPandas",
+                   {("graph.py", "_coreness_local_tail")})
+    assert calls == [], "collect operator frames through catalog.local_tail"
 
 
 def test_facade_join_gives_every_sink_the_same_geometry(spark, tmp_path):

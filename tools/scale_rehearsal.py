@@ -575,15 +575,15 @@ def main() -> None:
         lab = _g.leiden(g, levels=2, rounds=4)
         return _g.modularity(g, lab, label_col="community")
 
+    @distributed_path()
     def fam_mmr(d, e, g, v):
-        # the r13 distributed MMR greedy (max_collect=0 forces the
-        # applyInPandas route): fixed query count, so candidate
-        # generation (one corpus scan per batch of queries) is the
-        # data-scale term and the per-query greedy is O(N²) constant
+        # the r13 distributed MMR greedy (the applyInPandas route):
+        # fixed query count, so candidate generation (one corpus scan
+        # per batch of queries) is the data-scale term and the
+        # per-query greedy is O(N²) constant
         from census_data_pipeline_spark.functions import similarity as _s
         q = e.filter(F.col("vec_id") < 30)
-        return _s.mmr_rerank(e, q, k=8, n_candidates=32,
-                             max_collect=0)
+        return _s.mmr_rerank(e, q, k=8, n_candidates=32)
 
     def fam_hits(d, e, g, v):
         from census_data_pipeline_spark.functions import graph as _g
